@@ -41,6 +41,7 @@ if __package__ in (None, ""):  # file run directly (spark-submit / python file.p
     )
 
 from nominatimwrapper_spark.operators.geocode import build_gazetteer_index
+from nominatimwrapper_spark.plans.flagship import geocode_and_tile
 from nominatimwrapper_spark.sources.checkpoint import PartitionedCheckpointer
 from nominatimwrapper_spark.sources.pages_io import read_pages
 
@@ -79,22 +80,10 @@ def partition_fingerprint(pages_path: str, part: str, gazetteer_path: str) -> st
 
 def geocode_partition(spark: SparkSession, pages_path: str, part: str, index):
     """One partition end-to-end: read (partition-pruned) -> recrawl dedup
-    -> extract -> cascade -> S2 level-13 cells. Real crawl input: recrawl
-    dedup stays ON. A broadcast-able gazetteer runs the partition-local
-    kernel (recrawl dedup composed upstream as the distributed as-of
-    window; addr_key is unique by construction after it, so the duplicate
-    guard is satisfied structurally); a planet-scale gazetteer falls back
-    to the distributed shuffle-join cascade with the guard on."""
+    -> extract -> geocode -> S2 level-13 cells. Real crawl input: recrawl
+    dedup and the duplicate guard stay ON. plans/flagship.geocode_and_tile
+    picks the engine by the gazetteer broadcast gate."""
     pages = read_pages(spark, pages_path, date_from=part, date_to=part)
-    if index.broadcast_ok:
-        from nominatimwrapper_spark.operators.geocode_kernel import (
-            geocode_and_tile_kernel,
-        )
-        from nominatimwrapper_spark.operators.spatial import latest_snapshot
-
-        return geocode_and_tile_kernel(latest_snapshot(pages, "url", "warc_ts"), index)
-    from nominatimwrapper_spark.plans.flagship import geocode_and_tile
-
     return geocode_and_tile(pages, index)
 
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import re
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -120,6 +120,9 @@ class GazetteerIndex:
     lookup: DataFrame
     places: DataFrame
     broadcast_ok: bool = True
+    # the kernel's broadcast payload (geocode_kernel.kernel_broadcast),
+    # built on first use; dataclasses.replace starts the copy without it
+    kernel_bc: object = field(default=None, init=False, repr=False, compare=False)
 
     def hinted(self, df: DataFrame) -> DataFrame:
         return F.broadcast(df) if self.broadcast_ok else df

@@ -22,8 +22,12 @@ addresses) to run the ENTIRE lifecycle partition-locally:
 One job, one narrow stage, zero shuffles, no driver round-trips. The
 gazetteer rides along as a SparkContext broadcast of pandas frames —
 valid under exactly the same condition as the broadcast-join cascade
-(index.broadcast_ok); above the budget callers must use the distributed
-cascade.
+(index.broadcast_ok). The engine is chosen in ONE place,
+plans/flagship.geocode_and_tile: this kernel under the gate, the
+distributed cascade above it. The checkpoint job and the stream's
+foreachBatch path go through that function; only the direct streaming
+plan (streaming/geocode_stream.geocode_pages_stream) calls the kernel
+itself.
 
 Semantics are the distributed cascade's, value-for-value (asserted by
 tests/test_geocode_kernel.py over every fixture class): the only
@@ -43,10 +47,11 @@ comma-fixpoint cleaner — so a value fix lands in both engines at once.
 from __future__ import annotations
 
 import re
+import threading
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..functions.cleansing import REGEX_REPLACEMENTS, clean_addr_in
 from ..functions.similarity import SIMILARITY_THRESHOLD
@@ -173,14 +178,19 @@ def build_kernel_payload(index: GazetteerIndex) -> KernelPayload:
     )
 
 
-_BC_CACHE: dict[tuple, object] = {}
+_BC_LOCK = threading.Lock()
 
 
-def kernel_broadcast(spark: SparkSession, index: GazetteerIndex):
-    key = (id(spark), id(index))
-    if key not in _BC_CACHE:
-        _BC_CACHE[key] = spark.sparkContext.broadcast(build_kernel_payload(index))
-    return _BC_CACHE[key]
+def kernel_broadcast(index: GazetteerIndex):
+    """The index's payload broadcast, built once per index object and kept
+    on it, so it lives and dies with the index. The lock stops concurrent
+    checkpoint-job partitions from building it twice."""
+    with _BC_LOCK:
+        if index.kernel_bc is None:
+            index.kernel_bc = index.lookup.sparkSession.sparkContext.broadcast(
+                build_kernel_payload(index)
+            )
+    return index.kernel_bc
 
 
 # ---------------------------------------------------------------------------
@@ -708,10 +718,9 @@ def geocode_and_tile_kernel(
     peek, illegal on a STREAMING DataFrame) — streaming callers already
     arrive shuffled to the session's shuffle width by the upstream dedup
     state op, which is the right micro-batch granularity."""
-    spark = pages.sparkSession
-    bc = kernel_broadcast(spark, index)
+    bc = kernel_broadcast(index)
     if widen:
-        par = spark.sparkContext.defaultParallelism
+        par = pages.sparkSession.sparkContext.defaultParallelism
         if pages.rdd.getNumPartitions() < par:
             pages = pages.repartition(par)
 

@@ -15,6 +15,10 @@ Two regimes, picked by the gazetteer broadcast gate:
   stream reuses it per micro-batch via ``foreachBatch``, Spark's
   canonical pattern for lifting batch logic into a stream.
 
+The foreachBatch path runs the batch core, plans/flagship.geocode_and_tile,
+which is where the batch engines are chosen (the kernel under the gate,
+the cascade above it). Only the direct plan calls the kernel itself.
+
 What the stream layer adds on top of the batch engine:
 
 - exactly-once sink semantics: the streaming checkpointLocation skips
@@ -29,8 +33,8 @@ What the stream layer adds on top of the batch engine:
   then stop — a crawl-backfill job shape).
 
 At cluster scale each micro-batch is one Iceberg/parquet file group; the
-batch cascade inside the closure broadcasts the same gazetteer index every
-epoch (it is built once, driver-side, outside the closure).
+gazetteer index is built once, driver-side, outside the closure and
+reused by every epoch.
 """
 
 from __future__ import annotations
@@ -46,6 +50,8 @@ from pyspark.sql.types import (
 )
 
 from ..operators.geocode import GazetteerIndex
+from ..operators.geocode_kernel import geocode_and_tile_kernel
+from ..plans.flagship import geocode_and_tile
 
 # micro-batches at or under this many rows run their cascade with a narrow
 # shuffle width — the per-epoch cost at live-tailing batch sizes is task
@@ -65,24 +71,17 @@ PAGES_SCHEMA = StructType(
 
 
 def geocode_micro_batch(pages: DataFrame, index: GazetteerIndex) -> DataFrame:
-    """One micro-batch through the engine core. dedup_crawls is False on
-    both paths: cross-micro-batch recrawl dedup happens UPSTREAM in the
-    streaming plan (native dropDuplicates state wired in by
-    geocode_pages_stream), where per-key state outlives the micro-batch —
-    a per-batch window could never see a recrawl arriving one epoch later.
+    """One micro-batch through the engine core. dedup_crawls is False:
+    cross-micro-batch recrawl dedup happens UPSTREAM in the streaming plan
+    (native dropDuplicates state wired in by geocode_pages_stream), where
+    per-key state outlives the micro-batch — a per-batch window could
+    never see a recrawl arriving one epoch later. The duplicate guard is
+    off (validate_unique=False): with that state on, urls arrive unique.
 
-    Path choice is the broadcast gate: a broadcast-able gazetteer runs the
-    partition-local kernel (geocode_kernel.py — the whole lifecycle in ONE
-    narrow stage, no per-stage driver actions; measured ~8x less per-epoch
-    fixed cost than the distributed cascade, value-identical by test);
-    above the broadcast budget the distributed shuffle-join cascade is the
-    only sound shape and the micro-batch pays its driver-action cost."""
-    if index.broadcast_ok:
-        from ..operators.geocode_kernel import geocode_and_tile_kernel
-
-        return geocode_and_tile_kernel(pages, index)
-    from ..plans.flagship import geocode_and_tile
-
+    plans/flagship.geocode_and_tile picks the engine by the broadcast
+    gate: the partition-local kernel under it (measured ~8x less
+    per-epoch fixed cost than the distributed cascade, value-identical by
+    test), the shuffle-join cascade above it."""
     return geocode_and_tile(pages, index, dedup_crawls=False, validate_unique=False)
 
 
@@ -157,9 +156,9 @@ def geocode_pages_stream(
         # commit log (readers going through spark.read see only committed
         # files, so a crash between data write and commit is invisible).
         # Measured: 8x 5k-page epochs 12.2s (foreachBatch kernel) -> 7.1s
-        # warm / 8.8s cold at local[32], shuffle width 8.
-        from ..operators.geocode_kernel import geocode_and_tile_kernel
-
+        # warm / 8.8s cold at local[32], shuffle width 8. The kernel is
+        # called directly (not through geocode_and_tile) with widen=False:
+        # a partition-count peek is illegal on a streaming DataFrame.
         tiled = geocode_and_tile_kernel(stream, index, widen=False)
         writer = (
             tiled.writeStream.format("parquet")

@@ -6,6 +6,9 @@ rescue, low-rank retry, similarity scores, tie-breaks, tiling, dtypes."""
 
 from __future__ import annotations
 
+import dataclasses
+
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -14,6 +17,7 @@ from nominatimwrapper_spark.operators.geocode_kernel import (
     build_kernel_payload,
     cascade_kernel,
     geocode_and_tile_kernel,
+    kernel_broadcast,
 )
 from nominatimwrapper_spark.synth import gen_world, write_world
 
@@ -73,26 +77,148 @@ def test_cascade_kernel_matches_distributed_on_all_fixture_classes(
     pd.testing.assert_frame_equal(e, g, check_dtype=False)
 
 
-def test_pages_kernel_matches_distributed_pipeline(spark):
-    """pages -> extract -> cascade -> tiles: the one-stage kernel equals
-    plans/flagship.geocode_and_tile row-for-row INCLUDING dtypes (the
-    sha256-pinned flagship output transitively pins the kernel)."""
-    from nominatimwrapper_spark.plans.flagship import (
-        gazetteer_index,
-        geocode_and_tile,
-        pages_from_documents,
+@pytest.fixture(scope="module")
+def flagship_pages(spark) -> pd.DataFrame:
+    from nominatimwrapper_spark.plans.flagship import pages_from_documents
+
+    return pages_from_documents(spark, SF_DIR).toPandas()
+
+
+def _recrawled(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Pages with recrawls. Every 7th url is crawled again a day later
+    carrying the next page's html, so its latest addresses differ from
+    the first crawl's; every 11th url (from the 4th) also has an older
+    crawl carrying another page's html."""
+    html, text = pdf["html"].to_numpy(), pdf["text"].to_numpy()
+    day = pd.Timedelta(days=1)
+    later = pdf.iloc[::7].assign(
+        html=np.roll(html, -1)[::7], text=np.roll(text, -1)[::7],
+        warc_ts=pdf["warc_ts"].iloc[::7] + day,
     )
+    older = pdf.iloc[3::11].assign(
+        html=np.roll(html, 5)[3::11], text=np.roll(text, 5)[3::11],
+        warc_ts=pdf["warc_ts"].iloc[3::11] - day,
+    )
+    return pd.concat([pdf, later, older], ignore_index=True)
+
+
+def _sorted(df) -> pd.DataFrame:
+    return df.toPandas().sort_values("addr_key").reset_index(drop=True)
+
+
+def _assert_engines_agree(spark, pdf: pd.DataFrame, dedup_crawls: bool) -> None:
+    """geocode_and_tile under the broadcast gate (the one-stage kernel)
+    equals the same call above the gate (the distributed cascade)
+    row-for-row INCLUDING dtypes."""
+    from nominatimwrapper_spark.plans.flagship import gazetteer_index, geocode_and_tile
 
     idx = gazetteer_index(spark)
-    pages = pages_from_documents(spark, SF_DIR).localCheckpoint(eager=True)
-    exp = geocode_and_tile(
-        pages, idx, dedup_crawls=False, validate_unique=False
-    ).toPandas()
-    got = geocode_and_tile_kernel(pages, idx).toPandas()
-    pd.testing.assert_frame_equal(
-        exp.sort_values("addr_key").reset_index(drop=True),
-        got[exp.columns].sort_values("addr_key").reset_index(drop=True),
+    pages = spark.createDataFrame(pdf).localCheckpoint(eager=True)
+    kw = dict(dedup_crawls=dedup_crawls, validate_unique=not dedup_crawls)
+    exp = _sorted(geocode_and_tile(pages, dataclasses.replace(idx, broadcast_ok=False), **kw))
+    got = _sorted(geocode_and_tile(pages, idx, **kw))
+    assert len(exp) > 0
+    pd.testing.assert_frame_equal(exp, got)
+
+
+def test_pages_kernel_matches_distributed_pipeline(spark, flagship_pages):
+    """pages -> extract -> geocode -> tiles on flagship input: both engines
+    agree (the sha256-pinned flagship output transitively pins the
+    kernel)."""
+    _assert_engines_agree(spark, flagship_pages, dedup_crawls=False)
+
+
+def test_pages_kernel_matches_distributed_pipeline_with_recrawls(spark, flagship_pages):
+    """With recrawls and recrawl dedup both engines keep each url's latest
+    crawl and agree."""
+    _assert_engines_agree(spark, _recrawled(flagship_pages), dedup_crawls=True)
+
+
+def test_duplicate_url_guard_on_both_regimes(spark, flagship_pages):
+    """One url crawled twice: without recrawl dedup the guard raises on
+    both engines before any geocoding; with it only the latest crawl's
+    addresses come back."""
+    from nominatimwrapper_spark.plans.flagship import gazetteer_index, geocode_and_tile
+
+    idx = gazetteer_index(spark)
+    base = flagship_pages.iloc[:30]
+    recrawl = base.iloc[[0]].assign(
+        html=base["html"].iloc[1], text=base["text"].iloc[1],
+        warc_ts=base["warc_ts"].iloc[0] + pd.Timedelta(days=1),
     )
+    pages = spark.createDataFrame(pd.concat([base, recrawl], ignore_index=True))
+    for ix in (idx, dataclasses.replace(idx, broadcast_ok=False)):
+        with pytest.raises(ValueError, match="duplicate addr_key"):
+            geocode_and_tile(pages, ix, dedup_crawls=False, validate_unique=True)
+
+    got = _sorted(geocode_and_tile(pages, idx, dedup_crawls=True))
+    latest = pd.concat([base.iloc[1:], recrawl], ignore_index=True)
+    exp = _sorted(geocode_and_tile(spark.createDataFrame(latest), idx, dedup_crawls=False))
+    pd.testing.assert_frame_equal(exp, got)
+    first = _sorted(geocode_and_tile(spark.createDataFrame(base.iloc[[0]]), idx))
+    dup_url = base["url"].iloc[0]
+    assert len(first) > 0 and (got.url == dup_url).any()
+    assert not got.loc[got.url == dup_url, "place_id"].isin(first.place_id).any()
+
+
+def test_route_plan_is_one_exchange_and_builds_without_jobs(spark, flagship_pages):
+    """Under the gate geocode_and_tile shuffles the html once (hash on url;
+    the recrawl window reuses it) into the MapInPandas kernel, with no
+    join, and building the plan starts no Spark job once the index's
+    payload broadcast exists."""
+    import re
+
+    from nominatimwrapper_spark.plans.flagship import gazetteer_index, geocode_and_tile
+
+    idx = gazetteer_index(spark)
+    pages = spark.createDataFrame(_recrawled(flagship_pages)).localCheckpoint(eager=True)
+    kernel_broadcast(idx)  # the payload build runs its own jobs, once per index
+    sc = spark.sparkContext
+    group = "route-plan-build"
+    sc.setJobGroup(group, "geocode_and_tile plan build")
+    try:
+        out = geocode_and_tile(pages, idx, dedup_crawls=True)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "MapInPandas" in plan
+    exchanges = re.findall(r"\bExchange\b.*", plan)
+    assert len(exchanges) == 1 and "hashpartitioning(url#" in exchanges[0], plan
+    for node in ("BroadcastHashJoin", "SortMergeJoin"):
+        assert node not in plan, f"unexpected {node} in route plan:\n{plan}"
+
+
+def test_kernel_broadcast_lives_on_the_index(spark, index):
+    """One broadcast per index object: the same object reuses it, and a
+    new object (even a dataclasses.replace copy) builds its own from its
+    own gazetteer rather than inheriting a stale payload."""
+    bc = kernel_broadcast(index)
+    assert kernel_broadcast(index) is bc
+    small = dataclasses.replace(index, lookup=index.lookup.limit(5))
+    assert small.kernel_bc is None
+    bc_small = kernel_broadcast(small)
+    assert bc_small is not bc
+    n_small = sum(len(f) for f in (bc_small.value.houses, bc_small.value.streets,
+                                   bc_small.value.cities))
+    assert n_small == 5 < len(bc.value.houses)
+
+
+def test_kernel_broadcast_built_once_under_concurrent_first_use(spark, index):
+    """Checkpoint-job partitions run side by side from a thread pool: their
+    first use of a fresh index builds ONE broadcast, not one per thread."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    fresh = dataclasses.replace(index)
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            got = list(ex.map(lambda _: kernel_broadcast(fresh), range(8), timeout=300))
+    finally:
+        sys.setswitchinterval(prev)
+    assert len(got) == 8 and all(b is fresh.kernel_bc for b in got)
 
 
 def test_kernel_single_job_no_shuffle(spark):
