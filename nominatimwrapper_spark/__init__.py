@@ -14,10 +14,11 @@ functions/   scalar kernels: text extraction, address cleansing, similarity
              S2 / H3 cell ids, grid tiles)
 operators/   dataflow operators: geocode cascade, point-in-polygon, kNN,
              tile rollups, dedup (exact/MinHash/SimHash), similarity search,
-             text stats, as-of dedup, multimodal plumbing
+             text stats, as-of dedup
 sources/     partitioned parquet reader/writer + per-partition checkpoint
              manifests (resume without recompute)
-streaming/   Structured Streaming demo (watermark + windowed aggregation)
+streaming/   Structured Streaming: the geocode stream (flagship per
+             micro-batch, checkpoint resume) + stateful first-seen dedup
 """
 
 __version__ = "0.1.0"

@@ -172,6 +172,34 @@ def hex_cell_center(cell: int, size_deg: float = 0.005) -> tuple[float, float]:
     return lat, lon
 
 
+def s2_h3_cells(
+    lat: np.ndarray, lon: np.ndarray, s2_level: int = 13, h3_res: int = 9
+) -> pd.DataFrame:
+    """S2 level-L and H3 res-R ids of float lat/lon arrays as columns
+    ``s2``/``h3``. A row with a NaN coordinate gets nulls, not the ids of
+    an invented point."""
+    from . import s2
+    from .h3 import latlng_to_cell
+
+    bad = np.isnan(lat) | np.isnan(lon)
+    la0 = np.where(bad, 0.0, lat)
+    lo0 = np.where(bad, 0.0, lon)
+    s2_ids = s2.parent_cell(s2.lat_lon_to_leaf_id(la0, lo0), s2_level)
+    h3_ids = latlng_to_cell(la0, lo0, h3_res)
+    out = pd.DataFrame(
+        {
+            "s2": np.asarray(s2_ids).astype(np.int64, copy=False),
+            "h3": h3_ids.astype(np.int64, copy=False),
+        }
+    )
+    if bad.any():
+        # nullable Int64, NOT None-assignment on int64 (that upcasts
+        # to float64 and rounds ids above 2^53)
+        out = out.astype("Int64")
+        out.loc[bad, ["s2", "h3"]] = pd.NA
+    return out
+
+
 def s2_h3_cells_udf(s2_level: int = 13, h3_res: int = 9):
     """BOTH tile ids (S2 level-L + H3 res-R) in ONE struct-returning
     pandas UDF — one Arrow crossing instead of two for pipelines that tag
@@ -180,29 +208,12 @@ def s2_h3_cells_udf(s2_level: int = 13, h3_res: int = 9):
     twice on the output path)."""
     from pyspark.sql.pandas.functions import pandas_udf
 
-    from . import s2
-    from .h3 import latlng_to_cell
-
     @pandas_udf("s2 long, h3 long")
     def _cells(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        la = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        lo = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        bad = np.isnan(la) | np.isnan(lo)
-        la0 = np.where(bad, 0.0, la)
-        lo0 = np.where(bad, 0.0, lo)
-        s2_ids = s2.parent_cell(s2.lat_lon_to_leaf_id(la0, lo0), s2_level)
-        h3_ids = latlng_to_cell(la0, lo0, h3_res)
-        out = pd.DataFrame(
-            {
-                "s2": np.asarray(s2_ids).astype(np.int64, copy=False),
-                "h3": h3_ids.astype(np.int64, copy=False),
-            }
+        return s2_h3_cells(
+            lat.to_numpy(dtype=np.float64, na_value=np.nan),
+            lon.to_numpy(dtype=np.float64, na_value=np.nan),
+            s2_level, h3_res,
         )
-        if bad.any():
-            # nullable Int64, NOT None-assignment on int64 (that upcasts
-            # to float64 and rounds ids above 2^53)
-            out = out.astype("Int64")
-            out.loc[bad, ["s2", "h3"]] = pd.NA
-        return out
 
     return _cells

@@ -54,6 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.cleansing import REGEX_REPLACEMENTS, clean_addr_in
+from ..functions.geo import s2_h3_cells
 from ..functions.similarity import SIMILARITY_THRESHOLD
 from ..functions.textnorm import (
     city_compare_one,
@@ -664,15 +665,14 @@ def _extract_addrs_pdf(pages: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({"addr_key": keys, "url": urls, **fields})
 
 
-def _round_half_up_1e6(v: np.ndarray) -> np.ndarray:
-    """F.round semantics (HALF_UP, away from zero) — np.round is half-even."""
-    return (np.sign(v) * np.floor(np.abs(v) * 1e6 + 0.5)).astype(np.int64)
+def _round_half_up_1e6(v: np.ndarray) -> pd.Series:
+    """F.round semantics (HALF_UP, away from zero) — np.round is half-even;
+    NaN rounds to null, as F.round does."""
+    r = pd.Series(np.sign(v) * np.floor(np.abs(v) * 1e6 + 0.5))
+    return r.astype("Int64") if r.isna().any() else r.astype(np.int64)
 
 
 def _tile_pdf(res: pd.DataFrame) -> pd.DataFrame:
-    from ..functions import s2
-    from ..functions.h3 import latlng_to_cell
-
     if not len(res):
         return pd.DataFrame(
             {c: pd.Series(dtype=t) for c, t in [
@@ -682,8 +682,9 @@ def _tile_pdf(res: pd.DataFrame) -> pd.DataFrame:
                 ("lat_1e6", np.int64), ("lon_1e6", np.int64),
             ]}
         )
-    lat = res["lat"].to_numpy(dtype=np.float64)
-    lon = res["lon"].to_numpy(dtype=np.float64)
+    lat = res["lat"].to_numpy(dtype=np.float64, na_value=np.nan)
+    lon = res["lon"].to_numpy(dtype=np.float64, na_value=np.nan)
+    cells = s2_h3_cells(lat, lon, 13, 9)
     return pd.DataFrame(
         {
             "addr_key": res["addr_key"].to_numpy(),
@@ -691,12 +692,10 @@ def _tile_pdf(res: pd.DataFrame) -> pd.DataFrame:
             "method": res["method"].to_numpy(),
             "place_id": res["place_id"].to_numpy(dtype=np.int64),
             "place_rank": res["place_rank"].to_numpy(dtype=np.int64),
-            "cell13": np.asarray(
-                s2.parent_cell(s2.lat_lon_to_leaf_id(lat, lon), 13)
-            ).astype(np.int64),
-            "h3_9": latlng_to_cell(lat, lon, 9).astype(np.int64),
-            "lat_1e6": _round_half_up_1e6(lat),
-            "lon_1e6": _round_half_up_1e6(lon),
+            "cell13": cells["s2"].array,
+            "h3_9": cells["h3"].array,
+            "lat_1e6": _round_half_up_1e6(lat).array,
+            "lon_1e6": _round_half_up_1e6(lon).array,
         }
     )
 

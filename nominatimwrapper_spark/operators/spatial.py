@@ -11,9 +11,10 @@ Scale design notes
   and only the survivors pay the exact ray-cast pandas UDF. At 100 TB the
   expensive UDF therefore touches ~(points near any polygon edge cell)
   rows, not all points.
-- kNN: two implementations. ``knn_bruteforce`` (cross-join; ORACLE-able in
-  ANSI SQL, used as the correctness reference) and ``knn_cells`` — ring
-  expansion over grid cells: r=0,1,2,... joins, stopping per-query as soon
+- kNN: ``knn_bruteforce`` (cross-join; ORACLE-able in ANSI SQL, used as
+  the correctness reference) and ring expansion over grid cells
+  (``knn_cells``) or H3 cells (``knn_h3``), both through one loop
+  (``_knn_ring_loop``): r=0,1,2,... joins, stopping per-query as soon
   as k neighbors are guaranteed correct (found-distance <= ring reach).
 - Rollups: straight groupBy(cell) + optional two-phase SALTED variant for
   skewed hot cells (one city = 25% of traffic in the synth world): partial
@@ -281,24 +282,53 @@ def knn_cells(
     # we use the smaller km-per-cell of the two axes at the query latitude)
     cell_h_km = 111.19492664455873 / cells_per_degree
 
+    def shell_rows(r: int, remaining: DataFrame):
+        offs = [
+            (dy, dx)
+            for dy in range(-r, r + 1)
+            for dx in range(-r, r + 1)
+            if max(abs(dy), abs(dx)) == r  # shell only
+        ]
+        offs_arr = F.array(*[F.lit(dy * w_cells + dx) for dy, dx in offs])
+        return (
+            remaining.withColumn("_off", F.explode(offs_arr))
+            .withColumn("_cell", F.col("_off") + F.col("_qcell"))
+            .drop("_off")
+        ), False
+
+    def finish(r: int, kth: DataFrame):
+        # guaranteed reach of the searched block: r full cells beyond the
+        # query's own cell. Longitude cells are narrower in km by cos(lat),
+        # so the safe bound uses the lon-direction width (with margin).
+        reach_km = F.lit(r * cell_h_km) * F.col("_coslat") * F.lit(0.99)
+        return kth, (F.col("_n") >= k) & (F.col("_kth") <= reach_km)
+
+    return _knn_ring_loop(
+        q, t, no_bc, k, query_id, max_rings, shell_rows, finish,
+        [F.min(F.cos(F.radians(F.col("lat")))).alias("_coslat")], ["_qcell"],
+    )
+
+
+def _knn_ring_loop(
+    q: DataFrame, t: DataFrame, no_bc: bool, k: int, query_id: str, max_rings: int,
+    shell_rows, finish, kth_aggs: list[Column], helper_cols: list[str],
+) -> DataFrame:
+    """The incremental-shell loop of ``knn_cells`` and ``knn_h3``. Ring r
+    joins the unfinished queries' ring-r cells (``shell_rows(r, remaining)``
+    -> (rows with a ``_cell`` column, sphere-exhausted flag)) to the
+    targets and accumulates the scored candidates, so every (query,
+    target) pair is scored once. ``finish(r, kth)`` -> (kth, predicate)
+    marks a query final from its k-th distance ``_kth``, candidate count
+    ``_n`` and ``kth_aggs``; at the last ring, or on exhaustion, every
+    query is final with what it found. ``helper_cols`` are dropped from
+    the result."""
     remaining = q
     acc: DataFrame | None = None  # scored candidates of still-unfinished queries
     done_parts: list[DataFrame] = []
     try:
         for r in range(max_rings + 1):
-            offs = [
-                (dy, dx)
-                for dy in range(-r, r + 1)
-                for dx in range(-r, r + 1)
-                if max(abs(dy), abs(dx)) == r  # shell only
-            ]
-            offs_arr = F.array(*[F.lit(dy * w_cells + dx) for dy, dx in offs])
-            exploded = (
-                remaining.withColumn("_off", F.explode(offs_arr))
-                .withColumn("_cell", F.col("_off") + F.col("_qcell"))
-                .drop("_off")
-            )
-            shell = _knn_target_join(exploded, t, no_bc)
+            shell, exhausted = shell_rows(r, remaining)
+            shell = _knn_target_join(shell, t, no_bc)
             acc = shell if acc is None else acc.unionByName(shell)
             # materialize: the shell join + every prior ring would otherwise be
             # re-evaluated by the window, the finish filter AND the next ring
@@ -308,29 +338,22 @@ def knn_cells(
             topk = acc.withColumn("knn_rank", F.row_number().over(wnd)).filter(
                 F.col("knn_rank") <= k
             )
-            # guaranteed reach of the searched block: r full cells beyond the
-            # query's own cell. Longitude cells are narrower in km by cos(lat),
-            # so the safe bound uses the lon-direction width (with margin).
             kth = topk.groupBy(query_id).agg(
-                F.max("dist_km").alias("_kth"),
-                F.count("*").alias("_n"),
-                F.min(F.cos(F.radians(F.col("lat")))).alias("_coslat"),
+                F.max("dist_km").alias("_kth"), F.count("*").alias("_n"), *kth_aggs
             )
-            reach_km = F.lit(r * cell_h_km) * F.col("_coslat") * F.lit(0.99)
-            finished_keys = kth.filter((F.col("_n") >= k) & (F.col("_kth") <= reach_km)).select(
-                query_id
-            )
-            if r == max_rings:  # last ring: everything found is final
+            kth, final = finish(r, kth)
+            finished_keys = kth.filter(final).select(query_id)
+            if r == max_rings or exhausted:  # everything found is final
                 finished_keys = kth.select(query_id)
             finished = topk.join(finished_keys, on=query_id, how="inner")
             done_parts.append(
-                finished.drop("_qcell").withColumnRenamed("_tid", "neighbor_id")
+                finished.drop(*helper_cols).withColumnRenamed("_tid", "neighbor_id")
                 .localCheckpoint(eager=True)
             )
             remaining = remaining.join(finished_keys, on=query_id, how="left_anti").localCheckpoint(
                 eager=True
             )
-            if remaining.isEmpty():
+            if exhausted or remaining.isEmpty():
                 break
             acc = acc.join(finished_keys, on=query_id, how="left_anti")
     finally:
@@ -385,24 +408,6 @@ def tile_rollup(
     return partial.groupBy(cell_col).agg(*final_aggs)
 
 
-def tile_rollup_approx(
-    points: DataFrame,
-    cell_col: str = "cell",
-    distinct_col: str = "id",
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Sketch path for per-tile distincts at 100 TB: HyperLogLog++
-    (``approx_count_distinct``) instead of an exact distinct. Exact
-    distinct-per-cell shuffles every (cell, id) pair and cannot be salted
-    (set union); the HLL sketch partial-aggregates map-side into a
-    fixed-size buffer per cell, so a hot cell costs the same shuffle bytes
-    as a cold one. ``rsd`` = target relative standard deviation."""
-    return points.groupBy(cell_col).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(distinct_col, rsd).alias(f"approx_{distinct_col}"),
-    )
-
-
 def _knn_target_join(shell_df: DataFrame, t: DataFrame, no_bc: bool) -> DataFrame:
     """One ring's candidate join: broadcast under the byte gate, shuffle
     hash join on the cell key above it (both sides hash-partition on
@@ -452,16 +457,16 @@ def knn_h3(
 ) -> DataFrame:
     """kNN via H3 ring expansion (J10/W4 on the real Uber-H3 tiling).
 
-    Same incremental-shell contract as ``knn_cells``: ring r joins only
-    the cells at exactly grid distance r, candidates accumulate, and a
-    query finishes once its k-th neighbor is provably closer than any
-    point in an unsearched cell. The finish bound is per query cell
-    with a ONE-RING LOOKAHEAD: ring r+1's exact minimum center distance
-    (its shells are driver-computed anyway), plus the calibrated reach
-    table (functions/h3.py ring_finish_reach_km — per-ring minima over
-    the pentagon/seam distortion extremes) for rings >= r+2, minus the
-    target's max center offset and the query point's ACTUAL center
-    offset. Replaces the round-3 ``r * min_spacing`` bound that was
+    Runs the incremental-shell loop ``_knn_ring_loop`` shared with
+    ``knn_cells``: ring r joins only the cells at exactly grid distance r,
+    candidates accumulate, and a query finishes once its k-th neighbor is
+    provably closer than any point in an unsearched cell. The finish
+    bound is per query cell with a ONE-RING LOOKAHEAD: ring r+1's exact
+    minimum center distance (its shells are driver-computed anyway), plus
+    the calibrated reach table (functions/h3.py ring_finish_reach_km —
+    per-ring minima over the pentagon/seam distortion extremes) for rings
+    >= r+2, minus the target's max center offset and the query point's
+    ACTUAL center offset. Replaces the round-3 ``r * min_spacing`` bound that was
     unsound for hex grid distance (zigzag centers).
 
     Scale shape:
@@ -584,112 +589,76 @@ def knn_h3(
         return 2 * 6371.0088 * float(np.arcsin(np.sqrt(min(max(h_, 0.0), 1.0))))
 
     shells: dict[int, set[int]] = {int(c): {int(c)} for c in qcells}
-    remaining = q
-    acc: DataFrame | None = None
-    done_parts: list[DataFrame] = []
+    bounds: DataFrame | None = None  # ring r's per-query-cell lookahead bound
     empty_shell = spark.createDataFrame([], "_qcell long, _cell long")
     empty_bounds = spark.createDataFrame([], "_qcell long, _local double, _exh boolean")
-    try:
-        for r in range(max_rings + 1):
-            active = [c for c in shells if shells[c]]
-            rows = [(int(c), int(s)) for c in active for s in shells[c]]
-            exhausted = not rows and r > 0  # every active query searched the sphere
-            ring_map = (
-                spark.createDataFrame(pd.DataFrame(rows, columns=["_qcell", "_cell"]))
-                if rows
-                else empty_shell
-            )
-            # ONE-RING LOOKAHEAD for the finish bound: ring r+1's shells are
-            # computed now, so the bound can use each query cell's EXACT
-            # minimum center distance to its next ring (local grid spacing —
-            # typically ~1.7x the pentagon-depressed global minimum), with
-            # the global suffix table covering rings >= r+2 only.
-            next_shells = _bfs_step(shells)
-            local_rows = []
-            if r < max_rings:
-                want = set()
-                for c in active:
-                    want |= next_shells.get(c, set())
-                _centers_of(want)
-                for c in active:
-                    nxt = next_shells.get(c, set())
-                    if nxt:
-                        lm = min(_hav_np(qcenter[c], center_cache[s]) for s in nxt)
-                        local_rows.append((int(c), lm * 0.999, False))  # float margin
-                    else:
-                        # BFS exhausted for this cell: disk r covers every
-                        # reachable cell, so NOTHING is unsearched — the
-                        # query is final with whatever it found
-                        local_rows.append((int(c), 0.0, True))
-            local_bounds = (
-                spark.createDataFrame(
-                    pd.DataFrame(local_rows, columns=["_qcell", "_local", "_exh"])
-                )
-                if local_rows
-                else empty_bounds
-            )
 
-            shell_df = remaining.join(F.broadcast(ring_map), on="_qcell", how="inner")
-            shell_df = _knn_target_join(shell_df, t, no_bc)
-            acc = shell_df if acc is None else acc.unionByName(shell_df)
-            acc = acc.localCheckpoint(eager=True)
-
-            wnd = Window.partitionBy(query_id).orderBy(
-                F.col("dist_km").asc(), F.col("_tid").asc()
-            )
-            topk = acc.withColumn("knn_rank", F.row_number().over(wnd)).filter(
-                F.col("knn_rank") <= k
-            )
-            kth = topk.groupBy(query_id).agg(
-                F.max("dist_km").alias("_kth"),
-                F.count("*").alias("_n"),
-                F.max("_qoff").alias("_qo"),
-                F.max("_qcell").alias("_qc"),
-            )
-            # any unsearched target sits either in ring r+1 (exact local
-            # minimum center distance, computed above) or at grid distance
-            # >= r+2 (global suffix table); both net the target's max center
-            # offset and the query point's ACTUAL center offset
-            glob_next = float(suffix_d[r + 1]) if r + 1 < len(suffix_d) else float(suffix_d[-1])
-            kth = kth.join(
-                F.broadcast(local_bounds), kth._qc == local_bounds._qcell, "left"
-            )
-            bound_center = F.least(
-                F.coalesce(F.col("_local"), F.lit(float("inf"))), F.lit(glob_next)
-            )
-            finish_km = bound_center - F.lit(float(r_max)) - F.col("_qo")
-            finished_keys = kth.filter(
-                F.coalesce(F.col("_exh"), F.lit(False))
-                | ((F.col("_n") >= k) & (F.col("_kth") <= finish_km))
-            ).select(query_id)
-            if r == max_rings or exhausted:
-                finished_keys = kth.select(query_id)
-            finished = topk.join(finished_keys, on=query_id, how="inner")
-            done_parts.append(
-                finished.drop("_qcell", "_qoff")
-                .withColumnRenamed("_tid", "neighbor_id")
-                .localCheckpoint(eager=True)
-            )
-            remaining = remaining.join(
-                finished_keys, on=query_id, how="left_anti"
-            ).localCheckpoint(eager=True)
-            if exhausted or remaining.isEmpty():
-                break
-            acc = acc.join(finished_keys, on=query_id, how="left_anti")
+    def shell_rows(r: int, remaining: DataFrame):
+        nonlocal shells, bounds
+        if r:
             # prune the BFS to cells some unfinished query still needs — one
             # small collect on the (checkpointed, capped) query side saves
             # the driver-side neighbor expansion for finished regions
             live = {row[0] for row in remaining.select("_qcell").distinct().collect()}
-            shells = {c: s for c, s in next_shells.items() if c in live}
-    finally:
-        # done_parts are checkpointed; drop the cached target
-        # projection so repeated kNN calls do not accrete storage
-        t.unpersist(blocking=True)
+            shells = {c: s for c, s in shells.items() if c in live}
+        active = [c for c in shells if shells[c]]
+        rows = [(int(c), int(s)) for c in active for s in shells[c]]
+        exhausted = not rows and r > 0  # every active query searched the sphere
+        ring_map = (
+            spark.createDataFrame(pd.DataFrame(rows, columns=["_qcell", "_cell"]))
+            if rows
+            else empty_shell
+        )
+        # ONE-RING LOOKAHEAD for the finish bound: ring r+1's shells are
+        # computed now, so the bound can use each query cell's EXACT
+        # minimum center distance to its next ring (local grid spacing —
+        # typically ~1.7x the pentagon-depressed global minimum), with
+        # the global suffix table covering rings >= r+2 only.
+        shells = _bfs_step(shells)
+        local_rows = []
+        if r < max_rings:
+            want = set()
+            for c in active:
+                want |= shells.get(c, set())
+            _centers_of(want)
+            for c in active:
+                nxt = shells.get(c, set())
+                if nxt:
+                    lm = min(_hav_np(qcenter[c], center_cache[s]) for s in nxt)
+                    local_rows.append((int(c), lm * 0.999, False))  # float margin
+                else:
+                    # BFS exhausted for this cell: disk r covers every
+                    # reachable cell, so NOTHING is unsearched — the
+                    # query is final with whatever it found
+                    local_rows.append((int(c), 0.0, True))
+        bounds = (
+            spark.createDataFrame(
+                pd.DataFrame(local_rows, columns=["_qcell", "_local", "_exh"])
+            )
+            if local_rows
+            else empty_bounds
+        )
+        return remaining.join(F.broadcast(ring_map), on="_qcell", how="inner"), exhausted
 
-    out = done_parts[0]
-    for p_ in done_parts[1:]:
-        out = out.unionByName(p_)
-    return out
+    def finish(r: int, kth: DataFrame):
+        # any unsearched target sits either in ring r+1 (exact local
+        # minimum center distance, computed above) or at grid distance
+        # >= r+2 (global suffix table); both net the target's max center
+        # offset and the query point's ACTUAL center offset
+        glob_next = float(suffix_d[r + 1]) if r + 1 < len(suffix_d) else float(suffix_d[-1])
+        kth = kth.join(F.broadcast(bounds), kth._qc == bounds._qcell, "left")
+        bound_center = F.least(
+            F.coalesce(F.col("_local"), F.lit(float("inf"))), F.lit(glob_next)
+        )
+        finish_km = bound_center - F.lit(float(r_max)) - F.col("_qo")
+        return kth, F.coalesce(F.col("_exh"), F.lit(False)) | (
+            (F.col("_n") >= k) & (F.col("_kth") <= finish_km)
+        )
+
+    return _knn_ring_loop(
+        q, t, no_bc, k, query_id, max_rings, shell_rows, finish,
+        [F.max("_qoff").alias("_qo"), F.max("_qcell").alias("_qc")], ["_qcell", "_qoff"],
+    )
 
 
 def multi_zoom_rollup(

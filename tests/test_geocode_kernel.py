@@ -134,6 +134,29 @@ def test_pages_kernel_matches_distributed_pipeline_with_recrawls(spark, flagship
     _assert_engines_agree(spark, _recrawled(flagship_pages), dedup_crawls=True)
 
 
+def test_null_coordinate_place_tiles_to_nulls_on_both_engines(spark, world, tmp_path):
+    """A gazetteer house with a null lat/lon (build_gazetteer_index does
+    not reject one): both engines agree row for row, and the addresses it
+    matches carry nulls in cell13, h3_9, lat_1e6 and lon_1e6 rather than
+    the ids and coordinates of an invented point."""
+    from nominatimwrapper_spark.plans.flagship import geocode_and_tile
+
+    gaz = world["gazetteer"].copy()
+    houses = gaz.index[gaz.place_rank == 30][::3]
+    gaz.loc[houses, ["lat", "lon"]] = np.nan
+    write_world(str(tmp_path), {"gazetteer": gaz})
+    idx = build_gazetteer_index(spark.read.parquet(f"{tmp_path}/gazetteer.parquet"))
+    pages = spark.createDataFrame(world["pages"]).localCheckpoint(eager=True)
+    exp = _sorted(geocode_and_tile(pages, dataclasses.replace(idx, broadcast_ok=False)))
+    got = _sorted(geocode_and_tile(pages, idx))
+    pd.testing.assert_frame_equal(exp, got)
+    tiles = ["cell13", "h3_9", "lat_1e6", "lon_1e6"]
+    nulls = got.place_id.isin(gaz.loc[houses, "place_id"])
+    assert nulls.any() and (~nulls).any()
+    assert got.loc[nulls, tiles].isna().all().all()
+    assert got.loc[~nulls, tiles].notna().all().all()
+
+
 def test_duplicate_url_guard_on_both_regimes(spark, flagship_pages):
     """One url crawled twice: without recrawl dedup the guard raises on
     both engines before any geocoding; with it only the latest crawl's

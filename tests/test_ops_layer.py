@@ -1,5 +1,5 @@
 # -*- coding: utf-8 -*-
-"""Checkpoint/resume, streaming windowed agg, multimodal plumbing, dedup."""
+"""Checkpoint/resume, streaming, dedup."""
 
 from __future__ import annotations
 
@@ -15,17 +15,7 @@ from nominatimwrapper_spark.operators.dedup import (
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
 )
-from nominatimwrapper_spark.operators.multimodal import (
-    decode_media,
-    media_features,
-    sample_video_frames,
-    synth_media,
-)
 from nominatimwrapper_spark.sources.checkpoint import PartitionedCheckpointer
-from nominatimwrapper_spark.streaming.windowed import (
-    run_stream_over_dir,
-    windowed_event_counts,
-)
 
 SF = "/root/testdata/sf0.01"
 
@@ -74,27 +64,6 @@ def test_checkpoint_resume_no_recompute(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # streaming
 # ---------------------------------------------------------------------------
-
-
-def test_streaming_matches_batch(spark, tmp_path):
-    events = spark.read.parquet(f"{SF}/events.parquet").limit(2000).cache()
-    # split into 3 file chunks -> incremental stream
-    in_dir = str(tmp_path / "in")
-    events.repartition(3).write.parquet(in_dir)
-
-    q = run_stream_over_dir(
-        spark, in_dir, events.schema, str(tmp_path / "ck"), query_name="t_win"
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("select * from t_win").toPandas()
-    exp = windowed_event_counts(events).toPandas()
-    key = ["win_start", "win_end", "event_type"]
-    got = got.sort_values(key).reset_index(drop=True)
-    exp = exp.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got[key + ["n"]], exp[key + ["n"]])
 
 
 def test_streaming_geocode_matches_batch_and_resumes(spark, tmp_path):
@@ -433,92 +402,6 @@ def test_stateful_first_seen_dedup(spark, tmp_path):
     g = got[key].sort_values("url").reset_index(drop=True)
     e = exp[key].sort_values("url").reset_index(drop=True)
     pd.testing.assert_frame_equal(g, e)
-
-
-# ---------------------------------------------------------------------------
-# multimodal
-# ---------------------------------------------------------------------------
-
-
-def test_multimodal_decode_and_features(spark):
-    media = synth_media(spark, n=60)
-    dec = decode_media(media).toPandas()
-    assert len(dec) == 60
-    img = dec[dec.media_type == "image"]
-    assert img.width.notna().all() and (img.width >= 16).all()
-    aud = dec[dec.media_type == "audio"]
-    assert (aud.sample_rate == 16000).all()
-    vid = dec[dec.media_type == "video"]
-    assert vid.n_frames.notna().all()
-
-    feats = media_features(media).select("media_id", "features").toPandas()
-    assert all(len(f) == 16 for f in feats.features)
-    # deterministic: same payload -> same vector
-    f2 = media_features(media).select("media_id", "features").toPandas()
-    a = [tuple(v) for v in feats.sort_values("media_id").features]
-    b = [tuple(v) for v in f2.sort_values("media_id").features]
-    assert a == b
-
-
-def test_real_codecs_wav_and_netpbm(spark):
-    """The stdlib-decodable tier is REAL: exact WAV/P6 metadata and
-    pixel/PCM statistics verified against numpy ground truth."""
-    import numpy as np
-
-    from nominatimwrapper_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_stats,
-        image_stats,
-        make_ppm,
-        make_wav,
-    )
-
-    rng = np.random.default_rng(5)
-    px = rng.integers(0, 256, size=(10, 20, 3)).astype(np.uint8)
-    t = np.arange(16000)  # exactly 1 s at 16 kHz
-    tone = (12000 * np.sin(2 * np.pi * 220 * t / 16000)).astype("<i2")
-    rows = [
-        (1, "media://1", "image", make_ppm(20, 10, px)),
-        (2, "media://2", "audio", make_wav(16000, tone)),
-        (3, "media://3", "image", b"IMG:99x77:xxxx"),  # fake-codec tier
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    dec = decode_media(media).toPandas().set_index("media_id")
-    assert (int(dec.loc[1, "width"]), int(dec.loc[1, "height"])) == (20, 10)
-    assert int(dec.loc[2, "sample_rate"]) == 16000
-    assert int(dec.loc[2, "duration_ms"]) == 1000
-    assert int(dec.loc[2, "n_frames"]) == 16000
-    assert (int(dec.loc[3, "width"]), int(dec.loc[3, "height"])) == (99, 77)
-
-    ist = image_stats(media).toPandas().set_index("media_id")
-    exp_mu = px.reshape(-1, 3).mean(axis=1).mean()
-    assert abs(ist.loc[1, "mean_luma"] - exp_mu) < 1e-3
-    assert 3 not in ist.index  # fake-codec image has no real pixels
-
-    # \r\n after maxval: per the netpbm spec exactly ONE whitespace byte
-    # separates maxval from the raster, so this payload's raster length is
-    # off by one — it must be SKIPPED (no silently shifted pixel read)
-    crlf = b"P6\n20 10\n255\r\n" + px.tobytes()
-    media_crlf = spark.createDataFrame([(9, "media://9", "image", crlf)], MEDIA_SCHEMA)
-    assert 9 not in image_stats(media_crlf).toPandas().media_id.values
-
-    ast = audio_stats(media).toPandas().set_index("media_id")
-    x = tone.astype(np.float64) / 32768.0
-    assert abs(ast.loc[2, "rms"] - np.sqrt((x * x).mean())) < 1e-5
-    assert int(ast.loc[2, "n_samples"]) == 16000
-    # a 220 Hz tone crosses zero ~440 times/s
-    assert abs(ast.loc[2, "zero_crossing_rate"] * 16000 - 440) < 5
-
-
-def test_video_frame_sampling(spark):
-    media = synth_media(spark, n=30)
-    frames = sample_video_frames(media, every_k=10).toPandas()
-    dec = decode_media(media).toPandas().set_index("media_id")
-    for mid, grp in frames.groupby("media_id"):
-        n = int(dec.loc[mid, "n_frames"])
-        assert list(grp.frame_idx) == list(range(0, n, 10))
-        assert (grp.byte_offset.diff().dropna() == 640).all()
 
 
 # ---------------------------------------------------------------------------

@@ -129,38 +129,6 @@ def test_cascade_result_has_no_restore_join(spark, tmp_path_factory):
     assert (out["caller_col"] == "payload-" + out["addr_key"]).all()
 
 
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    """Tables bucketed on their join keys with the same bucket count join
-    WITHOUT a shuffle: the plan must contain no Exchange on either side
-    (the write-once-join-many pattern for 100 TB fact tables)."""
-    from nominatimwrapper_spark.sources.bucketed import read_table, write_bucketed
-
-    c = spark.read.parquet(f"{SF}/customer.parquet").select("c_custkey", "c_name")
-    o = spark.read.parquet(f"{SF}/orders.parquet").select("o_orderkey", "o_custkey")
-    write_bucketed(c, "t_cust_b", "c_custkey", 8, path=str(tmp_path / "c"))
-    write_bucketed(o, "t_ord_b", "o_custkey", 8, path=str(tmp_path / "o"))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # tables this small would be broadcast (also shuffle-free, but not
-        # the path under test) — force the planner to the bucketed SMJ
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = read_table(spark, "t_cust_b").join(
-            read_table(spark, "t_ord_b"),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        plan = _formatted(j)
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        assert "SortMergeJoin" in plan
-        assert "Bucketed: true" in plan
-        # same rows as the plain (shuffling) join
-        exp = c.join(o, c.c_custkey == o.o_custkey).count()
-        assert j.count() == exp
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_cust_b")
-        spark.sql("DROP TABLE IF EXISTS t_ord_b")
-
-
 def test_salted_rollup_two_phase(spark):
     from nominatimwrapper_spark.operators.spatial import tile_rollup
 

@@ -169,26 +169,6 @@ def test_knn_h3_matches_bruteforce(spark, world):
     pd.testing.assert_frame_equal(bf, h3r)
 
 
-def test_tile_rollup_approx_within_error(spark, world):
-    """HLL sketch path: per-cell approx distinct within the configured
-    relative error of the exact distinct, exact row counts untouched."""
-    from nominatimwrapper_spark.operators.spatial import tile_rollup_approx
-
-    gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
-    pts = gaz.withColumn("cell", grid_cell_col(F.col("lat"), F.col("lon")))
-    exact = (
-        tile_rollup(pts, "cell", count_distinct_col="place_id")
-        .toPandas().set_index("cell").sort_index()
-    )
-    approx = (
-        tile_rollup_approx(pts, "cell", distinct_col="place_id", rsd=0.02)
-        .toPandas().set_index("cell").sort_index()
-    )
-    assert (exact.n == approx.n).all()
-    rel = (approx.approx_place_id - exact.n_place_id).abs() / exact.n_place_id
-    assert rel.max() <= 0.1  # 2% rsd -> 10% is a generous hard bound
-
-
 def test_tile_rollup_plain_vs_salted(spark, world):
     gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
     pts = gaz.withColumn("cell", grid_cell_col(F.col("lat"), F.col("lon")))
@@ -397,6 +377,104 @@ def test_knn_h3_k_exceeds_targets_sphere_exhausted(spark):
         bf.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
         got.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
     )
+
+
+def _knn_run(tiling, queries, targets, **kw):
+    from nominatimwrapper_spark.operators.spatial import knn_h3
+
+    fn = knn_h3 if tiling == "h3" else knn_cells
+    return (
+        fn(queries, targets, **kw)
+        .select("query_id", "neighbor_id", "knn_rank").toPandas()
+        .sort_values(["query_id", "knn_rank"]).reset_index(drop=True)
+    )
+
+
+def _cutoff_layout():
+    """One query at the center of its res-7 H3 cell. Targets: one in the
+    query's own cell, one at a direct H3 neighbor's center, one at a
+    grid-distance-2 center, and two ~100 km away. Returns (queries,
+    targets) pandas."""
+    from nominatimwrapper_spark.functions.h3 import cell_to_latlng, grid_rings, latlng_to_cell
+
+    q0 = int(latlng_to_cell(np.array([50.4]), np.array([4.4]), 7)[0])
+    ring1, ring2 = grid_rings([q0], 2)[0][1:]
+    cells = [q0, min(ring1), min(ring2)]
+    la, lo = cell_to_latlng(np.array(cells, dtype=np.uint64))
+    qpdf = pd.DataFrame(dict(query_id=[7], lat=[la[0]], lon=[lo[0]]))
+    tpdf = pd.DataFrame(dict(
+        place_id=[1, 2, 3, 4, 5],
+        lat=[la[0] + 0.002, la[1], la[2], la[0] + 0.9, la[0] - 0.9],
+        lon=[lo[0], lo[1], lo[2], lo[0] + 0.9, lo[0] - 0.9],
+    ))
+    return qpdf, tpdf
+
+
+def _in_reach(tiling, qlat, qlon, tpdf):
+    """Targets whose cell is within one ring of the query's cell."""
+    from nominatimwrapper_spark.functions.geo import grid_cell_scalar
+    from nominatimwrapper_spark.functions.h3 import grid_disk, latlng_to_cell
+
+    if tiling == "h3":
+        disk = grid_disk(latlng_to_cell(np.array([qlat]), np.array([qlon]), 7), 1)[0]
+        tc = latlng_to_cell(tpdf.lat.to_numpy(), tpdf.lon.to_numpy(), 7)
+        return tpdf[[int(c) in disk for c in tc]]
+    w = 360 * 32
+    qc = grid_cell_scalar(qlat, qlon)
+    keep = []
+    for la, lo in zip(tpdf.lat, tpdf.lon):
+        tc = grid_cell_scalar(la, lo)
+        keep.append(max(abs(tc // w - qc // w), abs(tc % w - qc % w)) <= 1)
+    return tpdf[keep]
+
+
+@pytest.mark.parametrize("force_no_broadcast", [False, True])
+@pytest.mark.parametrize("tiling", ["cells", "h3"])
+def test_knn_max_rings_cutoff_returns_in_reach_only(spark, tiling, force_no_broadcast):
+    """max_rings=1 with the k nearest targets beyond ring 1: the last ring
+    finalizes whatever the searched disk holds, ranked from 1 — the
+    in-reach targets only, in brute-force order."""
+    qpdf, tpdf = _cutoff_layout()
+    near = _in_reach(tiling, qpdf.lat[0], qpdf.lon[0], tpdf)
+    assert 0 < len(near) < 4 and len(near) < len(tpdf)
+    queries = spark.createDataFrame(qpdf)
+    want = (
+        knn_bruteforce(queries, spark.createDataFrame(near), k=4)
+        .select("query_id", "neighbor_id", "knn_rank").toPandas()
+        .sort_values(["query_id", "knn_rank"]).reset_index(drop=True)
+    )
+    got = _knn_run(
+        tiling, queries, spark.createDataFrame(tpdf), k=4, max_rings=1,
+        force_no_broadcast=force_no_broadcast,
+    )
+    assert list(got.knn_rank) == list(range(1, len(near) + 1))
+    pd.testing.assert_frame_equal(want, got)
+
+
+@pytest.mark.parametrize("force_no_broadcast", [False, True])
+@pytest.mark.parametrize("tiling", ["cells", "h3"])
+def test_knn_k_exceeds_targets_returns_every_target(spark, tiling, force_no_broadcast):
+    """k larger than the whole target table, every target within
+    max_rings: no query ever holds k candidates, so each runs to the last
+    ring and gets every target exactly once, in brute-force order."""
+    qpdf, tpdf = _cutoff_layout()
+    tpdf = tpdf.iloc[:3]
+    qpdf = pd.concat([qpdf, pd.DataFrame(dict(
+        query_id=[8], lat=[tpdf.lat[2] + 0.003], lon=[tpdf.lon[2]]
+    ))], ignore_index=True)
+    queries = spark.createDataFrame(qpdf)
+    targets = spark.createDataFrame(tpdf)
+    want = (
+        knn_bruteforce(queries, targets, k=10)
+        .select("query_id", "neighbor_id", "knn_rank").toPandas()
+        .sort_values(["query_id", "knn_rank"]).reset_index(drop=True)
+    )
+    assert len(want) == len(qpdf) * len(tpdf)
+    got = _knn_run(
+        tiling, queries, targets, k=10, max_rings=4,
+        force_no_broadcast=force_no_broadcast,
+    )
+    pd.testing.assert_frame_equal(want, got)
 
 
 def test_knn_h3_global_scatter_matches_bruteforce(spark):
