@@ -9,12 +9,15 @@ frames become fixed-schema columnar DataFrames.
 
 Layout
 ------
-functions/   scalar kernels: text extraction, address cleansing, similarity
-             (Damerau-Levenshtein, fingerprint, inclusion), geo (haversine,
-             S2 / H3 cell ids, grid tiles)
-operators/   dataflow operators: geocode cascade, point-in-polygon, kNN,
-             tile rollups, dedup (exact/MinHash/SimHash), similarity search,
-             text stats, as-of dedup
+functions/   scalar kernels: text extraction, address cleansing, the
+             compare family and its threshold (Damerau-Levenshtein,
+             fingerprint, inclusion), geo (haversine, S2 / H3 cell ids,
+             grid tiles)
+operators/   dataflow operators: geocode cascade (Spark data movement) and
+             geocode kernel (the ladder's pandas decisions, shared by both
+             engines), point-in-polygon, kNN, tile rollups, dedup
+             (exact/MinHash/SimHash), similarity search, text stats, as-of
+             dedup
 sources/     partitioned parquet reader/writer + per-partition checkpoint
              manifests (resume without recompute)
 streaming/   Structured Streaming: the geocode stream (flagship per

@@ -16,8 +16,8 @@ Spec (applied in order):
    decimal/hex; unknown entities pass through verbatim
 5. collapse all whitespace runs to a single space; strip ends
 
-Also here: the n-gram language-ID heuristic and document fingerprint
-(rolling hash) used by the text-analysis operators.
+Also here: the n-gram language-ID heuristic and the FNV-1a word hash used
+by the text-analysis operators.
 """
 
 from __future__ import annotations
@@ -123,7 +123,7 @@ def detect_lang_udf(text: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# document fingerprint — 64-bit FNV-1a rolling over word shingles
+# 64-bit FNV-1a (the SimHash word hash, operators/dedup.simhash_np)
 # ---------------------------------------------------------------------------
 
 _FNV_OFFSET = 0xCBF29CE484222325
@@ -137,35 +137,3 @@ def fnv1a_64(data: bytes) -> int:
         h ^= byte
         h = (h * _FNV_PRIME) & _MASK64
     return h
-
-
-def doc_fingerprint(text: str | None, shingle: int = 3) -> int:
-    """Order-sensitive 64-bit fingerprint: XOR of FNV-1a over word
-     3-shingles (content-defined, whitespace-canonical). Signed int64 for
-    Spark LongType."""
-    if not text:
-        return 0
-    words = text.split()
-    if len(words) < shingle:
-        h = fnv1a_64(" ".join(words).encode("utf-8"))
-    else:
-        h = 0
-        for i in range(len(words) - shingle + 1):
-            h ^= fnv1a_64(" ".join(words[i : i + shingle]).encode("utf-8"))
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def simhash64(text: str | None) -> int:
-    """64-bit SimHash over word features (near-dup detection). Signed."""
-    if not text:
-        return 0
-    counts = [0] * 64
-    for w in text.split():
-        h = fnv1a_64(w.encode("utf-8"))
-        for b in range(64):
-            counts[b] += 1 if (h >> b) & 1 else -1
-    out = 0
-    for b in range(64):
-        if counts[b] > 0:
-            out |= 1 << b
-    return out - (1 << 64) if out >= (1 << 63) else out

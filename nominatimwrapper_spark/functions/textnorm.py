@@ -44,9 +44,12 @@ __all__ = [
     "street_fingerprint_key",
     "city_key",
     "DONTWATCHTHIS",
+    "SIMILARITY_THRESHOLD",
 ]
 
 DONTWATCHTHIS = "DONOTCONSIDERTHISSTRING"
+
+SIMILARITY_THRESHOLD = 0.5  # reference config.py:100
 
 # street-word removals applied before Levenshtein scoring
 # (reference: check_result_utils.py:250-254)

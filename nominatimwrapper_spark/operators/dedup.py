@@ -478,9 +478,3 @@ def simhash_udf():
         return pd.Series(simhash_np(text.tolist()))
 
     return _simhash
-
-
-def hamming64_col(a, b):
-    """Hamming distance between two int64 SimHash columns — pure bit math
-    (bit_count of xor), JVM-side."""
-    return F.bit_count(a.bitwiseXOR(b))

@@ -8,11 +8,16 @@ Reference lifecycle being reproduced (values, not architecture):
     transform_and_process        utils.py:589-688     -> _one_stage()
     apply_transformers           utils.py:692-776     -> apply_transformers()
     process_osm (REST + parse)   utils.py:300-441     -> _process()/_candidates_unique()
-    osm_keep_relevant_results    check_result_utils.py:648-699 -> _score()/_pick_best()
-    match_parent                 check_result_utils.py:560-644 -> _parent_rescue()
+    osm_keep_relevant_results    check_result_utils.py:648-699 -> _check() -> geocode_kernel._check_pdf()
+    match_parent                 check_result_utils.py:560-644 -> geocode_kernel._parent_rescue_pdf()
     retry_with_low_place_rank    utils.py:225-299     -> _retry_low_rank_unique()
-    libpostal_transformer        transformers.py:261-320 -> rule-based parse UDF
-    photon_transformer           transformers.py:182-247 -> locality-candidate rerank
+    libpostal_transformer        transformers.py:261-320 -> geocode_kernel._apply_libpostal()
+    photon_transformer           transformers.py:182-247 -> geocode_kernel._photon_best_pdf()
+
+Each check decision (scoring, elimination, best per query with its tail,
+parent rescue, the libpostal sanity check, the photon re-rank) has one
+pandas implementation in geocode_kernel.py, which both engines call; this
+module owns only the Spark data movement around it.
 
 Scale design: the gazetteer index is the SMALL side (a country extract is
 millions of rows) and is broadcast; the page/address corpus is the BIG side
@@ -35,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
 
 from ..functions.cleansing import (
     apply_regex_ruleset,
@@ -45,14 +50,6 @@ from ..functions.cleansing import (
     digit_prefix_col,
 )
 from ..functions.geo import haversine_col
-from ..functions.similarity import (
-    city_sim,
-    elimination_rule,
-    house_number_sim,
-    postcode_sim,
-    street_sim,
-    street_sim_best,
-)
 from ..functions.textnorm import city_key, street_fingerprint_key
 
 # reference config.py:102-112
@@ -431,121 +428,80 @@ def geocode_candidates(addr: DataFrame, index: GazetteerIndex) -> DataFrame:
 # check path
 # ---------------------------------------------------------------------------
 
-_SIM_COLS = ["sim_street", "sim_street_which", "sim_house_number", "sim_post_code", "sim_city"]
+# the check's output columns after the candidate columns; reject_reason is
+# null on the keep rows
+_CHECK_FIELDS = [
+    StructField("sim_street", DoubleType()),
+    StructField("sim_street_which", StringType()),
+    StructField("sim_house_number", DoubleType()),
+    StructField("sim_post_code", DoubleType()),
+    StructField("sim_city", DoubleType()),
+    StructField("reject_reason", StringType()),
+]
 
 
-def _score(cand: DataFrame, street_b: str = "street") -> DataFrame:
-    """Attach the check scores — reference ignore_mismatch_keep_bests
-    (check_result_utils.py:463-531). a-side = candidate output fields,
-    b-side = the (transformed) input fields."""
-    best = street_sim_best(
-        F.col("out_street_name"), F.col("out_other"), F.col("namedetails"), F.col(street_b)
-    )
+def _whole_groups(batches, key: str):
+    """Re-cut the Arrow batches of a partition sorted on ``key`` so that
+    every frame yielded holds all rows of each of its keys: a key's rows
+    may span batches, and a decision must see all of them."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if not len(pdf):
+            continue
+        last = (pdf[key] == pdf[key].iloc[-1]).to_numpy()
+        carry = pdf.loc[last]
+        if not last.all():
+            yield pdf.loc[~last].reset_index(drop=True)
+    if carry is not None:
+        yield carry.reset_index(drop=True)
+
+
+def _map_groups(df: DataFrame, key: str, fn, schema: StructType) -> DataFrame:
+    """``fn`` (pandas -> pandas) over whole ``key`` groups: one hash
+    exchange on the key, a sort within partitions, one mapInPandas."""
     return (
-        cand.withColumn("_sb", best)
-        .withColumn("sim_street", F.col("_sb.sim_street"))
-        .withColumn("sim_street_which", F.col("_sb.sim_street_which"))
-        .drop("_sb")
-        .withColumn(
-            "sim_house_number",
-            house_number_sim(F.coalesce("out_house_number", F.lit("")), F.coalesce("housenbr", F.lit(""))),
+        df.repartition(key)
+        .sortWithinPartitions(key)
+        .mapInPandas(lambda it: map(fn, _whole_groups(it, key)), schema)
+    )
+
+
+def _check(
+    cand: DataFrame, index: GazetteerIndex, check_results: bool, use_parent: bool
+) -> DataFrame:
+    """The check of the unique-level candidates — osm_keep_relevant_results
+    (check_result_utils.py:648-699) and match_parent (:560-644) — as the
+    kernel's _check_pdf over whole transformed_address groups. For the
+    rescue each candidate first gets its street parent's alt names by a
+    join on parent_place_id under the index's broadcast gate. Returns the
+    candidates with the sim columns and reject_reason (null when kept)."""
+    from .geocode_kernel import _check_pdf
+
+    schema = StructType(cand.schema.fields + _CHECK_FIELDS)
+    rescue = check_results and use_parent
+    if rescue:
+        parents = index.hinted(
+            index.places.filter(F.col("category") == "highway").select(
+                F.col("place_id").alias("p_pid"), F.map_values("alt_map").alias("p_alts")
+            )
         )
-        .withColumn(
-            "sim_post_code",
-            postcode_sim(F.coalesce("out_post_code", F.lit("")), F.coalesce("postcode", F.lit(""))),
-        )
-        .withColumn(
-            "sim_city",
-            city_sim(F.coalesce("out_post_name", F.lit("")), F.coalesce("city", F.lit(""))),
-        )
-    )
+        cand = cand.join(parents, cand.parent_place_id == parents.p_pid, "left").drop("p_pid")
 
+    def check(pdf: pd.DataFrame) -> pd.DataFrame:
+        parents = None
+        if rescue:
+            parents = (
+                pdf.loc[pdf.p_alts.notna(), ["parent_place_id", "p_alts"]]
+                .drop_duplicates("parent_place_id")
+                .rename(columns={"parent_place_id": "p_pid"})
+            )
+            pdf = pdf.drop(columns="p_alts")
+        keep, reject = _check_pdf(pdf, check_results, parents)
+        return pd.concat([keep, reject], ignore_index=True)[schema.fieldNames()]
 
-def _pick_best(
-    scored: DataFrame, max_res: int = 1, key: str = "addr_key"
-) -> tuple[DataFrame, DataFrame]:
-    """Split keep/reject: elimination rule, then best-per-key window
-    (check_result_utils.py:532-554). ``key`` is addr_key when scoring fanned
-    rows, transformed_address when scoring at the unique-query level."""
-    elim = elimination_rule(F.col("sim_post_code"), F.col("sim_city"), F.col("sim_street"))
-    # eager materialization: half a dozen downstream actions (parent rescue,
-    # retry guards, keep/tail splits) would otherwise re-run the pandas-UDF
-    # scoring pipeline each time
-    scored = scored.withColumn("_elim", elim).localCheckpoint(eager=True)
-
-    mismatch = scored.filter(F.col("_elim")).withColumn("reject_reason", F.lit("mismatch"))
-
-    w = Window.partitionBy(key).orderBy(
-        F.col("sim_street").desc(), F.col("sim_house_number").desc(), F.col("osm_order").asc()
-    )
-    ranked = scored.filter(~F.col("_elim")).withColumn("_rank", F.row_number().over(w))
-    keep = ranked.filter(F.col("_rank") <= max_res).drop("_rank")
-    tail = ranked.filter(F.col("_rank") > max_res).drop("_rank").withColumn(
-        "reject_reason", F.lit("tail")
-    )
-    reject = mismatch.unionByName(tail, allowMissingColumns=True)
-    return keep.drop("_elim"), reject.drop("_elim")
-
-
-def _parent_rescue(
-    keep: DataFrame, reject: DataFrame, index: GazetteerIndex, key: str = "addr_key"
-) -> tuple[DataFrame, DataFrame]:
-    """Alt-name rescue through the parent place — reference match_parent
-    (check_result_utils.py:560-644), as a broadcast self-join instead of
-    two REST round-trips per rejected row."""
-    final_rejected = (
-        reject.filter(F.col("reject_reason") == "mismatch")
-        .join(keep.select(key).distinct(), on=key, how="left_anti")
-        .drop("reject_reason", *_SIM_COLS)
-    )
-
-    parents = index.hinted(
-        index.places.select(
-            F.col("place_id").alias("p_pid"),
-            F.col("category").alias("p_cat"),
-            F.col("alt_map").alias("p_alt"),
-        )
-    )
-    alt = (
-        final_rejected.join(parents, final_rejected.parent_place_id == parents.p_pid, "inner")
-        .filter(F.col("p_cat") == "highway")  # street parents only (ref :603)
-        .select("*", F.explode(F.col("p_alt")).alias("alt_lang", "alt_name"))
-        .drop("p_pid", "p_cat", "p_alt")
-        .filter(F.col("alt_name") != F.col("out_street_name"))  # ref :617
-    )
-    if alt.isEmpty():
-        return keep, reject
-
-    # re-check with the alt name as the only street field (ref :622-630)
-    alt = (
-        alt.withColumn("_s", street_sim(F.coalesce("alt_name", F.lit("")), F.coalesce("street", F.lit(""))))
-        .withColumn("sim_street", F.col("_s"))
-        .withColumn("sim_street_which", F.lit("alt_names"))
-        .drop("_s")
-        .withColumn(
-            "sim_house_number",
-            house_number_sim(F.coalesce("out_house_number", F.lit("")), F.coalesce("housenbr", F.lit(""))),
-        )
-        .withColumn(
-            "sim_post_code",
-            postcode_sim(F.coalesce("out_post_code", F.lit("")), F.coalesce("postcode", F.lit(""))),
-        )
-        .withColumn(
-            "sim_city",
-            city_sim(F.coalesce("out_post_name", F.lit("")), F.coalesce("city", F.lit(""))),
-        )
-        .drop("alt_lang")
-    )
-    saved, _ = _pick_best(alt.drop("alt_name"), key=key)
-    if saved.isEmpty():
-        return keep, reject
-
-    keep2 = keep.unionByName(saved, allowMissingColumns=True)
-    # drop rescued (key, place_id) pairs from the reject pile (ref :636)
-    reject2 = reject.join(
-        saved.select(key, "place_id").distinct(), on=[key, "place_id"], how="left_anti"
-    )
-    return keep2, reject2
+    return _map_groups(cand, "transformed_address", check, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -563,8 +519,8 @@ def _process(
 ) -> tuple[DataFrame, DataFrame, int | None, DataFrame | None]:
     """process_osm analog (utils.py:300-441): candidates -> check / first.
 
-    The entire check (scoring UDFs, elimination, best-per-address window,
-    parent rescue, AND the low-rank retry) runs at the UNIQUE-composed-
+    The entire check (scoring, elimination, best per address, parent
+    rescue, AND the low-rank retry) runs at the UNIQUE-composed-
     address level — O(distinct addresses), the reference's own dedup
     optimization (utils.py:353-356) extended through the checker. Only the
     final keep/reject fan back to page keys — ONE pass over the input per
@@ -606,29 +562,16 @@ def _process(
     # would otherwise ride the fan-back join into the output schema)
     uq_counts = uq.select("transformed_address", "_n_keys")
     uq = uq.drop("_n_keys")
-    cand = _candidates_unique(uq, index)
     ukey = "transformed_address"
-
-    if check_results:
-        keep_u, reject_u = _pick_best(_score(cand), key=ukey)
-        if use_parent:
-            keep_u, reject_u = _parent_rescue(keep_u, reject_u, index, key=ukey)
-    else:
-        first = cand.withColumn(
-            "_rank",
-            F.row_number().over(Window.partitionBy(ukey).orderBy(F.col("osm_order").asc())),
-        )
-        keep_u = first.filter(F.col("_rank") == 1).drop("_rank")
-        reject_u = first.filter(F.col("_rank") > 1).drop("_rank").withColumn(
-            "reject_reason", F.lit("tail")
-        )
-
-    # Pin the SCORED unique frame, not just the dedup: downstream it is
+    # Pin the CHECKED unique frame, not just the dedup: downstream it is
     # read by the retry guards, matched_tas (n_keep count + unmatched
-    # anti-join), and the fan-back join — without this the candidate-join +
-    # pandas-scoring pipeline re-executes for each of those actions. One
-    # row per distinct matched address, so materializing it is cheap.
-    keep_u = keep_u.localCheckpoint(eager=True)
+    # anti-join), and both fan-back joins — without this the candidate-join +
+    # pandas-check pipeline re-executes for each of those actions. At most
+    # 50 candidate rows per distinct address, so materializing it is cheap.
+    checked = _check(_candidates_unique(uq, index), index, check_results, use_parent)
+    checked = checked.localCheckpoint(eager=True)
+    keep_u = checked.filter(F.col("reject_reason").isNull()).drop("reject_reason")
+    reject_u = checked.filter(F.col("reject_reason").isNotNull())
 
     if with_retry:
         keep_u = _retry_low_rank_unique(keep_u, uq, index, check_results)
@@ -752,16 +695,6 @@ def _retry_low_rank_unique(
 # transformers
 # ---------------------------------------------------------------------------
 
-_LPOST_SCHEMA = StructType(
-    [
-        StructField("road", StringType()),
-        StructField("house_number", StringType()),
-        StructField("postcode", StringType()),
-        StructField("city", StringType()),
-        StructField("country", StringType()),
-    ]
-)
-
 _COUNTRY_WORDS = {"belgique", "belgie", "belgië", "belgium", "be"}
 _PC_SEG = re.compile(r"(?:^|\s)([A-Z]?-?\d{4})(?:\s|$)")
 _HOUSE_SEG = re.compile(r"^\d{1,5}[a-zA-Z]?$|^\d{1,5}\s*(?:bt|bte|bus|box|b)\.?\s*\w{1,4}$", re.IGNORECASE)
@@ -811,11 +744,6 @@ def parse_address_rule_based(full: str | None) -> dict[str, str | None]:
         if out["city"] is None:
             out["city"] = part
     return out
-
-
-@pandas_udf(_LPOST_SCHEMA)
-def _lpost_parse_udf(full: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame([parse_address_rule_based(v) for v in full.tolist()])
 
 
 # ---------------------------------------------------------------------------
@@ -895,53 +823,31 @@ def add_extra_house_number(results: DataFrame) -> DataFrame:
     ).withColumn("libpostal_house_number", _lpost_house_number_udf(full))
 
 
+def _addr_schema(addr: DataFrame) -> StructType:
+    return StructType(
+        [addr.schema["addr_key"]] + [StructField(c, StringType()) for c in ADDR_COLS[1:]]
+    )
+
+
 def libpostal_transformer(addr: DataFrame, check_results: bool) -> DataFrame:
     """Parse the composed address and substitute parsed fields
-    (reference transformers.py:261-320). check_results re-ranks with the
-    same elimination/best logic the reference applies."""
-    full = compose_address_col(
-        F.col("street"), F.col("housenbr"), F.col("postcode"), F.col("city"), F.col("country")
-    )
-    parsed = addr.withColumn("_lp", _lpost_parse_udf(full))
-    out = parsed.select(
-        "addr_key",
-        F.coalesce(F.col("_lp.road"), F.lit("")).alias("lp_street"),
-        F.coalesce(F.col("_lp.house_number"), F.lit("")).alias("lp_housenbr"),
-        F.coalesce(F.col("_lp.postcode"), F.lit("")).alias("lp_postcode"),
-        F.coalesce(F.col("_lp.city"), F.lit("")).alias("lp_city"),
-        F.coalesce(F.col("_lp.country"), F.lit("")).alias("lp_country"),
-        "street", "housenbr", "postcode", "city", "country",
-    )
+    (reference transformers.py:261-320) — the kernel's _apply_libpostal,
+    which under check_results drops the rows whose parse fails the
+    elimination rule against their own input fields."""
+    from .geocode_kernel import _apply_libpostal
 
-    if check_results:
-        # reference: ignore_mismatch_keep_bests(input-side a vs lpost-side b)
-        scored = (
-            out.withColumn("sim_street", street_sim(F.coalesce("street", F.lit("")), F.col("lp_street")))
-            .withColumn("sim_house_number", house_number_sim(F.coalesce("housenbr", F.lit("")), F.col("lp_housenbr")))
-            .withColumn("sim_post_code", postcode_sim(F.coalesce("postcode", F.lit("")), F.col("lp_postcode")))
-            .withColumn("sim_city", city_sim(F.coalesce("city", F.lit("")), F.col("lp_city")))
-        )
-        out = scored.filter(
-            ~elimination_rule(F.col("sim_post_code"), F.col("sim_city"), F.col("sim_street"))
-        ).drop("sim_street", "sim_house_number", "sim_post_code", "sim_city")
-
-    return out.select(
-        "addr_key",
-        F.col("lp_street").alias("street"),
-        F.col("lp_housenbr").alias("housenbr"),
-        F.col("lp_postcode").alias("postcode"),
-        F.col("lp_city").alias("city"),
-        F.col("lp_country").alias("country"),
+    return addr.select(ADDR_COLS).mapInPandas(
+        lambda it: (_apply_libpostal(pdf, check_results) for pdf in it), _addr_schema(addr)
     )
 
 
 def photon_transformer(addr: DataFrame, index: GazetteerIndex, check_results: bool = True) -> DataFrame:
     """Fuzzy street correction — the in-cluster Photon analog
-    (transformers.py:182-247): candidate streets of the same locality
-    (postcode or city fingerprint), re-ranked by the reference's check
-    (photon_keep_relevant_results, transformers.py:40-77: street compare +
-    postcode/city elimination, fake house number), best per key wins with
-    photon_order as tie-break."""
+    (transformers.py:182-247): the street places of the query's locality
+    (postcode or city fingerprint), joined under the index's broadcast
+    gate, then re-ranked per addr_key by the kernel's _photon_best_pdf."""
+    from .geocode_kernel import _photon_best_pdf
+
     q = (
         addr.select(ADDR_COLS)
         .withColumn("q_city_key", city_key_udf(F.col("city")))
@@ -959,33 +865,11 @@ def photon_transformer(addr: DataFrame, index: GazetteerIndex, check_results: bo
 
     by_pc = q.filter(F.col("q_pc") != "").join(streets, F.col("q_pc") == streets.post_code)
     by_city = q.filter(F.col("q_city_key") != "").join(streets, F.col("q_city_key") == streets.key_city)
-    cand = by_pc.unionByName(by_city).dropDuplicates(["addr_key", "place_id"])
-
-    ph_order = Window.partitionBy("addr_key").orderBy(F.col("importance").desc(), F.col("place_id").asc())
-    cand = cand.withColumn("photon_order", F.row_number().over(ph_order))
-
-    scored = (
-        cand.withColumn("sim_street", street_sim(F.col("ph_street"), F.coalesce("street", F.lit(""))))
-        .withColumn("sim_post_code", postcode_sim(F.col("ph_postcode"), F.coalesce("postcode", F.lit(""))))
-        .withColumn("sim_city", city_sim(F.col("ph_city"), F.coalesce("city", F.lit(""))))
-        .withColumn("sim_house_number", F.lit(0.0))  # fake house number, ref transformers.py:63
-    )
-    if check_results:
-        scored = scored.filter(
-            ~elimination_rule(F.col("sim_post_code"), F.col("sim_city"), F.col("sim_street"))
-        )
-    w = Window.partitionBy("addr_key").orderBy(
-        F.col("sim_street").desc(), F.col("sim_house_number").desc(), F.col("photon_order").asc()
-    )
-    best = scored.withColumn("_rank", F.row_number().over(w)).filter(F.col("_rank") == 1)
-
-    return best.select(
+    return _map_groups(
+        by_pc.unionByName(by_city),
         "addr_key",
-        F.col("ph_street").alias("street"),
-        F.col("housenbr"),  # photon house number is never used (ref :235)
-        F.col("ph_postcode").alias("postcode"),
-        F.col("ph_city").alias("city"),
-        F.col("ph_country").alias("country"),
+        lambda pdf: _photon_best_pdf(pdf, "addr_key", check_results)[ADDR_COLS],
+        _addr_schema(addr),
     )
 
 
@@ -1284,8 +1168,6 @@ def cascade(
 
 
 def _reject_schema():
-    from pyspark.sql.types import DoubleType
-
     fields = [StructField(c, StringType()) for c in RESULT_COLS + REJECT_EXTRA]
     fields.append(StructField("distance_to_match", DoubleType()))
     return StructType(fields)

@@ -36,12 +36,19 @@ different field splits compose to the same address ACROSS partitions
 (geocode._unique_queries note) — partition-local dedup picks the
 partition's min rather than the global min.
 
-Reference parity chain is unchanged (this file re-executes, in pandas,
-the same utils.py:1195-1279 ladder geocode.py implements; see that
-module's header for the line-by-line map). All scalar kernels are
-SHARED with the distributed path — textnorm compare/fingerprint
-functions, the rule-based libpostal parser, the regex rulesets, the
-comma-fixpoint cleaner — so a value fix lands in both engines at once.
+The ladder's decisions are written once, here, and the distributed
+cascade calls them over whole key groups (geocode._check, libpostal_ and
+photon_transformer): scoring, elimination and best per query with its
+tail (_score_pdf, _pick_best_pdf), the parent alt-name rescue
+(_parent_rescue_pdf), all three behind _check_pdf; the libpostal sanity
+check (_apply_libpostal) and the photon re-rank (_photon_best_pdf). What
+stays per engine is candidate lookup (pandas merges against the payload
+here, Spark joins there), regex application, the ladder loop and tiling.
+The scalar kernels below them are shared too — textnorm compare and
+fingerprint functions, the rule-based libpostal parser, the regex
+rulesets, the comma-fixpoint cleaner and the page address extractor
+(pages.extract_addresses_pdf) — so a value fix lands in both engines at
+once.
 """
 
 from __future__ import annotations
@@ -55,8 +62,8 @@ from pyspark.sql import DataFrame
 
 from ..functions.cleansing import REGEX_REPLACEMENTS, clean_addr_in
 from ..functions.geo import s2_h3_cells
-from ..functions.similarity import SIMILARITY_THRESHOLD
 from ..functions.textnorm import (
+    SIMILARITY_THRESHOLD,
     city_compare_one,
     city_key,
     house_number_compare_one,
@@ -72,6 +79,7 @@ from .geocode import (
     GazetteerIndex,
     parse_address_rule_based,
 )
+from .pages import extract_addresses_pdf
 
 _FIELDS = ["street", "housenbr", "postcode", "city", "country"]
 
@@ -104,7 +112,9 @@ def _sparkmin(series: pd.Series):
 
 
 def _street_best(a1, a2, a3, b) -> tuple[float, str]:
-    """Guarded 3-field street compare — twin of similarity._street_sim_best3."""
+    """Guarded 3-field street compare (check_result_utils.py:508-519): a
+    field is compared only while the running score is below the threshold,
+    and ``which`` names the last field compared."""
     sim, which = -1.0, ""
     for name, x in (("street_name", a1), ("other", a2), ("namedetails", a3)):
         if sim < SIMILARITY_THRESHOLD:
@@ -195,7 +205,8 @@ def kernel_broadcast(index: GazetteerIndex):
 
 
 # ---------------------------------------------------------------------------
-# transformers (pandas twins of geocode.apply_transformers)
+# transformers (the libpostal check and photon re-rank are shared with
+# geocode.libpostal_transformer / photon_transformer)
 # ---------------------------------------------------------------------------
 
 
@@ -236,9 +247,42 @@ def _apply_libpostal(cur: pd.DataFrame, check_results: bool) -> pd.DataFrame:
     return out
 
 
+def _photon_best_pdf(cand: pd.DataFrame, key: str, check_results: bool) -> pd.DataFrame:
+    """photon_keep_relevant_results (transformers.py:40-77) per query
+    ``key``, shared by both engines: the candidate streets (ph_* columns)
+    in Photon's order (importance desc, place_id), compared with the
+    query's street, postcode and city, eliminated under check mode, and
+    the best street score wins with Photon's order as the tie-break (the
+    fake house number scores 0 for all, ref transformers.py:63). Returns
+    one row per key that keeps a candidate, with the candidate's fields in
+    place of the query's; the house number is kept (ref :235)."""
+    cand = cand.drop_duplicates([key, "place_id"]).sort_values(
+        [key, "importance", "place_id"], ascending=[True, False, True], kind="mergesort"
+    )
+    cand = cand.assign(
+        sim_street=[street_compare_one(_nz(a), _nz(b)) for a, b in zip(cand.ph_street, cand.street)],
+    )
+    if check_results:
+        keep = [
+            not _elim(postcode_compare_one(_nz(pa), _nz(pb)), city_compare_one(_nz(ca), _nz(cb)), s)
+            for pa, pb, ca, cb, s in zip(
+                cand.ph_postcode, cand.postcode, cand.ph_city, cand.city, cand.sim_street
+            )
+        ]
+        cand = cand.loc[keep]
+    best = cand.sort_values(
+        [key, "sim_street"], ascending=[True, False], kind="mergesort"
+    ).drop_duplicates(key)
+    return best.assign(
+        street=best.ph_street, postcode=best.ph_postcode, city=best.ph_city,
+        country=best.ph_country,
+    )
+
+
 def _photon_one(t: tuple, pay: KernelPayload, check_results: bool):
-    """Best fuzzy street correction for one (street..country) tuple, or
-    None when no candidate survives — twin of geocode.photon_transformer."""
+    """Fuzzy street correction for one (street..country) tuple: the
+    payload's street places of the same postcode or city, re-ranked by
+    _photon_best_pdf; None when no candidate survives."""
     street, housenbr, postcode, city, country = t
     q_pc = _nz(postcode)
     q_ck = city_key(city)
@@ -249,27 +293,14 @@ def _photon_one(t: tuple, pay: KernelPayload, check_results: bool):
         parts.append(pay.photon[pay.photon.key_city == q_ck])
     if not parts:
         return None
-    cand = pd.concat(parts, ignore_index=True).drop_duplicates("place_id")
-    if not len(cand):
+    cand = pd.concat(parts, ignore_index=True).assign(
+        _q=0, street=street, postcode=postcode, city=city
+    )
+    best = _photon_best_pdf(cand, "_q", check_results)
+    if not len(best):
         return None
-    cand = cand.sort_values(
-        ["importance", "place_id"], ascending=[False, True], kind="mergesort"
-    ).reset_index(drop=True)
-    cand["photon_order"] = np.arange(1, len(cand) + 1)
-    b_street = _nz(street)
-    sims_s = [street_compare_one(_nz(v), b_street) for v in cand["ph_street"]]
-    sims_pc = [postcode_compare_one(_nz(v), q_pc) for v in cand["ph_postcode"]]
-    sims_c = [city_compare_one(_nz(v), _nz(city)) for v in cand["ph_city"]]
-    cand = cand.assign(sim_street=sims_s, sim_pc=sims_pc, sim_city=sims_c)
-    if check_results:
-        keep = [not _elim(p, c, s) for p, c, s in zip(cand.sim_pc, cand.sim_city, cand.sim_street)]
-        cand = cand.loc[keep]
-        if not len(cand):
-            return None
-    best = cand.sort_values(
-        ["sim_street", "photon_order"], ascending=[False, True], kind="mergesort"
-    ).iloc[0]
-    return (best.ph_street, housenbr, best.ph_postcode, best.ph_city, best.ph_country)
+    b = best.iloc[0]
+    return (b.street, housenbr, b.postcode, b.city, b.country)
 
 
 def _apply_photon(cur: pd.DataFrame, pay: KernelPayload, check_results: bool) -> pd.DataFrame:
@@ -331,7 +362,8 @@ def _transform_stage(
 
 
 # ---------------------------------------------------------------------------
-# candidate generation + check (pandas twins of _candidates_unique/_process)
+# candidate generation (pandas twin of geocode._candidates_unique) and the
+# check, shared with geocode._check
 # ---------------------------------------------------------------------------
 
 
@@ -397,7 +429,8 @@ def _candidates_pdf(uq: pd.DataFrame, pay: KernelPayload) -> pd.DataFrame:
 
 
 def _score_pdf(cand: pd.DataFrame) -> pd.DataFrame:
-    """_score twin: candidate (a-side) vs representative query (b-side)."""
+    """Check scores (check_result_utils.py:463-531): candidate output
+    fields (a-side) vs the representative query fields (b-side)."""
     sims_s, whichs, sims_h, sims_pc, sims_c = [], [], [], [], []
     memo: dict[tuple, tuple] = {}
     for a1, a2, a3, b, oh, qh, opc, qpc, ocn, qc in zip(
@@ -425,40 +458,48 @@ def _score_pdf(cand: pd.DataFrame) -> pd.DataFrame:
 
 
 def _pick_best_pdf(scored: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Elimination split + best-per-query; returns (keep, mismatch)."""
+    """Elimination split + best-per-query (check_result_utils.py:532-554);
+    returns (keep, reject). ``reject`` holds the eliminated rows
+    (reject_reason "mismatch") and the surviving rows ranked below their
+    query's best ("tail")."""
     el = np.array(
         [_elim(p, c, s) for p, c, s in zip(scored.sim_post_code, scored.sim_city, scored.sim_street)],
         dtype=bool,
     )
-    mismatch = scored.loc[el].reset_index(drop=True)
-    ranked = (
-        scored.loc[~el]
-        .sort_values(
-            ["transformed_address", "sim_street", "sim_house_number", "osm_order"],
-            ascending=[True, False, False, True], kind="mergesort",
-        )
-        .drop_duplicates("transformed_address")
-        .reset_index(drop=True)
+    ranked = scored.loc[~el].sort_values(
+        ["transformed_address", "sim_street", "sim_house_number", "osm_order"],
+        ascending=[True, False, False, True], kind="mergesort",
     )
-    return ranked, mismatch
+    best = ~ranked.transformed_address.duplicated().to_numpy()
+    reject = pd.concat(
+        [scored.loc[el].assign(reject_reason="mismatch"),
+         ranked.loc[~best].assign(reject_reason="tail")],
+        ignore_index=True,
+    )
+    return ranked.loc[best].reset_index(drop=True), reject
 
 
 def _parent_rescue_pdf(
-    keep: pd.DataFrame, mismatch: pd.DataFrame, pay: KernelPayload
-) -> pd.DataFrame:
-    """match_parent twin: alt-name re-check through highway parents."""
-    if not len(mismatch):
-        return keep
-    fr = mismatch[~mismatch.transformed_address.isin(set(keep.transformed_address))]
+    keep: pd.DataFrame, reject: pd.DataFrame, parents: pd.DataFrame
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """match_parent (check_result_utils.py:560-644): the mismatch rows of
+    queries with no keep row are re-checked with each alt name of their
+    street parent (``parents``: p_pid, p_alts) as the only street field.
+    Returns keep plus the rescued rows, and reject minus the rescued
+    (query, place) pairs."""
+    fr = reject[
+        (reject.reject_reason == "mismatch")
+        & ~reject.transformed_address.isin(set(keep.transformed_address))
+    ]
     if not len(fr):
-        return keep
-    alt = fr.merge(pay.parents, left_on="parent_place_id", right_on="p_pid", how="inner")
-    if not len(alt):
-        return keep
+        return keep, reject
+    alt = fr.drop(columns="reject_reason").merge(
+        parents, left_on="parent_place_id", right_on="p_pid", how="inner"
+    )
     alt = alt.explode("p_alts").rename(columns={"p_alts": "alt_name"})
     alt = alt[alt.alt_name.notna() & (alt.alt_name != alt.out_street_name)]
     if not len(alt):
-        return keep
+        return keep, reject
     alt = alt.assign(
         sim_street=[
             street_compare_one(_nz(a), _nz(b)) for a, b in zip(alt.alt_name, alt.street)
@@ -467,8 +508,38 @@ def _parent_rescue_pdf(
     ).drop(columns=["p_pid", "alt_name"])
     saved, _ = _pick_best_pdf(alt)
     if not len(saved):
-        return keep
-    return pd.concat([keep, saved], ignore_index=True)
+        return keep, reject
+    pair = ["transformed_address", "place_id"]
+    rescued = pd.MultiIndex.from_frame(reject[pair]).isin(pd.MultiIndex.from_frame(saved[pair]))
+    return (
+        pd.concat([keep, saved], ignore_index=True),
+        reject.loc[~rescued].reset_index(drop=True),
+    )
+
+
+def _check_pdf(
+    cand: pd.DataFrame, check_results: bool, parents: pd.DataFrame | None = None
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """The check of one lookup at the unique-query level, shared by both
+    engines: score, eliminate, best per query with its tail, then the
+    parent alt-name rescue when ``parents`` is given. Without
+    ``check_results`` the first candidate in Nominatim's order wins and
+    the rest are its tail. Every row carries the five sim columns; the
+    reject rows also carry ``reject_reason``."""
+    if check_results:
+        keep, reject = _pick_best_pdf(_score_pdf(cand))
+        if parents is not None:
+            keep, reject = _parent_rescue_pdf(keep, reject, parents)
+        return keep, reject
+    ranked = cand.sort_values(["transformed_address", "osm_order"], kind="mergesort").assign(
+        sim_street=np.nan, sim_street_which=None, sim_house_number=np.nan,
+        sim_post_code=np.nan, sim_city=np.nan,
+    )
+    first = ~ranked.transformed_address.duplicated().to_numpy()
+    return (
+        ranked.loc[first].reset_index(drop=True),
+        ranked.loc[~first].assign(reject_reason="tail").reset_index(drop=True),
+    )
 
 
 def _process_pdf(
@@ -480,19 +551,7 @@ def _process_pdf(
     cand = _candidates_pdf(uq, pay)
     if not len(cand):
         return cand
-    if check_results:
-        keep, mismatch = _pick_best_pdf(_score_pdf(cand))
-        if use_parent:
-            keep = _parent_rescue_pdf(keep, mismatch, pay)
-    else:
-        keep = (
-            cand.sort_values(["transformed_address", "osm_order"], kind="mergesort")
-            .drop_duplicates("transformed_address")
-            .reset_index(drop=True)
-        )
-        for c in ("sim_street", "sim_house_number", "sim_post_code", "sim_city"):
-            keep[c] = np.nan
-        keep["sim_street_which"] = None
+    keep, _ = _check_pdf(cand, check_results, pay.parents if use_parent else None)
     if with_retry and len(keep):
         keep = _retry_low_rank_pdf(keep, uq, pay, check_results)
     return keep
@@ -646,25 +705,6 @@ TILE_SCHEMA = (
 )
 
 
-def _extract_addrs_pdf(pages: pd.DataFrame) -> pd.DataFrame:
-    """pages(url, html) -> one row per embedded address (pages.py twin:
-    fused frozen text extraction + address regex, addr_key = url#pos)."""
-    from ..functions.text import extract_text
-    from .pages import extract_addresses_from_text
-
-    keys, urls, fields = [], [], {f: [] for f in _FIELDS}
-    for url, html in zip(pages["url"], pages["html"]):
-        for pos, a in enumerate(extract_addresses_from_text(extract_text(html))):
-            keys.append(f"{url}#{pos}")
-            urls.append(url)
-            fields["street"].append(a["street"])
-            fields["housenbr"].append(a["housenbr"])
-            fields["postcode"].append(a["postcode"])
-            fields["city"].append(a["city"])
-            fields["country"].append("")
-    return pd.DataFrame({"addr_key": keys, "url": urls, **fields})
-
-
 def _round_half_up_1e6(v: np.ndarray) -> pd.Series:
     """F.round semantics (HALF_UP, away from zero) — np.round is half-even;
     NaN rounds to null, as F.round does."""
@@ -728,7 +768,7 @@ def geocode_and_tile_kernel(
         for pdf in it:
             if not len(pdf):
                 continue
-            addr = _extract_addrs_pdf(pdf)
+            addr = extract_addresses_pdf(pdf)
             if not len(addr):
                 continue
             res = cascade_kernel(addr, pay, check_results=check_results)

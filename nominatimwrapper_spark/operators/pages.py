@@ -16,20 +16,10 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
-from ..functions.text import extract_text_udf
+from ..functions.text import extract_text, extract_text_udf
 from .spatial import latest_snapshot
-
-_ADDR_STRUCT = StructType(
-    [
-        StructField("street", StringType()),
-        StructField("housenbr", StringType()),
-        StructField("postcode", StringType()),
-        StructField("city", StringType()),
-    ]
-)
 
 # "Street Name 12, 1000 City" — street = up to 6 lazy tokens starting with a
 # capital, house = digits(+letter), postcode = 4 digits (optional country
@@ -50,54 +40,40 @@ def extract_addresses_from_text(text: str | None) -> list[dict[str, str]]:
     ]
 
 
-@pandas_udf(ArrayType(_ADDR_STRUCT))
-def extract_addresses_udf(text: pd.Series) -> pd.Series:
-    return text.map(extract_addresses_from_text)
+def extract_addresses_pdf(pages: pd.DataFrame) -> pd.DataFrame:
+    """pages(url, warc_ts, html) -> one row per embedded address: (addr_key,
+    url, warc_ts, street, housenbr, postcode, city, country), through the
+    frozen text extractor. addr_key = url#position."""
+    cols: dict[str, list] = {
+        c: [] for c in ("addr_key", "url", "warc_ts", "street", "housenbr", "postcode", "city")
+    }
+    for url, ts, html in zip(pages["url"], pages["warc_ts"], pages["html"]):
+        for pos, a in enumerate(extract_addresses_from_text(extract_text(html))):
+            cols["addr_key"].append(f"{url}#{pos}")
+            cols["url"].append(url)
+            cols["warc_ts"].append(ts)
+            for f, v in a.items():
+                cols[f].append(v)
+    return pd.DataFrame(cols).assign(country="")
 
 
-@pandas_udf(ArrayType(_ADDR_STRUCT))
-def extract_addresses_from_html_udf(html: pd.Series) -> pd.Series:
-    """Fused html -> text -> addresses in ONE Arrow round trip (the
-    intermediate text never crosses the JVM/Python boundary). Same frozen
-    extractor, so byte-identity semantics are unchanged."""
-    from ..functions.text import extract_text
-
-    return html.map(lambda h: extract_addresses_from_text(extract_text(h)))
-
-
-def pages_to_addresses(
-    pages: DataFrame, dedup_crawls: bool = True, reextract: bool = True
-) -> DataFrame:
+def pages_to_addresses(pages: DataFrame, dedup_crawls: bool = True) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> one row per embedded address:
     (addr_key, url, warc_ts, street, housenbr, postcode, city, country).
 
     addr_key = url#position — unique per (deduped) page & address, which is
     what the cascade requires (PK semantics, nominatimwrapper.py:789-790).
-    ``reextract=True`` recomputes text from html with the frozen extractor
-    (the byte-identity invariant makes this a no-op vs the text column)."""
+    Text is recomputed from html with the frozen extractor (the
+    byte-identity invariant makes this a no-op vs the text column)."""
     if dedup_crawls:
         pages = latest_snapshot(pages, "url", "warc_ts")
-    addrs_arr = (
-        extract_addresses_from_html_udf(F.col("html"))  # fused: 1 Arrow trip
-        if reextract
-        else extract_addresses_udf(F.col("text"))
+    schema = StructType(
+        [StructField("addr_key", StringType()), pages.schema["url"], pages.schema["warc_ts"]]
+        + [StructField(c, StringType()) for c in ("street", "housenbr", "postcode", "city", "country")]
     )
-    exploded = (
-        pages.select(
-            "url", "warc_ts",
-            F.posexplode(addrs_arr).alias("pos", "addr"),
-        )
-        .select(
-            F.concat_ws("#", F.col("url"), F.col("pos").cast("string")).alias("addr_key"),
-            "url", "warc_ts",
-            F.col("addr.street").alias("street"),
-            F.col("addr.housenbr").alias("housenbr"),
-            F.col("addr.postcode").alias("postcode"),
-            F.col("addr.city").alias("city"),
-            F.lit("").alias("country"),
-        )
+    return pages.select("url", "warc_ts", "html").mapInPandas(
+        lambda it: map(extract_addresses_pdf, it), schema
     )
-    return exploded
 
 
 def verify_text_bytes(pages: DataFrame) -> DataFrame:

@@ -5,15 +5,18 @@ engineered transformer stage with the expected place_id / place_rank
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nominatimwrapper_spark.operators.geocode import (
     build_gazetteer_index,
     cascade,
 )
-from nominatimwrapper_spark.synth import gen_world
+from nominatimwrapper_spark.synth import gen_world, write_world
 
 
 @pytest.fixture(scope="module")
@@ -269,6 +272,125 @@ def test_broadcast_gate_is_byte_based(spark, world):
     assert small.broadcast_ok
     tiny_cap = build_gazetteer_index(gaz, broadcast_max_bytes=1024)
     assert not tiny_cap.broadcast_ok
+
+
+GOLDEN_DIR = Path(__file__).parent / "fixtures" / "cascade_golden"
+
+
+def _reject_world() -> tuple[pd.DataFrame, pd.DataFrame]:
+    """A small fixture world (gazetteer, cascade inputs) plus three inputs
+    whose check outcome is engineered:
+
+    - ``tail-0``: a street mapped as two ways with the same name; an
+      unknown house number finds both, the less important way is a
+      ``tail`` reject.
+    - ``mism-0``: a house found through its own building name; the street
+      check eliminates it and no alt name of its parent street rescues
+      it, so it stays a ``mismatch`` reject until the city level matches.
+    - ``resc-0``: a house found through an old name of its street that
+      scores no similarity with the current one; the parent's alt names
+      rescue it."""
+    w = gen_world(n_streets=40, houses_per_street=4, n_pages=5, n_per_class=1)
+    gaz = w["gazetteer"]
+    streets = gaz[gaz.place_rank == 26]
+    houses = gaz[gaz.place_rank == 30]
+    two_ways = streets.iloc[3]
+    second_way = two_ways.copy()
+    second_way["place_id"] = gaz.place_id.max() + 1
+    second_way["importance"] = two_ways.importance / 2
+    second_way["lat"] = two_ways.lat + 0.004
+    gaz = pd.concat([gaz, second_way.to_frame().T], ignore_index=True).astype(gaz.dtypes)
+
+    def set_alt_names(place_id, names):
+        at = gaz.index[gaz.place_id == place_id]
+        gaz.loc[at, "alt_names"] = pd.Series([names], index=at)
+
+    named = houses[houses.parent_place_id == streets.iloc[5].place_id].iloc[0]
+    set_alt_names(named.place_id, {"name": "Residence Zephyr"})
+    renamed = streets.iloc[7]
+    set_alt_names(renamed.place_id, {**renamed.alt_names, "old_name": "Chemin des Tilleuls"})
+    rescued = houses[houses.parent_place_id == renamed.place_id].iloc[0]
+
+    def query(key, street, row, house):
+        return dict(addr_key=key, street=street, housenbr=house, postcode=row.post_code,
+                    city=row.city, country="Belgique")
+
+    addr = pd.concat(
+        [
+            w["addresses"].rename(
+                columns=dict(
+                    referenceKey="addr_key", streetName="street", houseNumber="housenbr",
+                    postCode="postcode", postName="city", countryName="country",
+                )
+            )[["addr_key", "street", "housenbr", "postcode", "city", "country"]],
+            pd.DataFrame([
+                query("tail-0", two_ways.name_fr, two_ways, "9999"),
+                query("mism-0", "Residence Zephyr", named, named.house_number),
+                query("resc-0", "Chemin des Tilleuls", rescued, rescued.house_number),
+            ]),
+        ],
+        ignore_index=True,
+    )
+    return gaz, addr
+
+
+def _golden_rows(res: DataFrame, rej: DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
+    keep = res.toPandas().sort_values("addr_key").reset_index(drop=True)
+    keep["libpostal_house_number"] = keep["libpostal_house_number"].map(list)
+    reject = (
+        rej.toPandas()
+        .sort_values(["addr_key", "method", "place_id", "reject_reason"])
+        .reset_index(drop=True)
+    )
+    return keep, reject
+
+
+@pytest.fixture(scope="module")
+def reject_world(spark, tmp_path_factory):
+    gaz, addr = _reject_world()
+    d = tmp_path_factory.mktemp("reject_world")
+    write_world(str(d), {"gazetteer": gaz})
+    return spark.read.parquet(f"{d}/gazetteer.parquet"), spark.createDataFrame(addr)
+
+
+def _assert_golden(keep: pd.DataFrame, reject: pd.DataFrame) -> None:
+    exp_keep = pd.read_parquet(GOLDEN_DIR / "keep.parquet")
+    exp_keep["libpostal_house_number"] = exp_keep["libpostal_house_number"].map(list)
+    pd.testing.assert_frame_equal(keep, exp_keep)
+    pd.testing.assert_frame_equal(reject, pd.read_parquet(GOLDEN_DIR / "reject.parquet"))
+
+
+@pytest.mark.parametrize("broadcast_max_bytes", [800 * 1024 * 1024, 0])
+def test_keep_and_reject_rows_pinned(spark, reject_world, broadcast_max_bytes):
+    """Every column of the keep and reject rows, pinned by a golden written
+    once from the checker the engine had before its decisions became
+    shared pandas functions (never regenerated to make a change pass), in
+    the broadcast and the shuffle regime. The golden holds a tail reject, an
+    unrescued mismatch with its distance to the later match, and an
+    alt-name rescue."""
+    gaz, addr = reject_world
+    index = build_gazetteer_index(gaz, broadcast_max_bytes=broadcast_max_bytes)
+    assert index.broadcast_ok == (broadcast_max_bytes > 0)
+    keep, reject = _golden_rows(*cascade(addr, index))
+    assert {"tail", "mismatch"} <= set(reject.reject_reason)
+    assert reject.loc[reject.addr_key == "mism-0", "distance_to_match"].notna().all()
+    assert (keep.loc[keep.addr_key == "resc-0", "sim_street_which"] == "alt_names").all()
+    _assert_golden(keep, reject)
+
+
+def test_decisions_see_whole_groups_across_arrow_batches(spark, reject_world):
+    """With one record per Arrow batch every candidate group spans many
+    batches; each decision must still see all candidates of its key."""
+    gaz, addr = reject_world
+    index = build_gazetteer_index(gaz)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        keep, reject = _golden_rows(*cascade(addr, index))
+    finally:
+        spark.conf.set(conf, old)
+    _assert_golden(keep, reject)
 
 
 def test_duplicate_key_guard(spark, index):
