@@ -393,6 +393,33 @@ def test_decisions_see_whole_groups_across_arrow_batches(spark, reject_world):
     _assert_golden(keep, reject)
 
 
+@pytest.mark.parametrize("broadcast_max_bytes", [800 * 1024 * 1024, 0])
+def test_retried_house_number_shared_by_two_inputs(spark, reject_world, broadcast_max_bytes):
+    """Two distinct inputs on one street whose house numbers cleanse to
+    the same digits ("12 bt 2", "12 bte 3") share one low-rank retry. Both
+    must get the house, flagged as a cleansed match and reporting the
+    cleansed composed address, in the broadcast and the shuffle regime."""
+    from nominatimwrapper_spark.functions.cleansing import clean_addr_in
+
+    gaz, _ = reject_world
+    house = gaz.filter("place_rank = 30").orderBy("place_id").first()
+    hn = house.house_number
+    addr = spark.createDataFrame(pd.DataFrame(
+        dict(addr_key=["split-a", "split-b"], street=[house.name_fr] * 2,
+             housenbr=[f"{hn} bt 2", f"{hn} bte 3"], postcode=[house.post_code] * 2,
+             city=[house.city] * 2, country=["Belgique"] * 2)
+    ))
+    index = build_gazetteer_index(gaz, broadcast_max_bytes=broadcast_max_bytes)
+    res, _ = cascade(addr, index)
+    got = res.toPandas().set_index("addr_key").sort_index()
+    assert list(got.index) == ["split-a", "split-b"]
+    assert (got.method == "orig").all()
+    assert (got.place_id == house.place_id).all() and (got.place_rank == 30).all()
+    assert got.match_on_cleansed_house_number.all()
+    cleansed = clean_addr_in(f"{house.name_fr}, {hn}, {house.post_code} {house.city}, Belgique")
+    assert (got.transformed_address == cleansed).all()
+
+
 def test_duplicate_key_guard(spark, index):
     import pandas as pd
 
