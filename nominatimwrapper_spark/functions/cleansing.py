@@ -7,7 +7,6 @@ Reference parity:
 - ``compose_address_col``                  utils.py:639-646 / 270-276
 - ``REGEX_REPLACEMENTS`` + transformer     config.py:71-96, transformers.py:328-364
   (pandas ``\\g<n>`` backrefs rewritten to Java ``$n``)
-- ``digit_prefix_col``                     utils.py:268 (retry house cleansing)
 
 Everything here is pure `pyspark.sql.functions` — no Python crossing in
 the hot path.
@@ -110,12 +109,6 @@ def apply_regex_ruleset(
         else:
             h = F.regexp_replace(h, pat, repl)
     return s, h
-
-
-def digit_prefix_col(col: Column) -> Column:
-    """Leading digit run of a house number ("30 bt 2" -> "30"); empty when
-    none. Reference utils.py:268 str.extract("^([0-9]+)")."""
-    return F.regexp_extract(F.coalesce(col, F.lit("")), "^([0-9]+)", 1)
 
 
 # Nominatim's dynamic address.* keys -> output fields, in fillna priority

@@ -7,27 +7,29 @@ Reference lifecycle being reproduced (values, not architecture):
     process_addresses            utils.py:1195-1279   -> cascade()
     transform_and_process        utils.py:589-688     -> _one_stage()
     apply_transformers           utils.py:692-776     -> apply_transformers()
-    process_osm (REST + parse)   utils.py:300-441     -> _process()/_candidates_unique()
-    osm_keep_relevant_results    check_result_utils.py:648-699 -> _check() -> geocode_kernel._check_pdf()
+    process_osm (REST + parse)   utils.py:300-441     -> _process() -> _lookup_and_check()
+                                                     -> geocode_kernel._process_pdf()
+    osm_keep_relevant_results    check_result_utils.py:648-699 -> geocode_kernel._check_pdf()
     match_parent                 check_result_utils.py:560-644 -> geocode_kernel._parent_rescue_pdf()
-    retry_with_low_place_rank    utils.py:225-299     -> _retry_low_rank_unique()
+    retry_with_low_place_rank    utils.py:225-299     -> geocode_kernel._retry_low_rank_pdf()
     libpostal_transformer        transformers.py:261-320 -> geocode_kernel._apply_libpostal()
     photon_transformer           transformers.py:182-247 -> geocode_kernel._photon_best_pdf()
 
-Each check decision (scoring, elimination, best per query with its tail,
-parent rescue, the libpostal sanity check, the photon re-rank) has one
-pandas implementation in geocode_kernel.py, which both engines call; this
-module owns only the Spark data movement around it.
+Candidate lookup, every check decision (scoring, elimination, best per
+query with its tail, parent rescue, the libpostal sanity check, the photon
+re-rank) and the low-rank retry have one pandas implementation in
+geocode_kernel.py, which both engines call; this module owns only the
+Spark data movement around it.
 
-Scale design: the gazetteer index is the SMALL side (a country extract is
-millions of rows) and is broadcast; the page/address corpus is the BIG side
-and never shuffles for the lookup itself. Candidate scoring happens after a
-dropDuplicates on the composed address (the reference's only optimization,
-utils.py:353-356 — here it is a partial-agg dedup). The per-stage loop
-shrinks the working set with a left-anti join exactly like the reference's
-`chunk[~isin(done)]` (utils.py:1263). Skewed hot streets are handled by
-AQE skew-join on the fan-back join; the candidate join itself is broadcast
-so skew cannot concentrate a shuffle partition.
+Scale design: lookup, check and retry run at the unique-query level, after
+a dropDuplicates on the composed address (the reference's only
+optimization, utils.py:353-356 — here it is a partial-agg dedup), as one
+grouped pandas stage that co-partitions the unique queries with their
+gazetteer rows on the street key; the page/address corpus never shuffles
+for the lookup itself. The per-stage loop shrinks the working set with a
+left-anti join exactly like the reference's `chunk[~isin(done)]`
+(utils.py:1263). Skewed hot addresses are handled by the unique-level
+dedup and by AQE skew-join on the fan-back join.
 """
 
 from __future__ import annotations
@@ -37,26 +39,34 @@ import time
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..functions.cleansing import (
     apply_regex_ruleset,
     collapse_map_col,
     collapse_set_col,
     compose_address_col,
-    digit_prefix_col,
 )
 from ..functions.geo import haversine_col
 from ..functions.textnorm import city_key, street_fingerprint_key
 
 # reference config.py:102-112
-# unique-address scoring parallelism: one task per this many distinct
-# addresses (see _process). ~1k rows x <=50 candidates keeps a scoring task
-# in the 0.5-1s range — fine-grained enough to spread real corpora over
-# every core, coarse enough that micro-batch-sized inputs stay narrow.
+# lookup parallelism: one group of the lookup stage per this many distinct
+# addresses (see _lookup_and_check). ~1k queries x <=50 candidates keeps a
+# group's pandas call in the 0.5-1s range — fine-grained enough to spread
+# real corpora over every core, coarse enough that micro-batch-sized inputs
+# run as one call.
 _UQ_ROWS_PER_TASK = 1024
 
 # fan-back join strategy gate (guide §3.1): keep_u holds at most one row per
@@ -67,6 +77,10 @@ _UQ_ROWS_PER_TASK = 1024
 # time and AQE's conversion lands only after the big side's shuffle is
 # already written — measured 79 MB written + re-read per 2M-page stage).
 # ~200k wide rows ≈ 150 MB broadcast; above that the shuffle join is right.
+# The same gate broadcasts the distinct street keys of the lookup's
+# semi-join. Both sides of it are tested in
+# test_fanback_gate_boundary_keeps_golden_rows, the plan shapes in
+# test_lookup_is_one_cogrouped_stage.
 _FAN_BROADCAST_MAX_UNIQUES = 200_000
 
 DEFAULT_TRANSFORMERS_SEQUENCE: list[list[str]] = [
@@ -138,8 +152,11 @@ def build_gazetteer_index(
 
     Broadcast is gated on ESTIMATED BYTES (sampled avg row width x row
     count), not row count — 20M wide rows is several GB and OOMs executors
-    if broadcast. Above ``broadcast_max_bytes`` the candidate joins fall
-    back to shuffle joins on the fingerprint keys.
+    if broadcast. Under ``broadcast_max_bytes`` the one-stage kernel runs
+    with the index as a broadcast payload, and the parent alt-name and
+    photon joins broadcast their gazetteer side; above it those joins
+    shuffle. The lookup itself (_lookup_and_check) shuffles the semi-joined
+    lookup rows to their street-key groups in both regimes.
     """
     alt_t = dict(gaz.dtypes).get("alt_names", "")
     alt_map = F.col("alt_names") if alt_t.startswith("map") else F.map_from_entries("alt_names")
@@ -275,7 +292,7 @@ def _avg_row_bytes(df: DataFrame, sample_rows: int = 2000) -> int:
 
 
 # ---------------------------------------------------------------------------
-# candidate generation (the Nominatim-lookup analog)
+# unique queries and their lookup, check and retry (the Nominatim analog)
 # ---------------------------------------------------------------------------
 
 
@@ -306,138 +323,98 @@ def _unique_queries(addr: DataFrame) -> DataFrame:
     )
 
 
-def _candidates_unique(q: DataFrame, index: GazetteerIndex) -> DataFrame:
-    """Multi-level broadcast equi-join against the gazetteer — SURVEY.md J8 —
-    at the UNIQUE-query level (one row per distinct composed address).
-    Scoring/checking happens here too, so the expensive work is O(unique
-    addresses), not O(pages); results fan back to page keys afterwards.
-
-    Levels (lower wins for ordering; all levels unioned, capped at 50 like
-    Nominatim's server-side limit, base.py:97):
-      0: (street, postcode, house)  exact house rows
-      1: (street, city, house)      house rows via city when postcode off
-      2: (street, postcode)         street rows
-      3: (street, city)             street rows
-      4: (postcode)                 city rows   — only for empty street
-      5: (city fingerprint)         city rows   — only for empty street
-    """
-    lk = index.hinted(index.lookup)
-
-    has_street = q.filter(F.col("q_street_key") != "")
-    no_street = q.filter(F.col("q_street_key") == "")
-
-    houses = lk.filter(F.col("place_rank") == 30)
-    streets = lk.filter(F.col("place_rank") == 26)
-    cities = lk.filter(F.col("place_rank") < 26)
-
-    def lvl(df: DataFrame, n: int) -> DataFrame:
-        return df.withColumn("match_level", F.lit(n))
-
-    c0 = lvl(
-        has_street.filter(F.col("q_house") != "").join(
-            houses,
-            (F.col("q_street_key") == houses.key_street)
-            & (F.col("q_pc") == houses.post_code)
-            & (F.col("q_house") == houses.house_number),
-        ),
-        0,
-    )
-    c1 = lvl(
-        has_street.filter((F.col("q_house") != "") & (F.col("q_city_key") != "")).join(
-            houses,
-            (F.col("q_street_key") == houses.key_street)
-            & (F.col("q_city_key") == houses.key_city)
-            & (F.col("q_house") == houses.house_number),
-        ),
-        1,
-    )
-    c2 = lvl(
-        has_street.join(
-            streets,
-            (F.col("q_street_key") == streets.key_street)
-            & (F.col("q_pc") == streets.post_code),
-        ),
-        2,
-    )
-    c3 = lvl(
-        has_street.filter(F.col("q_city_key") != "").join(
-            streets,
-            (F.col("q_street_key") == streets.key_street)
-            & (F.col("q_city_key") == streets.key_city),
-        ),
-        3,
-    )
-    c4 = lvl(
-        no_street.filter(F.col("q_pc") != "").join(cities, F.col("q_pc") == cities.post_code),
-        4,
-    )
-    c5 = lvl(
-        no_street.filter(F.col("q_city_key") != "").join(
-            cities, F.col("q_city_key") == cities.key_city
-        ),
-        5,
-    )
-
-    # most-specific-first, like Nominatim with a housenumber: when an exact
-    # house hit exists for a query, street-level candidates are suppressed
-    # (the house is the answer; if the checker rejects it, parent rescue —
-    # not a vaguer street row — is the recovery path, as in the reference).
-    house_cand = c0.unionByName(c1)
-    house_hit = house_cand.select("transformed_address").distinct()
-    street_cand = (
-        c2.unionByName(c3).join(house_hit, on="transformed_address", how="left_anti")
-    )
-    cand = house_cand.unionByName(street_cand).unionByName(c4).unionByName(c5)
-
-    # one row per (query, place): keep the best (lowest) match level
-    per_place = Window.partitionBy("transformed_address", "place_id").orderBy("match_level")
-    cand = cand.withColumn("_rn", F.row_number().over(per_place)).filter(F.col("_rn") == 1).drop("_rn")
-
-    # deterministic result order per query = the reference's osm_order
-    # (position in Nominatim's response, utils.py:489,529)
-    order_w = Window.partitionBy("transformed_address").orderBy(
-        F.col("match_level").asc(), F.col("importance").desc(), F.col("place_id").asc()
-    )
-    cand = (
-        cand.withColumn("osm_order", F.row_number().over(order_w) - 1)
-        .filter(F.col("osm_order") < NOMINATIM_CANDIDATE_LIMIT)
-    )
-    return cand.select(_CAND_COLS)
-
-
-# candidate payload + the (transformed) query fields needed by the checker
-_CAND_COLS = [
-    "transformed_address", "street", "housenbr", "postcode", "city", "country",
-    "place_id", "parent_place_id", "place_rank", "category",
-    "lat", "lon", "osm_order", "out_street_name", "out_post_name",
-    "out_house_number", "out_post_code", "out_country_name", "out_other", "namedetails",
+# the grouped stage's output: the composed address, the candidate's
+# gazetteer payload, its position in Nominatim's order, the check's columns
+# (reject_reason null on the keep rows) and the retry's splice columns
+_PAYLOAD_COLS = [
+    "place_id", "parent_place_id", "place_rank", "lat", "lon", "out_street_name",
+    "out_post_name", "out_house_number", "out_post_code", "out_country_name",
+    "out_other", "namedetails",
 ]
-_PAYLOAD_COLS = [c for c in _CAND_COLS if c not in ADDR_COLS[1:]]
-
-
-def geocode_candidates(addr: DataFrame, index: GazetteerIndex) -> DataFrame:
-    """Unique-level candidates fanned back to every input address key
-    (reference utils.py:394)."""
-    cand = _candidates_unique(_unique_queries(addr), index)
-    return addr.select(ADDR_COLS + ["transformed_address"]).join(
-        cand.select(_PAYLOAD_COLS), on="transformed_address", how="inner"
-    )
-
-
-# ---------------------------------------------------------------------------
-# check path
-# ---------------------------------------------------------------------------
-
-# the check's output columns after the candidate columns; reject_reason is
-# null on the keep rows
-_CHECK_FIELDS = [
+_STAGE_FIELDS = [
+    StructField("osm_order", IntegerType()),
     StructField("sim_street", DoubleType()),
     StructField("sim_street_which", StringType()),
     StructField("sim_house_number", DoubleType()),
     StructField("sim_post_code", DoubleType()),
     StructField("sim_city", DoubleType()),
     StructField("reject_reason", StringType()),
+    StructField("_retry_ta", StringType()),
+    StructField("match_on_cleansed_house_number", BooleanType()),
 ]
+
+
+def _fan_small(index: GazetteerIndex, n_uq: int) -> bool:
+    """The fan-back gate: broadcast the unique-level side of a join."""
+    return index.broadcast_ok and n_uq <= _FAN_BROADCAST_MAX_UNIQUES
+
+
+def _lookup_and_check(
+    uq: DataFrame, index: GazetteerIndex, check_results: bool, n_uq: int
+) -> DataFrame:
+    """Lookup, check, parent rescue and low-rank retry of the unique
+    queries — process_osm (utils.py:300-441) with retry_with_low_place_rank
+    (:225-299) — as the kernel's _process_pdf, called once per group:
+    ``uq.groupBy(b).cogroup(lookup.groupBy(b)).applyInPandas(...)`` with
+    b = pmod(xxhash64(street key), n_groups), one group per
+    _UQ_ROWS_PER_TASK unique queries.
+
+    House and street rows are keyed by their street key, so a query meets
+    every house and street it can match, and its retried house number (same
+    street, same key) does too, inside its own group. City rows serve only
+    the no-street levels and are keyed under the empty key, the key of
+    every no-street query: all no-street queries share one group with
+    every city row. The gazetteer side is first semi-joined to the keys
+    the queries carry (the key side broadcast under the fan-back gate),
+    then each row gets its street parent's alt names by a join on
+    parent_place_id under the index's broadcast gate, so the rescue reads
+    nothing outside the group. The group's KernelPayload is built from its
+    own rows.
+
+    Returns a row per kept query (retries spliced in) and per rejected
+    candidate."""
+    from .geocode_kernel import _LOOKUP_COLS, KernelPayload, _process_pdf
+
+    n_groups = max(1, -(-n_uq // _UQ_ROWS_PER_TASK))
+
+    def bucket(key: str):
+        return F.pmod(F.xxhash64(key), F.lit(n_groups))
+
+    keys = uq.select(F.col("q_street_key").alias("_key")).distinct()
+    if _fan_small(index, n_uq):
+        keys = F.broadcast(keys)
+    lk = index.lookup.withColumn(
+        "_key", F.when(F.col("place_rank") < 26, F.lit("")).otherwise(F.col("key_street"))
+    ).join(keys, on="_key", how="left_semi")
+    parents = index.hinted(
+        index.places.filter(F.col("category") == "highway").select(
+            F.col("place_id").alias("p_pid"), F.col("alt_map").alias("p_alt_map")
+        )
+    )
+    lk = lk.join(parents, lk.parent_place_id == parents.p_pid, "left").drop("p_pid")
+    schema = StructType(
+        [uq.schema["transformed_address"]]
+        + [index.lookup.schema[c] for c in _PAYLOAD_COLS]
+        + _STAGE_FIELDS
+    )
+    names = schema.fieldNames()
+
+    def stage(q: pd.DataFrame, g: pd.DataFrame) -> pd.DataFrame:
+        places = (
+            g.loc[g.p_alt_map.notna(), ["parent_place_id", "p_alt_map"]]
+            .drop_duplicates("parent_place_id")
+            .rename(columns={"parent_place_id": "place_id", "p_alt_map": "alt_map"})
+            .assign(category="highway")
+        )
+        keep, reject = _process_pdf(q, KernelPayload(g[_LOOKUP_COLS], places), check_results)
+        out = pd.concat([keep, reject], ignore_index=True)
+        return out[names] if len(out) else pd.DataFrame(columns=names)
+
+    return (
+        uq.groupBy(bucket("q_street_key"))
+        .cogroup(lk.groupBy(bucket("_key")))
+        .applyInPandas(stage, schema)
+    )
 
 
 def _whole_groups(batches, key: str):
@@ -468,65 +445,24 @@ def _map_groups(df: DataFrame, key: str, fn, schema: StructType) -> DataFrame:
     )
 
 
-def _check(
-    cand: DataFrame, index: GazetteerIndex, check_results: bool, use_parent: bool
-) -> DataFrame:
-    """The check of the unique-level candidates — osm_keep_relevant_results
-    (check_result_utils.py:648-699) and match_parent (:560-644) — as the
-    kernel's _check_pdf over whole transformed_address groups. For the
-    rescue each candidate first gets its street parent's alt names by a
-    join on parent_place_id under the index's broadcast gate. Returns the
-    candidates with the sim columns and reject_reason (null when kept)."""
-    from .geocode_kernel import _check_pdf
-
-    schema = StructType(cand.schema.fields + _CHECK_FIELDS)
-    rescue = check_results and use_parent
-    if rescue:
-        parents = index.hinted(
-            index.places.filter(F.col("category") == "highway").select(
-                F.col("place_id").alias("p_pid"), F.map_values("alt_map").alias("p_alts")
-            )
-        )
-        cand = cand.join(parents, cand.parent_place_id == parents.p_pid, "left").drop("p_pid")
-
-    def check(pdf: pd.DataFrame) -> pd.DataFrame:
-        parents = None
-        if rescue:
-            parents = (
-                pdf.loc[pdf.p_alts.notna(), ["parent_place_id", "p_alts"]]
-                .drop_duplicates("parent_place_id")
-                .rename(columns={"parent_place_id": "p_pid"})
-            )
-            pdf = pdf.drop(columns="p_alts")
-        keep, reject = _check_pdf(pdf, check_results, parents)
-        return pd.concat([keep, reject], ignore_index=True)[schema.fieldNames()]
-
-    return _map_groups(cand, "transformed_address", check, schema)
-
-
 # ---------------------------------------------------------------------------
-# single lookup+check pass, low-rank retry, one transformer stage
+# one lookup+check pass with its retry, one transformer stage
 # ---------------------------------------------------------------------------
 
 
 def _process(
-    addr: DataFrame,
-    index: GazetteerIndex,
-    check_results: bool,
-    use_parent: bool = True,
-    with_retry: bool = False,
-    with_counts: bool = True,
-) -> tuple[DataFrame, DataFrame, int | None, DataFrame | None]:
-    """process_osm analog (utils.py:300-441): candidates -> check / first.
+    addr: DataFrame, index: GazetteerIndex, check_results: bool
+) -> tuple[DataFrame, DataFrame, int, DataFrame | None]:
+    """process_osm analog (utils.py:300-441) with its low-rank retry.
 
-    The entire check (scoring, elimination, best per address, parent
-    rescue, AND the low-rank retry) runs at the UNIQUE-composed-
-    address level — O(distinct addresses), the reference's own dedup
-    optimization (utils.py:353-356) extended through the checker. Only the
-    final keep/reject fan back to page keys — ONE pass over the input per
-    stage; no control-flow action ever touches the fanned frame. Outcomes
-    are identical because every key of one composed address shares the same
-    candidates, scores, and verdicts.
+    Lookup, check (scoring, elimination, best per address, parent rescue)
+    and the retry run at the UNIQUE-composed-address level — O(distinct
+    addresses), the reference's own dedup optimization (utils.py:353-356)
+    extended through the checker. Only the final keep/reject fan back to
+    page keys — ONE pass over the input per stage; no control-flow action
+    ever touches the fanned frame. Outcomes are identical because every key
+    of one composed address shares the same candidates, scores, and
+    verdicts.
 
     Returns (keep, reject, n_keep, unmatched): n_keep is the fanned keep
     row count via unique-level multiplicities; unmatched (when the input
@@ -535,91 +471,55 @@ def _process(
     """
     uq = _unique_queries(addr)
     # TINY (one row per distinct composed address) but its plan is a full
-    # dedup pass over the input: eager-materialize so the six candidate
-    # levels and every scoring/rescue/retry action read the materialized
-    # rows instead of re-triggering the 2M-row dedup whenever exchange
-    # reuse doesn't apply (the pandas-UDF key projections sit between the
-    # branches and the shared shuffle)
+    # dedup pass over the input: eager-materialize so the grouped stage,
+    # the count and n_keep read the materialized rows instead of
+    # re-triggering the 2M-row dedup
     uq = uq.localCheckpoint(eager=True)
-    # Width by ROW COUNT, not bytes (AQE's metric) and not blanket
-    # defaultParallelism: scoring cost is CPU-per-row, so a big unique set
-    # must spread across the cluster — but a small one (micro-batches, the
-    # steady-state cascade tail) fanned to 32 partitions pays ~6 candidate
-    # branches x pandas-UDF key projections x tasks in pure Python-worker
-    # round-trips, which measured 2-4x slower than a narrow plan at ~700
-    # uniques. One partition per _UQ_ROWS_PER_TASK rows, capped at cluster
-    # parallelism: large inputs behave exactly as before, small ones run
-    # narrow. The count is a cheap scan of the just-materialized rows.
-    par = addr.sparkSession.sparkContext.defaultParallelism
     n_uq = uq.count()
-    width = max(1, min(par, -(-n_uq // _UQ_ROWS_PER_TASK)))
-    have = uq.rdd.getNumPartitions()
-    if have < width:
-        uq = uq.repartition(width)
-    elif have > width:
-        uq = uq.coalesce(width)
-    # per-address key multiplicities stay OUT of the scoring pipeline (they
+    # per-address key multiplicities stay OUT of the lookup stage (they
     # would otherwise ride the fan-back join into the output schema)
     uq_counts = uq.select("transformed_address", "_n_keys")
-    uq = uq.drop("_n_keys")
     ukey = "transformed_address"
-    # Pin the CHECKED unique frame, not just the dedup: downstream it is
-    # read by the retry guards, matched_tas (n_keep count + unmatched
-    # anti-join), and both fan-back joins — without this the candidate-join +
-    # pandas-check pipeline re-executes for each of those actions. At most
-    # 50 candidate rows per distinct address, so materializing it is cheap.
-    checked = _check(_candidates_unique(uq, index), index, check_results, use_parent)
+    small = _fan_small(index, n_uq)
+    # Pin the CHECKED unique frame: matched_tas (n_keep count + unmatched
+    # anti-join) and both fan-back joins read it — without this the grouped
+    # stage re-executes for each of those actions. At most 50 candidate
+    # rows per distinct address, so materializing it is cheap.
+    checked = _lookup_and_check(uq.drop("_n_keys"), index, check_results, n_uq)
     checked = checked.localCheckpoint(eager=True)
     keep_u = checked.filter(F.col("reject_reason").isNull()).drop("reject_reason")
-    reject_u = checked.filter(F.col("reject_reason").isNotNull())
+    reject_u = checked.filter(F.col("reject_reason").isNotNull()).drop("_retry_ta")
 
-    if with_retry:
-        keep_u = _retry_low_rank_unique(keep_u, uq, index, check_results)
-
-    # fan back to every input key (reference utils.py:394); drop the query
-    # fields from the unique side — the fan side re-supplies them. The fan
-    # side also carries the _orig payload struct (caller columns + original
-    # address fields) so the cascade never needs a full-input restore join.
+    # fan back to every input key (reference utils.py:394); the fan side
+    # supplies the query fields and carries the _orig payload struct
+    # (caller columns + original address fields) so the cascade never needs
+    # a full-input restore join.
     carry = ["_orig"] if "_orig" in addr.columns else []
     fan = addr.select(ADDR_COLS + ["transformed_address"] + carry)
-    drop_q = [c for c in ADDR_COLS[1:]]
     # keep_u is ≤ one row per distinct address and already materialized —
     # broadcast it under the measured-size gate so the (large) fan side is
     # never exchanged for this join. Off in the no-broadcast regime to keep
-    # that plan shape pure shuffle (test_gazetteer_join_is_broadcast).
-    fan_small = index.broadcast_ok and n_uq <= _FAN_BROADCAST_MAX_UNIQUES
-    keep_u_fan = keep_u.drop(*drop_q)
-    if fan_small:
-        keep_u_fan = F.broadcast(keep_u_fan)
-    keep = fan.join(keep_u_fan, on="transformed_address", how="inner")
-    if with_retry and "_retry_ta" in keep.columns:
-        # retried rows report their CLEANSED composed address, like the
-        # reference's retry results (utils.py:272-276)
-        keep = keep.withColumn(
-            "transformed_address",
-            F.coalesce(F.col("_retry_ta"), F.col("transformed_address")),
-        ).drop("_retry_ta")
-    reject = fan.join(reject_u.drop(*drop_q), on="transformed_address", how="inner")
+    # that plan shape pure shuffle (test_lookup_is_one_cogrouped_stage).
+    keep = fan.join(F.broadcast(keep_u) if small else keep_u, on=ukey, how="inner")
+    # retried rows report their CLEANSED composed address, like the
+    # reference's retry results (utils.py:272-276)
+    keep = keep.withColumn(ukey, F.coalesce(F.col("_retry_ta"), F.col(ukey))).drop("_retry_ta")
+    reject = fan.join(reject_u, on=ukey, how="inner")
 
     # Control-flow byproducts at the UNIQUE level, so the cascade loop never
     # scans the fanned input again just to count or shrink:
     # - n_keep: how many fanned rows ``keep`` holds, as sum of multiplicities
-    #   over the matched distinct addresses (retry splices never change the
-    #   matched-address SET, only its rows, so the sum is exact);
+    #   over the matched distinct addresses;
     # - unmatched: the next todo set, rebuilt from the carried _orig payload
     #   through a unique-key anti-join (small side -> AQE broadcasts it)
     #   instead of a full-input shuffle on addr_key.
     matched_tas = keep_u.select(ukey).distinct()
-    if fan_small:
+    if small:
         # one narrow string column, ≤ n_uq rows: broadcast the anti-join's
         # small side at plan time instead of waiting for AQE
         matched_tas = F.broadcast(matched_tas)
-    n_keep = None
-    if with_counts:  # the retry recursion ignores counts — skip the action
-        row = uq_counts.join(matched_tas, on=ukey, how="inner").agg(
-            F.sum("_n_keys")
-        ).first()
-        n_keep = int(row[0] or 0)
+    row = uq_counts.join(matched_tas, on=ukey, how="inner").agg(F.sum("_n_keys")).first()
+    n_keep = int(row[0] or 0)
     unmatched = None
     if carry:
         unmatched = (
@@ -632,63 +532,6 @@ def _process(
             )
         )
     return keep, reject, n_keep, unmatched
-
-
-def _retry_low_rank_unique(
-    keep_u: DataFrame, uq: DataFrame, index: GazetteerIndex, check_results: bool
-) -> DataFrame:
-    """Cleansed-house-number retry for place_rank<30 — reference
-    retry_with_low_place_rank (utils.py:225-299) — at the UNIQUE-query
-    level: keyed by the ORIGINAL composed address, so the result splices
-    back into keep_u before the (single) fan-back join. The cheap isEmpty
-    guards scan only unique-level frames, never the fanned input."""
-    low = keep_u.filter(F.col("place_rank") < 30).select("transformed_address").distinct()
-    if low.isEmpty():
-        return keep_u
-
-    retry_in = (
-        uq.join(low, on="transformed_address", how="inner")
-        .filter(~F.coalesce(F.col("housenbr"), F.lit("")).rlike("^[0-9]*$"))
-        # the original composed address becomes the key the retry fans back to
-        .withColumn("addr_key", F.col("transformed_address"))
-        .withColumn("housenbr", digit_prefix_col(F.col("housenbr")))
-        .withColumn(
-            "transformed_address",
-            compose_address_col(
-                F.col("street"), F.col("housenbr"), F.col("postcode"), F.col("city"), F.col("country")
-            ),
-        )
-        .select(ADDR_COLS + ["transformed_address"])
-    )
-    if retry_in.isEmpty():
-        return keep_u
-
-    retried, _, _, _ = _process(
-        retry_in, index, check_results, use_parent=False, with_counts=False
-    )
-    improved = retried.filter(F.col("place_rank") == 30).withColumn(
-        "match_on_cleansed_house_number", F.lit(True)
-    )
-    if improved.isEmpty():
-        return keep_u
-
-    # reshape to keep_u's key space: addr_key here IS the original
-    # transformed_address; the cleansed one rides along for reporting
-    improved_u = (
-        improved.withColumn("_retry_ta", F.col("transformed_address"))
-        .drop("transformed_address")
-        .withColumnRenamed("addr_key", "transformed_address")
-    )
-    kept = keep_u.join(
-        improved_u.select("transformed_address").distinct(),
-        on="transformed_address",
-        how="left_anti",
-    )
-    # re-pin after the splice: the union's retried side roots in a recursive
-    # _process fan join that would otherwise re-run per downstream action
-    return kept.unionByName(improved_u, allowMissingColumns=True).localCheckpoint(
-        eager=True
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -967,9 +810,7 @@ def _one_stage(
         # row once more just to add one column.
         sent = sent.localCheckpoint(eager=True)
 
-    keep, reject, n_keep, unmatched = _process(
-        sent, index, check_results, with_retry=True
-    )
+    keep, reject, n_keep, unmatched = _process(sent, index, check_results)
     if unmatched is not None and transformers != ["orig"]:
         # the changed-rows filter (and any transformer dropout) removed rows
         # from ``sent`` before _process saw them — they are unmatched too.

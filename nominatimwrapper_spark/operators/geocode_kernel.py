@@ -36,19 +36,21 @@ different field splits compose to the same address ACROSS partitions
 (geocode._unique_queries note) — partition-local dedup picks the
 partition's min rather than the global min.
 
-The ladder's decisions are written once, here, and the distributed
-cascade calls them over whole key groups (geocode._check, libpostal_ and
-photon_transformer): scoring, elimination and best per query with its
-tail (_score_pdf, _pick_best_pdf), the parent alt-name rescue
+Candidate lookup and the ladder's decisions are written once, here, and
+the distributed cascade calls them over whole key groups: _process_pdf
+(six-level lookup merge, then the check, then the low-rank retry) per
+street-key group through geocode._lookup_and_check, and the libpostal
+and photon decisions through geocode.libpostal_ and photon_transformer.
+The check is scoring, elimination and best per query with its tail
+(_score_pdf, _pick_best_pdf) and the parent alt-name rescue
 (_parent_rescue_pdf), all three behind _check_pdf; the libpostal sanity
-check (_apply_libpostal) and the photon re-rank (_photon_best_pdf). What
-stays per engine is candidate lookup (pandas merges against the payload
-here, Spark joins there), regex application, the ladder loop and tiling.
-The scalar kernels below them are shared too — textnorm compare and
-fingerprint functions, the rule-based libpostal parser, the regex
-rulesets, the comma-fixpoint cleaner and the page address extractor
-(pages.extract_addresses_pdf) — so a value fix lands in both engines at
-once.
+check is _apply_libpostal and the photon re-rank _photon_best_pdf. What
+stays per engine is regex application, the ladder loop, photon pool
+gathering and tiling. The scalar kernels below them are shared too —
+textnorm compare and fingerprint functions, the rule-based libpostal
+parser, the regex rulesets, the comma-fixpoint cleaner and the page
+address extractor (pages.extract_addresses_pdf) — so a value fix lands in
+both engines at once.
 """
 
 from __future__ import annotations
@@ -362,8 +364,9 @@ def _transform_stage(
 
 
 # ---------------------------------------------------------------------------
-# candidate generation (pandas twin of geocode._candidates_unique) and the
-# check, shared with geocode._check
+# candidate lookup, the check and the low-rank retry, shared by both engines
+# (the distributed cascade runs _process_pdf per street-key group in
+# geocode._lookup_and_check)
 # ---------------------------------------------------------------------------
 
 
@@ -543,29 +546,31 @@ def _check_pdf(
 
 
 def _process_pdf(
-    uq: pd.DataFrame, pay: KernelPayload, check_results: bool,
-    use_parent: bool = True, with_retry: bool = False,
-) -> pd.DataFrame:
-    """_process twin at the unique-query level; returns keep_u rows
-    (one per matched transformed_address)."""
+    uq: pd.DataFrame, pay: KernelPayload, check_results: bool
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Lookup, check with parent rescue, and the low-rank retry of the
+    unique queries — process_osm (utils.py:300-441) with
+    retry_with_low_place_rank (:225-299) — shared by both engines.
+    Returns (keep, reject): keep is one row per matched
+    transformed_address, reject the rejected candidates of the first
+    lookup (the retry's own rejects are not reported)."""
     cand = _candidates_pdf(uq, pay)
     if not len(cand):
-        return cand
-    keep, _ = _check_pdf(cand, check_results, pay.parents if use_parent else None)
-    if with_retry and len(keep):
-        keep = _retry_low_rank_pdf(keep, uq, pay, check_results)
-    return keep
+        return cand, cand
+    keep, reject = _check_pdf(cand, check_results, pay.parents)
+    return _retry_low_rank_pdf(keep, uq, pay, check_results), reject
 
 
 def _retry_low_rank_pdf(
     keep: pd.DataFrame, uq: pd.DataFrame, pay: KernelPayload, check_results: bool
 ) -> pd.DataFrame:
-    """retry_with_low_place_rank twin: non-numeric house numbers of
-    below-house matches retried with the cleansed (digit-prefix) house."""
-    low = set(keep.loc[keep.place_rank < 30, "transformed_address"])
-    if not low:
-        return keep
-    r = uq[uq.transformed_address.isin(low)]
+    """The non-numeric house numbers of below-house matches retried with
+    their cleansed (digit-prefix) house number, without parent rescue. A
+    house found replaces the query's keep row: keyed by the original
+    composed address, with the cleansed one in ``_retry_ta`` (the address
+    it reports) and match_on_cleansed_house_number set."""
+    keep = keep.assign(_retry_ta=None, match_on_cleansed_house_number=False)
+    r = uq[uq.transformed_address.isin(keep.loc[keep.place_rank < 30, "transformed_address"])]
     hn = r["housenbr"]
     r = r[hn.notna() & ~hn.map(lambda v: bool(_ALL_DIGITS.match(str(v))))]
     if not len(r):
@@ -579,28 +584,18 @@ def _retry_low_rank_pdf(
     r["transformed_address"] = [
         _compose(*t) for t in r[_FIELDS].itertuples(index=False, name=None)
     ]
-    uq2 = _unique_queries_pdf(r)
-    got = _process_pdf(uq2, pay, check_results, use_parent=False, with_retry=False)
-    if not len(got):
+    cand = _candidates_pdf(_unique_queries_pdf(r), pay)
+    if not len(cand):
         return keep
-    got = got[got.place_rank == 30]
-    if not len(got):
-        return keep
-    ta2_map = r.set_index("_orig_ta")["transformed_address"].to_dict()
-    by_ta2 = got.set_index("transformed_address")
-    rows = []
-    for _, krow in keep.iterrows():
-        ta = krow["transformed_address"]
-        ta2 = ta2_map.get(ta)
-        if ta2 is not None and ta2 in by_ta2.index:
-            new = by_ta2.loc[ta2].copy()
-            new["transformed_address"] = ta  # fan-back key stays the original
-            new["_retry_ta"] = ta2  # reported composed address (cleansed)
-            new["match_on_cleansed_house_number"] = True
-            rows.append(new)
-        else:
-            rows.append(krow)
-    return pd.DataFrame(rows).reset_index(drop=True)
+    got, _ = _check_pdf(cand, check_results)
+    got = (
+        r[["_orig_ta", "transformed_address"]]
+        .merge(got[got.place_rank == 30], on="transformed_address")
+        .rename(columns={"transformed_address": "_retry_ta", "_orig_ta": "transformed_address"})
+        .assign(match_on_cleansed_house_number=True)
+    )
+    kept = keep[~keep.transformed_address.isin(got.transformed_address)]
+    return pd.concat([kept, got], ignore_index=True)
 
 
 # ---------------------------------------------------------------------------
@@ -650,16 +645,9 @@ def cascade_kernel(
             tas.append(v)
         cur = cur.assign(transformed_address=tas)
         uq = _unique_queries_pdf(cur)
-        keep_u = _process_pdf(uq, pay, check_results, use_parent=True, with_retry=True)
+        keep_u, _ = _process_pdf(uq, pay, check_results)
         if not len(keep_u):
             continue
-        if "_retry_ta" not in keep_u.columns:
-            keep_u["_retry_ta"] = None
-        if "match_on_cleansed_house_number" not in keep_u.columns:
-            keep_u["match_on_cleansed_house_number"] = False
-        keep_u["match_on_cleansed_house_number"] = (
-            keep_u["match_on_cleansed_house_number"] == True  # noqa: E712 — NaN-safe
-        )
         fan = cur[["addr_key", "transformed_address"]].merge(
             keep_u[["transformed_address", "_retry_ta", "match_on_cleansed_house_number"]
                    + _PAYLOAD_OUT],

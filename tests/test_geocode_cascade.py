@@ -420,6 +420,35 @@ def test_retried_house_number_shared_by_two_inputs(spark, reject_world, broadcas
     assert (got.transformed_address == cleansed).all()
 
 
+@pytest.mark.parametrize("below_gate", [True, False])
+def test_fanback_gate_boundary_keeps_golden_rows(spark, reject_world, monkeypatch, below_gate):
+    """The fan-back gate on each side of its threshold: at the first
+    stage's unique count keep_u is broadcast to the fan-back join, one
+    below it the join shuffles. The keep and reject rows equal the golden
+    either way."""
+    from nominatimwrapper_spark.operators import geocode
+
+    gaz, addr = reject_world
+    index = build_gazetteer_index(gaz)
+    sent = addr.withColumn(
+        "transformed_address",
+        geocode.compose_address_col(*[F.col(c) for c in geocode.ADDR_COLS[1:]]),
+    )
+    n_first = sent.select("transformed_address").distinct().count()
+    monkeypatch.setattr(geocode, "_FAN_BROADCAST_MAX_UNIQUES", n_first - (not below_gate))
+    _assert_golden(*_golden_rows(*cascade(addr, index)))
+
+    thr = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(thr)
+    spark.conf.set(thr, "-1")  # only the gate's hint may broadcast
+    try:
+        keep = geocode._process(sent, index, True)[0]
+        plan = keep._sc._jvm.PythonSQLUtils.explainString(keep._jdf.queryExecution(), "simple")
+    finally:
+        spark.conf.set(thr, old)
+    assert ("BroadcastHashJoin" in plan) == below_gate, plan
+
+
 def test_duplicate_key_guard(spark, index):
     import pandas as pd
 

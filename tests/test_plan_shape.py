@@ -6,6 +6,8 @@ math (SURVEY.md §4)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,12 +42,28 @@ def test_parquet_pushdown_and_pruning(spark):
     assert "o_orderpriority" not in read_schema and "o_custkey" not in read_schema
 
 
-def test_gazetteer_join_is_broadcast(spark, tmp_path_factory):
+def _join_sections(plan: str, kind: str) -> list[str]:
+    """The detail sections of the formatted plan's ``kind`` join nodes."""
+    return [sec for sec in plan.split("\n\n") if re.match(rf"\(\d+\) {kind}\b", sec)]
+
+
+def test_lookup_is_one_cogrouped_stage(spark, tmp_path_factory):
+    """Lookup, check and retry of the unique queries are ONE grouped
+    pandas stage over the gazetteer rows semi-joined to the queried street
+    keys. Under the broadcast gate the key side of that semi-join is
+    broadcast; in the >broadcast-gate regime (a several-GB planet
+    gazetteer, auto-broadcast off) nothing is — a broadcast planet
+    gazetteer would OOM every executor."""
     from nominatimwrapper_spark.operators.geocode import (
+        _lookup_and_check,
+        _unique_queries,
         build_gazetteer_index,
-        geocode_candidates,
     )
     from nominatimwrapper_spark.synth import gen_world, write_world
+
+    def stage_plan(index, addr) -> str:
+        uq = _unique_queries(addr)
+        return _formatted(_lookup_and_check(uq, index, True, n_uq=uq.count()))
 
     d = tmp_path_factory.mktemp("plan_world")
     write_world(str(d), gen_world(n_streets=30, houses_per_street=4, n_pages=5, n_per_class=1))
@@ -54,17 +72,10 @@ def test_gazetteer_join_is_broadcast(spark, tmp_path_factory):
         "referenceKey as addr_key", "streetName as street", "houseNumber as housenbr",
         "postCode as postcode", "postName as city", "countryName as country"
     ).withColumn("transformed_address", F.col("street"))
-    cand = geocode_candidates(addr, index)
-    plan = _formatted(cand)
-    assert "BroadcastHashJoin" in plan
-    # the big (address) side must never be broadcast: no SortMergeJoin needed
-    # for the candidate lookup itself
-    assert plan.count("BroadcastHashJoin") >= 4  # one per candidate level
+    plan = stage_plan(index, addr)
+    assert plan.count("FlatMapCoGroupsInPandas (") == 1, plan
+    assert any("Join type: LeftSemi" in sec for sec in _join_sections(plan, "BroadcastHashJoin"))
 
-    # the >broadcast-gate regime: with broadcast_ok=False (a several-GB
-    # planet gazetteer) and the auto-broadcast threshold off, every
-    # candidate join must compile to a shuffle join — no broadcast of
-    # EITHER side (a planet gazetteer would OOM every executor)
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # threshold off BEFORE the index build: the cached lookup plan
@@ -80,11 +91,12 @@ def test_gazetteer_join_is_broadcast(spark, tmp_path_factory):
             spark.read.parquet(f"{d2}/gazetteer.parquet"), broadcast_max_bytes=0
         )
         assert index_nobc.broadcast_ok is False
-        plan_nobc = _formatted(geocode_candidates(addr, index_nobc))
+        plan_nobc = stage_plan(index_nobc, addr)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-    assert "BroadcastHashJoin" not in plan_nobc
-    assert "SortMergeJoin" in plan_nobc
+    assert plan_nobc.count("FlatMapCoGroupsInPandas (") == 1, plan_nobc
+    assert "BroadcastExchange" not in plan_nobc
+    assert any("Join type: LeftSemi" in sec for sec in _join_sections(plan_nobc, "SortMergeJoin"))
 
 
 def test_column_math_stays_in_codegen(spark):
