@@ -488,7 +488,7 @@ def _process(
     checked = _lookup_and_check(uq.drop("_n_keys"), index, check_results, n_uq)
     checked = checked.localCheckpoint(eager=True)
     keep_u = checked.filter(F.col("reject_reason").isNull()).drop("reject_reason")
-    reject_u = checked.filter(F.col("reject_reason").isNotNull()).drop("_retry_ta")
+    reject_u = checked.filter(F.col("reject_reason").isNotNull())
 
     # fan back to every input key (reference utils.py:394); the fan side
     # supplies the query fields and carries the _orig payload struct
