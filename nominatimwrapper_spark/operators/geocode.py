@@ -400,6 +400,8 @@ def _lookup_and_check(
     names = schema.fieldNames()
 
     def stage(q: pd.DataFrame, g: pd.DataFrame) -> pd.DataFrame:
+        # the street parents carried on the rows, as the places frame the
+        # payload takes its rescue pool from
         places = (
             g.loc[g.p_alt_map.notna(), ["parent_place_id", "p_alt_map"]]
             .drop_duplicates("parent_place_id")
