@@ -24,12 +24,13 @@ Spark data movement around it.
 Scale design: lookup, check and retry run at the unique-query level, after
 a dropDuplicates on the composed address (the reference's only
 optimization, utils.py:353-356 — here it is a partial-agg dedup), as one
-grouped pandas stage that co-partitions the unique queries with their
-gazetteer rows on the street key; the page/address corpus never shuffles
-for the lookup itself. The per-stage loop shrinks the working set with a
-left-anti join exactly like the reference's `chunk[~isin(done)]`
-(utils.py:1263). Skewed hot addresses are handled by the unique-level
-dedup and by AQE skew-join on the fan-back join.
+grouped pandas stage that co-partitions the unique queries with the
+gazetteer rows they can reach, on their locality (street key, postcode,
+city key); the page/address corpus never shuffles for the lookup itself.
+The per-stage loop shrinks the working set with a left-anti join exactly
+like the reference's `chunk[~isin(done)]` (utils.py:1263). Skewed hot
+addresses are handled by the unique-level dedup and by AQE skew-join on
+the fan-back join.
 """
 
 from __future__ import annotations
@@ -63,10 +64,11 @@ from ..functions.textnorm import city_key, street_fingerprint_key
 
 # reference config.py:102-112
 # lookup parallelism: one group of the lookup stage per this many distinct
-# addresses (see _lookup_and_check). ~1k queries x <=50 candidates keeps a
-# group's pandas call in the 0.5-1s range — fine-grained enough to spread
-# real corpora over every core, coarse enough that micro-batch-sized inputs
-# run as one call.
+# addresses (see _lookup_groups). A group of ~1k queries and 5-8k gazetteer
+# rows is a 0.2-0.3 s pandas call (scripts/lookup_groups.py, 690-street
+# synthetic world, one 4-core host) — fine-grained enough to spread real
+# corpora over every core, coarse enough that micro-batch-sized inputs run
+# as one call.
 _UQ_ROWS_PER_TASK = 1024
 
 # fan-back join strategy gate (guide §3.1): keep_u holds at most one row per
@@ -77,8 +79,8 @@ _UQ_ROWS_PER_TASK = 1024
 # time and AQE's conversion lands only after the big side's shuffle is
 # already written — measured 79 MB written + re-read per 2M-page stage).
 # ~200k wide rows ≈ 150 MB broadcast; above that the shuffle join is right.
-# The same gate broadcasts the distinct street keys of the lookup's
-# semi-join. Both sides of it are tested in
+# The same gate broadcasts the queried localities the lookup joins the
+# gazetteer to. Both sides of it are tested in
 # test_fanback_gate_boundary_keeps_golden_rows, the plan shapes in
 # test_lookup_is_one_cogrouped_stage.
 _FAN_BROADCAST_MAX_UNIQUES = 200_000
@@ -155,8 +157,8 @@ def build_gazetteer_index(
     if broadcast. Under ``broadcast_max_bytes`` the one-stage kernel runs
     with the index as a broadcast payload, and the parent alt-name and
     photon joins broadcast their gazetteer side; above it those joins
-    shuffle. The lookup itself (_lookup_and_check) shuffles the semi-joined
-    lookup rows to their street-key groups in both regimes.
+    shuffle. The lookup itself (_lookup_groups) shuffles the lookup rows
+    its queries can reach to their locality groups in both regimes.
     """
     alt_t = dict(gaz.dtypes).get("alt_names", "")
     alt_map = F.col("alt_names") if alt_t.startswith("map") else F.map_from_entries("alt_names")
@@ -349,49 +351,84 @@ def _fan_small(index: GazetteerIndex, n_uq: int) -> bool:
     return index.broadcast_ok and n_uq <= _FAN_BROADCAST_MAX_UNIQUES
 
 
+def _lookup_groups(
+    uq: DataFrame, index: GazetteerIndex, n_uq: int
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the lookup stage, every row tagged with its group
+    ``_b``: the unique queries, and the gazetteer rows their group can
+    reach, each with its street parent's alt names (``p_alts``).
+
+    A query's group is the hash of its locality (street key, postcode,
+    city key) over ceil(n_uq / _UQ_ROWS_PER_TASK) groups. Every lookup
+    level matches the street key plus the postcode or the city key (city
+    rows, rank < 26, under the empty street key of the no-street queries),
+    so the rows a locality can reach are those of two equi-joins: on street
+    key and postcode, and on street key and city key. A row goes to the
+    group of each locality that reaches it and to no other: a common
+    street name does not pull every town's houses into one group, and the
+    no-street queries spread over their localities, each group holding
+    only the city rows its queries name. A retried house number keeps its
+    query's locality, so its houses are in the group too. The locality
+    side is broadcast under the fan-back gate; the parent alt names join
+    on parent_place_id under the index's broadcast gate."""
+    n_groups = max(1, -(-n_uq // _UQ_ROWS_PER_TASK))
+    b = F.pmod(F.xxhash64("q_street_key", "q_pc", "q_city_key"), F.lit(n_groups))
+    q = uq.withColumn("_b", b)
+    loc = (
+        uq.select("q_street_key", "q_pc", "q_city_key").distinct()
+        .select(F.col("q_street_key").alias("_sk"), "q_pc", "q_city_key", b.alias("_b"))
+    )
+    hint = F.broadcast if _fan_small(index, n_uq) else (lambda df: df)
+    lk = index.lookup.withColumn(
+        "_sk", F.when(F.col("place_rank") < 26, F.lit("")).otherwise(F.col("key_street"))
+    )
+    by_pc = lk.join(
+        hint(loc.select("_sk", F.col("q_pc").alias("post_code"), "_b").distinct()),
+        ["_sk", "post_code"],
+    )
+    # a row the postcode join already sends to this locality is not sent twice
+    by_city = lk.join(
+        hint(loc.filter(F.col("q_city_key") != "").withColumnRenamed("q_city_key", "key_city")),
+        ["_sk", "key_city"],
+    ).filter(~F.col("post_code").eqNullSafe(F.col("q_pc")))
+    lk = by_pc.unionByName(by_city.drop("q_pc")).drop("_sk")
+    parents = index.hinted(
+        index.places.filter(F.col("category") == "highway").select(
+            F.col("place_id").alias("p_pid"), F.map_values("alt_map").alias("p_alts")
+        )
+    )
+    return q, lk.join(parents, lk.parent_place_id == parents.p_pid, "left").drop("p_pid")
+
+
+def _lookup_group_pdf(q: pd.DataFrame, g: pd.DataFrame, check_results: bool) -> pd.DataFrame:
+    """One group of the lookup stage: the kernel's _process_pdf over the
+    group's queries ``q`` with a KernelPayload built from its gazetteer
+    rows ``g``, the rescue pool from the parent alt names they carry.
+    Returns the keep rows, then the reject rows."""
+    from .geocode_kernel import _LOOKUP_COLS, KernelPayload, _process_pdf
+
+    # a row reaching two localities of one group arrives twice
+    g = g.drop_duplicates(["key_street", "place_id"])
+    pay = KernelPayload(g[_LOOKUP_COLS], pd.DataFrame(columns=["place_id", "category", "alt_map"]))
+    par = g.loc[g.p_alts.notna(), ["parent_place_id", "p_alts"]].drop_duplicates("parent_place_id")
+    pay.parents = pd.DataFrame(
+        {"p_pid": par.parent_place_id.to_numpy(), "p_alts": [list(a) for a in par.p_alts]}
+    )
+    keep, reject = _process_pdf(q, pay, check_results)
+    return pd.concat([keep, reject], ignore_index=True)
+
+
 def _lookup_and_check(
     uq: DataFrame, index: GazetteerIndex, check_results: bool, n_uq: int
 ) -> DataFrame:
     """Lookup, check, parent rescue and low-rank retry of the unique
     queries — process_osm (utils.py:300-441) with retry_with_low_place_rank
-    (:225-299) — as the kernel's _process_pdf, called once per group:
-    ``uq.groupBy(b).cogroup(lookup.groupBy(b)).applyInPandas(...)`` with
-    b = pmod(xxhash64(street key), n_groups), one group per
-    _UQ_ROWS_PER_TASK unique queries.
-
-    House and street rows are keyed by their street key, so a query meets
-    every house and street it can match, and its retried house number (same
-    street, same key) does too, inside its own group. City rows serve only
-    the no-street levels and are keyed under the empty key, the key of
-    every no-street query: all no-street queries share one group with
-    every city row. The gazetteer side is first semi-joined to the keys
-    the queries carry (the key side broadcast under the fan-back gate),
-    then each row gets its street parent's alt names by a join on
-    parent_place_id under the index's broadcast gate, so the rescue reads
-    nothing outside the group. The group's KernelPayload is built from its
-    own rows.
+    (:225-299) — as _lookup_group_pdf, called once per locality group of
+    _lookup_groups: ``q.groupBy("_b").cogroup(lk.groupBy("_b"))``.
 
     Returns a row per kept query (retries spliced in) and per rejected
     candidate."""
-    from .geocode_kernel import _LOOKUP_COLS, KernelPayload, _process_pdf
-
-    n_groups = max(1, -(-n_uq // _UQ_ROWS_PER_TASK))
-
-    def bucket(key: str):
-        return F.pmod(F.xxhash64(key), F.lit(n_groups))
-
-    keys = uq.select(F.col("q_street_key").alias("_key")).distinct()
-    if _fan_small(index, n_uq):
-        keys = F.broadcast(keys)
-    lk = index.lookup.withColumn(
-        "_key", F.when(F.col("place_rank") < 26, F.lit("")).otherwise(F.col("key_street"))
-    ).join(keys, on="_key", how="left_semi")
-    parents = index.hinted(
-        index.places.filter(F.col("category") == "highway").select(
-            F.col("place_id").alias("p_pid"), F.col("alt_map").alias("p_alt_map")
-        )
-    )
-    lk = lk.join(parents, lk.parent_place_id == parents.p_pid, "left").drop("p_pid")
+    q, lk = _lookup_groups(uq, index, n_uq)
     schema = StructType(
         [uq.schema["transformed_address"]]
         + [index.lookup.schema[c] for c in _PAYLOAD_COLS]
@@ -400,23 +437,10 @@ def _lookup_and_check(
     names = schema.fieldNames()
 
     def stage(q: pd.DataFrame, g: pd.DataFrame) -> pd.DataFrame:
-        # the street parents carried on the rows, as the places frame the
-        # payload takes its rescue pool from
-        places = (
-            g.loc[g.p_alt_map.notna(), ["parent_place_id", "p_alt_map"]]
-            .drop_duplicates("parent_place_id")
-            .rename(columns={"parent_place_id": "place_id", "p_alt_map": "alt_map"})
-            .assign(category="highway")
-        )
-        keep, reject = _process_pdf(q, KernelPayload(g[_LOOKUP_COLS], places), check_results)
-        out = pd.concat([keep, reject], ignore_index=True)
+        out = _lookup_group_pdf(q, g, check_results)
         return out[names] if len(out) else pd.DataFrame(columns=names)
 
-    return (
-        uq.groupBy(bucket("q_street_key"))
-        .cogroup(lk.groupBy(bucket("_key")))
-        .applyInPandas(stage, schema)
-    )
+    return q.groupBy("_b").cogroup(lk.groupBy("_b")).applyInPandas(stage, schema)
 
 
 def _whole_groups(batches, key: str):

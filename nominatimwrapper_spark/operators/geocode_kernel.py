@@ -39,7 +39,7 @@ partition's min rather than the global min.
 Candidate lookup and the ladder's decisions are written once, here, and
 the distributed cascade calls them over whole key groups: _process_pdf
 (six-level lookup merge, then the check, then the low-rank retry) per
-street-key group through geocode._lookup_and_check, and the libpostal
+locality group through geocode._lookup_and_check, and the libpostal
 and photon decisions through geocode.libpostal_ and photon_transformer.
 The check is scoring, elimination and best per query with its tail
 (_score_pdf, _pick_best_pdf) and the parent alt-name rescue
@@ -365,7 +365,7 @@ def _transform_stage(
 
 # ---------------------------------------------------------------------------
 # candidate lookup, the check and the low-rank retry, shared by both engines
-# (the distributed cascade runs _process_pdf per street-key group in
+# (the distributed cascade runs _process_pdf per locality group in
 # geocode._lookup_and_check)
 # ---------------------------------------------------------------------------
 

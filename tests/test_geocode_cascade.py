@@ -458,3 +458,69 @@ def test_duplicate_key_guard(spark, index):
     )
     with pytest.raises(ValueError, match="duplicate"):
         cascade(spark.createDataFrame(dup), index)
+
+
+@pytest.mark.parametrize("broadcast_max_bytes", [800 * 1024 * 1024, 0])
+def test_city_key_levels_without_postcode(spark, reject_world, broadcast_max_bytes):
+    """Without a postcode a query reaches its gazetteer rows through its
+    city key alone: the house (level 1), the street (level 3) and, with
+    no street either, the city (level 5), in both regimes."""
+    gaz, _ = reject_world
+    house = gaz.filter("place_rank = 30").orderBy("place_id").first()
+    street = gaz.filter(f"place_id = {house.parent_place_id}").first()
+    city = gaz.filter(f"place_rank = 16 AND post_code = '{house.post_code}'").first()
+    addr = spark.createDataFrame(pd.DataFrame(
+        dict(addr_key=["city-house", "city-street", "city-only"],
+             street=[house.name_fr, house.name_fr, ""], housenbr=[house.house_number, "", ""],
+             postcode=[""] * 3, city=[house.city] * 3, country=["Belgique"] * 3)
+    ))
+    index = build_gazetteer_index(gaz, broadcast_max_bytes=broadcast_max_bytes)
+    res, _ = cascade(addr, index)
+    got = res.toPandas().set_index("addr_key")
+    assert (got.method == "orig").all()
+    assert got.place_id.to_dict() == {
+        "city-house": house.place_id, "city-street": street.place_id, "city-only": city.place_id,
+    }
+
+
+@pytest.mark.parametrize("broadcast_max_bytes", [800 * 1024 * 1024, 0])
+def test_retry_fields_are_picked_per_group(spark, reject_world, monkeypatch, broadcast_max_bytes):
+    """The low-rank retry picks its representative fields per lookup
+    group. Two inputs whose cleansed composed addresses coincide but whose
+    localities differ (city "C" and country "Belgique", against city
+    "C, Belgique" and no country) sit in different groups, so each is
+    retried with its own fields: both get the house, and the second scores
+    its own city, not the min of the two cities (geocode._unique_queries
+    documents the pick as arbitrary; this pins the per-group choice)."""
+    from nominatimwrapper_spark.functions.textnorm import city_compare_one
+    from nominatimwrapper_spark.operators import geocode
+    from nominatimwrapper_spark.operators.geocode import (
+        _lookup_groups,
+        _unique_queries,
+        compose_address_col,
+    )
+
+    gaz, _ = reject_world
+    house = gaz.filter("place_rank = 30").orderBy("place_id").first()
+    hn = house.house_number
+    addr = spark.createDataFrame(pd.DataFrame(
+        dict(addr_key=["loc-a", "loc-b"], street=[house.name_fr] * 2,
+             housenbr=[f"{hn} bt 2", f"{hn} bte 3"], postcode=[house.post_code] * 2,
+             city=[house.city, f"{house.city}, Belgique"], country=["Belgique", ""])
+    ))
+    # one group per unique query
+    monkeypatch.setattr(geocode, "_UQ_ROWS_PER_TASK", 1)
+    index = build_gazetteer_index(gaz, broadcast_max_bytes=broadcast_max_bytes)
+    uq = _unique_queries(addr.withColumn(
+        "transformed_address",
+        compose_address_col(*[F.col(c) for c in ("street", "housenbr", "postcode", "city", "country")]),
+    ))
+    q, _ = _lookup_groups(uq, index, 2)
+    assert q.select("_b").distinct().count() == 2
+    res, _ = cascade(addr, index)
+    got = res.toPandas().set_index("addr_key").sort_index()
+    assert list(got.index) == ["loc-a", "loc-b"]
+    assert (got.place_id == house.place_id).all() and got.match_on_cleansed_house_number.all()
+    assert got.transformed_address.nunique() == 1
+    assert got.loc["loc-a", "sim_city"] == 1.0
+    assert got.loc["loc-b", "sim_city"] == city_compare_one(house.city, f"{house.city}, Belgique")

@@ -49,11 +49,12 @@ def _join_sections(plan: str, kind: str) -> list[str]:
 
 def test_lookup_is_one_cogrouped_stage(spark, tmp_path_factory):
     """Lookup, check and retry of the unique queries are ONE grouped
-    pandas stage over the gazetteer rows semi-joined to the queried street
-    keys. Under the broadcast gate the key side of that semi-join is
-    broadcast; in the >broadcast-gate regime (a several-GB planet
-    gazetteer, auto-broadcast off) nothing is — a broadcast planet
-    gazetteer would OOM every executor."""
+    pandas stage over the gazetteer rows the queried localities reach: one
+    join on (street key, postcode), one on (street key, city key). Under
+    the broadcast gate the locality side of both is broadcast; in the
+    >broadcast-gate regime (a several-GB planet gazetteer, auto-broadcast
+    off) nothing is — a broadcast planet gazetteer would OOM every
+    executor."""
     from nominatimwrapper_spark.operators.geocode import (
         _lookup_and_check,
         _unique_queries,
@@ -65,6 +66,12 @@ def test_lookup_is_one_cogrouped_stage(spark, tmp_path_factory):
         uq = _unique_queries(addr)
         return _formatted(_lookup_and_check(uq, index, True, n_uq=uq.count()))
 
+    def locality_joins(plan: str, kind: str) -> list[str]:
+        return sorted(
+            k for sec in _join_sections(plan, kind) for k in ("post_code", "key_city")
+            if "Join type: Inner" in sec and re.search(rf"Left keys \[2\]: \[_sk#\d+, {k}#", sec)
+        )
+
     d = tmp_path_factory.mktemp("plan_world")
     write_world(str(d), gen_world(n_streets=30, houses_per_street=4, n_pages=5, n_per_class=1))
     index = build_gazetteer_index(spark.read.parquet(f"{d}/gazetteer.parquet"))
@@ -74,7 +81,7 @@ def test_lookup_is_one_cogrouped_stage(spark, tmp_path_factory):
     ).withColumn("transformed_address", F.col("street"))
     plan = stage_plan(index, addr)
     assert plan.count("FlatMapCoGroupsInPandas (") == 1, plan
-    assert any("Join type: LeftSemi" in sec for sec in _join_sections(plan, "BroadcastHashJoin"))
+    assert locality_joins(plan, "BroadcastHashJoin") == ["key_city", "post_code"], plan
 
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -96,7 +103,7 @@ def test_lookup_is_one_cogrouped_stage(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
     assert plan_nobc.count("FlatMapCoGroupsInPandas (") == 1, plan_nobc
     assert "BroadcastExchange" not in plan_nobc
-    assert any("Join type: LeftSemi" in sec for sec in _join_sections(plan_nobc, "SortMergeJoin"))
+    assert locality_joins(plan_nobc, "SortMergeJoin") == ["key_city", "post_code"], plan_nobc
 
 
 def test_column_math_stays_in_codegen(spark):
