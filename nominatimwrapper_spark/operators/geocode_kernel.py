@@ -371,10 +371,21 @@ def _transform_stage(
 
 
 def _unique_queries_pdf(sent: pd.DataFrame) -> pd.DataFrame:
-    uq = (
-        sent.groupby("transformed_address", as_index=False)
-        .agg({f: _sparkmin for f in _FIELDS})
-    )
+    """One row per transformed_address (sorted), each field the
+    ``_sparkmin`` over the rows that compose to it. Almost every address
+    is reached by one field tuple, whose fields are its minima as they
+    stand; only addresses reached by several tuples are aggregated."""
+    d = sent[["transformed_address"] + _FIELDS].drop_duplicates()
+    multi = d.transformed_address.duplicated(keep=False).to_numpy()
+    one = d[~multi]
+    one = one.astype(object).where(one.notna(), None)
+    if multi.any():
+        many = (
+            d[multi].groupby("transformed_address", as_index=False)
+            .agg({f: _sparkmin for f in _FIELDS})
+        )
+        one = pd.concat([one, many])
+    uq = one.sort_values("transformed_address").reset_index(drop=True)
     uq["q_street_key"] = uq["street"].map(street_fingerprint_key)
     uq["q_city_key"] = uq["city"].map(city_key)
     uq["q_pc"] = uq["postcode"].map(_nz)

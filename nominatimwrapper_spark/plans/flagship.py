@@ -167,9 +167,12 @@ def geocode_and_tile(
 
     - ``index.broadcast_ok``: the partition-local kernel
       (operators/geocode_kernel.py), one mapInPandas stage after a single
-      hash exchange of the pages on ``url``. The recrawl window and the
-      duplicate guard reuse that partitioning, and building the plan runs
-      no Spark job once the index's payload broadcast exists.
+      hash exchange on ``url`` of the three columns it reads (url,
+      warc_ts, html). The recrawl window and the duplicate guard reuse
+      that partitioning, and building the plan runs no Spark job once the
+      index's payload broadcast exists. AQE sizes the exchange, so the
+      kernel runs in as many Python tasks as the shuffled bytes need
+      (each task pays a fixed start-up cost in the Python worker).
     - above the broadcast gate: the distributed Column cascade with shuffle
       joins (operators/geocode.py).
 
@@ -181,10 +184,10 @@ def geocode_and_tile(
     checks urls, so a duplicated url whose pages carry no address raises
     too."""
     if index.broadcast_ok:
-        # fixed-count repartition: AQE does not coalesce it, so the kernel
-        # keeps the full width without a partition-count peek (which would
-        # execute the exchange while the plan is built)
-        pages = pages.repartition(pages.sparkSession.sparkContext.defaultParallelism, "url")
+        # no partition count: AQE coalesces the exchange to the shuffled
+        # bytes (a few hundred pages run in one Python task, MBs of html
+        # at full width), and the plan needs no partition-count peek
+        pages = pages.select("url", "warc_ts", "html").repartition("url")
         if dedup_crawls:
             pages = latest_snapshot(pages, "url", "warc_ts")
         elif validate_unique and not (

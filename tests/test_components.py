@@ -151,3 +151,19 @@ def test_connected_components_hub_plus_chain_mixture(spark):
     assert len(rows) == 1
     assert rows[0]["component"] == 5
     assert rows[0]["count"] == n_hub + n_chain + 1
+
+
+def test_union_find_chain_in_shuffled_id_order(spark):
+    """A 2,000-node chain whose ids run in shuffled order, so most hops
+    lead away from the minimum, plus a second, short chain: the driver
+    union-find gives the dict union-find's mapping, one component per
+    chain at its minimum id."""
+    import random
+
+    ids = list(range(10, 4010, 2))
+    random.Random(7).shuffle(ids)
+    edges = list(zip(ids, ids[1:])) + [(9001, 9005), (9003, 9005), (9003, 9002)]
+    e = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+    got = {r["node"]: r["component"] for r in connected_components(e).collect()}
+    assert got == _cc_brute(edges)
+    assert set(got.values()) == {10, 9001}

@@ -14,6 +14,9 @@ import pytest
 
 from nominatimwrapper_spark.operators.geocode import build_gazetteer_index, cascade
 from nominatimwrapper_spark.operators.geocode_kernel import (
+    _FIELDS,
+    _sparkmin,
+    _unique_queries_pdf,
     build_kernel_payload,
     cascade_kernel,
     geocode_and_tile_kernel,
@@ -210,6 +213,69 @@ def test_route_plan_is_one_exchange_and_builds_without_jobs(spark, flagship_page
     assert len(exchanges) == 1 and "hashpartitioning(url#" in exchanges[0], plan
     for node in ("BroadcastHashJoin", "SortMergeJoin"):
         assert node not in plan, f"unexpected {node} in route plan:\n{plan}"
+    # the exchange ships only what the kernel reads: no text, no lang
+    assert _exchange_columns(out) == [["html", "url", "warc_ts"]], plan
+
+
+def _exchange_columns(df) -> list[list[str]]:
+    """Sorted output column names of each shuffle exchange in df's
+    physical plan (AQE's initial plan, so nothing runs)."""
+    node = df._jdf.queryExecution().executedPlan()
+    if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        node = node.inputPlan()
+    found, stack = [], [node]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            out = node.output()
+            found.append(sorted(out.apply(i).name() for i in range(out.size())))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def _kernel_stage_tasks(spark, group: str, df) -> tuple[int, list]:
+    """Collect df under a job group; return the task count of the stage
+    that ran last (the one reading the url exchange: recrawl window and
+    MapInPandas kernel) and the sorted rows."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "kernel stage width")
+    try:
+        rows = sorted(df.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    last = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    stage = st.getStageInfo(max(last.stageIds))
+    assert stage.numCompletedTasks == stage.numTasks, stage
+    return stage.numTasks, rows
+
+
+def test_kernel_stage_width_follows_aqe_coalescing(spark, flagship_pages):
+    """AQE sizes the url exchange: the 500 fixture pages (about 0.2 MB of
+    html) run the kernel in ONE Python task. With coalescing off, which
+    is how a large input behaves, the same call runs
+    spark.sql.shuffle.partitions tasks, with identical output."""
+    from nominatimwrapper_spark.plans.flagship import gazetteer_index, geocode_and_tile
+
+    idx = gazetteer_index(spark)
+    # 3 input partitions: neither 1 nor the shuffle width, so the map side
+    # of the exchange cannot be mistaken for the kernel stage
+    pages = spark.createDataFrame(_recrawled(flagship_pages)).repartition(3)
+    pages = pages.localCheckpoint(eager=True)
+    n_on, rows_on = _kernel_stage_tasks(spark, "kernel-width-aqe", geocode_and_tile(pages, idx))
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        n_off, rows_off = _kernel_stage_tasks(
+            spark, "kernel-width-fixed", geocode_and_tile(pages, idx)
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert n_on == 1
+    assert n_off == int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+    assert len(rows_on) > 0 and rows_on == rows_off
 
 
 def test_kernel_broadcast_lives_on_the_index(spark, index):
@@ -283,3 +349,29 @@ def test_kernel_empty_and_addressless_pages(spark, index):
         "addr_key", "url", "method", "place_id", "place_rank",
         "cell13", "h3_9", "lat_1e6", "lon_1e6",
     ]
+
+
+def test_unique_queries_fast_path_matches_per_group_min():
+    """An address reached by one field tuple keeps that tuple as it
+    stands; only an address reached by several tuples (here one street
+    split two ways, one of them with a null postcode) takes the
+    per-field _sparkmin. Both give what grouping every address gives."""
+    sent = pd.DataFrame({
+        "addr_key": ["a", "b", "c", "d", "e"],
+        "transformed_address": ["rue x 1, 1000 bxl"] * 3 + ["av y, 1050 ix", "bd z 3, uccle"],
+        "street": ["rue x", "rue x 1", "rue x", "av y", "bd z"],
+        "housenbr": ["1", "", "1", None, "3"],
+        "postcode": ["1000", None, "1000", "1050", np.nan],
+        "city": ["bxl", "bxl", "bxl", "ix", "uccle"],
+        "country": [""] * 5,
+    })
+    got = _unique_queries_pdf(sent)
+    ref = sent.groupby("transformed_address", as_index=False).agg(
+        {f: _sparkmin for f in _FIELDS}
+    )
+    pd.testing.assert_frame_equal(got[["transformed_address"] + _FIELDS], ref)
+    assert got.transformed_address.tolist() == sorted(set(sent.transformed_address))
+    multi = got.iloc[2]
+    assert (multi.street, multi.housenbr, multi.postcode) == ("rue x", "", "1000")
+    assert got.iloc[0].housenbr is None and got.iloc[1].postcode is None
+    assert got.loc[1, "q_pc"] == "" and got.loc[2, "q_pc"] == "1000"
