@@ -172,7 +172,9 @@ def geocode_and_tile(
       that partitioning, and building the plan runs no Spark job once the
       index's payload broadcast exists. AQE sizes the exchange, so the
       kernel runs in as many Python tasks as the shuffled bytes need
-      (each task pays a fixed start-up cost in the Python worker).
+      (each task pays a fixed start-up cost in the Python worker). A task
+      gets about minPartitionSize (1 MB) of shuffled pages or more, so
+      the kernel runs at full width only above defaultParallelism x 1 MB.
     - above the broadcast gate: the distributed Column cascade with shuffle
       joins (operators/geocode.py).
 
@@ -185,8 +187,8 @@ def geocode_and_tile(
     too."""
     if index.broadcast_ok:
         # no partition count: AQE coalesces the exchange to the shuffled
-        # bytes (a few hundred pages run in one Python task, MBs of html
-        # at full width), and the plan needs no partition-count peek
+        # bytes, about 1 MB or more per Python task (some 1,000 pages of
+        # the synthetic crawl), and the plan needs no partition-count peek
         pages = pages.select("url", "warc_ts", "html").repartition("url")
         if dedup_crawls:
             pages = latest_snapshot(pages, "url", "warc_ts")

@@ -176,8 +176,10 @@ def geocode_pages_stream(
         # The row count is then a cheap scan and prices the batch for the
         # shuffle clamp below — a 5k-page epoch shuffling across the full
         # session width pays pure task-setup overhead in every window/join
-        # stage, so small batches run with a handful of shuffle partitions
-        # (AQE cannot do this: parallelismFirst keeps tiny shuffles wide).
+        # stage, so small batches run with a handful of shuffle partitions.
+        # AQE's parallelismFirst coalescing narrows a shuffle only while
+        # its bytes stay under defaultParallelism x minPartitionSize (1 MB);
+        # whether that already covers these batches is not measured.
         pages = pages.localCheckpoint(eager=True)
         n_rows = pages.count()
         prev = sess.conf.get("spark.sql.shuffle.partitions")

@@ -253,9 +253,9 @@ def _kernel_stage_tasks(spark, group: str, df) -> tuple[int, list]:
 
 def test_kernel_stage_width_follows_aqe_coalescing(spark, flagship_pages):
     """AQE sizes the url exchange: the 500 fixture pages (about 0.2 MB of
-    html) run the kernel in ONE Python task. With coalescing off, which
-    is how a large input behaves, the same call runs
-    spark.sql.shuffle.partitions tasks, with identical output."""
+    html) run the kernel in ONE Python task. With coalescing off the same
+    call runs spark.sql.shuffle.partitions tasks, the full width an input
+    above defaultParallelism x 1 MB gets, with identical output."""
     from nominatimwrapper_spark.plans.flagship import gazetteer_index, geocode_and_tile
 
     idx = gazetteer_index(spark)
