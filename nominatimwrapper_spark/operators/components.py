@@ -34,6 +34,7 @@ after each star bounds the edge set by O(E). No all-pairs anywhere.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -117,27 +118,6 @@ def _min_label(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return ids, ids[parent]
 
 
-def _union_find_components(e: DataFrame, nodes: DataFrame) -> DataFrame:
-    """Exact closure for a SMALL edge set on the driver (``_min_label``).
-    Only the edge list is collected (bounded by the caller's gate); the
-    node set stays distributed — the (node -> component) mapping, one row
-    per node with an edge, is broadcast back and left-joined exactly like
-    the distributed loop's star-forest tail join."""
-    import pandas as pd
-
-    pdf = e.toPandas()
-    ids, comp = _min_label(
-        pdf["u"].to_numpy(dtype=np.int64), pdf["v"].to_numpy(dtype=np.int64)
-    )
-    mapping = pd.DataFrame({"node": ids, "component": comp})
-    mdf = F.broadcast(
-        e.sparkSession.createDataFrame(mapping, schema="node long, component long")
-    )
-    return nodes.join(mdf, on="node", how="left").select(
-        "node", F.coalesce("component", F.col("node")).alias("component")
-    )
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -148,70 +128,72 @@ def connected_components(
     """(node, component) for every node appearing in ``edges``, where
     ``component`` is the minimum node id of its connected component.
 
-    Exact convergence check per round (count + one-way exceptAll on the
-    distinct edge sets — no hash-fingerprint false positives); raises if
-    ``max_iter`` rounds don't converge (alternating stars converge in
-    O(log n), so 40 covers any realizable input).
+    Strategy is scale-adaptive on the MEASURED edge count, the number of
+    distinct (u, v) pairs with self-loops included (a self-loop counts,
+    so a graph with self-loops reaches the gate a little sooner than its
+    distinct real edges alone would). The call checkpoints those pairs
+    once and collects at most ``driver_max_edges`` + 1 of them. If they
+    all fit, an exact driver-side union-find (``_min_label``) labels
+    every endpoint, self-loop-only nodes too, and the mapping is
+    returned as a local frame: no further Spark job. Pass 0 to force the
+    distributed loop; the gate must stay below 2^31 - 1, as Spark's row
+    limit is an int. At the default 1M the driver holds the collected
+    edges (16 MB of longs) plus the union-find's numpy arrays, which
+    peak at about 115 MB, most of it ``np.unique``'s sort (measured with
+    1M random edges over 2M nodes).
 
-    Strategy is scale-adaptive on the MEASURED distinct-edge count:
-    ``driver_max_edges`` (default 1M) routes small closures through an
-    exact driver-side union-find (no per-round Spark jobs; the mapping
-    broadcasts back), larger ones through the alternating-star loop.
-    Pass 0 to force the distributed loop. At the default the driver holds
-    the collected edges (16 MB of longs) plus the union-find's numpy
-    arrays, which peak at about 115 MB, most of it ``np.unique``'s sort
-    (measured with 1M random edges over 2M nodes).
+    Above the gate, the alternating-star loop runs over the checkpoint,
+    with an exact convergence check per round (count + one-way exceptAll
+    on the distinct edge sets — no hash-fingerprint false positives); it
+    raises if ``max_iter`` rounds don't converge (alternating stars
+    converge in O(log n), so 40 covers any realizable input).
+    Superseded per-round checkpoint blocks are unpersisted as the loop
+    advances; the node set and the final star forest stay pinned,
+    because the returned frame is a lazy join over exactly those two.
 
     NB: EAGER — the input edge list (and thus its whole upstream plan,
     e.g. the LSH-verify pipeline when called from minhash_dedup) executes
-    at call time via localCheckpoint, not at the first action on the
-    returned frame. Superseded per-round checkpoint blocks (and the raw
-    input pin) are unpersisted as the loop advances; only the node set
-    and the final star forest stay pinned, because the returned frame is
-    a lazy join over exactly those two."""
-    # pin the input edge list FIRST: nodes and e both consume it, and the
-    # upstream plan may be expensive (minhash_dedup feeds the whole
-    # LSH-verify pipeline in here — evaluating it twice doubled the
-    # 1M-doc dedup wall before this checkpoint)
-    raw = (
+    at call time, in the checkpoint job, not at the first action on the
+    returned frame."""
+    pairs = (
         edges.select(
             F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
         )
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    # node set from the RAW list: a self-loop-only node is an isolated
-    # node (its own component), not absent from the output
-    nodes = (
-        raw.select(F.col("u").alias("node"))
-        .unionAll(raw.select(F.col("v").alias("node")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    e = (
-        raw.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # nodes and e are materialized — the raw pin has no further reader
-    _unpersist_checkpoint(raw)
-    if e.isEmpty():
-        return nodes.withColumn("component", F.col("node"))
-
-    prev_n = e.count()
     # Scale-adaptive strategy pick (guide §1.2): the distinct edge set is
     # usually orders of magnitude smaller than the corpus that produced it
     # (the 1M-doc bench closure verifies ~13k edges). Below the gate an
     # exact driver-side union-find replaces O(log n) alternating-star
     # rounds of 4 Spark jobs each — same (node, component-minimum) values,
     # none of the per-round fixed cost. The collect is BOUNDED by the gate
-    # (two longs per edge, see the docstring for the peak); above it the
-    # distributed loop below is the only sound shape and runs unchanged.
-    if prev_n <= driver_max_edges:
-        out = _union_find_components(e, nodes)
-        _unpersist_checkpoint(e)  # collected; nodes stays pinned (output reads it)
-        return out
+    # (one row past it says "above"); above it the distributed loop below
+    # is the only sound shape and runs unchanged.
+    head = pairs.limit(driver_max_edges + 1).toPandas()
+    if len(head) <= driver_max_edges:
+        _unpersist_checkpoint(pairs)  # collected
+        ids, comp = _min_label(
+            head["u"].to_numpy(dtype=np.int64), head["v"].to_numpy(dtype=np.int64)
+        )
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame({"node": ids, "component": comp}),
+            schema="node long, component long",
+        )
 
+    # node set from the pairs with self-loops kept: a self-loop-only node
+    # is an isolated node (its own component), not absent from the output
+    nodes = (
+        pairs.select(F.col("u").alias("node"))
+        .unionAll(pairs.select(F.col("v").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    e = pairs.filter(F.col("u") != F.col("v")).localCheckpoint(eager=True)
+    # nodes and e are materialized — the pairs pin has no further reader
+    _unpersist_checkpoint(pairs)
+    prev_n = e.count()
     for _ in range(max_iter):
         e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
         n2 = e2.count()

@@ -4,12 +4,12 @@ pipeline ops — graded alongside SURVEY.md §2).
 
 - exact: hash-groupBy (md5 of content) — SQL-oracled
 - ngram Jaccard: word 3-shingle set similarity between candidate pairs
-- MinHash + LSH: shingles -> k minhashes -> bands -> bucket join -> verify
+- MinHash + LSH: shingles -> k minhashes -> bands -> bucket pairs -> verify
 - SimHash: 64-bit near-dup signature, banded for candidate generation
 - embedding cosine near-dup: see simsearch.cosine_topk (reused)
 
-Scale notes: MinHash/LSH is the 100 TB path — the candidate join is an
-equi-join on (band_id, band_hash) buckets, never all-pairs; the final
+Scale notes: MinHash/LSH is the 100 TB path — candidates are the pairs
+within each (band, band_hash) bucket, never all-pairs; the final
 verify recomputes true Jaccard only within buckets. Shingling and hashing
 are Column expressions (xxhash64) — no Python in the hot path; nothing
 here uses a per-row UDF (SimHash's bit matrix is an Arrow-batched pandas
@@ -18,7 +18,7 @@ UDF).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 # ---------------------------------------------------------------------------
 # shingles
@@ -169,27 +169,24 @@ def _signatures_from_hashed(hs: DataFrame, num_hashes: int = 32) -> DataFrame:
     """(_id, _sig) from a hashed-shingle frame via explode + hash
     aggregate: the k min() columns stay inside whole-stage codegen with
     MAP-SIDE partial aggregation — the shuffle carries one partial row
-    per (doc, partition), not the shingles."""
+    per (doc, partition), not the shingles.
+
+    The aggregate is one SQL expression string, parsed by the JVM: built
+    one Column operator at a time, the 32 pmod/min terms cost about 2,600
+    py4j round trips, half of a whole near_dup_closure call's; this
+    builder now makes 42."""
     a_list, b_list = _affine_params(num_hashes)
     # NULL elements propagate: NULL & mask is NULL, min() skips NULLs,
-    # count(_h) counts only non-NULL — a null-text doc yields _nh = 0 and
-    # a NULL signature, value-identical to hashing the strings directly.
-    hashed = hs.select(
-        "_id",
-        F.explode_outer("_hsh").alias("_e"),
-    ).select("_id", F.col("_e").bitwiseAND(F.lit(0x7FFFFFFF)).alias("_h"))
-    aggs = [
-        F.min(
-            F.pmod(F.lit(a_list[i]) * F.col("_h") + F.lit(b_list[i]), F.lit(_MERSENNE_31))
-        ).alias(f"_m{i}")
-        for i in range(num_hashes)
-    ] + [F.count("_h").alias("_nh")]
-    sig = hashed.groupBy("_id").agg(*aggs)
-    return sig.select(
-        "_id",
-        F.when(F.col("_nh") == 0, F.lit(None)).otherwise(
-            F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-        ).alias("_sig"),
+    # count(_h) counts only non-NULL — a null-text doc yields no hashes
+    # and a NULL signature, value-identical to hashing the strings directly.
+    mins = ", ".join(
+        f"min(pmod({a} * _h + {b}, {_MERSENNE_31}))" for a, b in zip(a_list, b_list)
+    )
+    return (
+        hs.selectExpr("_id", "explode_outer(_hsh) AS _e")
+        .selectExpr("_id", f"_e & {0x7FFFFFFF} AS _h")
+        .groupBy("_id")
+        .agg(F.expr(f"IF(count(_h) = 0, NULL, array({mins}))").alias("_sig"))
     )
 
 
@@ -215,10 +212,10 @@ def minhash_signatures_agg(
 
 def cap_lsh_buckets(banded: DataFrame, max_bucket_size: int, keys=("band", "bhash")) -> DataFrame:
     """Drop LSH buckets larger than ``max_bucket_size`` BEFORE the
-    self-join. A degenerate bucket (boilerplate/empty docs sharing a band
-    hash) otherwise produces O(bucket^2) pairs — the 100 TB job-killer.
-    One window count over the same (band, bhash) partitioning the join
-    shuffles on anyway, so no extra shuffle stage at scale."""
+    pairs are generated. A degenerate bucket (boilerplate/empty docs
+    sharing a band hash) otherwise produces O(bucket^2) pairs — the
+    100 TB job-killer. One window count over the same (band, bhash)
+    partitioning the pair groupBy needs anyway, so no extra shuffle."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*keys)
@@ -257,33 +254,20 @@ def banded_signatures(
     """(_id, band, bhash) banded MinHash rows — the pre-cap frame of the
     LSH pipeline, exported so ops/tests can measure bucket-size drop
     volume (lsh_dropped_bucket_stats) on EXACTLY the frame the candidate
-    join consumes."""
+    pairs are generated from."""
     sigs = minhash_signatures_agg(docs, id_col, text_col, num_hashes, shingle_n)
     return _banded_from_sigs(sigs, num_hashes, bands)
 
 
 def _banded_from_sigs(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    rows_per_band = num_hashes // bands
-    return sigs.select(
-        "_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.array_join(
-                            F.transform(
-                                F.slice("_sig", b * rows_per_band + 1, rows_per_band),
-                                lambda v: v.cast("string"),
-                            ),
-                            ",",
-                        )
-                    ).alias("bhash"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("_id", F.col("bb.band").alias("band"), F.col("bb.bhash").alias("bhash"))
+    r = num_hashes // bands
+    band = (
+        f"named_struct('band', b, 'bhash', xxhash64(array_join(transform("
+        f"slice(_sig, b * {r} + 1, {r}), v -> CAST(v AS STRING)), ',')))"
+    )
+    return sigs.selectExpr(
+        "_id", f"inline(transform(sequence(0, {bands - 1}), b -> {band}))"
+    )
 
 
 def minhash_lsh_candidates(
@@ -299,7 +283,7 @@ def minhash_lsh_candidates(
 
     rows/band = num_hashes/bands; docs sharing any band hash collide.
     Returns (id_a, id_b, n_bands_shared) with id_a < id_b. Buckets larger
-    than ``max_bucket_size`` are dropped before the self-join (use
+    than ``max_bucket_size`` are dropped before any pair is made (use
     ``lsh_dropped_bucket_stats`` to measure the dropped volume); true
     giant dup-clusters are the exact-dedup pass's job, not LSH's.
     """
@@ -310,24 +294,44 @@ def minhash_lsh_candidates(
 
 
 def _pairs_from_banded(banded: DataFrame) -> DataFrame:
-    """Capped banded rows -> candidate pairs. The banded frame feeds BOTH
-    sides of the self-join but the two sides differ by an alias, so the
-    planner cannot reuse one exchange between them — without pinning, the
-    whole signature pipeline (shingle + hash + 32-way agg + cap window)
-    executes TWICE (measured: 8 scans / 13 exchanges / 0 reuse in the
-    1M-doc verify plan). Eager-materializing the small (_id, band, bhash)
-    frame makes each side a checkpoint scan. NB this makes the builder
-    eager at plan-construction time, like connected_components."""
-    banded = banded.localCheckpoint(eager=True)
-    l = banded.select(F.col("_id").alias("id_a"), "band", "bhash")
-    r = banded.select(F.col("_id").alias("id_b"), "band", "bhash")
-    pairs = (
-        l.join(r, on=["band", "bhash"], how="inner")
-        .filter(F.col("id_a") < F.col("id_b"))
+    """Capped banded rows -> candidate pairs, without a self-join.
+
+    One groupBy on (band, bhash) collects each bucket's ids, sorted, and
+    each bucket of k ids yields its k(k-1)/2 pairs in place: the id at
+    position i pairs with every id after it. The cap window in
+    ``cap_lsh_buckets`` is partitioned on the same keys, so the window
+    and this groupBy share one exchange, and the banded rows are read
+    once. The pairs are exactly those of an equi-join of the banded rows
+    with themselves on (band, bhash) filtered to id_a < id_b (the
+    ``minhash_lsh`` oracle's SQL), duplicates included, so
+    n_bands_shared counts the shared bands."""
+    return (
+        banded.groupBy("band", "bhash")
+        .agg(F.expr("array_sort(collect_list(_id))").alias("_ids"))
+        .filter("size(_ids) > 1")
+        .selectExpr("posexplode(_ids) AS (_i, id_a)", "_ids")
+        .selectExpr("id_a", "explode(slice(_ids, _i + 2, size(_ids))) AS id_b")
+        .filter("id_a < id_b")
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_bands_shared"))
     )
-    return pairs
+
+
+def _shingle_table(
+    docs: DataFrame, id_col: str, text_col: str, shingle_n: int
+) -> tuple[DataFrame, int, float]:
+    """(hs, n, w): the checkpointed ``hashed_shingles`` frame, its row
+    count and its mean array width, observed while the checkpoint job
+    writes it, so measuring the verify-attach gate costs no job of its
+    own."""
+    obs = Observation()
+    hs = (
+        hashed_shingles(docs, id_col, text_col, shingle_n)
+        .observe(obs, F.expr("count(1) AS n"), F.expr("avg(size(_hsh)) AS w"))
+        .localCheckpoint(eager=True)
+    )
+    st = obs.get
+    return hs, int(st["n"] or 0), float(st["w"] or 0)
 
 
 def minhash_verified_pairs(
@@ -348,21 +352,20 @@ def minhash_verified_pairs(
     intersects ints instead of strings. Measured on the 30M-pair 1M-doc
     bench corpus: 312 s -> 77 s for the verify stage.
 
-    Round-6 shape: ONE hashed-shingle pass feeds both the signature
-    pipeline (low 31 bits) and the verify arrays — previously the corpus
-    was shingled twice. The two attach joins are BYTE-GATED broadcasts of
-    the per-doc array table (same gate pattern as the gazetteer index):
-    under the budget both attaches and the Jaccard compute fuse into ONE
-    stage of the pair stream with ZERO array shuffles — the profiled
-    alternative exchanges every pair row WITH its first attached array
-    (13 GB written + read at the 30M-pair bench corpus, 2,550 core-s —
-    5x the intersect work itself). Above the budget (a corpus whose
-    array table outgrows executor memory) the joins fall back to
-    SHUFFLE_HASH with the array side as build: no sort of the pair
-    stream, per-partition hash builds only. |A∪B| is computed as
-    |A|+|B|−|A∩B| (one hash-set pass instead of two; equal to
-    size(array_union) because each doc's hashes are distinct up to the
-    same 2^-64 collision caveat)."""
+    One hashed-shingle pass, checkpointed, feeds both the signatures
+    (low 31 bits) and the verify arrays. The checkpoint job also
+    measures the verify-attach gate: its row count and mean array width
+    come from an ``Observation`` on that job, estimated as
+    n * (8 * width + 32) bytes. Under ``broadcast_max_bytes`` (800 MB)
+    the two attach joins broadcast the array table, and both attaches
+    and the Jaccard compute fuse into ONE stage of the pair stream with
+    no array shuffle (the profiled alternative exchanged every pair row
+    WITH its first attached array: 13 GB at the 30M-pair bench corpus).
+    Above it the joins are SHUFFLE_HASH with the array side as build:
+    no sort of the pair stream. The function runs that one job when it
+    is called; the candidates and the verify run at the caller's action.
+    |A∪B| is computed as |A|+|B|−|A∩B| (each doc's hashes are distinct
+    up to the same 2^-64 collision caveat)."""
     shingle_n = lsh_kw.pop("shingle_n", 3)
     num_hashes = lsh_kw.pop("num_hashes", 32)
     bands = lsh_kw.pop("bands", 8)
@@ -370,38 +373,31 @@ def minhash_verified_pairs(
     broadcast_max_bytes = lsh_kw.pop("broadcast_max_bytes", 800 * 1024 * 1024)
     if lsh_kw:
         raise TypeError(f"unknown lsh kwargs: {sorted(lsh_kw)}")
-    hs = hashed_shingles(docs, id_col, text_col, shingle_n).localCheckpoint(eager=True)
+    hs, n, w = _shingle_table(docs, id_col, text_col, shingle_n)
     cand = _pairs_from_banded(
         cap_lsh_buckets(
             _banded_from_sigs(_signatures_from_hashed(hs, num_hashes), num_hashes, bands),
             max_bucket_size,
         )
     )
-    # measured-size broadcast gate: one cheap agg over the checkpointed
-    # array table (id long + n_shingles * 8B + array/row overhead)
-    stats = hs.agg(
-        F.count(F.lit(1)).alias("n"), F.avg(F.size("_hsh")).alias("w")
-    ).first()
-    est_bytes = int((stats["n"] or 0) * (float(stats["w"] or 0) * 8 + 32))
-    use_broadcast = est_bytes <= broadcast_max_bytes
     # restore the raw-xxhash64 value for NULL shingles (xxhash64(NULL) is
     # the seed, 42) so the arrays are byte-identical to hashing the
     # shingle strings directly
-    unmask = F.transform("_hsh", lambda h: F.coalesce(h, F.lit(42).cast("long")))
-    sh_a = hs.select(F.col("_id").alias("id_a"), unmask.alias("sh_a"))
-    sh_b = hs.select(F.col("_id").alias("id_b"), unmask.alias("sh_b"))
-    if use_broadcast:
+    sh_a = hs.selectExpr("_id AS id_a", "transform(_hsh, h -> coalesce(h, 42L)) AS sh_a")
+    sh_b = hs.selectExpr("_id AS id_b", "transform(_hsh, h -> coalesce(h, 42L)) AS sh_b")
+    if int(n * (w * 8 + 32)) <= broadcast_max_bytes:
         sh_a, sh_b = F.broadcast(sh_a), F.broadcast(sh_b)
     else:
         sh_a, sh_b = sh_a.hint("shuffle_hash"), sh_b.hint("shuffle_hash")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    inter = "size(array_intersect(sh_a, sh_b))"
     return (
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
-        .withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
+        .selectExpr(
+            "id_a", "id_b",
+            f"{inter} / greatest(size(sh_a) + size(sh_b) - {inter}, 1) AS jaccard",
+        )
         .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 

@@ -24,8 +24,10 @@ import atexit
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions import geo, s2
 from ..functions.h3 import h3_cell_col
@@ -107,14 +109,18 @@ def pages_from_documents(
             "doc_id", F.col("doc_id") * replicate + F.col("_rep")
         ).drop("_rep")
     gaz = spark.read.parquet(f"{world_dir(**kw)}/gazetteer.parquet")
-    houses = (
-        gaz.filter(F.col("place_rank") == 30)
-        .select(
-            "name_fr", "house_number", "post_code", "city",
-            (F.row_number().over(Window.orderBy("place_id")) - 1).alias("_hidx"),
-        )
+    # the synthetic world has a few hundred houses (664 at the default size):
+    # collect them once, number them in place_id order on the driver and
+    # broadcast them back as a local frame
+    houses = gaz.filter(F.col("place_rank") == 30).select(
+        "place_id", "name_fr", "house_number", "post_code", "city"
     )
-    n_houses = houses.count()
+    hdf = houses.toPandas().sort_values("place_id").drop(columns="place_id")
+    n_houses = len(hdf)
+    hdf["_hidx"] = np.arange(n_houses, dtype=np.int32)
+    houses = spark.createDataFrame(
+        hdf, StructType(houses.schema.fields[1:] + [StructField("_hidx", IntegerType(), False)])
+    )
 
     hidx = (F.col("doc_id") % n_houses).cast("int")
     if skew_hot > 0.0:

@@ -203,3 +203,64 @@ def test_fused_cell_udf_single_arrow_crossing(spark):
     # tree form "ArrowEvalPython (n)" — the detail section repeats the
     # node as "(n) ArrowEvalPython", so count tree nodes only
     assert plan.count("ArrowEvalPython (") == 1, plan
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan of ``df`` after an action ran it: the
+    adaptive plan's final section only."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _planted_near_dups(spark, n: int = 120):
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(n)
+    dups = docs.select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" extraword")).alias("text"),
+    )
+    return docs.select("doc_id", "text").unionByName(dups)
+
+
+def test_lsh_candidates_are_one_bucket_exchange_without_join(spark):
+    """The LSH pairs come from per-bucket id lists: the executed plan has
+    no join, and the cap window and the bucket groupBy share ONE
+    exchange hashed on (band, bhash)."""
+    from nominatimwrapper_spark.operators.dedup import minhash_lsh_candidates
+
+    # spread over 4 partitions: a single-partition input needs no exchange
+    docs = _planted_near_dups(spark).repartition(4, "doc_id")
+    cand = minhash_lsh_candidates(docs, num_hashes=32, bands=8)
+    assert len(cand.toPandas()) > 0
+    plan = _final_plan(cand)
+    assert "Join" not in plan, plan
+    bucket = re.findall(r"Exchange hashpartitioning\(band#\d+, bhash#\d+L?,", plan)
+    assert len(bucket) == 1, plan
+
+
+def test_verify_attach_gate_boundary(spark):
+    """The verify-attach gate on each side of its threshold: at the
+    measured array-table bytes both attach joins broadcast, one byte
+    below neither does, and the verified edges are identical. The gate's
+    (n, w) observed on the checkpoint job equal an explicit aggregate."""
+    import pandas as pd
+
+    from nominatimwrapper_spark.operators.dedup import _shingle_table, minhash_verified_pairs
+
+    docs = _planted_near_dups(spark)
+    hs, n, w = _shingle_table(docs, "doc_id", "text", 3)
+    st = hs.agg(F.count(F.lit(1)).alias("n"), F.avg(F.size("_hsh")).alias("w")).first()
+    assert (n, w) == (st["n"], st["w"])
+    measured = int(n * (w * 8 + 32))
+
+    def verified(gate):
+        df = minhash_verified_pairs(docs, jaccard_threshold=0.5, broadcast_max_bytes=gate)
+        rows = df.toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
+        return rows, _final_plan(df)
+
+    at, at_plan = verified(measured)
+    below, below_plan = verified(measured - 1)
+    assert len(at) > 0
+    pd.testing.assert_frame_equal(at, below)
+    assert at_plan.count("BroadcastHashJoin") == 2, at_plan
+    assert "BroadcastHashJoin" not in below_plan, below_plan
+    assert below_plan.count("ShuffledHashJoin") == 2, below_plan
