@@ -1347,13 +1347,14 @@ def grid_disk(cells, k: int = 1) -> list[set[int]]:
     return out
 
 
-# --- kNN ring-expansion reach calibration (scripts/gen_h3_reach.py) -------
+# --- H3 reach calibration (scripts/gen_h3_reach.py) ----------------------
 # Per res: [R_max_km, D_min[1], ..., D_min[16]]. D_min[g] is the minimum
 # center-to-center distance at grid distance exactly g; R_max the maximum
 # point-to-cell-center offset (boundary circumradius and direct point
-# sampling, maxed). Replaces the round-3 sampled global-min-spacing
-# heuristic, whose r*s_min finish bound was unsound for hex grid distance
-# (zigzag centers: D_min[g] ~ (sqrt(3)/2)*g*s, below r*s for g=r).
+# sampling, maxed). Readers: point_in_polygon_join's automatic H3
+# resolution (operators/spatial.py) and polygon_cover_cells' edge-sample
+# step; both read D_min[1], the minimum cell width. (kNN needs no
+# distance bound: knn_h3 searches whole grid_disk neighborhoods.)
 #
 # PROVENANCE (round 5, gen_h3_reach.py --exact):
 #  - res 0-2: EXHAUSTIVE — every cell of the res swept as origin, all 16
@@ -1389,33 +1390,6 @@ _EMB_REACH: dict[int, list[float]] = {
 }
 
 _REACH_D_MARGIN = 0.98   # measured minima shrink: unswept distortion slack
-_REACH_R_MARGIN = 1.05   # measured maxima grow: same, opposite direction
-
-
-def ring_finish_reach_km(res: int, max_ring: int = 16):
-    """(suffix_d, r_max): ``suffix_d[r]`` is the margined minimum
-    CENTER-to-CENTER distance (km) from a query cell to any cell outside
-    grid_disk(query_cell, r), i.e. at grid distance >= r+1:
-
-        suffix_d[r] = min_{g >= r+1} D_min[g] * margin
-
-    A point in such a cell is at least ``suffix_d[r] - r_max - q_off``
-    km from a query point sitting ``q_off`` km off its own cell center
-    (the target can be at most ``r_max`` off ITS center). A query whose
-    k-th found neighbor is within that distance after searching disk r
-    is provably final. The caller composes the subtraction so the
-    per-query offset can be the point's actual measured offset."""
-    if res not in _EMB_REACH:
-        raise ValueError(
-            f"no reach calibration for res {res} — run scripts/gen_h3_reach.py"
-        )
-    row = _EMB_REACH[res]
-    r_max = row[0] * _REACH_R_MARGIN
-    d = np.array(row[1 : max_ring + 1], dtype=np.float64) * _REACH_D_MARGIN
-    # suffix min over g >= r+1 (wrap-around at coarse res can make ring
-    # minima non-monotonic near the antipode)
-    suffix = np.minimum.accumulate(d[::-1])[::-1]
-    return suffix, r_max
 
 
 def cell_to_boundary(cells) -> list[np.ndarray]:

@@ -12,10 +12,12 @@ Scale design notes
   expensive UDF therefore touches ~(points near any polygon edge cell)
   rows, not all points.
 - kNN: ``knn_bruteforce`` (cross-join; ORACLE-able in ANSI SQL, used as
-  the correctness reference) and ring expansion over grid cells
-  (``knn_cells``) or H3 cells (``knn_h3``), both through one loop
-  (``_knn_ring_loop``): r=0,1,2,... joins, stopping per-query as soon
-  as k neighbors are guaranteed correct (found-distance <= ring reach).
+  the correctness reference) and the in-reach pass over grid cells
+  (``knn_cells``) or H3 cells (``knn_h3``): each query row expands to
+  every cell within ``max_rings`` of its own, that frame joins the
+  targets once on the cell key, and one window keeps the top k. The
+  answer is the k nearest targets within ``max_rings``; the cost is
+  O(queries x targets within max_rings), whatever k is.
 - Rollups: straight groupBy(cell) + optional two-phase SALTED variant for
   skewed hot cells (one city = 25% of traffic in the synth world): partial
   agg on (cell, salt) then final merge — the classic skew-safe pattern.
@@ -33,6 +35,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, BooleanType, LongType
 
 from ..functions.geo import grid_cell_col, haversine_col
+from .geocode import _avg_row_bytes
 
 # ---------------------------------------------------------------------------
 # point-in-polygon (J9)
@@ -230,14 +233,8 @@ def knn_bruteforce(
     j = queries.crossJoin(t).withColumn(
         "dist_km",
         F.round(haversine_col(F.col("lat"), F.col("lon"), F.col("_tlat"), F.col("_tlon")), 9),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("_tid").asc())
-    return (
-        j.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-        .drop("_tlat", "_tlon")
-        .withColumnRenamed("_tid", "neighbor_id")
-    )
+    ).drop("_tlat", "_tlon")
+    return _top_k(j, k, query_id)
 
 
 def knn_cells(
@@ -251,121 +248,172 @@ def knn_cells(
     broadcast_max_bytes: int = 800 * 1024 * 1024,
     force_no_broadcast: bool = False,
 ) -> DataFrame:
-    """Scale-path kNN: grid-cell ring expansion (SURVEY.md J10/W4).
+    """Scale-path kNN over grid cells (SURVEY.md J10/W4).
 
-    INCREMENTAL shells: ring r joins only the cells at Chebyshev distance
-    exactly r (the 8r-cell shell, not the whole (2r+1)^2 block), and the
-    scored candidates accumulate across rings — every (query, target) pair
-    is scored exactly once. A query's result is final once its k-th
-    neighbor distance is <= the minimum distance any target OUTSIDE the
-    searched block could have (r cells of guaranteed reach); unfinished
-    queries continue to the next ring. Driver loop depth <= max_rings.
+    IN-REACH contract: the result is each query's k nearest targets among
+    those whose cell lies within ``max_rings`` cells (Chebyshev distance)
+    of the query's own cell, ranked by (dist_km, target id) exactly like
+    ``knn_bruteforce``. A query with fewer than k targets in reach gets
+    the ones it has; a target beyond ``max_rings`` is never returned.
+
+    One pass: every query row expands to its (2*max_rings+1)^2 block of
+    cells, the block joins the targets once on the cell key, and one
+    window keeps the top k. The cost is O(queries x targets within
+    max_rings), whatever k is — a dense target layer pays for every
+    in-reach target, not just the nearest few.
 
     The target projection broadcasts only under the byte gate
-    (``broadcast_max_bytes``); above it each ring's join degrades to a
-    shuffle hash join on the cell key instead of OOMing on a
-    planet-scale target corpus.
+    (``broadcast_max_bytes``); above it the join degrades to a shuffle
+    hash join on the cell key instead of OOMing on a planet-scale
+    target corpus.
     """
-    w_cells = 360 * cells_per_degree
-    # narrow projection cached: each ring is its own action (see knn_h3)
+    cell = grid_cell_col(F.col("lat"), F.col("lon"), cells_per_degree)
+    offs = F.sequence(F.lit(-max_rings), F.lit(max_rings))
+    block = (
+        queries.withColumn("_qcell", cell)
+        .withColumn("_dy", F.explode(offs))
+        .withColumn("_dx", F.explode(offs))
+        .withColumn("_cell", F.col("_qcell") + F.col("_dy") * (360 * cells_per_degree) + F.col("_dx"))
+        .drop("_qcell", "_dy", "_dx")
+    )
+    return _knn_in_reach(
+        block, targets, cell, k, query_id, target_id, broadcast_max_bytes, force_no_broadcast
+    )
+
+
+def knn_h3(
+    queries: DataFrame,
+    targets: DataFrame,
+    k: int = 5,
+    query_id: str = "query_id",
+    target_id: str = "place_id",
+    res: int = 7,
+    max_rings: int = 8,
+    max_query_cells: int = 50_000,
+    broadcast_max_bytes: int = 800 * 1024 * 1024,
+    force_no_broadcast: bool = False,
+    on_overflow: str = "coarsen",
+) -> DataFrame:
+    """kNN on the real Uber-H3 tiling (J10/W4), in the one pass it shares
+    with ``knn_cells``.
+
+    IN-REACH contract: the result is each query's k nearest targets among
+    those whose res-``res`` cell lies within ``max_rings`` grid steps
+    (``grid_disk``) of the query's cell, ranked by (dist_km, target id)
+    exactly like ``knn_bruteforce`` — no distance bound is involved, so
+    pentagons and face seams need no calibration. The cost is
+    O(queries x targets within max_rings), whatever k is.
+
+    Scale shape:
+    - ``grid_disk(query cell, max_rings)`` is built once on the driver
+      for the distinct query cells and broadcast as a (query cell, cell)
+      frame; the query side is the small side by contract;
+    - the target side has ``knn_cells``' byte gate (``broadcast_max_bytes``);
+    - ``max_query_cells`` bounds the driver-side disks. Above it,
+      ``on_overflow='coarsen'`` re-runs at the finest resolution below
+      the input whose distinct-cell count fits (the disks then reach
+      farther, the distance math is identical); ``'raise'`` raises
+      instead.
+    """
+    from ..functions.h3 import grid_disk, h3_cell_col
+
+    if max_rings < 1 or max_rings > 15:
+        raise ValueError("knn_h3: max_rings must be in 1..15")
+
+    cell = h3_cell_col(F.col("lat"), F.col("lon"), res)
+    q = queries.withColumn("_qcell", cell)
+    qcells = [r[0] for r in q.select("_qcell").distinct().limit(max_query_cells + 1).collect()]
+    if len(qcells) > max_query_cells:
+        if on_overflow != "coarsen":
+            raise ValueError(
+                f"knn_h3: > {max_query_cells} distinct query cells; use a "
+                "coarser res, knn_cells, or on_overflow='coarsen'"
+            )
+        for coarser in range(res - 1, -1, -1):
+            qc = queries.withColumn(
+                "_qcell", h3_cell_col(F.col("lat"), F.col("lon"), coarser)
+            )
+            n = qc.select("_qcell").distinct().limit(max_query_cells + 1).count()
+            if n <= max_query_cells:
+                return knn_h3(
+                    queries, targets, k, query_id, target_id, coarser,
+                    max_rings, max_query_cells, broadcast_max_bytes,
+                    force_no_broadcast, on_overflow="raise",
+                )
+        raise ValueError("knn_h3: query cells exceed the cap even at res 0")
+
+    disks = grid_disk(np.array(qcells, dtype=np.uint64), max_rings)
+    disk_map = queries.sparkSession.createDataFrame(
+        pd.DataFrame(
+            [(c, s) for c, disk in zip(qcells, disks) for s in disk],
+            columns=["_qcell", "_cell"], dtype="int64",
+        ),
+        "_qcell long, _cell long",
+    )
+    disk_rows = q.join(F.broadcast(disk_map), on="_qcell", how="inner").drop("_qcell")
+    return _knn_in_reach(
+        disk_rows, targets, cell, k, query_id, target_id, broadcast_max_bytes, force_no_broadcast
+    )
+
+
+def _knn_in_reach(
+    q: DataFrame, targets: DataFrame, tcell: Column, k: int, query_id: str, target_id: str,
+    broadcast_max_bytes: int, force_no_broadcast: bool,
+) -> DataFrame:
+    """The one pass of ``knn_cells`` and ``knn_h3``: ``q`` holds a row per
+    (query, in-reach cell ``_cell``); it joins the targets whose cell
+    (``tcell``) matches, every pair is scored, and each query keeps its
+    top k by (dist_km, target id)."""
+    # the NARROW target projection (id, lat, lon, cell) is cached: the
+    # byte gate's count and the join both read it, so the corpus scan and
+    # the cell tagging run once
     t = targets.select(
         F.col(target_id).alias("_tid"),
         F.col("lat").alias("_tlat"),
         F.col("lon").alias("_tlon"),
-        grid_cell_col(F.col("lat"), F.col("lon"), cells_per_degree).alias("_tcell"),
+        tcell.alias("_tcell"),
     ).cache()
-    no_bc = _targets_too_big_to_broadcast(t, broadcast_max_bytes, force_no_broadcast)
+    try:
+        # the cascade's byte gate (geocode.build_gazetteer_index): above
+        # the budget a planet-scale POI corpus degrades to a shuffle join
+        # on the cell key instead of OOMing the executors
+        no_bc = force_no_broadcast or t.count() * _avg_row_bytes(t) > broadcast_max_bytes
+        # materialized so the cached projection can be dropped on return —
+        # repeated kNN calls would otherwise accrete executor storage for
+        # the app lifetime
+        return _top_k(_knn_target_join(q, t, no_bc), k, query_id).localCheckpoint(eager=True)
+    finally:
+        t.unpersist(blocking=True)
 
-    q = queries.withColumn("_qcell", grid_cell_col(F.col("lat"), F.col("lon"), cells_per_degree))
-    # cell height in km (lat direction is uniform; lon shrinks with cos(lat),
-    # so the lat-based bound is the safe one at |lat| < 66 deg for ring math
-    # we use the smaller km-per-cell of the two axes at the query latitude)
-    cell_h_km = 111.19492664455873 / cells_per_degree
 
-    def shell_rows(r: int, remaining: DataFrame):
-        offs = [
-            (dy, dx)
-            for dy in range(-r, r + 1)
-            for dx in range(-r, r + 1)
-            if max(abs(dy), abs(dx)) == r  # shell only
-        ]
-        offs_arr = F.array(*[F.lit(dy * w_cells + dx) for dy, dx in offs])
-        return (
-            remaining.withColumn("_off", F.explode(offs_arr))
-            .withColumn("_cell", F.col("_off") + F.col("_qcell"))
-            .drop("_off")
-        ), False
-
-    def finish(r: int, kth: DataFrame):
-        # guaranteed reach of the searched block: r full cells beyond the
-        # query's own cell. Longitude cells are narrower in km by cos(lat),
-        # so the safe bound uses the lon-direction width (with margin).
-        reach_km = F.lit(r * cell_h_km) * F.col("_coslat") * F.lit(0.99)
-        return kth, (F.col("_n") >= k) & (F.col("_kth") <= reach_km)
-
-    return _knn_ring_loop(
-        q, t, no_bc, k, query_id, max_rings, shell_rows, finish,
-        [F.min(F.cos(F.radians(F.col("lat")))).alias("_coslat")], ["_qcell"],
+def _top_k(scored: DataFrame, k: int, query_id: str) -> DataFrame:
+    """Each query's k best (dist_km, _tid) rows, ranked from 1, with
+    ``_tid`` renamed to ``neighbor_id``."""
+    w = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("_tid").asc())
+    return (
+        scored.withColumn("knn_rank", F.row_number().over(w))
+        .filter(F.col("knn_rank") <= k)
+        .withColumnRenamed("_tid", "neighbor_id")
     )
 
 
-def _knn_ring_loop(
-    q: DataFrame, t: DataFrame, no_bc: bool, k: int, query_id: str, max_rings: int,
-    shell_rows, finish, kth_aggs: list[Column], helper_cols: list[str],
-) -> DataFrame:
-    """The incremental-shell loop of ``knn_cells`` and ``knn_h3``. Ring r
-    joins the unfinished queries' ring-r cells (``shell_rows(r, remaining)``
-    -> (rows with a ``_cell`` column, sphere-exhausted flag)) to the
-    targets and accumulates the scored candidates, so every (query,
-    target) pair is scored once. ``finish(r, kth)`` -> (kth, predicate)
-    marks a query final from its k-th distance ``_kth``, candidate count
-    ``_n`` and ``kth_aggs``; at the last ring, or on exhaustion, every
-    query is final with what it found. ``helper_cols`` are dropped from
-    the result."""
-    remaining = q
-    acc: DataFrame | None = None  # scored candidates of still-unfinished queries
-    done_parts: list[DataFrame] = []
-    try:
-        for r in range(max_rings + 1):
-            shell, exhausted = shell_rows(r, remaining)
-            shell = _knn_target_join(shell, t, no_bc)
-            acc = shell if acc is None else acc.unionByName(shell)
-            # materialize: the shell join + every prior ring would otherwise be
-            # re-evaluated by the window, the finish filter AND the next ring
-            acc = acc.localCheckpoint(eager=True)
+def _knn_target_join(shell_df: DataFrame, t: DataFrame, no_bc: bool) -> DataFrame:
+    """The kNN candidate join: broadcast under the byte gate, shuffle
+    hash join on the cell key above it (both sides hash-partition on
+    ``_cell``; the plan must contain no BroadcastExchange in that
+    regime — asserted by test_plan_shape)."""
+    if no_bc:
+        j = shell_df.hint("shuffle_hash").join(t, F.col("_cell") == t._tcell, "inner")
+    else:
+        j = shell_df.join(F.broadcast(t), F.col("_cell") == t._tcell, "inner")
+    return j.withColumn(
+        "dist_km",
+        F.round(
+            haversine_col(F.col("lat"), F.col("lon"), F.col("_tlat"), F.col("_tlon")),
+            9,
+        ),
+    ).drop("_cell", "_tcell", "_tlat", "_tlon")
 
-            wnd = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("_tid").asc())
-            topk = acc.withColumn("knn_rank", F.row_number().over(wnd)).filter(
-                F.col("knn_rank") <= k
-            )
-            kth = topk.groupBy(query_id).agg(
-                F.max("dist_km").alias("_kth"), F.count("*").alias("_n"), *kth_aggs
-            )
-            kth, final = finish(r, kth)
-            finished_keys = kth.filter(final).select(query_id)
-            if r == max_rings or exhausted:  # everything found is final
-                finished_keys = kth.select(query_id)
-            finished = topk.join(finished_keys, on=query_id, how="inner")
-            done_parts.append(
-                finished.drop(*helper_cols).withColumnRenamed("_tid", "neighbor_id")
-                .localCheckpoint(eager=True)
-            )
-            remaining = remaining.join(finished_keys, on=query_id, how="left_anti").localCheckpoint(
-                eager=True
-            )
-            if exhausted or remaining.isEmpty():
-                break
-            acc = acc.join(finished_keys, on=query_id, how="left_anti")
-    finally:
-        # done_parts are localCheckpoint()ed, so the cached target
-        # projection is no longer needed — drop it eagerly or repeated
-        # kNN calls accrete executor storage for the app lifetime.
-        t.unpersist(blocking=True)
-
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -406,259 +454,6 @@ def tile_rollup(
         (F.sum(f"_s_{c}") / F.sum("_n")).alias(f"avg_{c}") for c in avg_cols
     ]
     return partial.groupBy(cell_col).agg(*final_aggs)
-
-
-def _knn_target_join(shell_df: DataFrame, t: DataFrame, no_bc: bool) -> DataFrame:
-    """One ring's candidate join: broadcast under the byte gate, shuffle
-    hash join on the cell key above it (both sides hash-partition on
-    ``_cell``; the plan must contain no BroadcastExchange in that
-    regime — asserted by test_plan_shape)."""
-    if no_bc:
-        j = shell_df.hint("shuffle_hash").join(t, F.col("_cell") == t._tcell, "inner")
-    else:
-        j = shell_df.join(F.broadcast(t), F.col("_cell") == t._tcell, "inner")
-    return j.withColumn(
-        "dist_km",
-        F.round(
-            haversine_col(F.col("lat"), F.col("lon"), F.col("_tlat"), F.col("_tlon")),
-            9,
-        ),
-    ).drop("_cell", "_tcell", "_tlat", "_tlon")
-
-
-def _targets_too_big_to_broadcast(
-    t: DataFrame, broadcast_max_bytes: int, force_no_broadcast: bool
-) -> bool:
-    """The cascade's byte gate (geocode.py build_gazetteer_index), reused
-    for kNN target tables: estimate serialized bytes from a sampled row
-    width x count and refuse to broadcast above the budget — a
-    planet-scale POI corpus must degrade to a shuffle join on the cell
-    key, not OOM the executors."""
-    if force_no_broadcast:
-        return True
-    from .geocode import _avg_row_bytes
-
-    n = t.count()
-    return n * _avg_row_bytes(t) > broadcast_max_bytes
-
-
-def knn_h3(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int = 5,
-    query_id: str = "query_id",
-    target_id: str = "place_id",
-    res: int = 7,
-    max_rings: int = 8,
-    max_query_cells: int = 50_000,
-    broadcast_max_bytes: int = 800 * 1024 * 1024,
-    force_no_broadcast: bool = False,
-    on_overflow: str = "coarsen",
-) -> DataFrame:
-    """kNN via H3 ring expansion (J10/W4 on the real Uber-H3 tiling).
-
-    Runs the incremental-shell loop ``_knn_ring_loop`` shared with
-    ``knn_cells``: ring r joins only the cells at exactly grid distance r,
-    candidates accumulate, and a query finishes once its k-th neighbor is
-    provably closer than any point in an unsearched cell. The finish
-    bound is per query cell with a ONE-RING LOOKAHEAD: ring r+1's exact
-    minimum center distance (its shells are driver-computed anyway), plus
-    the calibrated reach table (functions/h3.py ring_finish_reach_km —
-    per-ring minima over the pentagon/seam distortion extremes) for rings
-    >= r+2, minus the target's max center offset and the query point's
-    ACTUAL center offset. Replaces the round-3 ``r * min_spacing`` bound that was
-    unsound for hex grid distance (zigzag centers).
-
-    Scale shape:
-    - ring shells are built LAZILY per ring from the still-active query
-      cells only (one batched BFS step each ring, memoized), never the
-      full disk table up front;
-    - the target projection broadcasts only under the byte gate
-      (``broadcast_max_bytes``, same estimator as the geocode cascade);
-      above it the per-ring join degrades to a shuffle hash join on the
-      cell key — both sides hash-partition on ``_cell``, nothing OOMs;
-    - ``max_query_cells`` bounds the driver-side BFS. Above it,
-      ``on_overflow='coarsen'`` re-runs at the finest resolution below
-      the input whose distinct-cell count fits (correct at any res —
-      only ring membership changes, the distance math is identical);
-      ``'raise'`` keeps the round-3 hard error.
-    """
-    from ..functions.h3 import grid_rings, h3_cell_col, ring_finish_reach_km
-    from ..functions.h3 import cell_to_latlng, grid_neighbors
-
-    if max_rings < 1 or max_rings > 15:
-        raise ValueError("knn_h3: max_rings must be in 1..15")
-
-    q = queries.withColumn("_qcell", h3_cell_col(F.col("lat"), F.col("lon"), res))
-    qcells = [
-        r[0]
-        for r in q.select("_qcell").distinct().limit(max_query_cells + 1).collect()
-    ]
-    if len(qcells) > max_query_cells:
-        if on_overflow != "coarsen":
-            raise ValueError(
-                f"knn_h3: > {max_query_cells} distinct query cells; use a "
-                "coarser res, knn_cells, or on_overflow='coarsen'"
-            )
-        for coarser in range(res - 1, -1, -1):
-            qc = queries.withColumn(
-                "_qcell", h3_cell_col(F.col("lat"), F.col("lon"), coarser)
-            )
-            n = qc.select("_qcell").distinct().limit(max_query_cells + 1).count()
-            if n <= max_query_cells:
-                return knn_h3(
-                    queries, targets, k, query_id, target_id, coarser,
-                    max_rings, max_query_cells, broadcast_max_bytes,
-                    force_no_broadcast, on_overflow="raise",
-                )
-        raise ValueError("knn_h3: query cells exceed the cap even at res 0")
-
-    # cache the NARROW target projection (id, lat, lon, cell — ~32 B/row,
-    # spillable): every ring is a separate action, so an uncached t would
-    # re-scan the corpus and re-run the cell-tagging UDF per ring
-    t = targets.select(
-        F.col(target_id).alias("_tid"),
-        F.col("lat").alias("_tlat"),
-        F.col("lon").alias("_tlon"),
-        h3_cell_col(F.col("lat"), F.col("lon"), res).alias("_tcell"),
-    ).cache()
-    spark = queries.sparkSession
-    no_bc = _targets_too_big_to_broadcast(
-        t, broadcast_max_bytes, force_no_broadcast
-    )
-
-    suffix_d, r_max = ring_finish_reach_km(res, max_ring=max_rings + 1)
-
-    # query-cell centers: the finish bound uses each query point's ACTUAL
-    # offset from its cell center (driver-computed once; the query side is
-    # the small side by contract)
-    qarr = np.array(qcells, dtype=np.uint64) if qcells else np.array([], dtype=np.uint64)
-    if len(qarr):
-        qla, qlo = cell_to_latlng(qarr)
-        qcenters = spark.createDataFrame(
-            pd.DataFrame(
-                {"_qcell": qarr.astype(np.int64), "_qclat": qla, "_qclng": qlo}
-            )
-        )
-    else:
-        qcenters = spark.createDataFrame([], "_qcell long, _qclat double, _qclng double")
-    q = q.join(F.broadcast(qcenters), on="_qcell", how="left").withColumn(
-        "_qoff", haversine_col(F.col("lat"), F.col("lon"), F.col("_qclat"), F.col("_qclng"))
-    ).drop("_qclat", "_qclng")
-
-    # per-query-cell BFS state for lazy shells; centers memoized across
-    # rings (ring cells recur across nearby query cells)
-    seen: dict[int, set[int]] = {int(c): {int(c)} for c in qcells}
-    qcenter: dict[int, tuple[float, float]] = (
-        {int(c): (float(a), float(b)) for c, a, b in zip(qarr, qla, qlo)}
-        if len(qarr)
-        else {}
-    )
-    center_cache: dict[int, tuple[float, float]] = dict(qcenter)
-
-    def _centers_of(cells_set: set[int]) -> None:
-        todo = sorted(cells_set - center_cache.keys())
-        if todo:
-            ta = np.array(todo, dtype=np.uint64)
-            tla, tlo = cell_to_latlng(ta)
-            center_cache.update(
-                (int(c), (float(a), float(b))) for c, a, b in zip(todo, tla, tlo)
-            )
-
-    def _bfs_step(cur: dict[int, set[int]]) -> dict[int, set[int]]:
-        flat = sorted({s for c, sh in cur.items() if sh for s in sh})
-        if not flat:
-            return {c: set() for c in cur}
-        neigh = grid_neighbors(np.array(flat, dtype=np.uint64))
-        out = {}
-        for c, sh in cur.items():
-            nxt = set()
-            for s in sh:
-                nxt |= neigh[s]
-            nxt -= seen[c]
-            seen[c] |= nxt
-            out[c] = nxt
-        return out
-
-    def _hav_np(a, b):
-        (la1, lo1), (la2, lo2) = a, b
-        r1, r2 = np.radians(la1), np.radians(la2)
-        dla = np.radians(la2 - la1)
-        dlo = np.radians(lo2 - lo1)
-        h_ = np.sin(dla / 2) ** 2 + np.cos(r1) * np.cos(r2) * np.sin(dlo / 2) ** 2
-        return 2 * 6371.0088 * float(np.arcsin(np.sqrt(min(max(h_, 0.0), 1.0))))
-
-    shells: dict[int, set[int]] = {int(c): {int(c)} for c in qcells}
-    bounds: DataFrame | None = None  # ring r's per-query-cell lookahead bound
-    empty_shell = spark.createDataFrame([], "_qcell long, _cell long")
-    empty_bounds = spark.createDataFrame([], "_qcell long, _local double, _exh boolean")
-
-    def shell_rows(r: int, remaining: DataFrame):
-        nonlocal shells, bounds
-        if r:
-            # prune the BFS to cells some unfinished query still needs — one
-            # small collect on the (checkpointed, capped) query side saves
-            # the driver-side neighbor expansion for finished regions
-            live = {row[0] for row in remaining.select("_qcell").distinct().collect()}
-            shells = {c: s for c, s in shells.items() if c in live}
-        active = [c for c in shells if shells[c]]
-        rows = [(int(c), int(s)) for c in active for s in shells[c]]
-        exhausted = not rows and r > 0  # every active query searched the sphere
-        ring_map = (
-            spark.createDataFrame(pd.DataFrame(rows, columns=["_qcell", "_cell"]))
-            if rows
-            else empty_shell
-        )
-        # ONE-RING LOOKAHEAD for the finish bound: ring r+1's shells are
-        # computed now, so the bound can use each query cell's EXACT
-        # minimum center distance to its next ring (local grid spacing —
-        # typically ~1.7x the pentagon-depressed global minimum), with
-        # the global suffix table covering rings >= r+2 only.
-        shells = _bfs_step(shells)
-        local_rows = []
-        if r < max_rings:
-            want = set()
-            for c in active:
-                want |= shells.get(c, set())
-            _centers_of(want)
-            for c in active:
-                nxt = shells.get(c, set())
-                if nxt:
-                    lm = min(_hav_np(qcenter[c], center_cache[s]) for s in nxt)
-                    local_rows.append((int(c), lm * 0.999, False))  # float margin
-                else:
-                    # BFS exhausted for this cell: disk r covers every
-                    # reachable cell, so NOTHING is unsearched — the
-                    # query is final with whatever it found
-                    local_rows.append((int(c), 0.0, True))
-        bounds = (
-            spark.createDataFrame(
-                pd.DataFrame(local_rows, columns=["_qcell", "_local", "_exh"])
-            )
-            if local_rows
-            else empty_bounds
-        )
-        return remaining.join(F.broadcast(ring_map), on="_qcell", how="inner"), exhausted
-
-    def finish(r: int, kth: DataFrame):
-        # any unsearched target sits either in ring r+1 (exact local
-        # minimum center distance, computed above) or at grid distance
-        # >= r+2 (global suffix table); both net the target's max center
-        # offset and the query point's ACTUAL center offset
-        glob_next = float(suffix_d[r + 1]) if r + 1 < len(suffix_d) else float(suffix_d[-1])
-        kth = kth.join(F.broadcast(bounds), kth._qc == bounds._qcell, "left")
-        bound_center = F.least(
-            F.coalesce(F.col("_local"), F.lit(float("inf"))), F.lit(glob_next)
-        )
-        finish_km = bound_center - F.lit(float(r_max)) - F.col("_qo")
-        return kth, F.coalesce(F.col("_exh"), F.lit(False)) | (
-            (F.col("_n") >= k) & (F.col("_kth") <= finish_km)
-        )
-
-    return _knn_ring_loop(
-        q, t, no_bc, k, query_id, max_rings, shell_rows, finish,
-        [F.max("_qoff").alias("_qo"), F.max("_qcell").alias("_qc")], ["_qcell", "_qoff"],
-    )
 
 
 def multi_zoom_rollup(

@@ -558,8 +558,9 @@ def q_h3_parent_rollup(spark, sf_dir):
 
 def q_knn_cells_grid(spark, sf_dir):
     """J10 scale path with a brute-force SQL oracle: 3 nearest supplier
-    points per sampled customer point via incremental cell-ring expansion
-    — must equal the cross-join + window plan (SQL_KNN_CELLS)."""
+    points per sampled customer point, joined once over each customer's
+    block of cells within max_rings — must equal the cross-join + window
+    plan (SQL_KNN_CELLS)."""
     from ..operators.spatial import knn_cells
 
     q = (
@@ -578,9 +579,10 @@ def q_knn_cells_grid(spark, sf_dir):
 
 
 def q_knn_h3(spark, sf_dir):
-    """J10 on the real Uber-H3 tiling: grid_disk ring expansion with the
-    same brute-force SQL oracle as knn_cells_grid — the H3 scale path
-    must be value-identical to the exact cross-join answer."""
+    """J10 on the real Uber-H3 tiling: one join over each customer's
+    grid_disk, with the same brute-force SQL oracle as knn_cells_grid —
+    the H3 scale path must be value-identical to the exact cross-join
+    answer."""
     from ..operators.spatial import knn_h3
 
     q = (
@@ -589,9 +591,10 @@ def q_knn_h3(spark, sf_dir):
         .withColumnRenamed("c_custkey", "query_id")
     )
     t = _supp_points(spark, sf_dir)
-    # res 5 / 14 rings: ~200 km guaranteed reach — covers the farthest
-    # 3rd-neighbor in the derived world (~87 km) with margin; a query that
-    # exhausts max_rings returns its bounded-radius results like knn_cells
+    # res 5 / 14 rings: every target within ~136 km of a query is in its
+    # disk (D_min[15] - 2 x R_max in the res-5 reach table) — the farthest
+    # 3rd neighbor in the derived world is ~87 km; a target outside the
+    # disk is never returned, as in knn_cells
     out = knn_h3(q, t, k=3, target_id="s_suppkey", res=5, max_rings=14)
     return out.select(
         F.col("query_id").alias("c_custkey"),

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions import geo, s2
-from ..functions.h3 import h3_cell_col
 from ..functions.text import detect_lang_udf, extract_text_udf
 from ..operators.dedup import (
     minhash_lsh_candidates,

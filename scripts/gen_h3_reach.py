@@ -1,5 +1,5 @@
 # -*- coding: utf-8 -*-
-"""Calibrate the kNN ring-expansion reach table for the H3 grid.
+"""Calibrate the H3 reach table (``_EMB_REACH`` in functions/h3.py).
 
 For each resolution 0..15 this measures, over the grid's distortion
 extremes (every pentagon neighborhood and every icosahedron face-edge
@@ -7,20 +7,19 @@ seam) plus random controls:
 
 - D_min[g], g = 1..MAX_RING: the minimum center-to-center great-circle
   distance (km) between a swept origin and any cell at grid distance
-  exactly g. The advisor's counterexample to the round-3 bound is the
-  hex zigzag: centers at graph distance g can be only ~(sqrt(3)/2)*g*s
-  apart, and pentagon distortion shrinks local spacing further — so the
-  finish bound must come from measured per-ring minima, not r * spacing.
+  exactly g. Hex centers at graph distance g can be only
+  ~(sqrt(3)/2)*g*s apart (the zigzag), and pentagon distortion shrinks
+  local spacing further, so these are measured, not derived from a
+  nominal spacing s.
 - R_max: the maximum distance from any point to the center of its
   containing cell, measured two ways and maxed: (a) boundary circum-
   radius via cell_to_boundary over the swept cells, (b) direct sampled
   point-to-center offsets (uniform + pentagon-dense points).
 
-A query that has searched grid_disk(r) can finish when its k-th
-neighbor distance <= suffix_min(D_min)[r+1] - 2*R_max: any unsearched
-target sits in a cell at graph distance >= r+1, whose center is
->= D_min km from the query cell's center, and both the query point and
-the target can each be at most R_max off their cell centers.
+Readers of the table: point_in_polygon_join's automatic H3 resolution
+(operators/spatial.py) and polygon_cover_cells' edge-sample step
+(functions/h3.py), both through D_min[1], the minimum cell width. kNN
+reads none of it: knn_h3 searches whole grid_disk neighborhoods.
 
 Output: a Python literal for the _EMB_REACH table in functions/h3.py
 (per res: [R_max, D_min[1], ..., D_min[MAX_RING]] in km; margins are

@@ -128,6 +128,50 @@ def test_streaming_geocode_matches_batch_and_resumes(spark, tmp_path):
     )
 
 
+def test_streaming_foreach_batch_regime_matches_kernel(spark, tmp_path):
+    """Above the broadcast gate the stream runs the cascade once per
+    micro-batch through foreachBatch. One file of 60 pages: the rows
+    equal geocode_micro_batch on the broadcast index (the kernel route),
+    and each carries the epoch that wrote it."""
+    import glob
+    import shutil
+
+    from nominatimwrapper_spark.plans.flagship import (
+        gazetteer_index,
+        pages_from_documents,
+    )
+    from nominatimwrapper_spark.streaming.geocode_stream import (
+        geocode_micro_batch,
+        geocode_pages_stream,
+    )
+
+    pages = (
+        pages_from_documents(spark, os.path.join(os.path.dirname(SF), "sf0.001"))
+        .orderBy("url").limit(60).localCheckpoint(eager=True)
+    )
+    index = gazetteer_index(spark, force_no_broadcast=True)
+    assert not index.broadcast_ok
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    stage = str(tmp_path / "_stage")
+    pages.coalesce(1).write.parquet(stage)
+    shutil.move(glob.glob(f"{stage}/part-*.parquet")[0], str(in_dir / "000.parquet"))
+
+    out_dir = str(tmp_path / "out")
+    q = geocode_pages_stream(spark, str(in_dir), index, out_dir, str(tmp_path / "ck"))
+    q.awaitTermination()
+    got = spark.read.parquet(out_dir).toPandas()
+    exp = geocode_micro_batch(pages, gazetteer_index(spark)).toPandas()
+    key = ["addr_key", "method", "place_id", "cell13"]
+    assert len(exp) > 0
+    pd.testing.assert_frame_equal(
+        got[key].sort_values("addr_key").reset_index(drop=True),
+        exp[key].sort_values("addr_key").reset_index(drop=True),
+    )
+    assert got["epoch"].tolist() == [0] * len(got)
+
+
 def test_geocode_job_cli_direct_file_launch(spark, tmp_path):
     """The launcher must work when the FILE is executed directly with no
     package context — exactly how `spark-submit path/to/geocode_job.py`

@@ -169,6 +169,80 @@ def test_knn_h3_matches_bruteforce(spark, world):
     pd.testing.assert_frame_equal(bf, h3r)
 
 
+def _street_queries(spark, world, n=40):
+    """The first ``n`` street rows of the world as kNN queries, and its
+    house rows as targets."""
+    gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
+    targets = gaz.filter(F.col("place_rank") == 30).select("place_id", "lat", "lon")
+    qpdf = world["gazetteer"][world["gazetteer"].place_rank == 26].head(n)[
+        ["place_id", "lat", "lon"]
+    ].rename(columns={"place_id": "query_id"})
+    return spark.createDataFrame(qpdf), targets
+
+
+@pytest.mark.parametrize("tiling", ["cells", "h3"])
+def test_knn_target_gate_boundary(spark, world, monkeypatch, tiling):
+    """``broadcast_max_bytes`` at the measured size of the target
+    projection (count x sampled row width) broadcasts it; one byte below
+    joins by shuffle. Both sides give the same neighbors."""
+    from nominatimwrapper_spark.functions.h3 import h3_cell_col
+    from nominatimwrapper_spark.operators import spatial
+    from nominatimwrapper_spark.operators.geocode import _avg_row_bytes
+
+    queries, targets = _street_queries(spark, world)
+    if tiling == "h3":
+        fn, cell = spatial.knn_h3, h3_cell_col(F.col("lat"), F.col("lon"), 7)
+    else:
+        fn, cell = spatial.knn_cells, grid_cell_col(F.col("lat"), F.col("lon"))
+    proj = targets.select(
+        F.col("place_id").alias("_tid"), F.col("lat").alias("_tlat"),
+        F.col("lon").alias("_tlon"), cell.alias("_tcell"),
+    )
+    measured = proj.count() * _avg_row_bytes(proj)
+    joins = []
+    real = spatial._knn_target_join
+
+    def spy(q, t, no_bc):
+        joins.append(no_bc)
+        return real(q, t, no_bc)
+
+    monkeypatch.setattr(spatial, "_knn_target_join", spy)
+    got = []
+    for gate, no_bc in ((measured, False), (measured - 1, True)):
+        joins.clear()
+        got.append(
+            fn(queries, targets, k=3, broadcast_max_bytes=gate)
+            .select("query_id", "neighbor_id", "knn_rank", "dist_km").toPandas()
+            .sort_values(["query_id", "knn_rank"]).reset_index(drop=True)
+        )
+        assert joins == [no_bc], gate
+    assert len(got[0]) == 3 * 40
+    pd.testing.assert_frame_equal(*got)
+
+
+def test_knn_job_count(spark, world):
+    """One kNN call on 40 street queries, its caller's ``toPandas``
+    included, runs at most 2 Spark jobs more than measured: 9 for
+    ``knn_cells`` and 12 for ``knn_h3`` at the time of writing. A
+    per-ring driver loop would pay several jobs for every ring
+    searched."""
+    from nominatimwrapper_spark.operators.spatial import knn_h3
+
+    queries, targets = _street_queries(spark, world)
+    sc = spark.sparkContext
+    jobs = {}
+    for name, fn in (("knn_cells", knn_cells), ("knn_h3", knn_h3)):
+        group = f"{name}-jobs"
+        sc.setJobGroup(group, f"count {name} jobs")
+        try:
+            got = fn(queries, targets, k=3).select("query_id").toPandas()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(got) == 3 * 40, name
+    assert jobs["knn_cells"] <= 9 + 2 and jobs["knn_h3"] <= 12 + 2, jobs
+
+
 def test_tile_rollup_plain_vs_salted(spark, world):
     gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
     pts = gaz.withColumn("cell", grid_cell_col(F.col("lat"), F.col("lon")))
