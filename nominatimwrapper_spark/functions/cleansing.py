@@ -1,15 +1,16 @@
 # -*- coding: utf-8 -*-
-"""Address cleansing as Column expressions (JVM-side, codegen-friendly).
+"""Address cleansing: comma cleanup and composition as Column expressions
+(JVM-side, codegen-friendly), the regex rulesets the ladder applies, and
+the output-field collapse of the gazetteer's address map.
 
 Reference parity:
 
 - ``clean_addr_col`` / ``clean_addr_in``   utils.py:107-131 (comma fixpoint)
 - ``compose_address_col``                  utils.py:639-646 / 270-276
-- ``REGEX_REPLACEMENTS`` + transformer     config.py:71-96, transformers.py:328-364
-  (pandas ``\\g<n>`` backrefs rewritten to Java ``$n``)
-
-Everything here is pure `pyspark.sql.functions` — no Python crossing in
-the hot path.
+- ``REGEX_REPLACEMENTS``                   config.py:71-96, applied by the
+  ladder's regex transformer (geocode_kernel._apply_regex,
+  transformers.py:328-364)
+- ``collapse_*``                           utils.py:133-168, 559-579
 """
 
 from __future__ import annotations
@@ -19,25 +20,24 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# field name -> ordered (java_pattern, java_replacement) lists.
-# Transcribed from the reference's pandas rules (config.py:71-96); the only
-# rewrite is \g<n> -> $n. Case-sensitive, replace-all — same as pandas
-# str.replace(regex=True).
+# ruleset -> ordered (field, pattern, replacement) rules, the reference's
+# pandas rules (config.py:71-96) as written there, \g<n> backrefs included.
+# Case-sensitive, replace-all — same as pandas str.replace(regex=True).
 REGEX_REPLACEMENTS: dict[str, list[tuple[str, str, str]]] = {
     "init": [
-        ("street", r"^(.+)\(((AV[E .]|CH[A .]|RUE|BOU|B[LVD]+|PL[A .]|SQ|ALL|GAL)[^\)]*)\)$", "$2 $1"),
+        ("street", r"^(.+)\(((AV[E .]|CH[A .]|RUE|BOU|B[LVD]+|PL[A .]|SQ|ALL|GAL)[^\)]*)\)$", r"\g<2> \g<1>"),
         ("street", r"[, ]*(SN|ZN)$", ""),
         ("street", r"' ", "'"),
         ("street", r"\(.+\)$", ""),
     ],
     "lpost": [
-        ("housenbr", r"^([0-9]*)(.*)$", "$1"),
+        ("housenbr", r"^([0-9]*)(.*)$", r"\g<1>"),
         ("street", r"^r[\. ]", "rue "),
         ("street", r"^av[\. ]", "avenue "),
         ("street", r"^ch([ée]e)?[\. ]", "chaussée "),
         ("street", r"^b[lvd]{0,3}[\. ]", "boulevard "),
-        ("street", r"(avenue|rue|chauss[ée]e|boulevard) d ", "$1 d'"),
-        ("street", r"(avenue|rue|chauss[ée]e|boulevard) de l ", "$1 de l'"),
+        ("street", r"(avenue|rue|chauss[ée]e|boulevard) d ", r"\g<1> d'"),
+        ("street", r"(avenue|rue|chauss[ée]e|boulevard) de l ", r"\g<1> de l'"),
         ("street", r" de l ", " de l'"),
     ],
 }
@@ -93,22 +93,6 @@ def compose_address_col(
         nz(country),
     )
     return clean_addr_col(raw)
-
-
-def apply_regex_ruleset(
-    street: Column, housenbr: Column, ruleset: str
-) -> tuple[Column, Column]:
-    """Apply one ordered ruleset to (street, housenbr); returns the two
-    transformed Columns. Mirrors transformers.py:328-364 (regex_transformer)
-    with null -> "" fill before matching."""
-    s = F.coalesce(street, F.lit(""))
-    h = F.coalesce(housenbr, F.lit(""))
-    for field, pat, repl in REGEX_REPLACEMENTS[ruleset]:
-        if field == "street":
-            s = F.regexp_replace(s, pat, repl)
-        else:
-            h = F.regexp_replace(h, pat, repl)
-    return s, h
 
 
 # Nominatim's dynamic address.* keys -> output fields, in fillna priority

@@ -5,42 +5,39 @@ per-address REST pipeline.
 Reference lifecycle being reproduced (values, not architecture):
 
     process_addresses            utils.py:1195-1279   -> cascade()
-    transform_and_process        utils.py:589-688     -> _one_stage()
-    apply_transformers           utils.py:692-776     -> apply_transformers()
-    process_osm (REST + parse)   utils.py:300-441     -> _process() -> _lookup_and_check()
-                                                     -> geocode_kernel._process_pdf()
+                                                     -> geocode_kernel.cascade_kernel()
+    transform_and_process        utils.py:589-688     -> geocode_kernel.cascade_kernel()
+    apply_transformers           utils.py:692-776     -> geocode_kernel._transform_stage()
+    process_osm (REST + parse)   utils.py:300-441     -> geocode_kernel._process_pdf()
     osm_keep_relevant_results    check_result_utils.py:648-699 -> geocode_kernel._check_pdf()
     match_parent                 check_result_utils.py:560-644 -> geocode_kernel._parent_rescue_pdf()
     retry_with_low_place_rank    utils.py:225-299     -> geocode_kernel._retry_low_rank_pdf()
     libpostal_transformer        transformers.py:261-320 -> geocode_kernel._apply_libpostal()
-    photon_transformer           transformers.py:182-247 -> geocode_kernel._photon_best_pdf()
+    photon_transformer           transformers.py:182-247 -> geocode_kernel._apply_photon()
 
-Candidate lookup, every check decision (scoring, elimination, best per
-query with its tail, parent rescue, the libpostal sanity check, the photon
-re-rank) and the low-rank retry have one pandas implementation in
-geocode_kernel.py, which both engines call; this module owns only the
-Spark data movement around it.
+The ladder itself (transformers, lookup, check, retry) has one pandas
+implementation, geocode_kernel.cascade_kernel. This module builds the
+gazetteer index and owns the Spark data movement around the ladder.
 
-Scale design: lookup, check and retry run at the unique-query level, after
-a dropDuplicates on the composed address (the reference's only
-optimization, utils.py:353-356 — here it is a partial-agg dedup), as one
-grouped pandas stage that co-partitions the unique queries with the
-gazetteer rows they can reach, on their locality (street key, postcode,
-city key); the page/address corpus never shuffles for the lookup itself.
-The per-stage loop shrinks the working set with a left-anti join exactly
-like the reference's `chunk[~isin(done)]` (utils.py:1263). Skewed hot
-addresses are handled by the unique-level dedup and by AQE skew-join on
-the fan-back join.
+Scale design: ``cascade`` deduplicates the input to its unique address
+tuples (the reference's only optimization, utils.py:353-356, taken
+before the whole ladder) and runs the ladder as ONE cogrouped pandas
+stage: the tuples are hashed into groups by locality (postcode, city
+key), and each group meets every gazetteer row its tuples can reach at
+any stage. The ladder is independent per address, so a group needs
+nothing outside it. The page/address corpus shuffles only for the
+duplicate-key guard, the dedup and, above the fan-back gate, the
+fan-back join; a skewed hot address is one tuple.
 """
 
 from __future__ import annotations
 
+import json
 import re
-import time
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
@@ -54,33 +51,30 @@ from pyspark.sql.types import (
 )
 
 from ..functions.cleansing import (
-    apply_regex_ruleset,
     collapse_map_col,
     collapse_set_col,
-    compose_address_col,
+    compose_address_col,  # noqa: F401  (re-exported: perfbench and scripts compose with it)
 )
-from ..functions.geo import haversine_col
 from ..functions.textnorm import city_key, street_fingerprint_key
 
 # reference config.py:102-112
-# lookup parallelism: one group of the lookup stage per this many distinct
-# addresses (see _lookup_groups). A group of ~1k queries and 5-8k gazetteer
-# rows is a 0.2-0.3 s pandas call (scripts/lookup_groups.py, 690-street
-# synthetic world, one 4-core host) — fine-grained enough to spread real
-# corpora over every core, coarse enough that micro-batch-sized inputs run
-# as one call.
+# ladder parallelism: one locality group of the ladder stage per this many
+# unique address tuples (see _locality_groups) — fine-grained enough to
+# spread real corpora over every core, coarse enough that micro-batch-sized
+# inputs run as one call.
 _UQ_ROWS_PER_TASK = 1024
 
-# fan-back join strategy gate (guide §3.1): keep_u holds at most one row per
-# distinct composed address, so when the MEASURED unique count (already an
-# action byproduct in _process) is below this, broadcasting it removes the
-# full-input exchange+sort the planner otherwise schedules (keep_u is a
-# checkpoint scan with no size stats, so auto-broadcast never fires at plan
-# time and AQE's conversion lands only after the big side's shuffle is
-# already written — measured 79 MB written + re-read per 2M-page stage).
-# ~200k wide rows ≈ 150 MB broadcast; above that the shuffle join is right.
-# The same gate broadcasts the queried localities the lookup joins the
-# gazetteer to. Both sides of it are tested in
+# fan-back join strategy gate (guide §3.1): the ladder's rows hold at most
+# one keep row per unique address tuple, so when the MEASURED tuple count
+# (observed while the tuples are checkpointed) is below this, broadcasting
+# them removes the full-input exchange+sort the planner otherwise
+# schedules (they are a checkpoint scan with no size stats, so
+# auto-broadcast never fires at plan time and AQE's conversion lands only
+# after the big side's shuffle is already written — measured 79 MB
+# written + re-read per 2M-page stage). ~200k wide rows ≈ 150 MB
+# broadcast; above that the shuffle join is right. The same gate
+# broadcasts the queried localities the ladder stage joins the gazetteer
+# to. Both sides of it are tested in
 # test_fanback_gate_boundary_keeps_golden_rows, the plan shapes in
 # test_lookup_is_one_cogrouped_stage.
 _FAN_BROADCAST_MAX_UNIQUES = 200_000
@@ -155,10 +149,10 @@ def build_gazetteer_index(
     Broadcast is gated on ESTIMATED BYTES (sampled avg row width x row
     count), not row count — 20M wide rows is several GB and OOMs executors
     if broadcast. Under ``broadcast_max_bytes`` the one-stage kernel runs
-    with the index as a broadcast payload, and the parent alt-name and
-    photon joins broadcast their gazetteer side; above it those joins
-    shuffle. The lookup itself (_lookup_groups) shuffles the lookup rows
-    its queries can reach to their locality groups in both regimes.
+    with the index as a broadcast payload, and cascade's parent alt-name
+    join broadcasts its gazetteer side; above it that join shuffles.
+    cascade's ladder stage (_locality_groups) shuffles the lookup rows
+    its tuples can reach to their locality groups in both regimes.
     """
     alt_t = dict(gaz.dtypes).get("alt_names", "")
     alt_map = F.col("alt_names") if alt_t.startswith("map") else F.map_from_entries("alt_names")
@@ -294,273 +288,6 @@ def _avg_row_bytes(df: DataFrame, sample_rows: int = 2000) -> int:
 
 
 # ---------------------------------------------------------------------------
-# unique queries and their lookup, check and retry (the Nominatim analog)
-# ---------------------------------------------------------------------------
-
-
-def _unique_queries(addr: DataFrame) -> DataFrame:
-    """Dedup on the composed address before the (expensive) lookup —
-    reference utils.py:353-356. The same shuffle also counts how many input
-    keys each distinct address carries (``_n_keys``): downstream control
-    flow (matched-row counts, the everyone-matched short-circuit) then
-    never needs an extra pass over the fanned input.
-
-    Representative fields: when two different field splits compose to the
-    same transformed_address (housenbr folded into street vs separate),
-    ONE representative's fields drive the low-rank retry for all keys of
-    that address. The reference's pre-lookup dropDuplicates is equally
-    arbitrary (utils.py:353-356); we use min() so the pick is at least
-    deterministic across runs/partitionings (documented parity edge)."""
-    return (
-        addr.select("transformed_address", "street", "housenbr", "postcode", "city", "country")
-        .groupBy("transformed_address")
-        .agg(
-            *[F.min(c).alias(c) for c in ("street", "housenbr", "postcode", "city", "country")],
-            F.count(F.lit(1)).alias("_n_keys"),
-        )
-        .withColumn("q_street_key", street_key_udf(F.col("street")))
-        .withColumn("q_city_key", city_key_udf(F.col("city")))
-        .withColumn("q_pc", F.coalesce(F.col("postcode"), F.lit("")))
-        .withColumn("q_house", F.coalesce(F.col("housenbr"), F.lit("")))
-    )
-
-
-# the grouped stage's output: the composed address, the candidate's
-# gazetteer payload, its position in Nominatim's order, the check's columns
-# (reject_reason null on the keep rows) and the retry's splice columns
-_PAYLOAD_COLS = [
-    "place_id", "parent_place_id", "place_rank", "lat", "lon", "out_street_name",
-    "out_post_name", "out_house_number", "out_post_code", "out_country_name",
-    "out_other", "namedetails",
-]
-_STAGE_FIELDS = [
-    StructField("osm_order", IntegerType()),
-    StructField("sim_street", DoubleType()),
-    StructField("sim_street_which", StringType()),
-    StructField("sim_house_number", DoubleType()),
-    StructField("sim_post_code", DoubleType()),
-    StructField("sim_city", DoubleType()),
-    StructField("reject_reason", StringType()),
-    StructField("_retry_ta", StringType()),
-    StructField("match_on_cleansed_house_number", BooleanType()),
-]
-
-
-def _fan_small(index: GazetteerIndex, n_uq: int) -> bool:
-    """The fan-back gate: broadcast the unique-level side of a join."""
-    return index.broadcast_ok and n_uq <= _FAN_BROADCAST_MAX_UNIQUES
-
-
-def _lookup_groups(
-    uq: DataFrame, index: GazetteerIndex, n_uq: int
-) -> tuple[DataFrame, DataFrame]:
-    """The two sides of the lookup stage, every row tagged with its group
-    ``_b``: the unique queries, and the gazetteer rows their group can
-    reach, each with its street parent's alt names (``p_alts``).
-
-    A query's group is the hash of its locality (street key, postcode,
-    city key) over ceil(n_uq / _UQ_ROWS_PER_TASK) groups. Every lookup
-    level matches the street key plus the postcode or the city key (city
-    rows, rank < 26, under the empty street key of the no-street queries),
-    so the rows a locality can reach are those of two equi-joins: on street
-    key and postcode, and on street key and city key. A row goes to the
-    group of each locality that reaches it and to no other: a common
-    street name does not pull every town's houses into one group, and the
-    no-street queries spread over their localities, each group holding
-    only the city rows its queries name. A retried house number keeps its
-    query's locality, so its houses are in the group too. The locality
-    side is broadcast under the fan-back gate; the parent alt names join
-    on parent_place_id under the index's broadcast gate."""
-    n_groups = max(1, -(-n_uq // _UQ_ROWS_PER_TASK))
-    b = F.pmod(F.xxhash64("q_street_key", "q_pc", "q_city_key"), F.lit(n_groups))
-    q = uq.withColumn("_b", b)
-    loc = (
-        uq.select("q_street_key", "q_pc", "q_city_key").distinct()
-        .select(F.col("q_street_key").alias("_sk"), "q_pc", "q_city_key", b.alias("_b"))
-    )
-    hint = F.broadcast if _fan_small(index, n_uq) else (lambda df: df)
-    lk = index.lookup.withColumn(
-        "_sk", F.when(F.col("place_rank") < 26, F.lit("")).otherwise(F.col("key_street"))
-    )
-    by_pc = lk.join(
-        hint(loc.select("_sk", F.col("q_pc").alias("post_code"), "_b").distinct()),
-        ["_sk", "post_code"],
-    )
-    # a row the postcode join already sends to this locality is not sent twice
-    by_city = lk.join(
-        hint(loc.filter(F.col("q_city_key") != "").withColumnRenamed("q_city_key", "key_city")),
-        ["_sk", "key_city"],
-    ).filter(~F.col("post_code").eqNullSafe(F.col("q_pc")))
-    lk = by_pc.unionByName(by_city.drop("q_pc")).drop("_sk")
-    parents = index.hinted(
-        index.places.filter(F.col("category") == "highway").select(
-            F.col("place_id").alias("p_pid"), F.map_values("alt_map").alias("p_alts")
-        )
-    )
-    return q, lk.join(parents, lk.parent_place_id == parents.p_pid, "left").drop("p_pid")
-
-
-def _lookup_group_pdf(q: pd.DataFrame, g: pd.DataFrame, check_results: bool) -> pd.DataFrame:
-    """One group of the lookup stage: the kernel's _process_pdf over the
-    group's queries ``q`` with a KernelPayload built from its gazetteer
-    rows ``g``, the rescue pool from the parent alt names they carry.
-    Returns the keep rows, then the reject rows."""
-    from .geocode_kernel import _LOOKUP_COLS, KernelPayload, _process_pdf
-
-    # a row reaching two localities of one group arrives twice
-    g = g.drop_duplicates(["key_street", "place_id"])
-    pay = KernelPayload(g[_LOOKUP_COLS], pd.DataFrame(columns=["place_id", "category", "alt_map"]))
-    par = g.loc[g.p_alts.notna(), ["parent_place_id", "p_alts"]].drop_duplicates("parent_place_id")
-    pay.parents = pd.DataFrame(
-        {"p_pid": par.parent_place_id.to_numpy(), "p_alts": [list(a) for a in par.p_alts]}
-    )
-    keep, reject = _process_pdf(q, pay, check_results)
-    return pd.concat([keep, reject], ignore_index=True)
-
-
-def _lookup_and_check(
-    uq: DataFrame, index: GazetteerIndex, check_results: bool, n_uq: int
-) -> DataFrame:
-    """Lookup, check, parent rescue and low-rank retry of the unique
-    queries — process_osm (utils.py:300-441) with retry_with_low_place_rank
-    (:225-299) — as _lookup_group_pdf, called once per locality group of
-    _lookup_groups: ``q.groupBy("_b").cogroup(lk.groupBy("_b"))``.
-
-    Returns a row per kept query (retries spliced in) and per rejected
-    candidate."""
-    q, lk = _lookup_groups(uq, index, n_uq)
-    schema = StructType(
-        [uq.schema["transformed_address"]]
-        + [index.lookup.schema[c] for c in _PAYLOAD_COLS]
-        + _STAGE_FIELDS
-    )
-    names = schema.fieldNames()
-
-    def stage(q: pd.DataFrame, g: pd.DataFrame) -> pd.DataFrame:
-        out = _lookup_group_pdf(q, g, check_results)
-        return out[names] if len(out) else pd.DataFrame(columns=names)
-
-    return q.groupBy("_b").cogroup(lk.groupBy("_b")).applyInPandas(stage, schema)
-
-
-def _whole_groups(batches, key: str):
-    """Re-cut the Arrow batches of a partition sorted on ``key`` so that
-    every frame yielded holds all rows of each of its keys: a key's rows
-    may span batches, and a decision must see all of them."""
-    carry = None
-    for pdf in batches:
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        if not len(pdf):
-            continue
-        last = (pdf[key] == pdf[key].iloc[-1]).to_numpy()
-        carry = pdf.loc[last]
-        if not last.all():
-            yield pdf.loc[~last].reset_index(drop=True)
-    if carry is not None:
-        yield carry.reset_index(drop=True)
-
-
-def _map_groups(df: DataFrame, key: str, fn, schema: StructType) -> DataFrame:
-    """``fn`` (pandas -> pandas) over whole ``key`` groups: one hash
-    exchange on the key, a sort within partitions, one mapInPandas."""
-    return (
-        df.repartition(key)
-        .sortWithinPartitions(key)
-        .mapInPandas(lambda it: map(fn, _whole_groups(it, key)), schema)
-    )
-
-
-# ---------------------------------------------------------------------------
-# one lookup+check pass with its retry, one transformer stage
-# ---------------------------------------------------------------------------
-
-
-def _process(
-    addr: DataFrame, index: GazetteerIndex, check_results: bool
-) -> tuple[DataFrame, DataFrame, int, DataFrame | None]:
-    """process_osm analog (utils.py:300-441) with its low-rank retry.
-
-    Lookup, check (scoring, elimination, best per address, parent rescue)
-    and the retry run at the UNIQUE-composed-address level — O(distinct
-    addresses), the reference's own dedup optimization (utils.py:353-356)
-    extended through the checker. Only the final keep/reject fan back to
-    page keys — ONE pass over the input per stage; no control-flow action
-    ever touches the fanned frame. Outcomes are identical because every key
-    of one composed address shares the same candidates, scores, and
-    verdicts.
-
-    Returns (keep, reject, n_keep, unmatched): n_keep is the fanned keep
-    row count via unique-level multiplicities; unmatched (when the input
-    carries _orig) is the rebuilt not-matched todo set — both byproducts
-    the cascade loop uses instead of re-scanning the fan.
-    """
-    uq = _unique_queries(addr)
-    # TINY (one row per distinct composed address) but its plan is a full
-    # dedup pass over the input: eager-materialize so the grouped stage,
-    # the count and n_keep read the materialized rows instead of
-    # re-triggering the 2M-row dedup
-    uq = uq.localCheckpoint(eager=True)
-    n_uq = uq.count()
-    # per-address key multiplicities stay OUT of the lookup stage (they
-    # would otherwise ride the fan-back join into the output schema)
-    uq_counts = uq.select("transformed_address", "_n_keys")
-    ukey = "transformed_address"
-    small = _fan_small(index, n_uq)
-    # Pin the CHECKED unique frame: matched_tas (n_keep count + unmatched
-    # anti-join) and both fan-back joins read it — without this the grouped
-    # stage re-executes for each of those actions. At most 50 candidate
-    # rows per distinct address, so materializing it is cheap.
-    checked = _lookup_and_check(uq.drop("_n_keys"), index, check_results, n_uq)
-    checked = checked.localCheckpoint(eager=True)
-    keep_u = checked.filter(F.col("reject_reason").isNull()).drop("reject_reason")
-    reject_u = checked.filter(F.col("reject_reason").isNotNull())
-
-    # fan back to every input key (reference utils.py:394); the fan side
-    # supplies the query fields and carries the _orig payload struct
-    # (caller columns + original address fields) so the cascade never needs
-    # a full-input restore join.
-    carry = ["_orig"] if "_orig" in addr.columns else []
-    fan = addr.select(ADDR_COLS + ["transformed_address"] + carry)
-    # keep_u is ≤ one row per distinct address and already materialized —
-    # broadcast it under the measured-size gate so the (large) fan side is
-    # never exchanged for this join. Off in the no-broadcast regime to keep
-    # that plan shape pure shuffle (test_lookup_is_one_cogrouped_stage).
-    keep = fan.join(F.broadcast(keep_u) if small else keep_u, on=ukey, how="inner")
-    # retried rows report their CLEANSED composed address, like the
-    # reference's retry results (utils.py:272-276)
-    keep = keep.withColumn(ukey, F.coalesce(F.col("_retry_ta"), F.col(ukey))).drop("_retry_ta")
-    reject = fan.join(reject_u, on=ukey, how="inner")
-
-    # Control-flow byproducts at the UNIQUE level, so the cascade loop never
-    # scans the fanned input again just to count or shrink:
-    # - n_keep: how many fanned rows ``keep`` holds, as sum of multiplicities
-    #   over the matched distinct addresses;
-    # - unmatched: the next todo set, rebuilt from the carried _orig payload
-    #   through a unique-key anti-join (small side -> AQE broadcasts it)
-    #   instead of a full-input shuffle on addr_key.
-    matched_tas = keep_u.select(ukey).distinct()
-    if small:
-        # one narrow string column, ≤ n_uq rows: broadcast the anti-join's
-        # small side at plan time instead of waiting for AQE
-        matched_tas = F.broadcast(matched_tas)
-    row = uq_counts.join(matched_tas, on=ukey, how="inner").agg(F.sum("_n_keys")).first()
-    n_keep = int(row[0] or 0)
-    unmatched = None
-    if carry:
-        unmatched = (
-            addr.select("transformed_address", "addr_key", "_orig")
-            .join(matched_tas, on=ukey, how="left_anti")
-            .select(
-                "addr_key",
-                *[F.col(f"_orig.{c}").alias(c) for c in ADDR_COLS[1:]],
-                "_orig",
-            )
-        )
-    return keep, reject, n_keep, unmatched
-
-
-# ---------------------------------------------------------------------------
 # transformers
 # ---------------------------------------------------------------------------
 
@@ -692,104 +419,8 @@ def add_extra_house_number(results: DataFrame) -> DataFrame:
     ).withColumn("libpostal_house_number", _lpost_house_number_udf(full))
 
 
-def _addr_schema(addr: DataFrame) -> StructType:
-    return StructType(
-        [addr.schema["addr_key"]] + [StructField(c, StringType()) for c in ADDR_COLS[1:]]
-    )
-
-
-def libpostal_transformer(addr: DataFrame, check_results: bool) -> DataFrame:
-    """Parse the composed address and substitute parsed fields
-    (reference transformers.py:261-320) — the kernel's _apply_libpostal,
-    which under check_results drops the rows whose parse fails the
-    elimination rule against their own input fields."""
-    from .geocode_kernel import _apply_libpostal
-
-    return addr.select(ADDR_COLS).mapInPandas(
-        lambda it: (_apply_libpostal(pdf, check_results) for pdf in it), _addr_schema(addr)
-    )
-
-
-def photon_transformer(addr: DataFrame, index: GazetteerIndex, check_results: bool = True) -> DataFrame:
-    """Fuzzy street correction — the in-cluster Photon analog
-    (transformers.py:182-247): the street places of the query's locality
-    (postcode or city fingerprint), joined under the index's broadcast
-    gate, then re-ranked per addr_key by the kernel's _photon_best_pdf."""
-    from .geocode_kernel import _photon_best_pdf
-
-    q = (
-        addr.select(ADDR_COLS)
-        .withColumn("q_city_key", city_key_udf(F.col("city")))
-        .withColumn("q_pc", F.coalesce(F.col("postcode"), F.lit("")))
-    )
-    streets = index.hinted(
-        index.lookup.filter(F.col("place_rank") == 26).select(
-            "key_city", "post_code", "importance", "place_id",
-            F.col("out_street_name").alias("ph_street"),
-            F.col("out_post_name").alias("ph_city"),
-            F.col("out_post_code").alias("ph_postcode"),
-            F.col("out_country_name").alias("ph_country"),
-        ).dropDuplicates(["place_id"])
-    )
-
-    by_pc = q.filter(F.col("q_pc") != "").join(streets, F.col("q_pc") == streets.post_code)
-    by_city = q.filter(F.col("q_city_key") != "").join(streets, F.col("q_city_key") == streets.key_city)
-    return _map_groups(
-        by_pc.unionByName(by_city),
-        "addr_key",
-        lambda pdf: _photon_best_pdf(pdf, "addr_key", check_results)[ADDR_COLS],
-        _addr_schema(addr),
-    )
-
-
-def apply_transformers(
-    addr: DataFrame, transformers: list[str], index: GazetteerIndex, check_results: bool
-) -> DataFrame:
-    """Sequentially apply a transformer list, then keep only rows actually
-    CHANGED by the sequence (case-insensitive 5-field compare vs the
-    originals) — reference apply_transformers utils.py:692-776."""
-    carry = ["_orig"] if "_orig" in addr.columns else []
-    if transformers == ["orig"]:
-        return addr.select(ADDR_COLS + carry)
-
-    out = addr.select(ADDR_COLS)
-    for t in transformers:
-        if t == "orig":
-            continue
-        m = re.match(r"regex\[([a-z]+)\]", t)
-        if m:
-            s, h = apply_regex_ruleset(F.col("street"), F.col("housenbr"), m.group(1))
-            out = out.withColumn("street", s).withColumn("housenbr", h)
-        elif t == "nonum":
-            out = out.withColumn("housenbr", F.lit(""))
-        elif t == "nostreet":
-            out = out.withColumn("housenbr", F.lit("")).withColumn("street", F.lit(""))
-        elif t == "nozip":
-            out = out.withColumn("postcode", F.lit(""))
-        elif t == "nocountry":
-            out = out.withColumn("country", F.lit(""))
-        elif t == "libpostal":
-            out = libpostal_transformer(out, check_results)
-        elif t == "photon":
-            out = photon_transformer(out, index, check_results)
-        else:
-            raise ValueError(f"unknown transformer {t!r}")
-
-    orig = addr.select(
-        "addr_key", *[F.col(c).alias(f"_o_{c}") for c in ADDR_COLS[1:]], *carry
-    )
-    joined = out.join(orig, on="addr_key", how="inner")
-    changed = F.lit(False)
-    for c in ADDR_COLS[1:]:
-        changed = changed | (
-            F.lower(F.coalesce(F.col(c).cast("string"), F.lit("")))
-            != F.lower(F.coalesce(F.col(f"_o_{c}").cast("string"), F.lit("")))
-        )
-    return joined.filter(changed).select(ADDR_COLS + carry)
-
-
 # ---------------------------------------------------------------------------
-# cascade driver
+# the cascade: one cogrouped pandas stage over locality groups
 # ---------------------------------------------------------------------------
 
 RESULT_COLS = [
@@ -799,242 +430,277 @@ RESULT_COLS = [
     "transformed_address", "match_on_cleansed_house_number",
     "sim_street", "sim_street_which", "sim_house_number", "sim_post_code", "sim_city",
 ]
-REJECT_EXTRA = ["reject_reason"]
+REJECT_COLS = RESULT_COLS + ["reject_reason", "distance_to_match"]
+# the ladder's own columns that are not strings (the gazetteer payload
+# keeps the lookup's types)
+_STAGE_TYPES = {
+    "osm_order": IntegerType(), "match_on_cleansed_house_number": BooleanType(),
+    **{c: DoubleType() for c in (
+        "sim_street", "sim_house_number", "sim_post_code", "sim_city", "distance_to_match"
+    )},
+}
 
 
-def _one_stage(
-    todo: DataFrame, transformers: list[str], index: GazetteerIndex, check_results: bool
-) -> tuple[DataFrame, DataFrame, int, DataFrame | None]:
-    """transform_and_process analog (utils.py:589-688). Returns
-    (keep, reject, n_keep, unmatched-todo) — the last two computed at the
-    unique-address level inside _process (no extra pass over the fan)."""
-    method = "+".join(transformers)
-    if transformers == ["orig"] and "_ta0" in todo.columns:
-        # the orig stage's composed address was precomputed INTO the input
-        # checkpoint (cascade below): both the dedup pass and the fan-back
-        # pass read it as stored bytes instead of re-running the regex
-        # composition over every input row (the single hottest JVM
-        # expression of the job — measured ~2x the whole scoring pipeline
-        # at 2M pages).
-        carry0 = ["_orig"] if "_orig" in todo.columns else []
-        sent = todo.select(
-            *ADDR_COLS, *carry0, F.col("_ta0").alias("transformed_address")
+@pandas_udf(StructType([StructField(c, StringType()) for c in ("pc", "ck", "lp_pc", "lp_ck")]))
+def _localities_udf(
+    street: pd.Series, housenbr: pd.Series, postcode: pd.Series, city: pd.Series,
+    country: pd.Series,
+) -> pd.DataFrame:
+    from .geocode_kernel import _localities_pdf
+
+    return _localities_pdf(pd.DataFrame(
+        dict(street=street, housenbr=housenbr, postcode=postcode, city=city, country=country)
+    ))
+
+
+def _tuple_key():
+    """The unique-tuple key ``_tk``: a deterministic function of the five
+    address fields that tells null from "" (to_json leaves null fields
+    out)."""
+    return F.to_json(F.struct(*ADDR_COLS[1:]))
+
+
+def _unique_tuples(addresses: DataFrame) -> DataFrame:
+    """One row per distinct (street, housenbr, postcode, city, country) of
+    the input, keyed by its ``_tk`` (_tuple_key), with the number of
+    input keys that carry it (``_n_keys``) and its localities before
+    photon (``_loc``, geocode_kernel._localities_pdf). Identical tuples
+    have identical ladders, so a hot address is one row."""
+    fields = ADDR_COLS[1:]
+    return (
+        addresses.groupBy("_tk", *fields)
+        .agg(F.count(F.lit(1)).alias("_n_keys"))
+        .withColumn("_loc", _localities_udf(*fields))
+    )
+
+
+def _fan_small(index: GazetteerIndex, n_uq: int) -> bool:
+    """The fan-back gate: broadcast the unique-level side of a join."""
+    return index.broadcast_ok and n_uq <= _FAN_BROADCAST_MAX_UNIQUES
+
+
+def _locality_keys(pc, ck) -> list:
+    """A locality's two join keys: ("p", postcode) and ("c", city key)."""
+    return [
+        F.struct(F.lit("p").alias("kind"), pc.alias("key")),
+        F.struct(F.lit("c").alias("kind"), ck.alias("key")),
+    ]
+
+
+def _group_col(n_uq: int):
+    """A tuple's locality group ``_b``: the hash of its own (postcode, city
+    key) over ceil(n_uq / _UQ_ROWS_PER_TASK) groups, or of its libpostal
+    parse's when both of its own are empty (one-line addresses, every
+    field in the street, would otherwise all share one group)."""
+    n_groups = max(1, -(-n_uq // _UQ_ROWS_PER_TASK))
+    pc, ck = F.col("_loc.pc"), F.col("_loc.ck")
+    own = F.when((pc == "") & (ck == ""), F.xxhash64("_loc.lp_pc", "_loc.lp_ck"))
+    return F.pmod(own.otherwise(F.xxhash64(pc, ck)), F.lit(n_groups))
+
+
+def _locality_groups(
+    tuples: DataFrame, index: GazetteerIndex, n_uq: int
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the ladder stage, every row tagged with its group
+    ``_b`` (_group_col): the unique tuples, and the gazetteer rows their
+    group can reach, each with its street parent's alt names
+    (``p_alts``).
+
+    The localities a tuple's ladder can query with are its own, its
+    libpostal parse's, and the (output postcode, output city key) of
+    every street photon can pick from those: the rank-26 rows whose
+    post_code or key_city matches, since photon's output fields become
+    the query's. Regex, nonum and nostreet never change a locality, and
+    a retried house number keeps its query's. Every lookup level and
+    photon match a row on its post_code or its (non-empty) key_city, so
+    a group gets every row whose post_code or key_city is one of its
+    localities' and no other. A row reaching a group through both keys
+    arrives twice (a join to drop the copy costs more jobs than the
+    group's drop_duplicates). The locality side is broadcast under the
+    fan-back gate; the parent alt names join on parent_place_id under
+    the index's gate."""
+    q = tuples.withColumn("_b", _group_col(n_uq))
+    hint = F.broadcast if _fan_small(index, n_uq) else (lambda df: df)
+    # a fresh _b attribute: the cogroup must not see q's on both sides
+    loc = q.select(F.col("_b").alias("_b"), F.inline(F.array(
+        *_locality_keys(F.col("_loc.pc"), F.col("_loc.ck")),
+        *_locality_keys(F.col("_loc.lp_pc"), F.col("_loc.lp_ck")),
+    ))).distinct()
+    streets = index.lookup.filter(F.col("place_rank") == 26).select(
+        F.inline(F.array(*_locality_keys(F.col("post_code"), F.col("key_city")))),
+        "out_post_code", "out_post_name",
+    )
+    # distinct before the city-key UDF: the join runs in the lookup scan's
+    # tasks (as many as the cached lookup has partitions), and a Python
+    # task costs about 0.3 s of worker start-up however few rows it gets
+    photon = hint(loc.filter(F.col("key") != "")).join(streets, ["kind", "key"]).select(
+        "_b", "out_post_code", "out_post_name"
+    ).distinct().select(
+        "_b", F.inline(F.array(*_locality_keys(
+            F.coalesce("out_post_code", F.lit("")), city_key_udf(F.col("out_post_name"))
+        ))),
+    )
+    # an empty postcode is a locality too (the house and street levels
+    # match it against the rows whose post_code is ""); an empty city key
+    # reaches nothing
+    reach = loc.unionByName(photon).filter(
+        (F.col("kind") == "p") | (F.col("key") != "")
+    ).distinct()
+    lk = index.lookup.select(
+        "*", F.inline(F.array(*_locality_keys(F.col("post_code"), F.col("key_city"))))
+    ).join(hint(reach), ["kind", "key"]).drop("kind", "key")
+    parents = index.hinted(
+        index.places.filter(F.col("category") == "highway").select(
+            F.col("place_id").alias("p_pid"), F.map_values("alt_map").alias("p_alts")
         )
-    else:
-        transformed = apply_transformers(todo, transformers, index, check_results)
-        sent = transformed.withColumn(
-            "transformed_address",
-            compose_address_col(
-                F.col("street"), F.col("housenbr"), F.col("postcode"), F.col("city"), F.col("country")
-            ),
-        )
-    if transformers != ["orig"]:
-        # transformer stages run UDF joins (libpostal/photon) — materialize
-        # once so the multiple consumers (dedup, fan-back, retry) don't
-        # re-run them. The orig stage is a pure Column op over the already
-        # checkpointed todo set: materializing it would rewrite every input
-        # row once more just to add one column.
-        sent = sent.localCheckpoint(eager=True)
-
-    keep, reject, n_keep, unmatched = _process(sent, index, check_results)
-    if unmatched is not None and transformers != ["orig"]:
-        # the changed-rows filter (and any transformer dropout) removed rows
-        # from ``sent`` before _process saw them — they are unmatched too.
-        # Small-vs-small anti-join: todo at transformer stages is the
-        # already-shrunken no-match tail, sent is checkpointed.
-        dropped = todo.join(sent.select("addr_key"), on="addr_key", how="left_anti")
-        unmatched = unmatched.unionByName(dropped.select(*unmatched.columns))
-
-    keep = keep.withColumn("method", F.lit(method))
-    reject = reject.withColumn("method", F.lit(method))
-    keep_cols = RESULT_COLS + ["street", "housenbr", "postcode", "city", "country"]
-    if "_orig" in keep.columns:
-        keep_cols = keep_cols + ["_orig"]
-    return _conform(keep, keep_cols), _conform(reject, RESULT_COLS + REJECT_EXTRA), n_keep, unmatched
+    )
+    return q, lk.join(parents, lk.parent_place_id == parents.p_pid, "left").drop("p_pid")
 
 
-def _conform(df: DataFrame, cols: list[str]) -> DataFrame:
-    have = set(df.columns)
-    sel = []
-    for c in cols:
-        if c == "match_on_cleansed_house_number":
-            src = F.col(c) if c in have else F.lit(None).cast("boolean")
-            sel.append(F.coalesce(src, F.lit(False)).alias(c))
-        elif c in have:
-            sel.append(F.col(c))
-        else:
-            sel.append(F.lit(None).cast("string").alias(c))
-    return df.select(sel)
+def _group_pdf(
+    q: pd.DataFrame, g: pd.DataFrame, check_results: bool, with_rejected: bool, with_stats: bool
+) -> pd.DataFrame:
+    """One locality group: geocode_kernel.cascade_kernel over the group's
+    tuples ``q`` (keyed by ``_tk`` in place of addr_key) with a
+    KernelPayload of its gazetteer rows ``g``, the parent rescue pool
+    from the parent alt names they carry. Returns the keep rows, then the
+    reject rows, then under ``with_stats`` one row per stage with
+    addr_key null and the stage's step stats as JSON in ``_stat``."""
+    from .geocode_kernel import _LOOKUP_COLS, KernelPayload, cascade_kernel
+
+    g = g.drop_duplicates(["key_street", "place_id"])
+    pay = KernelPayload(g[_LOOKUP_COLS], pd.DataFrame(columns=["place_id", "category", "alt_map"]))
+    par = g.loc[g.p_alts.notna(), ["parent_place_id", "p_alts"]].drop_duplicates("parent_place_id")
+    pay.parents = pd.DataFrame(
+        {"p_pid": par.parent_place_id.to_numpy(), "p_alts": [list(a) for a in par.p_alts]}
+    )
+    addr = q.rename(columns={"_tk": "addr_key"})[ADDR_COLS + ["_n_keys"]]
+    if not (with_rejected or with_stats):
+        return cascade_kernel(addr, pay, check_results)
+    keep, reject, stats = cascade_kernel(addr, pay, check_results, with_rejected=True)
+    parts = [keep, reject] if with_rejected else [keep]
+    if with_stats:
+        parts.append(pd.DataFrame({
+            "method": [s.pop("method") for s in stats],
+            "_stat": [json.dumps(s) for s in stats],
+        }))
+    return pd.concat([p for p in parts if len(p)] or [keep], ignore_index=True)
 
 
-def _is_materialized(df: DataFrame) -> bool:
-    """True when the frame's plan is already a materialized row scan
-    (localCheckpoint / RDD-backed) rather than a computation."""
-    try:
-        return (
-            df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-            == "LogicalRDD"
-        )
-    except Exception:  # pragma: no cover - py4j surface change
-        return False
+def _ladder_stage(
+    tuples: DataFrame, index: GazetteerIndex, n_uq: int, check_results: bool = True,
+    with_rejected: bool = False, with_stats: bool = False,
+) -> DataFrame:
+    """The whole ladder of the unique tuples as ONE cogrouped pandas stage,
+    ``q.groupBy("_b").cogroup(lk.groupBy("_b"))`` over _locality_groups:
+    a row per kept tuple and per rejected candidate (addr_key holds the
+    tuple key), plus the ``_stat`` rows of each group under
+    ``with_stats``."""
+    q, lk = _locality_groups(tuples, index, n_uq)
+    schema = StructType(
+        [StructField(c, index.lookup.schema[c].dataType if c in index.lookup.columns
+                     else _STAGE_TYPES.get(c, StringType())) for c in REJECT_COLS]
+        + [StructField("_stat", StringType())]
+    )
+    names = schema.fieldNames()
+
+    def stage(q: pd.DataFrame, g: pd.DataFrame) -> pd.DataFrame:
+        if not len(q):
+            return pd.DataFrame(columns=names)
+        return _group_pdf(q, g, check_results, with_rejected, with_stats).reindex(columns=names)
+
+    return q.groupBy("_b").cogroup(lk.groupBy("_b")).applyInPandas(stage, schema)
 
 
 def cascade(
     addresses: DataFrame,
     index: GazetteerIndex,
     check_results: bool = True,
-    transformers_sequence: list[list[str]] | None = None,
     with_rejected: bool = True,
     with_stats: bool = False,
     validate_unique: bool = True,
     with_extra_house_number: bool = True,
 ) -> tuple[DataFrame, DataFrame] | tuple[DataFrame, DataFrame, list[dict]]:
     """process_addresses analog (utils.py:1195-1279): run the transformer
-    ladder, shrink the working set by left-anti join after each stage, tag
-    each match with the stage that produced it (``method`` — the fallback
-    level the fixtures pin), then restore the ORIGINAL input fields.
+    ladder over every address, tag each match with the stage that
+    produced it (``method`` — the fallback level the fixtures pin) and
+    return it with the ORIGINAL input row.
 
     Input: DataFrame with ADDR_COLS. addr_key must be unique
     (reference aborts on duplicates, nominatimwrapper.py:789-790).
+
+    The input is checkpointed once and deduplicated to its unique address
+    tuples (the reference's pre-lookup dedup, utils.py:353-356, taken
+    before the ladder). The ladder runs once per locality group of tuples
+    (_ladder_stage), and its rows join back to the input once, on the
+    tuple key, with the tuple side broadcast under the fan-back gate. The
+    input row rides that join, so no restore join on addr_key is needed
+    (the reference's merge(to_process_addresses), utils.py:1271).
+
+    Returns (results, rejects); ``rejects`` holds every stage's rejected
+    candidates with their distance to the key's match, empty without
+    ``with_rejected``. ``with_stats`` adds the reference's step_stats
+    (utils.py:678-686), one dict per stage whose todo is above 0: todo,
+    match and match_26, and with rejects reject_rec, reject_addr and
+    reject_mism, all counted in input rows; ``wall_s`` is the seconds the
+    groups spent in that stage, summed over groups (the reference's
+    timestats, base.py:275-301). They come from the stage's own rows, at
+    one job.
     """
     spark = addresses.sparkSession
-    seqs = transformers_sequence or DEFAULT_TRANSFORMERS_SEQUENCE
-
-    # materialize the input ONCE: the duplicate guard, every stage, and the
-    # final original-fields restore all reuse it — without this the input
-    # plan (often an extraction-UDF pipeline over raw pages) is re-evaluated
-    # three times. Skip when the caller already handed us materialized rows
-    # (a checkpoint scan) — re-checkpointing would rewrite every input row
-    # once more for nothing.
-    if not _is_materialized(addresses):
-        # bake the orig stage's composed address into the same checkpoint:
-        # it is needed by the dedup pass AND the fan-back pass, so computing
-        # it once at materialization time (instead of per consuming pass)
-        # halves the job's regex-composition cost for one extra stored
-        # string column (~50 B/row)
-        addresses = addresses.withColumn(
-            "_ta0",
-            compose_address_col(
-                F.col("street"), F.col("housenbr"), F.col("postcode"),
-                F.col("city"), F.col("country"),
-            ),
-        ).localCheckpoint(eager=True)
+    addresses = addresses.withColumn("_tk", _tuple_key()).localCheckpoint(eager=True)
 
     if validate_unique:  # skippable when keys are unique by construction
         dup = addresses.groupBy("addr_key").count().filter("count > 1")
         if not dup.isEmpty():
             raise ValueError("duplicate addr_key values in input")
 
-    # Pack the full original row (original address fields + caller columns
-    # like url/warc_ts) into one struct carried through every stage's
-    # fan-back join. Expanding it at the end replaces the reference's final
-    # merge(to_process_addresses, how="left") (utils.py:1271) — which as a
-    # full-input-vs-results shuffle join would be the largest shuffle of the
-    # whole job at 100 TB — with a zero-shuffle projection.
-    orig_payload = [c for c in addresses.columns if c not in ("addr_key", "_ta0")]
-    ta0 = ["_ta0"] if "_ta0" in addresses.columns else []
-    todo = addresses.select(
-        *ADDR_COLS, F.struct(*[F.col(c) for c in orig_payload]).alias("_orig"), *ta0
-    )
-    n_todo = addresses.count()  # cheap: checkpointed
-    results: DataFrame | None = None
-    rejects: DataFrame | None = None
-    step_stats: list[dict] = []
+    obs = Observation()
+    tuples = _unique_tuples(addresses).observe(obs, F.count(F.lit(1)).alias("n"))
+    tuples = tuples.localCheckpoint(eager=True)
+    n_uq = obs.get["n"]
+    out = _ladder_stage(
+        tuples, index, n_uq, check_results, with_rejected, with_stats
+    ).localCheckpoint(eager=True)
 
-    # Materializing each stage's fanned-back keep frame stores the FULL
-    # result width (input row + _orig payload + result fields) — at 2M+
-    # pages that block write is the single largest core-count-independent
-    # cost in the job. It's only worth paying when the frame really is
-    # read more than once at full width: stats mode (several counts per
-    # stage) and rejected mode (results re-scanned for the distance join).
-    # Otherwise the unique-level checkpoints inside _process already pin
-    # the expensive scoring, and the fan-back is a rescan-cheap broadcast
-    # join: n_keep and the anti-join read it column-pruned, the final sink
-    # reads it full-width exactly once.
-    materialize_stages = with_stats or with_rejected
-
-    for transformers in seqs:
-        stage_t0 = time.monotonic()
-        keep, reject, n_keep, unmatched = _one_stage(todo, transformers, index, check_results)
-        # Lineage stays bounded either way: every stage's todo is
-        # checkpointed below, so each keep plan is rooted one stage deep.
-        # This is the Spark analog of the reference's per-stage
-        # materialized pandas frames; on a cluster the same boundary is
-        # the S7 per-partition checkpoint.
-        if materialize_stages:
-            keep = keep.localCheckpoint(eager=True)
-        results = keep if results is None else results.unionByName(keep)
-        if with_rejected:
-            reject = reject.localCheckpoint(eager=True)
-            rejects = reject if rejects is None else rejects.unionByName(reject)
-
-        if with_stats:
-            # per-stage counters — reference step_stats (utils.py:678-686) —
-            # plus wall time per stage, the reference's timestats label map
-            # (base.py:275-301); every frame here is checkpointed (the stage
-            # really ran inside the timed span) so these are cheap scans
-            stat = {
-                "method": "+".join(transformers),
-                "wall_s": round(time.monotonic() - stage_t0, 3),
-                "todo": todo.count(),
-                "match": keep.count(),
-                "match_26": keep.filter(F.col("match_on_cleansed_house_number")).count(),
-            }
-            if with_rejected:
-                stat["reject_rec"] = reject.count()
-                stat["reject_addr"] = reject.select("addr_key").distinct().count()
-                stat["reject_mism"] = (
-                    reject.filter(F.col("reject_reason") == "mismatch")
-                    .select("addr_key").distinct().count()
-                )
-            step_stats.append(stat)
-
-        # n_keep came from the unique-level multiplicity sum (one row per
-        # matched key in keep), so the everyone-matched break costs nothing
-        if n_keep >= n_todo:
-            break
-        if n_keep == 0:
-            continue  # nothing matched this stage; same todo set
-        # next working set: the unique-key anti-join byproduct of the stage
-        # (matched-address set is the SMALL side — AQE broadcasts it), never
-        # a full-input shuffle on addr_key
-        todo = unmatched.localCheckpoint(eager=True)
-        n_todo -= n_keep
-
-    assert results is not None
-    # restore the FULL original input row — including caller columns beyond
-    # ADDR_COLS (url, warc_ts, ...) — from the carried _orig struct: the
-    # reference's merge(to_process_addresses, how="left") at utils.py:1271
-    # without the join (see the _orig note above)
-    results = (
-        results.drop("street", "housenbr", "postcode", "city", "country")
-        .select("*", "_orig.*")
-        .drop("_orig")
-    )
-
+    # the ladder's rows are a checkpoint scan with no size statistics, so
+    # auto-broadcast never fires at plan time: broadcast them under the
+    # measured gate so the (large) input side is never exchanged
+    fan = F.broadcast if _fan_small(index, n_uq) else (lambda df: df)
+    rows = out.filter(F.col("addr_key").isNotNull()).withColumnRenamed("addr_key", "_tk")
+    keep_u = rows.filter(F.col("reject_reason").isNull()).select("_tk", *RESULT_COLS[1:])
+    payload = [c for c in addresses.columns if c not in ("addr_key", "_tk")]
+    results = addresses.join(fan(keep_u), "_tk").select("addr_key", *RESULT_COLS[1:], *payload)
     if with_extra_house_number:
         # reference: applied AFTER the original-fields restore
         # (utils.py:1273-1274), so it parses the ORIGINAL input fields
         results = add_extra_house_number(results)
 
-    if with_rejected and rejects is not None:
-        # distance from each reject to its key's accepted match (utils.py:1080-1093)
-        m = results.select(
-            "addr_key", F.col("lat").alias("_mlat"), F.col("lon").alias("_mlon")
-        )
-        rejects = rejects.join(m, on="addr_key", how="left").withColumn(
-            "distance_to_match",
-            F.round(haversine_col(F.col("lat"), F.col("lon"), F.col("_mlat"), F.col("_mlon")), 3),
-        ).drop("_mlat", "_mlon")
+    if with_rejected:
+        reject_u = rows.filter(F.col("reject_reason").isNotNull()).select("_tk", *REJECT_COLS[1:])
+        rejects = addresses.select("_tk", "addr_key").join(fan(reject_u), "_tk").select(REJECT_COLS)
     else:
         rejects = spark.createDataFrame([], schema=_reject_schema())
+    if not with_stats:
+        return results, rejects
 
-    if with_stats:
-        return results, rejects, step_stats
-    return results, rejects
+    sums: dict[str, dict[str, float]] = {}
+    for r in out.filter(F.col("addr_key").isNull()).select("method", "_stat").collect():
+        acc = sums.setdefault(r["method"], {})
+        for k, v in json.loads(r["_stat"]).items():
+            acc[k] = acc.get(k, 0.0) + v
+    step_stats = []
+    for transformers in DEFAULT_TRANSFORMERS_SEQUENCE:
+        s = sums.get("+".join(transformers))
+        if s is None:
+            continue
+        stat = {"method": "+".join(transformers), "wall_s": round(s.pop("wall_s"), 3)}
+        stat.update({k: int(v) for k, v in s.items() if with_rejected or not k.startswith("reject")})
+        step_stats.append(stat)
+    return results, rejects, step_stats
 
 
 def _reject_schema():
-    fields = [StructField(c, StringType()) for c in RESULT_COLS + REJECT_EXTRA]
+    fields = [StructField(c, StringType()) for c in REJECT_COLS[:-1]]
     fields.append(StructField("distance_to_match", DoubleType()))
     return StructType(fields)

@@ -1,69 +1,56 @@
 # -*- coding: utf-8 -*-
-"""Partition-local geocode kernel: the whole cascade in ONE narrow stage.
+"""The geocode ladder in pandas: one implementation for both engines.
 
-The distributed cascade (geocode.py) runs the reference lifecycle as a
-driver-controlled ladder of Spark jobs — the right shape when the
-gazetteer exceeds the broadcast budget (shuffle joins) or when per-stage
-stats/rejects are wanted. But its per-invocation cost is fixed driver
-work: ~8 actions, each a full plan build + schedule round — measured ~4s
-per call regardless of input size. For latency-sensitive paths
-(streaming micro-batches, small partitioned jobs) that fixed cost IS the
-runtime.
+``cascade_kernel`` runs the reference lifecycle (process_addresses,
+utils.py:1195-1279) over one pandas frame of addresses: every stage of
+the transformer ladder (regex, libpostal, photon, nonum, nostreet), the
+six-level candidate lookup, the check (scoring, elimination, best per
+query with its tail, parent alt-name rescue) and the low-rank
+house-number retry. Nothing in the ladder looks across addresses, so it
+can run over any set of addresses with any payload that holds every
+gazetteer row they can reach. It has two callers:
 
-This module exploits the cascade's per-address independence (documented
-at geocode._process: every key of one composed address shares the same
-candidates, scores and verdicts — nothing in the ladder looks across
-addresses) to run the ENTIRE lifecycle partition-locally:
+- the partition-local route, ``geocode_and_tile_kernel``, under the
+  gazetteer broadcast gate: the whole gazetteer rides along as a
+  SparkContext broadcast of pandas frames (``KernelPayload``), and
 
-    pages --mapInPandas--> [extract -> transformer ladder -> candidate
-    merge vs broadcast gazetteer -> score/eliminate -> parent rescue ->
-    low-rank retry -> S2/H3 tiling] --> tiled points
+      pages --mapInPandas--> [extract -> ladder -> S2/H3 tiling]
 
-One job, one narrow stage, zero shuffles, no driver round-trips. The
-gazetteer rides along as a SparkContext broadcast of pandas frames —
-valid under exactly the same condition as the broadcast-join cascade
-(index.broadcast_ok). The engine is chosen in ONE place,
-plans/flagship.geocode_and_tile: this kernel under the gate, the
-distributed cascade above it. The checkpoint job and the stream's
-foreachBatch path go through that function; only the direct streaming
-plan (streaming/geocode_stream.geocode_pages_stream) calls the kernel
-itself.
+  is one narrow stage with no shuffle and no driver round trip;
+- ``geocode.cascade``, in both gazetteer regimes: one cogrouped pandas
+  stage that runs ``cascade_kernel`` on each locality group of unique
+  address tuples, with a ``KernelPayload`` built from the gazetteer rows
+  that group can reach.
 
-Semantics are the distributed cascade's, value-for-value (asserted by
-tests/test_geocode_kernel.py over every fixture class): the only
+The engine is chosen in ONE place, plans/flagship.geocode_and_tile: the
+route under the gate, ``cascade`` above it. The checkpoint job and the
+stream's foreachBatch path go through that function; only the direct
+streaming plan (streaming/geocode_stream.geocode_pages_stream) calls the
+route itself. Both engines give the same rows
+(tests/test_geocode_kernel.py, over every fixture class); the only
 divergence is the documented-arbitrary representative pick when two
-different field splits compose to the same address ACROSS partitions
-(geocode._unique_queries note) — partition-local dedup picks the
-partition's min rather than the global min.
-
-Candidate lookup and the ladder's decisions are written once, here, and
-the distributed cascade calls them over whole key groups: _process_pdf
-(six-level lookup merge, then the check, then the low-rank retry) per
-locality group through geocode._lookup_and_check, and the libpostal
-and photon decisions through geocode.libpostal_ and photon_transformer.
-The check is scoring, elimination and best per query with its tail
-(_score_pdf, _pick_best_pdf) and the parent alt-name rescue
-(_parent_rescue_pdf), all three behind _check_pdf; the libpostal sanity
-check is _apply_libpostal and the photon re-rank _photon_best_pdf. What
-stays per engine is regex application, the ladder loop, photon pool
-gathering and tiling. The scalar kernels below them are shared too —
-textnorm compare and fingerprint functions, the rule-based libpostal
-parser, the regex rulesets, the comma-fixpoint cleaner and the page
-address extractor (pages.extract_addresses_pdf) — so a value fix lands in
-both engines at once.
+different field splits compose to the same address in different
+partitions or groups (``_unique_queries_pdf`` takes the min within its
+frame). The scalar
+kernels below the ladder are shared too: textnorm compare and
+fingerprint functions, the rule-based libpostal parser, the regex
+rulesets, the comma-fixpoint cleaner and the page address extractor
+(pages.extract_addresses_pdf).
 """
 
 from __future__ import annotations
 
 import re
 import threading
+import time
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.cleansing import REGEX_REPLACEMENTS, clean_addr_in
-from ..functions.geo import s2_h3_cells
+from ..functions.geo import EARTH_RADIUS_KM, s2_h3_cells
 from ..functions.textnorm import (
     SIMILARITY_THRESHOLD,
     city_compare_one,
@@ -77,6 +64,7 @@ from .geocode import (
     ADDR_COLS,
     DEFAULT_TRANSFORMERS_SEQUENCE,
     NOMINATIM_CANDIDATE_LIMIT,
+    REJECT_COLS,
     RESULT_COLS,
     GazetteerIndex,
     parse_address_rule_based,
@@ -85,12 +73,8 @@ from .pages import extract_addresses_pdf
 
 _FIELDS = ["street", "housenbr", "postcode", "city", "country"]
 
-# python-regex form of the shared transformer rulesets ($n -> \g<n>)
-_PY_RULES: dict[str, list[tuple[str, re.Pattern, str]]] = {
-    rs: [
-        (field, re.compile(pat), re.sub(r"\$(\d+)", r"\\g<\1>", repl))
-        for field, pat, repl in rules
-    ]
+_RULES: dict[str, list[tuple[str, re.Pattern, str]]] = {
+    rs: [(field, re.compile(pat), repl) for field, pat, repl in rules]
     for rs, rules in REGEX_REPLACEMENTS.items()
 }
 
@@ -105,6 +89,18 @@ def _nz(v) -> str:
 def _compose(s, h, pc, city, country) -> str:
     """Scalar twin of cleansing.compose_address_col (exact fixpoint)."""
     return clean_addr_in(f"{_nz(s)}, {_nz(h)}, {_nz(pc)} {_nz(city)}, {_nz(country)}")
+
+
+def _compose_each(cur: pd.DataFrame) -> list[str]:
+    """_compose of every row's five fields, each distinct tuple once."""
+    memo: dict[tuple, str] = {}
+    out = []
+    for t in cur[_FIELDS].itertuples(index=False, name=None):
+        v = memo.get(t)
+        if v is None:
+            v = memo[t] = _compose(*t)
+        out.append(v)
+    return out
 
 
 def _sparkmin(series: pd.Series):
@@ -151,7 +147,7 @@ class KernelPayload:
         self.houses = lookup[lookup.place_rank == 30].reset_index(drop=True)
         self.streets = lookup[lookup.place_rank == 26].reset_index(drop=True)
         self.cities = lookup[lookup.place_rank < 26].reset_index(drop=True)
-        # photon candidate pool: one row per street place (geocode.photon_transformer)
+        # photon candidate pool: one row per street place
         self.photon = (
             self.streets.drop_duplicates("place_id")
             .rename(
@@ -183,7 +179,7 @@ class KernelPayload:
 def build_kernel_payload(index: GazetteerIndex) -> KernelPayload:
     if not index.broadcast_ok:
         raise ValueError(
-            "gazetteer exceeds the broadcast budget; use the distributed cascade"
+            "gazetteer exceeds the broadcast budget; use geocode.cascade"
         )
     return KernelPayload(
         index.lookup.select(_LOOKUP_COLS).toPandas(),
@@ -207,13 +203,12 @@ def kernel_broadcast(index: GazetteerIndex):
 
 
 # ---------------------------------------------------------------------------
-# transformers (the libpostal check and photon re-rank are shared with
-# geocode.libpostal_transformer / photon_transformer)
+# transformers (apply_transformers, utils.py:692-776)
 # ---------------------------------------------------------------------------
 
 
 def _apply_regex(cur: pd.DataFrame, ruleset: str) -> pd.DataFrame:
-    for field, pat, repl in _PY_RULES[ruleset]:
+    for field, pat, repl in _RULES[ruleset]:
         vals = cur[field].map(_nz)
         cur[field] = vals.map(lambda v, p=pat, r=repl: p.sub(r, v))
     return cur
@@ -251,7 +246,7 @@ def _apply_libpostal(cur: pd.DataFrame, check_results: bool) -> pd.DataFrame:
 
 def _photon_best_pdf(cand: pd.DataFrame, key: str, check_results: bool) -> pd.DataFrame:
     """photon_keep_relevant_results (transformers.py:40-77) per query
-    ``key``, shared by both engines: the candidate streets (ph_* columns)
+    ``key``: the candidate streets (ph_* columns)
     in Photon's order (importance desc, place_id), compared with the
     query's street, postcode and city, eliminated under check mode, and
     the best street score wins with Photon's order as the tie-break (the
@@ -324,9 +319,9 @@ def _apply_photon(cur: pd.DataFrame, pay: KernelPayload, check_results: bool) ->
 def _transform_stage(
     todo: pd.DataFrame, transformers: list[str], pay: KernelPayload, check_results: bool
 ) -> pd.DataFrame:
-    """apply_transformers twin: sequential transformer application + the
-    changed-rows filter (rows unchanged by the sequence drop out of the
-    stage; orig passes everything)."""
+    """apply_transformers (utils.py:692-776): sequential transformer
+    application + the changed-rows filter (rows unchanged by the sequence
+    drop out of the stage; orig passes everything)."""
     if transformers == ["orig"]:
         return todo.copy()
     cur = todo.copy()
@@ -364,9 +359,7 @@ def _transform_stage(
 
 
 # ---------------------------------------------------------------------------
-# candidate lookup, the check and the low-rank retry, shared by both engines
-# (the distributed cascade runs _process_pdf per locality group in
-# geocode._lookup_and_check)
+# candidate lookup, the check and the low-rank retry
 # ---------------------------------------------------------------------------
 
 
@@ -534,12 +527,12 @@ def _parent_rescue_pdf(
 def _check_pdf(
     cand: pd.DataFrame, check_results: bool, parents: pd.DataFrame | None = None
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """The check of one lookup at the unique-query level, shared by both
-    engines: score, eliminate, best per query with its tail, then the
-    parent alt-name rescue when ``parents`` is given. Without
-    ``check_results`` the first candidate in Nominatim's order wins and
-    the rest are its tail. Every row carries the five sim columns; the
-    reject rows also carry ``reject_reason``."""
+    """The check of one lookup at the unique-query level: score,
+    eliminate, best per query with its tail, then the parent alt-name
+    rescue when ``parents`` is given. Without ``check_results`` the first
+    candidate in Nominatim's order wins and the rest are its tail. Every
+    row carries the five sim columns; the reject rows also carry
+    ``reject_reason``."""
     if check_results:
         keep, reject = _pick_best_pdf(_score_pdf(cand))
         if parents is not None:
@@ -561,10 +554,10 @@ def _process_pdf(
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Lookup, check with parent rescue, and the low-rank retry of the
     unique queries — process_osm (utils.py:300-441) with
-    retry_with_low_place_rank (:225-299) — shared by both engines.
-    Returns (keep, reject): keep is one row per matched
-    transformed_address, reject the rejected candidates of the first
-    lookup (the retry's own rejects are not reported)."""
+    retry_with_low_place_rank (:225-299). Returns (keep, reject): keep
+    is one row per matched transformed_address, reject the rejected
+    candidates of the first lookup (the retry's own rejects are not
+    reported)."""
     cand = _candidates_pdf(uq, pay)
     if not len(cand):
         return cand, cand
@@ -609,8 +602,40 @@ def _retry_low_rank_pdf(
     return pd.concat([kept, got], ignore_index=True)
 
 
+def _localities_pdf(t: pd.DataFrame) -> pd.DataFrame:
+    """The (postcode, city key) localities an address tuple queries with
+    before photon: its own fields' (``pc``, ``ck``) and those of its
+    libpostal parse (``lp_pc``, ``lp_ck``). The parse is taken without
+    _apply_libpostal's check, so it is a superset of what the ladder
+    keeps. Regex, nonum and nostreet never change a locality."""
+    lp = [parse_address_rule_based(v) for v in _compose_each(t)]
+    return pd.DataFrame({
+        "pc": t["postcode"].map(_nz).to_numpy(),
+        "ck": t["city"].map(city_key).to_numpy(),
+        "lp_pc": [_nz(p["postcode"]) for p in lp],
+        "lp_ck": [city_key(_nz(p["city"])) for p in lp],
+    })
+
+
+def _round3(v: float) -> float:
+    """F.round(v, 3): HALF_UP on the shortest decimal form of ``v``."""
+    if v != v:
+        return v
+    return float(Decimal(repr(v)).quantize(Decimal("0.001"), rounding=ROUND_HALF_UP))
+
+
+def _haversine_km(lat1, lon1, lat2, lon2) -> np.ndarray:
+    """geo.haversine_col over numpy arrays, term for term."""
+    lat1, lon1, lat2, lon2 = (np.asarray(v, dtype=np.float64) for v in (lat1, lon1, lat2, lon2))
+    p1, p2 = np.radians(lat1), np.radians(lat2)
+    a = (np.sin(np.radians(lat2 - lat1) / 2) ** 2
+         + np.cos(p1) * np.cos(p2) * np.sin(np.radians(lon2 - lon1) / 2) ** 2)
+    return 2 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a))
+
+
 # ---------------------------------------------------------------------------
-# cascade driver (pandas twin of geocode.cascade, keep side only)
+# the transformer ladder (the partition-local route below and each locality
+# group of geocode.cascade)
 # ---------------------------------------------------------------------------
 
 _PAYLOAD_OUT = [
@@ -619,79 +644,98 @@ _PAYLOAD_OUT = [
     "out_country_name", "out_other", "namedetails", "osm_order",
     "sim_street", "sim_street_which", "sim_house_number", "sim_post_code", "sim_city",
 ]
+_NO_ROWS = pd.DataFrame(columns=["addr_key", "match_on_cleansed_house_number", "reject_reason"])
 
 
 def cascade_kernel(
     addr: pd.DataFrame,
     pay: KernelPayload,
     check_results: bool = True,
-    transformers_sequence: list[list[str]] | None = None,
-) -> pd.DataFrame:
-    """Full transformer-ladder cascade over one pandas partition.
+    with_rejected: bool = False,
+):
+    """process_addresses (utils.py:1195-1279) over one pandas frame: each
+    stage of DEFAULT_TRANSFORMERS_SEQUENCE transforms the addresses not
+    matched yet (transform_and_process, utils.py:589-688), looks up,
+    checks and retries their unique composed addresses (_process_pdf) and
+    tags each match with the stage's ``method``.
 
     ``addr``: ADDR_COLS plus any carry columns (url, warc_ts, ...).
-    Returns RESULT_COLS + the original five address fields + carry columns
-    — the distributed cascade's keep frame, value-for-value.
+    Returns the keep frame: RESULT_COLS + the original five address
+    fields + carry columns. With ``with_rejected`` returns (keep, reject,
+    step_stats): ``reject`` holds REJECT_COLS, the rejected candidates of
+    every stage's first lookup with their distance to the address's
+    match; ``step_stats`` holds the reference's step_stats (utils.py:
+    678-686) for every stage whose todo is above 0: todo, match,
+    match_26, reject_rec, reject_addr and reject_mism, counted in input
+    rows (in ``_n_keys`` when ``addr`` carries that column), and
+    ``wall_s``, the seconds the stage took here.
     """
-    seqs = transformers_sequence or DEFAULT_TRANSFORMERS_SEQUENCE
     carry = [c for c in addr.columns if c not in ADDR_COLS]
     addr = addr.reset_index(drop=True)
     todo = addr[ADDR_COLS].copy()
-    pieces = []
+    weight = addr.set_index("addr_key")["_n_keys"] if "_n_keys" in addr else None
+    keeps, rejects, stats = [], [], []
 
-    for transformers in seqs:
+    def w(keys) -> int:
+        return len(keys) if weight is None else int(weight.loc[keys].sum())
+
+    for transformers in DEFAULT_TRANSFORMERS_SEQUENCE:
         if not len(todo):
             break
+        t0 = time.perf_counter()
         method = "+".join(transformers)
+        n_todo = w(todo.addr_key)
         cur = _transform_stage(todo, transformers, pay, check_results)
-        if not len(cur):
-            continue
-        memo_ta: dict[tuple, str] = {}
-        tas = []
-        for t in cur[_FIELDS].itertuples(index=False, name=None):
-            v = memo_ta.get(t)
-            if v is None:
-                v = _compose(*t)
-                memo_ta[t] = v
-            tas.append(v)
-        cur = cur.assign(transformed_address=tas)
-        uq = _unique_queries_pdf(cur)
-        keep_u, _ = _process_pdf(uq, pay, check_results)
-        if not len(keep_u):
-            continue
-        fan = cur[["addr_key", "transformed_address"]].merge(
-            keep_u[["transformed_address", "_retry_ta", "match_on_cleansed_house_number"]
-                   + _PAYLOAD_OUT],
-            on="transformed_address", how="inner",
-        )
-        if not len(fan):
-            continue
-        # retried rows report their CLEANSED composed address (utils.py:272-276)
-        fan["transformed_address"] = fan["_retry_ta"].where(
-            fan["_retry_ta"].notna(), fan["transformed_address"]
-        )
-        fan = fan.drop(columns=["_retry_ta"])
-        pieces.append((method, fan))
-        matched = set(fan["addr_key"])
-        todo = todo[~todo.addr_key.isin(matched)]
+        fan = rej = _NO_ROWS
+        if len(cur):
+            cur = cur.assign(transformed_address=_compose_each(cur))
+            keep_u, reject_u = _process_pdf(_unique_queries_pdf(cur), pay, check_results)
+            sent = cur[["addr_key", "transformed_address"]]
+            if len(keep_u):
+                fan = sent.merge(
+                    keep_u[["transformed_address", "_retry_ta", "match_on_cleansed_house_number"]
+                           + _PAYLOAD_OUT],
+                    on="transformed_address",
+                )
+                # retried rows report their CLEANSED composed address (utils.py:272-276)
+                fan["transformed_address"] = fan["_retry_ta"].where(
+                    fan["_retry_ta"].notna(), fan["transformed_address"]
+                )
+                fan = fan.drop(columns="_retry_ta").assign(method=method)
+                keeps.append(fan)
+                todo = todo[~todo.addr_key.isin(fan.addr_key)]
+            if with_rejected and len(reject_u):
+                rej = sent.merge(
+                    reject_u[["transformed_address", "reject_reason"] + _PAYLOAD_OUT],
+                    on="transformed_address",
+                ).assign(method=method, match_on_cleansed_house_number=False)
+                rejects.append(rej)
+        if with_rejected:
+            stats.append({
+                "method": method,
+                "wall_s": time.perf_counter() - t0,
+                "todo": n_todo,
+                "match": w(fan.addr_key),
+                "match_26": w(fan.addr_key[fan.match_on_cleansed_house_number.astype(bool)]),
+                "reject_rec": w(rej.addr_key),
+                "reject_addr": w(rej.addr_key.unique()),
+                "reject_mism": w(rej.addr_key[rej.reject_reason == "mismatch"].unique()),
+            })
 
-    if not pieces:
-        return _empty_result(carry)
-
-    outs = []
-    for method, fan in pieces:
-        fan = fan.copy()
-        fan["method"] = method
-        outs.append(fan)
-    res = pd.concat(outs, ignore_index=True)
+    keep = pd.concat(keeps, ignore_index=True) if keeps else pd.DataFrame(columns=RESULT_COLS)
     # original input fields + carry columns restored from the input row
-    res = res.merge(addr, on="addr_key", how="left")
-    cols = RESULT_COLS + _FIELDS + carry
-    return res[cols]
-
-
-def _empty_result(carry: list[str]) -> pd.DataFrame:
-    return pd.DataFrame(columns=RESULT_COLS + _FIELDS + carry)
+    keep = keep.merge(addr, on="addr_key", how="left")[RESULT_COLS + _FIELDS + carry]
+    if not with_rejected:
+        return keep
+    reject = pd.concat(rejects, ignore_index=True) if rejects else pd.DataFrame(
+        columns=REJECT_COLS[:-1]
+    )
+    # distance from each reject to its address's match (utils.py:1080-1093)
+    m = reject[["addr_key"]].merge(keep[["addr_key", "lat", "lon"]], on="addr_key", how="left")
+    reject["distance_to_match"] = [
+        _round3(d) for d in _haversine_km(reject.lat, reject.lon, m.lat, m.lon)
+    ]
+    return keep, reject[REJECT_COLS], stats
 
 
 # ---------------------------------------------------------------------------

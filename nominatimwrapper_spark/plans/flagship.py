@@ -180,8 +180,9 @@ def geocode_and_tile(
       (each task pays a fixed start-up cost in the Python worker). A task
       gets about minPartitionSize (1 MB) of shuffled pages or more, so
       the kernel runs at full width only above defaultParallelism x 1 MB.
-    - above the broadcast gate: the distributed Column cascade with shuffle
-      joins (operators/geocode.py).
+    - above the broadcast gate: operators/geocode.cascade, the same
+      ladder run once per locality group in one cogrouped pandas stage,
+      with shuffle joins.
 
     Both give the same schema, values and dtypes. ``addr_key`` is
     ``url#pos``, so it can only repeat where a url repeats.

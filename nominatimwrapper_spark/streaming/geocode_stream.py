@@ -9,9 +9,9 @@ Two regimes, picked by the gazetteer broadcast gate:
   dedup state -> mapInPandas kernel -> file sink. No foreachBatch, no
   per-epoch driver orchestration; exactly-once from the sink's
   _spark_metadata commit log.
-- **above the broadcast gate**: the cascade's driver loop (per-stage
-  counts, working-set shrink, local checkpoints) is batch control flow
-  that Structured Streaming cannot run inside a single logical plan — the
+- **above the broadcast gate**: the cascade's eager checkpoints and the
+  gates it sizes from measured counts are batch control flow that
+  Structured Streaming cannot run inside a single logical plan — the
   stream reuses it per micro-batch via ``foreachBatch``, Spark's
   canonical pattern for lifting batch logic into a stream.
 

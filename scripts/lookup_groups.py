@@ -1,21 +1,24 @@
 #!/usr/bin/env python
 # -*- coding: utf-8 -*-
-"""Lookup-stage group sizes and cascade cost in the above-gate regime.
+"""Locality-group sizes of the ladder stage and cascade cost in the
+above-gate regime.
 
 Generates a synthetic world, builds its index with broadcast_max_bytes=0
 and auto-broadcast off (the shuffle regime a planet gazetteer runs in),
 then reports:
 
-- for two query sets, the cascade's first stage (the addresses as given)
-  and its last (street and house number blanked, as ``nostreet`` does):
-  the number of lookup groups, queries and gazetteer rows per group
-  (median and max), and each group's pandas call timed one by one on the
+- for the addresses' unique tuples, the groups of the ladder stage
+  (geocode._locality_groups): the number of groups, tuples ("queries")
+  and gazetteer rows per group (median and max), the rows sent in all
+  and the replication (rows sent / lookup rows; a row reaching a group
+  through both its postcode and its city key counts twice, once in the
+  distinct rows sent), and each
+  group's pandas call (geocode._group_pdf) timed one by one on the
   driver (median and max);
 - the cascade's wall and CPU seconds (driver, JVM and Python workers)
   per call, after one warm-up call.
 
-The group figures need geocode._lookup_groups; on a checkout without it
-only the cascade figures are printed. Usage:
+Usage:
 
     python scripts/lookup_groups.py [n_streets] [houses_per_street] [n_per_class] [calls]
 
@@ -61,30 +64,29 @@ def quantiles(xs) -> dict:
 
 
 def group_sizes(addr, index) -> dict:
-    from pyspark.sql import functions as F
-
     from nominatimwrapper_spark.operators.geocode import (
-        _lookup_group_pdf,
-        _lookup_groups,
-        _unique_queries,
-        compose_address_col,
+        _group_pdf,
+        _locality_groups,
+        _tuple_key,
+        _unique_tuples,
     )
 
-    ta = compose_address_col(*[F.col(c) for c in ("street", "housenbr", "postcode", "city", "country")])
-    uq = _unique_queries(addr.withColumn("transformed_address", ta)).localCheckpoint(eager=True)
-    n_uq = uq.count()
-    q, lk = _lookup_groups(uq.drop("_n_keys"), index, n_uq)
+    tuples = _unique_tuples(addr.withColumn("_tk", _tuple_key())).localCheckpoint(eager=True)
+    n_uq = tuples.count()
+    q, lk = _locality_groups(tuples, index, n_uq)
     qp, gp = q.toPandas(), lk.toPandas()
     secs = []
     for b, qg in qp.groupby("_b"):
         t0 = time.perf_counter()
-        _lookup_group_pdf(qg, gp[gp._b == b], True)
+        _group_pdf(qg, gp[gp._b == b], True, True, False)
         secs.append(round(time.perf_counter() - t0, 3))
     return {
-        "unique_queries": n_uq,
+        "unique_tuples": n_uq,
         "queries_per_group": quantiles(qp.groupby("_b").size().tolist()),
         "gazetteer_rows_per_group": quantiles(gp.groupby("_b").size().tolist()),
         "gazetteer_rows_sent": len(gp),
+        "replication": round(len(gp) / index.lookup.count(), 3),
+        "distinct_rows_sent": len(gp.drop_duplicates(["_b", "key_street", "place_id"])),
         "seconds_per_group": quantiles(secs),
     }
 
@@ -92,8 +94,6 @@ def group_sizes(addr, index) -> dict:
 def main() -> None:
     args = [int(a) for a in sys.argv[1:5]]
     n_streets, houses, per_class, calls = args + [600, 30, 500, 3][len(args):]
-
-    from pyspark.sql import functions as F
 
     from nominatimwrapper_spark.operators import geocode
     from nominatimwrapper_spark.session import get_spark
@@ -117,9 +117,7 @@ def main() -> None:
         "n_streets": n_streets, "houses_per_street": houses, "addresses": len(a),
         "gazetteer_rows": len(w["gazetteer"]), "lookup_rows": index.lookup.count(),
     }
-    if hasattr(geocode, "_lookup_groups"):
-        nostreet = addr.withColumn("street", F.lit("")).withColumn("housenbr", F.lit(""))
-        out["groups"] = {"orig": group_sizes(addr, index), "nostreet": group_sizes(nostreet, index)}
+    out["groups"] = group_sizes(addr, index)
     walls, cpus = [], []
     for i in range(calls + 1):
         c0, t0 = tree_cpu_s(), time.perf_counter()

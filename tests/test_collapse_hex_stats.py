@@ -233,3 +233,37 @@ def test_cascade_step_stats(spark, tmp_path_factory):
     assert {"reject_rec", "reject_addr", "reject_mism"} <= set(stats[0].keys())
     # per-stage wall-time accounting (reference timestats, base.py:275-301)
     assert all(s["wall_s"] >= 0 for s in stats)
+
+
+# the step stats the per-stage Column ladder reported on the
+# test_cascade_step_stats world (method, todo, match, match_26; every
+# reject count was 0), pinned when the ladder became one grouped stage
+_COLUMN_LADDER_STATS = [
+    ("orig", 22, 10, 2), ("regex[init]", 12, 4, 0), ("libpostal+regex[lpost]", 8, 2, 0),
+    ("libpostal+regex[lpost]+photon", 6, 2, 0), ("nonum", 4, 0, 0),
+    ("libpostal+regex[lpost]+nonum", 4, 0, 0), ("libpostal+regex[lpost]+photon+nonum", 4, 0, 0),
+    ("photon", 4, 0, 0), ("photon+nonum", 4, 0, 0), ("nostreet", 4, 2, 0),
+]
+
+
+def test_cascade_step_stats_equal_the_column_ladder(spark, tmp_path_factory):
+    """with_stats derives todo, match, match_26 and the reject counts from
+    the ladder stage's own rows; on the test_cascade_step_stats world they
+    equal what the per-stage Column ladder counted with its count() jobs."""
+    from nominatimwrapper_spark.operators.geocode import build_gazetteer_index, cascade
+    from nominatimwrapper_spark.synth import gen_world, write_world
+
+    d = tmp_path_factory.mktemp("stats_world_pin")
+    write_world(str(d), gen_world(n_streets=40, houses_per_street=4, n_pages=5, n_per_class=2))
+    index = build_gazetteer_index(spark.read.parquet(f"{d}/gazetteer.parquet"))
+    addr = spark.read.parquet(f"{d}/addresses.parquet").selectExpr(
+        "referenceKey as addr_key", "streetName as street", "houseNumber as housenbr",
+        "postCode as postcode", "postName as city", "countryName as country"
+    )
+    _, _, stats = cascade(addr, index, with_stats=True)
+    assert [
+        {k: v for k, v in s.items() if k != "wall_s"} for s in stats
+    ] == [
+        dict(method=m, todo=t, match=n, match_26=n26, reject_rec=0, reject_addr=0, reject_mism=0)
+        for m, t, n, n26 in _COLUMN_LADDER_STATS
+    ]

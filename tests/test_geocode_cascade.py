@@ -213,6 +213,40 @@ def test_non_broadcast_path_same_results(spark, world, index, cascade_out):
     pd.testing.assert_frame_equal(b, s)
 
 
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` starts, counted under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("broadcast_ok", [True, False])
+def test_cascade_job_count(spark, world, index, broadcast_ok):
+    """One cascade() call over the 62 fixture addresses runs the ladder as
+    one cogrouped stage: 15-16 jobs in the broadcast regime and 15 in the
+    shuffle regime (the per-stage Column ladder ran 272-273 and 305-308).
+    with_stats adds at most one job (it added 82-86)."""
+    import dataclasses
+
+    ix = index if broadcast_ok else dataclasses.replace(index, broadcast_ok=False)
+    addr = spark.createDataFrame(
+        world["addresses"].rename(
+            columns=dict(
+                referenceKey="addr_key", streetName="street", houseNumber="housenbr",
+                postCode="postcode", postName="city", countryName="country",
+            )
+        )[["addr_key", "street", "housenbr", "postcode", "city", "country"]]
+    )
+    n = _jobs_of(spark, f"cascade-{broadcast_ok}", lambda: cascade(addr, ix))
+    n_stats = _jobs_of(spark, f"cascade-stats-{broadcast_ok}", lambda: cascade(addr, ix, with_stats=True))
+    assert n <= 16 + 2, n
+    assert n_stats <= n + 1, (n, n_stats)
+
+
 def test_flagship_output_pinned(spark):
     """Value-level gate behind the rows-only ``geocode_flagship`` driver
     row: the COMPLETE sf0.001 flagship output (sorted, quantized lat/lon,
@@ -422,31 +456,47 @@ def test_retried_house_number_shared_by_two_inputs(spark, reject_world, broadcas
 
 @pytest.mark.parametrize("below_gate", [True, False])
 def test_fanback_gate_boundary_keeps_golden_rows(spark, reject_world, monkeypatch, below_gate):
-    """The fan-back gate on each side of its threshold: at the first
-    stage's unique count keep_u is broadcast to the fan-back join, one
+    """The fan-back gate on each side of its threshold: at the unique
+    tuple count the ladder's rows are broadcast to the fan-back join, one
     below it the join shuffles. The keep and reject rows equal the golden
     either way."""
     from nominatimwrapper_spark.operators import geocode
 
     gaz, addr = reject_world
     index = build_gazetteer_index(gaz)
-    sent = addr.withColumn(
-        "transformed_address",
-        geocode.compose_address_col(*[F.col(c) for c in geocode.ADDR_COLS[1:]]),
-    )
-    n_first = sent.select("transformed_address").distinct().count()
-    monkeypatch.setattr(geocode, "_FAN_BROADCAST_MAX_UNIQUES", n_first - (not below_gate))
-    _assert_golden(*_golden_rows(*cascade(addr, index)))
-
+    n_uq = addr.select(*geocode.ADDR_COLS[1:]).distinct().count()
+    monkeypatch.setattr(geocode, "_FAN_BROADCAST_MAX_UNIQUES", n_uq - (not below_gate))
     thr = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(thr)
     spark.conf.set(thr, "-1")  # only the gate's hint may broadcast
     try:
-        keep = geocode._process(sent, index, True)[0]
-        plan = keep._sc._jvm.PythonSQLUtils.explainString(keep._jdf.queryExecution(), "simple")
+        res, rej = cascade(addr, index)
+        plan = res._sc._jvm.PythonSQLUtils.explainString(res._jdf.queryExecution(), "simple")
+        _assert_golden(*_golden_rows(res, rej))
     finally:
         spark.conf.set(thr, old)
     assert ("BroadcastHashJoin" in plan) == below_gate, plan
+
+
+@pytest.mark.parametrize("broadcast_max_bytes", [800 * 1024 * 1024, 0])
+def test_step_stats_count_rejects(spark, reject_world, broadcast_max_bytes):
+    """with_stats on the golden reject world, in both regimes: the orig
+    stage counts the tail and the mismatch reject (two rows, two
+    addresses, one mismatch), and later stages none, as the per-stage
+    Column ladder counted them; without rejects the reject counts are
+    left out."""
+    gaz, addr = reject_world
+    index = build_gazetteer_index(gaz, broadcast_max_bytes=broadcast_max_bytes)
+    todo = [15, 7, 5, 4, 3, 3, 3, 3, 3, 3]
+    match = [8, 2, 1, 1, 0, 0, 0, 0, 0, 2]
+    _, _, stats = cascade(addr, index, with_stats=True)
+    assert [(s["todo"], s["match"]) for s in stats] == list(zip(todo, match))
+    assert [s["match_26"] for s in stats] == [1] + [0] * 9
+    rejects = [(s["reject_rec"], s["reject_addr"], s["reject_mism"]) for s in stats]
+    assert rejects == [(2, 2, 1)] + [(0, 0, 0)] * 9
+    _, _, stats = cascade(addr, index, with_stats=True, with_rejected=False)
+    assert [(s["todo"], s["match"]) for s in stats] == list(zip(todo, match))
+    assert all(set(s) == {"method", "wall_s", "todo", "match", "match_26"} for s in stats)
 
 
 def test_duplicate_key_guard(spark, index):
@@ -485,39 +535,43 @@ def test_city_key_levels_without_postcode(spark, reject_world, broadcast_max_byt
 
 @pytest.mark.parametrize("broadcast_max_bytes", [800 * 1024 * 1024, 0])
 def test_retry_fields_are_picked_per_group(spark, reject_world, monkeypatch, broadcast_max_bytes):
-    """The low-rank retry picks its representative fields per lookup
+    """The low-rank retry picks its representative fields per locality
     group. Two inputs whose cleansed composed addresses coincide but whose
     localities differ (city "C" and country "Belgique", against city
     "C, Belgique" and no country) sit in different groups, so each is
     retried with its own fields: both get the house, and the second scores
-    its own city, not the min of the two cities (geocode._unique_queries
-    documents the pick as arbitrary; this pins the per-group choice)."""
+    its own city, not the min of the two cities
+    (geocode_kernel._unique_queries_pdf documents the pick as arbitrary;
+    this pins the per-group choice). The house is the first whose two
+    localities hash to different groups of two."""
     from nominatimwrapper_spark.functions.textnorm import city_compare_one
     from nominatimwrapper_spark.operators import geocode
-    from nominatimwrapper_spark.operators.geocode import (
-        _lookup_groups,
-        _unique_queries,
-        compose_address_col,
-    )
 
     gaz, _ = reject_world
-    house = gaz.filter("place_rank = 30").orderBy("place_id").first()
-    hn = house.house_number
-    addr = spark.createDataFrame(pd.DataFrame(
-        dict(addr_key=["loc-a", "loc-b"], street=[house.name_fr] * 2,
-             housenbr=[f"{hn} bt 2", f"{hn} bte 3"], postcode=[house.post_code] * 2,
-             city=[house.city, f"{house.city}, Belgique"], country=["Belgique", ""])
-    ))
-    # one group per unique query
-    monkeypatch.setattr(geocode, "_UQ_ROWS_PER_TASK", 1)
+
+    def inputs(house):
+        hn = house.house_number
+        return pd.DataFrame(dict(
+            addr_key=["loc-a", "loc-b"], street=[house.name_fr] * 2,
+            housenbr=[f"{hn} bt 2", f"{hn} bte 3"], postcode=[house.post_code] * 2,
+            city=[house.city, f"{house.city}, Belgique"], country=["Belgique", ""],
+        ))
+
     index = build_gazetteer_index(gaz, broadcast_max_bytes=broadcast_max_bytes)
-    uq = _unique_queries(addr.withColumn(
-        "transformed_address",
-        compose_address_col(*[F.col(c) for c in ("street", "housenbr", "postcode", "city", "country")]),
-    ))
-    q, _ = _lookup_groups(uq, index, 2)
-    assert q.select("_b").distinct().count() == 2
-    res, _ = cascade(addr, index)
+    houses = gaz.filter("place_rank = 30").orderBy("place_id").limit(10).collect()
+    both = pd.concat([inputs(h).assign(house=i) for i, h in enumerate(houses)])
+    # one group per unique tuple: two groups for the two inputs of a house
+    monkeypatch.setattr(geocode, "_UQ_ROWS_PER_TASK", 1)
+    tuples = geocode._unique_tuples(
+        spark.createDataFrame(both.drop(columns="house")).withColumn("_tk", geocode._tuple_key())
+    )
+    q, _ = geocode._locality_groups(tuples, index, 2)
+    fields = geocode.ADDR_COLS[1:]
+    groups = both.merge(q.select(*fields, "_b").toPandas(), on=fields)
+    n_groups = groups.groupby("house")._b.nunique()
+    assert (n_groups == 2).any(), n_groups
+    house = houses[n_groups.index[n_groups == 2].min()]
+    res, _ = cascade(spark.createDataFrame(inputs(house)), index)
     got = res.toPandas().set_index("addr_key").sort_index()
     assert list(got.index) == ["loc-a", "loc-b"]
     assert (got.place_id == house.place_id).all() and got.match_on_cleansed_house_number.all()

@@ -80,6 +80,100 @@ def test_cascade_kernel_matches_distributed_on_all_fixture_classes(
     pd.testing.assert_frame_equal(e, g, check_dtype=False)
 
 
+def _int_cols(df: pd.DataFrame, cols) -> pd.DataFrame:
+    df = df[cols].sort_values(["addr_key", "method", "place_id"]).reset_index(drop=True)
+    for c in ("place_id", "place_rank", "osm_order"):
+        df[c] = df[c].astype("int64")
+    return df
+
+
+@pytest.fixture(scope="module")
+def photon_moves(spark, world, fixture_addrs, tmp_path_factory):
+    """The fixture world plus an address photon moves to another
+    locality: street S of (P1, C1) reports postcode P2 (same first two
+    digits, so the photon check keeps it) and city "Neuville" in its
+    address map, and a street T of the same name lies in (P2,
+    "Neuville"). S misspelled in (P1, C1) is corrected by photon to S's
+    output fields, which the lookup then finds as T. In the generated
+    worlds a street's output postcode and city are its own, so without
+    this address photon never changes a query's locality."""
+    gaz = world["gazetteer"].copy()
+    s = gaz[gaz.place_rank == 26].iloc[0]
+    p2 = s.post_code[:2] + "99"
+    moved = {k: v for k, v in s.address.items()
+             if k not in ("town", "village", "city_district", "county", "city", "postcode")}
+    moved.update(postcode=p2, city="Neuville")
+    gaz["address"] = [moved if pid == s.place_id else a for pid, a in zip(gaz.place_id, gaz.address)]
+    t = gaz.loc[gaz.place_id == s.place_id].assign(
+        place_id=gaz.place_id.max() + 1, post_code=p2, city="Neuville", lat=s.lat + 0.05
+    )
+    gaz = pd.concat([gaz, t], ignore_index=True)
+    d = tmp_path_factory.mktemp("photon_moves")
+    write_world(str(d), {"gazetteer": gaz})
+    name = s.name_fr
+    i = name.rfind(" ") + 2
+    typo = name[:i] + name[i + 1] + name[i] + name[i + 2:]
+    addrs = pd.concat([fixture_addrs, pd.DataFrame([dict(
+        addr_key="photon-moves", street=typo, housenbr="", postcode=s.post_code, city=s.city,
+        country="Belgique",
+    )])], ignore_index=True)
+    return build_gazetteer_index(spark.read.parquet(f"{d}/gazetteer.parquet")), addrs
+
+
+@pytest.mark.parametrize("broadcast_ok", [True, False])
+def test_locality_groups_hold_every_row_the_ladder_reaches(
+    spark, photon_moves, monkeypatch, broadcast_ok
+):
+    """With one group per unique tuple (the group key hashes the tuple key
+    instead of its locality), cascade() still equals cascade_kernel on the
+    whole gazetteer, keep and reject rows, on every fixture class: each
+    group holds every gazetteer row its ladder can reach, through its own
+    locality, its libpostal parse's (the lpost class) and those of the
+    streets photon can pick (the photon-moves address)."""
+    from pyspark.sql import functions as F
+
+    from nominatimwrapper_spark.operators import geocode
+    from nominatimwrapper_spark.operators.geocode_kernel import REJECT_COLS
+
+    index, addrs = photon_moves
+    monkeypatch.setattr(geocode, "_group_col", lambda n_uq: F.xxhash64("_tk"))
+    ix = index if broadcast_ok else dataclasses.replace(index, broadcast_ok=False)
+    res, rej = cascade(spark.createDataFrame(addrs), ix)
+    exp_keep, exp_rej, _ = cascade_kernel(
+        addrs.copy(), build_kernel_payload(index), with_rejected=True
+    )
+    moves = exp_keep.set_index("addr_key").loc["photon-moves"]
+    assert moves.method == "libpostal+regex[lpost]+photon" and moves.out_post_name == "Neuville"
+    got = res.toPandas()
+    assert len(got) == len(exp_keep) > 0
+    pd.testing.assert_frame_equal(
+        _int_cols(got, CMP_COLS), _int_cols(exp_keep, CMP_COLS), check_dtype=False
+    )
+    pd.testing.assert_frame_equal(
+        _int_cols(rej.toPandas(), REJECT_COLS), _int_cols(exp_rej, REJECT_COLS),
+        check_dtype=False,
+    )
+
+
+def test_gazetteer_broadcast_gate_boundary(spark, world, index):
+    """The gazetteer broadcast gate on each side of its threshold: at the
+    measured lookup bytes (row count x _avg_row_bytes) the index is
+    broadcast and geocode_and_tile runs the partition-local kernel, one
+    byte below it runs cascade(); both give the same rows."""
+    from nominatimwrapper_spark.operators.geocode import _avg_row_bytes
+    from nominatimwrapper_spark.plans.flagship import geocode_and_tile
+
+    measured = index.lookup.count() * _avg_row_bytes(index.lookup)
+    gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
+    at = build_gazetteer_index(gaz, broadcast_max_bytes=measured)
+    below = build_gazetteer_index(gaz, broadcast_max_bytes=measured - 1)
+    assert at.broadcast_ok and not below.broadcast_ok
+    pages = spark.createDataFrame(world["pages"]).localCheckpoint(eager=True)
+    exp = _sorted(geocode_and_tile(pages, at))
+    assert len(exp) > 0
+    pd.testing.assert_frame_equal(exp, _sorted(geocode_and_tile(pages, below)))
+
+
 @pytest.fixture(scope="module")
 def flagship_pages(spark) -> pd.DataFrame:
     from nominatimwrapper_spark.plans.flagship import pages_from_documents

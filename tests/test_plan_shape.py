@@ -48,40 +48,37 @@ def _join_sections(plan: str, kind: str) -> list[str]:
 
 
 def test_lookup_is_one_cogrouped_stage(spark, tmp_path_factory):
-    """Lookup, check and retry of the unique queries are ONE grouped
-    pandas stage over the gazetteer rows the queried localities reach: one
-    join on (street key, postcode), one on (street key, city key). Under
-    the broadcast gate the locality side of both is broadcast; in the
+    """The whole ladder of the unique tuples is ONE grouped pandas stage
+    over the gazetteer rows their locality groups reach: one join of the
+    groups' localities with the streets photon can pick, one with the
+    lookup rows, both on the (kind, key) locality key. Under the
+    broadcast gate the locality side of both is broadcast; in the
     >broadcast-gate regime (a several-GB planet gazetteer, auto-broadcast
     off) nothing is — a broadcast planet gazetteer would OOM every
     executor."""
-    from nominatimwrapper_spark.operators.geocode import (
-        _lookup_and_check,
-        _unique_queries,
-        build_gazetteer_index,
-    )
+    from nominatimwrapper_spark.operators import geocode
     from nominatimwrapper_spark.synth import gen_world, write_world
 
     def stage_plan(index, addr) -> str:
-        uq = _unique_queries(addr)
-        return _formatted(_lookup_and_check(uq, index, True, n_uq=uq.count()))
+        tuples = geocode._unique_tuples(addr.withColumn("_tk", geocode._tuple_key()))
+        return _formatted(geocode._ladder_stage(tuples, index, tuples.count()))
 
-    def locality_joins(plan: str, kind: str) -> list[str]:
-        return sorted(
-            k for sec in _join_sections(plan, kind) for k in ("post_code", "key_city")
-            if "Join type: Inner" in sec and re.search(rf"Left keys \[2\]: \[_sk#\d+, {k}#", sec)
+    def locality_joins(plan: str, kind: str) -> int:
+        return sum(
+            "Join type: Inner" in sec and bool(re.search(r"Left keys \[2\]: \[kind#\d+, key#", sec))
+            for sec in _join_sections(plan, kind)
         )
 
     d = tmp_path_factory.mktemp("plan_world")
     write_world(str(d), gen_world(n_streets=30, houses_per_street=4, n_pages=5, n_per_class=1))
-    index = build_gazetteer_index(spark.read.parquet(f"{d}/gazetteer.parquet"))
+    index = geocode.build_gazetteer_index(spark.read.parquet(f"{d}/gazetteer.parquet"))
     addr = spark.read.parquet(f"{d}/addresses.parquet").selectExpr(
         "referenceKey as addr_key", "streetName as street", "houseNumber as housenbr",
         "postCode as postcode", "postName as city", "countryName as country"
-    ).withColumn("transformed_address", F.col("street"))
+    )
     plan = stage_plan(index, addr)
     assert plan.count("FlatMapCoGroupsInPandas (") == 1, plan
-    assert locality_joins(plan, "BroadcastHashJoin") == ["key_city", "post_code"], plan
+    assert locality_joins(plan, "BroadcastHashJoin") == 2, plan
 
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -94,7 +91,7 @@ def test_lookup_is_one_cogrouped_stage(spark, tmp_path_factory):
         # broadcast-compiled InMemoryRelation
         d2 = tmp_path_factory.mktemp("plan_world_nobc")
         write_world(str(d2), gen_world(n_streets=30, houses_per_street=4, n_pages=5, n_per_class=1))
-        index_nobc = build_gazetteer_index(
+        index_nobc = geocode.build_gazetteer_index(
             spark.read.parquet(f"{d2}/gazetteer.parquet"), broadcast_max_bytes=0
         )
         assert index_nobc.broadcast_ok is False
@@ -103,7 +100,7 @@ def test_lookup_is_one_cogrouped_stage(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
     assert plan_nobc.count("FlatMapCoGroupsInPandas (") == 1, plan_nobc
     assert "BroadcastExchange" not in plan_nobc
-    assert locality_joins(plan_nobc, "SortMergeJoin") == ["key_city", "post_code"], plan_nobc
+    assert locality_joins(plan_nobc, "SortMergeJoin") == 2, plan_nobc
 
 
 def test_column_math_stays_in_codegen(spark):

@@ -274,8 +274,9 @@ def _pentagon_cloud(n=120, seed=3):
 def test_knn_h3_exact_near_pentagon(spark):
     """ADVICE (round 3, high): the r*min_spacing finish bound was
     unsound for hex grid distance near pentagon-distorted regions. The
-    calibrated per-ring reach bound must keep knn_h3 value-identical to
-    brute force for query/target points AT the distortion extreme."""
+    in-reach join over each query's grid_disk must keep knn_h3
+    value-identical to brute force for query/target points AT the
+    distortion extreme."""
     from nominatimwrapper_spark.operators.spatial import knn_h3
 
     cloud = _pentagon_cloud(150)
@@ -296,7 +297,7 @@ def test_knn_h3_exact_near_pentagon(spark):
 
 
 def test_knn_h3_shuffle_regime_matches_bruteforce(spark, world):
-    """Above the broadcast byte gate the per-ring join degrades to a
+    """Above the broadcast byte gate the in-reach join degrades to a
     shuffle hash join — same values either way."""
     from nominatimwrapper_spark.operators.spatial import knn_h3
 
@@ -427,10 +428,9 @@ def test_pip_h3_cover_auto_res(spark):
 
 
 def test_knn_h3_k_exceeds_targets_sphere_exhausted(spark):
-    """k larger than the whole target set at a coarse res: the BFS
-    exhausts the sphere and the exhausted-cell finish returns every
-    target per query (matching brute force) without riding out
-    max_rings."""
+    """k larger than the whole target set at a coarse res: each query's
+    grid_disk covers the whole sphere, so the in-reach join returns
+    every target per query (matching brute force)."""
     from nominatimwrapper_spark.operators.spatial import knn_h3
 
     targets = spark.createDataFrame(
@@ -505,9 +505,9 @@ def _in_reach(tiling, qlat, qlon, tpdf):
 @pytest.mark.parametrize("force_no_broadcast", [False, True])
 @pytest.mark.parametrize("tiling", ["cells", "h3"])
 def test_knn_max_rings_cutoff_returns_in_reach_only(spark, tiling, force_no_broadcast):
-    """max_rings=1 with the k nearest targets beyond ring 1: the last ring
-    finalizes whatever the searched disk holds, ranked from 1 — the
-    in-reach targets only, in brute-force order."""
+    """max_rings=1 with the k nearest targets beyond ring 1: the in-reach
+    join returns whatever the disk of radius 1 holds, ranked from 1 —
+    the in-reach targets only, in brute-force order."""
     qpdf, tpdf = _cutoff_layout()
     near = _in_reach(tiling, qpdf.lat[0], qpdf.lon[0], tpdf)
     assert 0 < len(near) < 4 and len(near) < len(tpdf)
@@ -529,8 +529,8 @@ def test_knn_max_rings_cutoff_returns_in_reach_only(spark, tiling, force_no_broa
 @pytest.mark.parametrize("tiling", ["cells", "h3"])
 def test_knn_k_exceeds_targets_returns_every_target(spark, tiling, force_no_broadcast):
     """k larger than the whole target table, every target within
-    max_rings: no query ever holds k candidates, so each runs to the last
-    ring and gets every target exactly once, in brute-force order."""
+    max_rings: no query's disk holds k candidates, so each gets every
+    target exactly once, in brute-force order."""
     qpdf, tpdf = _cutoff_layout()
     tpdf = tpdf.iloc[:3]
     qpdf = pd.concat([qpdf, pd.DataFrame(dict(
@@ -611,11 +611,11 @@ def test_rollup_boundary_export_pipeline(spark):
 
 
 def test_knn_unpersists_target_cache(spark, world, monkeypatch):
-    """knn_cells / knn_h3 cache the narrow target projection for the ring
-    loop; after the call returns that cache must be RELEASED (regression:
-    each call leaked one cached projection into executor storage for the
-    app lifetime — long-lived sessions making many kNN calls accrete
-    storage until the storage fraction is exhausted).
+    """knn_cells / knn_h3 cache the narrow target projection for the
+    in-reach join; after the call returns that cache must be RELEASED
+    (regression: each call leaked one cached projection into executor
+    storage for the app lifetime — long-lived sessions making many kNN
+    calls accrete storage until the storage fraction is exhausted).
 
     Deterministic check: intercept DataFrame.cache() during the calls and
     assert every frame cached inside kNN reports a non-persisted storage
