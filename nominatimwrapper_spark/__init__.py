@@ -20,8 +20,8 @@ operators/   dataflow operators: geocode cascade (Spark data movement) and
              dedup
 sources/     partitioned parquet reader/writer + per-partition checkpoint
              manifests (resume without recompute)
-streaming/   Structured Streaming: the geocode stream (flagship per
-             micro-batch, checkpoint resume) + stateful first-seen dedup
+streaming/   Structured Streaming: the geocode stream (first-seen recrawl
+             dedup, flagship per micro-batch, checkpoint resume)
 """
 
 __version__ = "0.1.0"

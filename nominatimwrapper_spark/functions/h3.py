@@ -15,10 +15,11 @@ Seeded published constants (the ONLY recalled data):
     invariants (antipodal pairs, uniform inter-face angles) in tests;
   * the 122 base cells' home (face, i, j, k) coordinates + the 12
     pentagon flags (+ the published cwOffsetPent pairs as seeds, which
-    the solver below independently REPRODUCES — strong corroboration).
+    the solver independently REPRODUCES — strong corroboration).
 
-DERIVED (solved, not recalled) data — embedded as literals at the bottom
-of this module and re-derived/asserted equal in tests/test_h3.py:
+DERIVED (solved, not recalled) data — embedded as literals below, solved
+by scripts/gen_h3_tables.py and re-derived/asserted equal in
+tests/test_h3.py:
   * ``_FACE_BC``: (face, i, j, k) -> base cell for every face coordinate
     in {0..2}^3, matched geometrically against the 122 home-chart cell
     centers (unambiguous: distortion < 0.09 rad vs 0.38 rad spacing).
@@ -357,19 +358,8 @@ def _down_ap7(i, j, k, class_iii):
 
 
 # ---------------------------------------------------------------------------
-# derived orientation table: (face, i, j, k) -> (base cell, ccw rotations)
+# digit canonicalization: pentagon leading-K fix + chart rotation
 # ---------------------------------------------------------------------------
-
-
-def _base_cell_centers():
-    """(lat, lng) of each base cell from its home face coordinates."""
-    lats = np.empty(NUM_BASE_CELLS)
-    lngs = np.empty(NUM_BASE_CELLS)
-    for c, (f, i, j, k) in enumerate(_BASE_CELL_HOME):
-        x, y = _ijk_to_hex2d(np.int64(i), np.int64(j), np.int64(k))
-        lat, lng = _hex2d_to_geo(np.float64(x), np.float64(y), f, 0)
-        lats[c], lngs[c] = float(lat), float(lng)
-    return lats, lngs
 
 
 _IS_PENT = np.zeros(NUM_BASE_CELLS, dtype=bool)
@@ -408,7 +398,7 @@ def _digits_on_face(lat, lng, face, res):
     """Digit extraction with the chart FORCED to ``face``: returns the
     res-0 (i, j, k) the point aggregates to on that chart plus the (n,
     res) digit matrix. Used by the hot path (with the closest face) and
-    by the orientation-table derivation (with both candidate charts)."""
+    by scripts/gen_h3_tables.py (with both candidate charts)."""
     face_arr = np.broadcast_to(np.asarray(face), np.shape(lat)).astype(np.int64)
     _, x, y = _geo_to_hex2d(lat, lng, res, face=face_arr)
     i, j, k = _hex2d_to_ijk(x, y)
@@ -430,7 +420,7 @@ def _canonical_digits(digits, cell, face, rot, res, cw_override=None):
     """Apply the pentagon leading-K fix + ``rot`` ccw rotations to a digit
     matrix computed on ``face`` for base cell ``cell`` (the tail of the
     published _faceIjkToH3), returning canonical digits. ``cw_override``
-    (solver use) replaces the _CW_OFFSET table lookup."""
+    (scripts/gen_h3_tables.py) replaces the _CW_OFFSET table lookup."""
     digits = digits.copy()
     n = len(digits)
     pent = np.broadcast_to(_IS_PENT[cell], (n,))
@@ -451,461 +441,10 @@ def _canonical_digits(digits, cell, face, rot, res, cw_override=None):
     return digits
 
 
-def _center_from_digits(digits, home_face, hi, hj, hk, res):
-    """Reconstruct each row's cell center geo position by walking the
-    canonical digits down from the base cell's home coordinates and
-    projecting through the home chart (no overage handling — good to the
-    gnomonic-distortion level, plenty for the rotation solver)."""
-    n = len(digits)
-    i = np.full(n, hi, dtype=np.int64)
-    j = np.full(n, hj, dtype=np.int64)
-    k = np.full(n, hk, dtype=np.int64)
-    for r in range(1, res + 1):
-        class_iii = (r % 2) == 1
-        i, j, k = _down_ap7(i, j, k, class_iii)
-        d = digits[:, r - 1]
-        du = np.array([0, 0, 0, 0, 1, 1, 1], dtype=np.int64)[d]
-        dv = np.array([0, 0, 1, 1, 0, 0, 1], dtype=np.int64)[d]
-        dw = np.array([0, 1, 0, 1, 0, 1, 0], dtype=np.int64)[d]
-        i, j, k = _ijk_normalize(i + du, j + dv, k + dw)
-    x, y = _ijk_to_hex2d(i, j, k)
-    return _hex2d_to_geo(x, y, home_face, res)
-
-
-def _derive_face_ijk_table(res: int = 2):
-    """Build _FACE_BC / _FACE_ROT / pentagon cw flags from the seeded
-    geometry — combinatorially, with no recalled orientation table.
-
-    Membership (_FACE_BC): each face coordinate ijk in {0..2}^3 names the
-    res-0 cell whose (distortion-displaced) chart grid point lies nearest
-    among the 122 home-chart cell centers; asserted unambiguous (the
-    displacement is < 0.09 rad vs ~0.38 rad cell spacing).
-
-    Orientation (_FACE_ROT + cw flags): H3's published tables make
-    latLngToCell CONTINUOUS across closest-face routing boundaries — two
-    points a hair apart on either side of a face seam, inside the same
-    coarse cell, must canonicalize to the same digits. That fixes every
-    non-home entry relative to an already-solved chart of the same cell
-    (home chart = rot 0 = the canonical orientation, by definition).
-    Entries are solved by chaining around each cell's charts: sample the
-    seam between chart f and a solved chart f', nudge +-eps to the two
-    routing sides, and keep the unique (rotation, cw-flag) combo whose
-    canonical res-2 digits agree across the seam for nearly all pairs
-    (pairs straddling a genuine fine-cell edge are the noise floor; the
-    pentagon deleted-subsequence skip makes some rotation counts
-    bit-identical — such combos are merged into equivalence classes and
-    min(r) of the winning class is taken, which cannot change any output
-    index). Pentagon leading-K pairs double as the cw-flag probe; charts
-    whose wedge never produces a leading K keep the seeded flag (the fix
-    never fires there, so the flag is dead code)."""
-    bc_lat, bc_lng = _base_cell_centers()
-    bc_xyz = _geo_to_xyz(bc_lat, bc_lng)
-
-    face_bc = np.full((20, 3, 3, 3), -1, dtype=np.int64)
-    face_rot = np.zeros((20, 3, 3, 3), dtype=np.int64)
-
-    # ---- pass 1: membership -------------------------------------------
-    # cell -> {face: (ijk, grid-point geo)} for every appearance
-    appearances: dict[int, dict[int, tuple]] = {}
-    for f in range(20):
-        for i0 in range(3):
-            for j0 in range(3):
-                for k0 in range(3):
-                    i, j, k = _ijk_normalize(
-                        np.int64(i0), np.int64(j0), np.int64(k0)
-                    )
-                    x, y = _ijk_to_hex2d(i, j, k)
-                    lat, lng = _hex2d_to_geo(np.float64(x), np.float64(y), f, 0)
-                    p = _geo_to_xyz(np.float64(lat), np.float64(lng))
-                    d = bc_xyz @ p
-                    order = np.argsort(-d)
-                    c = int(order[0])
-                    a0 = float(np.arccos(np.clip(d[c], -1, 1)))
-                    a1 = float(np.arccos(np.clip(d[order[1]], -1, 1)))
-                    assert a0 < 0.15 and a1 > a0 + 0.08, (
-                        f"ambiguous base-cell match face {f} ijk "
-                        f"{(i0, j0, k0)}: {c}@{a0:.3f} vs {order[1]}@{a1:.3f}"
-                    )
-                    face_bc[f, i0, j0, k0] = c
-                    appearances.setdefault(c, {})[f] = (
-                        (int(i), int(j), int(k)), float(lat), float(lng)
-                    )
-
-    # ---- pass 2: orientation by chained seam consistency --------------
-    cw_solved: dict[tuple[int, int], bool] = {}
-    dead: set[tuple[int, int]] = set()  # (face, cell) never routed to
-    pent_amb: dict[tuple[int, int], list[int]] = {}  # (cell, face) -> rots
-
-    def _seam_sides(f, ff, lat, lng, n=600):
-        """Pair samples straddling the f/ff routing seam near (lat,lng):
-        returns (lat_f, lng_f, lat_ff, lng_ff) arrays of valid pairs."""
-        Fa, Fb = _FACE_XYZ[f], _FACE_XYZ[ff]
-        u = Fa + Fb
-        u /= np.linalg.norm(u)
-        w = np.cross(Fa, Fb)
-        w /= np.linalg.norm(w)
-        gp = _geo_to_xyz(np.float64(lat), np.float64(lng))
-        # parametrize the bisector great circle, keep the stretch near the
-        # cell (and through the vertex for pentagons)
-        t = np.linspace(-0.7, 0.7, n)
-        seam = np.outer(np.cos(t), u) + np.outer(np.sin(t), w)
-        near = seam @ gp > np.cos(0.33)
-        seam = seam[near]
-        if not len(seam):
-            return None
-        d = Fa - Fb
-        d /= np.linalg.norm(d)
-        eps = 1.5e-3
-        pa = seam + eps * d
-        pa /= np.linalg.norm(pa, axis=1, keepdims=True)
-        pb = seam - eps * d
-        pb /= np.linalg.norm(pb, axis=1, keepdims=True)
-        out = []
-        for p in (pa, pb):
-            out.append(np.arcsin(np.clip(p[:, 2], -1, 1)))
-            out.append(np.arctan2(p[:, 1], p[:, 0]))
-        return tuple(out)
-
-    for c, faces in appearances.items():
-        fh, ih, jh, kh = _BASE_CELL_HOME[c]
-        assert fh in faces and faces[fh][0] == (ih, jh, kh), (
-            f"cell {c}: home appearance missing/mismatched"
-        )
-        if _IS_PENT[c]:
-            continue  # pentagons: solved wholesale by the tiling CSP below
-        solved = {fh: 0}
-        pending = [f for f in faces if f != fh]
-        guard = 0
-        while pending:
-            guard += 1
-            assert guard < 40, f"cell {c}: seam chaining stalled at {pending}"
-            progressed = False
-            for f in list(pending):
-                ijk_f, lat_f, lng_f = faces[f]
-                hit = None
-                for ff in list(solved):
-                    ijk_ff = faces[ff][0]
-                    # a cell's wedge on a secondary chart can be a tiny
-                    # sliver: retry the seam walk at increasing density
-                    for n_seam in (600, 8000):
-                        sides = _seam_sides(f, ff, lat_f, lng_f, n=n_seam)
-                        if sides is None:
-                            break
-                        alat, alng, blat, blng = sides
-                        aface = _closest_face(_geo_to_xyz(alat, alng))
-                        bface = _closest_face(_geo_to_xyz(blat, blng))
-                        (ai, aj, ak), adig = _digits_on_face(alat, alng, f, res)
-                        (bi, bj, bk), bdig = _digits_on_face(blat, blng, ff, res)
-                        good = (
-                            (aface == f) & (bface == ff)
-                            & (ai == ijk_f[0]) & (aj == ijk_f[1]) & (ak == ijk_f[2])
-                            & (bi == ijk_ff[0]) & (bj == ijk_ff[1]) & (bk == ijk_ff[2])
-                            & (adig >= 0).all(axis=1) & (bdig >= 0).all(axis=1)
-                        )
-                        # pairs must be rotation-SENSITIVE: charts that
-                        # meet only at a pentagon vertex yield pairs whose
-                        # res-2 digits are all zero (the center cell), and
-                        # every rotation scores alike there — useless as
-                        # evidence, so route through an adjacent chart
-                        sens = good & (adig != 0).any(axis=1)
-                        if int(sens.sum()) >= 12:
-                            hit = (ff, adig[sens], bdig[sens])
-                            break
-                    if hit is not None:
-                        break
-                if hit is None:
-                    # reachability probe: a chart appearance that no
-                    # closest-face-routed point ever uses (e.g. cell 16 on
-                    # face 1 — the cell hugs face 0's center and never
-                    # reaches the routing seam) is dead code for
-                    # latLngToCell; keep rot 0 and let the global tiling
-                    # tests confirm it is never exercised.
-                    rng_p = np.random.default_rng(1000 + 20 * c + f)
-                    az = rng_p.uniform(0, 2 * np.pi, 4000)
-                    dist = rng_p.uniform(0.0, 0.3, 4000)
-                    plat, plng = _geo_az_distance(
-                        np.float64(lat_f), np.float64(lng_f), az, dist
-                    )
-                    pface = _closest_face(_geo_to_xyz(plat, plng))
-                    (pi, pj, pk), _pd = _digits_on_face(plat, plng, f, 1)
-                    used = (
-                        (pface == f)
-                        & (pi == ijk_f[0]) & (pj == ijk_f[1]) & (pk == ijk_f[2])
-                    )
-                    if not used.any():
-                        dead.add((f, c))
-                        pending.remove(f)
-                        progressed = True
-                    continue
-                ff, adig, bdig = hit
-                pent = bool(_IS_PENT[c])
-                b_lead_k = (_leading_nonzero(bdig, res) == 1).any()
-                a_lead_k = (_leading_nonzero(adig, res) == 1).any()
-                b_flags = (
-                    [cw_solved[(c, ff)]]
-                    if (c, ff) in cw_solved
-                    else ([False, True] if (pent and b_lead_k) else [False])
-                )
-                a_flags = [False, True] if (pent and a_lead_k) else [False]
-                combos = []  # (score, r, fa, fb, canon_a_bytes)
-                for fb in b_flags:
-                    want = _canonical_digits(
-                        bdig, c, ff, solved[ff], res, cw_override=fb
-                    )
-                    for r in range(6):
-                        for fa in a_flags:
-                            can = _canonical_digits(
-                                adig, c, f, r, res, cw_override=fa
-                            )
-                            score = float((can == want).all(axis=1).mean())
-                            combos.append((score, r, fa, fb, can.tobytes()))
-                # Where a seam stretch coincides with the pentagon fold
-                # (the deleted sector) or cuts fine-cell corners, even the
-                # right combo tops out below 100%. Keep every combo within
-                # a band of the best; if the band holds more than one
-                # DISTINCT canonicalization (pentagon near-equivalences
-                # differ only on some leading-digit families), defer to
-                # the tiling arbiter. Equivalence is judged over the FULL
-                # res-2 digit space — the pent-rotation power depends only
-                # on the leading digit value, so res-2 exhaustion decides
-                # equivalence for every resolution.
-                best = max(s for s, *_ in combos)
-                assert best >= 0.55, (
-                    f"no consistent orientation for cell {c} chart {f} vs "
-                    f"{ff}: best seam agreement {best:.0%}"
-                )
-                band = [cb for cb in combos if cb[0] >= best - 0.15]
-                seqs = np.stack(
-                    np.meshgrid(np.arange(7), np.arange(7), indexing="ij"),
-                    axis=-1,
-                ).reshape(-1, 2)
-                full_classes: dict[bytes, int] = {}
-                for _s, wr, _fa, _fb, _o in band:
-                    key = _canonical_digits(
-                        seqs, c, f, wr, 2, cw_override=False
-                    ).tobytes()
-                    full_classes[key] = min(full_classes.get(key, wr), wr)
-                r = min(full_classes.values())
-                if len(full_classes) > 1:
-                    assert pent, (
-                        f"orientation ambiguous for hexagon cell {c} chart "
-                        f"{f} vs {ff}: {sorted(full_classes.values())}"
-                    )
-                    pent_amb[(c, f)] = sorted(full_classes.values())
-                i0, j0, k0 = ijk_f
-                # write the rotation to every raw coordinate that
-                # normalizes to this appearance
-                for ri in range(3):
-                    for rj in range(3):
-                        for rk in range(3):
-                            ni, nj, nk = _ijk_normalize(
-                                np.int64(ri), np.int64(rj), np.int64(rk)
-                            )
-                            if (int(ni), int(nj), int(nk)) == (i0, j0, k0) and (
-                                int(face_bc[f, ri, rj, rk]) == c
-                            ):
-                                face_rot[f, ri, rj, rk] = r
-                solved[f] = r
-                pending.remove(f)
-                progressed = True
-            assert progressed, (
-                f"cell {c}: no seam with enough pairs for charts {pending} "
-                f"(solved: {sorted(solved)})"
-            )
-    return face_bc, face_rot, pent_amb, dead
-
-
-
-
-def _solve_pentagon_tiling(res: int = 3, n_samples: int = 120_000):
-    """Solve every pentagon chart orientation (rotation + leading-K fix
-    direction) by COLLISION-freedom of the tiling.
-
-    Pentagon canonicalization is only piecewise-rigid (the pent-rotation
-    power depends on the leading digit value), so seam-equality evidence
-    can be satisfied by wrong rotations on the fold-adjacent charts. The
-    tiling is the decisive observable: under the correct orientations
-    every canonical index owns ONE tight region; a wrong rotation or fix
-    direction maps some wedge onto labels used elsewhere in the pentagon
-    (duplicate, far-apart regions — verified to discriminate with a ~3x
-    margin by construction tests).
-
-    Solved as a tiny CSP: per chart, candidates = 6 rotations x fix
-    flags (flags only where the chart's wedge produces leading-K digits);
-    a candidate is self-consistent if none of ITS OWN labels splits into
-    far-apart chunks, and pair-compatible with another chart's candidate
-    if every SHARED label's chunk centroids are adjacent. Backtracking
-    over the per-chart domains then yields the assignments; equivalent
-    candidates (identical label arrays — the deleted-subsequence orbit)
-    are merged, and the effective assignment is asserted unique.
-
-    Returns ({(cell, face): flag}, {(cell, face): rot}).
-    """
-    rng = np.random.default_rng(11)
-    solved_cw: dict[tuple[int, int], bool] = {}
-    solved_rot: dict[tuple[int, int], int] = {}
-    cellsize = 0.4 / _SQRT7 ** res
-    pw = 7 ** np.arange(res)
-    for c in PENTAGON_BASE_CELLS:
-        fh, ih, jh, kh = _BASE_CELL_HOME[c]
-        x, y = _ijk_to_hex2d(np.int64(ih), np.int64(jh), np.int64(kh))
-        lat, lng = _hex2d_to_geo(np.float64(x), np.float64(y), fh, 0)
-        az = rng.uniform(0, 2 * np.pi, n_samples)
-        dist = rng.uniform(0, 1, n_samples) ** 1.5 * 0.35
-        slat, slng = _geo_az_distance(lat, lng, az, dist)
-        sface = _closest_face(_geo_to_xyz(slat, slng))
-        xyz = _geo_to_xyz(slat, slng)
-
-        digs = np.full((n_samples, res), -1, dtype=np.int64)
-        keep = np.zeros(n_samples, dtype=bool)
-        for f in np.unique(sface):
-            m = sface == f
-            (fi, fj, fk), dg = _digits_on_face(slat[m], slng[m], int(f), res)
-            inb = (
-                (fi <= 2) & (fj <= 2) & (fk <= 2)
-                & (_FACE_BC[f, np.clip(fi, 0, 2), np.clip(fj, 0, 2),
-                            np.clip(fk, 0, 2)] == c)
-            )
-            digs[np.where(m)[0][inb]] = dg[inb]
-            keep[np.where(m)[0][inb]] = True
-        keep &= (digs >= 0).all(axis=1)
-        idx = np.where(keep)[0]
-        sf = sface[idx]
-        dg = digs[idx]
-        pz = xyz[idx]
-        lead = _leading_nonzero(dg, res)
-        k_charts = set(int(v) for v in np.unique(sf[lead == 1]))
-        faces_here = [int(v) for v in np.unique(sf)]
-
-        # per-chart candidates with per-label chunk stats
-        def chunk_stats(labels, pts):
-            stats = {}
-            for lb in np.unique(labels):
-                m = labels == lb
-                if int(m.sum()) < 3:
-                    continue  # noise chunk
-                cen = pts[m].mean(axis=0)
-                cen /= np.linalg.norm(cen)
-                rmax = float(
-                    np.sqrt(np.maximum(2 - 2 * (pts[m] @ cen), 0)).max()
-                )
-                stats[int(lb)] = (cen, rmax)
-            return stats
-
-        domains: dict[int, list] = {}  # f -> [(r, fl, labels, stats)]
-        for f in faces_here:
-            m = sf == f
-            cands = (
-                [(0, False)] if f == fh
-                else [
-                    (r, fl)
-                    for r in range(6)
-                    for fl in ([False, True] if f in k_charts else [False])
-                ]
-            )
-            dom = []
-            for r, fl in cands:
-                can = _canonical_digits(dg[m], c, f, r, res, cw_override=fl)
-                labels = (can * pw).sum(axis=1)
-                stats = chunk_stats(labels, pz[m])
-                # self-consistency: no label of this chart alone may span
-                # far-apart regions (piecewise lead-families colliding)
-                if any(rm > 1.4 * cellsize for _cen, rm in stats.values()):
-                    continue
-                dom.append((r, fl, labels, stats))
-            assert dom, f"pentagon {c} chart {f}: no self-consistent candidate"
-            domains[f] = dom
-
-        def compatible(sa, sb):
-            shared = set(sa) & set(sb)
-            for lb in shared:
-                ca, _ra = sa[lb]
-                cb, _rb = sb[lb]
-                d = float(np.sqrt(max(2 - 2 * float(ca @ cb), 0)))
-                if d > 1.8 * cellsize:
-                    return False
-            return True
-
-        # arc-consistency then exhaustive search over the pruned domains
-        order = sorted(faces_here, key=lambda f: (f != fh, f))
-        assigns: list[dict[int, tuple[int, bool]]] = []
-
-        def backtrack(n, chosen):
-            if n == len(order):
-                assigns.append(dict(chosen))
-                return
-            f = order[n]
-            for r, fl, labels, stats in domains[f]:
-                ok = True
-                for f2, (r2, fl2, labels2, stats2) in chosen.items():
-                    if not compatible(stats, stats2):
-                        ok = False
-                        break
-                if ok:
-                    chosen[f] = (r, fl, labels, stats)
-                    backtrack(n + 1, chosen)
-                    del chosen[f]
-
-        backtrack(0, {})
-        assert assigns, f"pentagon {c}: no collision-free orientation"
-        # merge orbit-equivalent assignments: identical label arrays per
-        # chart => identical output indexes
-        sigs = set()
-        for a in assigns:
-            sigs.add(tuple(a[f][2].tobytes() for f in order))
-        assert len(sigs) == 1, (
-            f"pentagon {c}: orientation not unique — "
-            f"{[{f: (a[f][0], a[f][1]) for f in order} for a in assigns[:4]]}"
-        )
-        pick = assigns[0]
-        for f in faces_here:
-            r, fl, _labels, _stats = pick[f]
-            if f != fh:
-                solved_rot[(c, f)] = min(
-                    a[f][0] for a in assigns
-                )  # min of the equivalent orbit, deterministic
-            if f in k_charts:
-                flags = {a[f][1] for a in assigns}
-                assert len(flags) == 1, (
-                    f"pentagon {c} chart {f}: cw flag ambiguous"
-                )
-                solved_cw[(c, f)] = flags.pop()
-    return solved_cw, solved_rot
-
-
-def derive_tables():
-    """Run the full geometric derivation (seconds of numpy): returns
-    (face_bc, face_rot, cw_offset, dead) exactly as the embedded tables
-    were produced. tests/test_h3.py re-derives and asserts equality with
-    the literals below, so the fast path can never silently drift."""
-    face_bc, face_rot, _amb, dead = _derive_face_ijk_table()
-    # make the tables visible to the pentagon solver's production path
-    global _FACE_BC, _FACE_ROT
-    saved = _FACE_BC, _FACE_ROT
-    _FACE_BC, _FACE_ROT = face_bc, face_rot
-    try:
-        cw_solved, pent_rot = _solve_pentagon_tiling()
-    finally:
-        _FACE_BC, _FACE_ROT = saved
-    for (c, f), r in pent_rot.items():
-        for ri in range(3):
-            for rj in range(3):
-                for rk in range(3):
-                    if int(face_bc[f, ri, rj, rk]) == c:
-                        face_rot[f, ri, rj, rk] = r
-    cw = np.zeros((NUM_BASE_CELLS, 20), dtype=bool)
-    for c, faces in _PENT_CW_OFFSET_FACES.items():
-        for f in faces:
-            cw[c, f] = True
-    for (c, f), flag in cw_solved.items():
-        cw[c, f] = flag
-    return face_bc, face_rot, cw, dead
-
-
 # ---------------------------------------------------------------------------
-# embedded derived tables (generated by derive_tables(); verified against a
-# fresh derivation in tests/test_h3.py — embedding keeps worker-side module
-# import at microseconds instead of seconds)
+# embedded derived tables (printed by scripts/gen_h3_tables.py; verified
+# against a fresh derivation in tests/test_h3.py — embedding keeps
+# worker-side module import at microseconds instead of seconds)
 # ---------------------------------------------------------------------------
 
 _EMB_FACE_BC = "EBIYIR4gMTAyCAUKFhASKSEeBAACDwgFHxYQAgYOCgsRGBcZAAEJBQIGEgoLBAMHCAABEAUCBxUmCRMiDhQkAw0dAQcVBgkTBAwaAAMNAgEHGio6HSs+Ji9ADBwsDRoqFR0rBA8fAwwcBw0aHykxLDU9OkFLDxYhHB8pKiw1BAgQDA8WGhwfMjAxIB4hGBIQRkNCNDIwJSAeU1dVSkZDOTQyGRcYEQsKDgYCLSclIxkXGxELPzs5OC0nLiMZJBQOIhMJJhUHNygbNiQUMyITSDwuSTcoRzYkQC8mPisdOioaVEUzUkAvTD4rYVlHYlRFYFJAS0E6PTUsMSkfXlZMUUtBQj01a2hgZV5WVVFLOTs/Sk5PU1xfJSctNDk7RkpOGBcZICUnMjQ5LjxIOERQP01aGyg3Iy48LThEDhQkERsoGSMuR1lhSVtnSFhpM0VUNkdZN0lbJi9AIjNFJDZHYGhrYm5zYW93TFZeUmBoVGJuOkFLPkxWQFJgVVdTZWZka3ByQkNGUVVXXmVmMTAyPUJDS1FVX1xTT05KPzs5bWxkXV9cTU9OdXZyam1sWl1fWk0/UEQ4SDwual1PY1pNWFBEdW1fcWpdaWNaaVhIZ1tJYVlHcWNQdGlYb2dbdWpaeXFjd3Rpd29hc25ia2hgeXRneHdvcHNudXFpdnl0cnh3cnBrZGZlU1dVdnhzbHJwXGRmdXl3bXZ4X2xy"
@@ -1463,68 +1002,6 @@ def cell_to_boundary(cells) -> list[np.ndarray]:
     return out
 
 
-def grid_distance(a: int, b: int, max_k: int = 64) -> int:
-    """Grid distance between two same-res cells (reference surface:
-    h3geo gridDistance), by expanding BFS over the production neighbor
-    step — exact by construction wherever it answers, including across
-    pentagon distortion (where coordinate-translation implementations
-    give up). Raises above ``max_k`` rings; like the reference, distant
-    pairs are out of contract (use coarser parents first)."""
-    a, b = int(a), int(b)
-    if (a >> 52) & 0xF != (b >> 52) & 0xF:
-        raise ValueError("grid_distance: resolutions differ")
-    if a == b:
-        return 0
-    seen = {a}
-    frontier = {a}
-    for k in range(1, max_k + 1):
-        neigh = grid_neighbors(np.array(sorted(frontier), dtype=np.uint64))
-        nxt = set()
-        for c in frontier:
-            nxt |= neigh[c]
-        nxt -= seen
-        if b in nxt:
-            return k
-        seen |= nxt
-        frontier = nxt
-        if not frontier:
-            break
-    raise ValueError(f"grid_distance: > {max_k} rings apart")
-
-
-def h3_boundary_col(cell_col):
-    """Boundary vertices as an array<array<double>> Column ([lat, lng]
-    pairs, CCW) — cell_to_boundary behind a pandas UDF so rendering /
-    GeoJSON export of tile rollups runs ON THE EXECUTORS instead of
-    collecting cells to the driver. Each Arrow batch is grouped by
-    resolution (the boundary kernel is single-res per call); the
-    neighbor memoization cache warms per executor, so repeated cells in
-    a rollup batch are nearly free. Null cells yield null boundaries."""
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    @pandas_udf(ArrayType(ArrayType(DoubleType())))
-    def _boundary(cells: pd.Series) -> pd.Series:
-        # nulls are coalesced to 0 JVM-side BEFORE the crossing: an int64
-        # column with nulls arrives as float64 in pandas, which cannot
-        # represent H3 ids (> 2^53) and silently corrupts the low bits
-        h = cells.to_numpy(dtype=np.int64).astype(np.uint64)
-        out = [None] * len(h)
-        ok = h != 0
-        res = (h >> np.uint64(52)) & np.uint64(0xF)
-        idx_ok = np.where(ok)[0]
-        for r in np.unique(res[ok]):
-            sel = ok & (res == r)
-            bs = cell_to_boundary(h[sel])
-            for i, b in zip(np.where(sel)[0], bs):
-                out[i] = [[float(v[0]), float(v[1])] for v in b]
-        return pd.Series(out)
-
-    return F.when(
-        cell_col.isNotNull(), _boundary(F.coalesce(cell_col, F.lit(0)))
-    )
-
-
 def cell_area_km2(cells) -> np.ndarray:
     """Spherical area (km^2) of each cell, computed from its boundary
     polygon by the signed-triangle-fan excess formula (reference
@@ -1698,7 +1175,7 @@ def uncompact_cells(cells, res: int) -> set[int]:
     if est > 10_000_000:
         raise ValueError(
             f"uncompact_cells: ~{est} output cells; refuse to materialize "
-            ">10M driver-side — uncompact distributed (explode) instead"
+            ">10M driver-side"
         )
     while stack:
         h = stack.pop()
@@ -1706,100 +1183,6 @@ def uncompact_cells(cells, res: int) -> set[int]:
             out.add(h)
         else:
             stack.extend(children(h))
-    return out
-
-
-def uncompact_cells_col(cell_col: Column, res: int, max_levels: int = 6) -> Column:
-    """Distributed uncompact: array<long> of all res-``res`` descendants of
-    a (possibly coarser) cell Column — the scale path the driver-side
-    guard points at. Pure Column math: one explode-able array built by
-    repeatedly appending the 3-bit digit per level (7-way fan-out per
-    level, K-children of pentagon prefixes excluded); cap the fan-out at
-    ``max_levels`` (7^6 ≈ 118k children per row) to keep single-row
-    output bounded. Cells more than ``max_levels`` coarser than ``res``
-    remain in the array UN-EXPANDED (still at their coarser resolution):
-    re-apply the function to finish, or raise ``max_levels`` when the
-    per-row fan-out is acceptable."""
-    cur = F.array(cell_col.cast("long"))
-    for _ in range(max_levels):
-        step = F.transform(
-            cur,
-            lambda h: F.when(
-                F.shiftrightunsigned(h, 52).bitwiseAND(F.lit(0xF)) >= F.lit(res),
-                F.array(h),
-            ).otherwise(_children_col(h)),
-        )
-        cur = F.flatten(step)
-    return F.array_distinct(cur)
-
-
-def _children_col(h: Column) -> Column:
-    """array<long> of the direct children of cell Column ``h`` (pentagon
-    prefixes skip the K child) — helper for uncompact_cells_col."""
-    # F.shiftleft only takes literal shift counts; dynamic shifts are done
-    # as exact power-of-two multiplication (every value here < 2^53, so
-    # the double intermediate is exact)
-    r = F.shiftrightunsigned(h, 52).bitwiseAND(F.lit(0xF)).cast("long")
-    child_r = r + F.lit(1).cast("long")
-    base = h.bitwiseAND(F.lit(~(0xF << 52))).bitwiseOR(
-        (child_r.cast("double") * F.lit(float(1 << 52))).cast("long")
-    )
-    shift = ((F.lit(MAX_RES).cast("long") - child_r) * 3).cast("double")
-    pow_shift = F.pow(F.lit(2.0), shift)
-    pent_bc = F.array(*[F.lit(int(c)) for c in PENTAGON_BASE_CELLS])
-    bc = F.shiftrightunsigned(h, 45).bitwiseAND(F.lit(0x7F))
-    # h is a pentagon iff its base cell is pentagonal AND every digit
-    # 1..r is zero — digits beyond r are all 7s in a valid index, so the
-    # digit field must equal exactly the below-res fill
-    digit_bits = F.lit((1 << 45) - 1).cast("long")
-    fill_below = (
-        F.pow(F.lit(2.0), ((F.lit(MAX_RES).cast("long") - r) * 3).cast("double"))
-        .cast("long")
-        - F.lit(1).cast("long")
-    )
-    is_pent = F.array_contains(pent_bc, bc) & (
-        h.bitwiseAND(digit_bits) == fill_below
-    )
-    digits = F.when(is_pent, F.array(*[F.lit(d) for d in [0, 2, 3, 4, 5, 6]])).otherwise(
-        F.array(*[F.lit(d) for d in range(7)])
-    )
-    mask = (F.lit(7.0) * pow_shift).cast("long")
-    return F.transform(
-        digits,
-        lambda d: base.bitwiseAND(F.bitwise_not(mask)).bitwiseOR(
-            (d.cast("double") * pow_shift).cast("long")
-        ),
-    )
-
-
-def compact_cells(cells) -> set[int]:
-    """Minimal mixed-resolution cover of a same-resolution cell set
-    (compactCells): any complete sibling group — 7 children, 6 for a
-    pentagon parent — collapses to its parent, repeatedly."""
-    cur = {int(c) for c in cells}
-    if not cur:
-        return cur
-    res = {h3_get_resolution(h) for h in cur}
-    if len(res) != 1:
-        raise ValueError("compact_cells: input must be single-resolution")
-    r = res.pop()
-    out: set[int] = set()
-    while r > 0 and cur:
-        groups: dict[int, list[int]] = {}
-        for h in cur:
-            p = (h & ~(0xF << 52)) | ((r - 1) << 52)
-            p |= 0x7 << ((MAX_RES - r) * 3)
-            groups.setdefault(p, []).append(h)
-        nxt = set()
-        for p, kids in groups.items():
-            need = 6 if h3_is_pentagon(p) else 7
-            if len(kids) == need:
-                nxt.add(p)
-            else:
-                out.update(kids)
-        cur = nxt
-        r -= 1
-    out.update(cur)
     return out
 
 
@@ -1849,10 +1232,6 @@ def h3_is_valid_cells(cells) -> np.ndarray:
     return ok
 
 
-def h3_is_valid_cell(h: int) -> bool:
-    return bool(h3_is_valid_cells(np.array([h], dtype=np.uint64))[0])
-
-
 def h3_center_child(h: int, child_res: int) -> int:
     """Center child at ``child_res``: bump the res field and zero the new
     digits (reference surface: h3geo cellToCenterChild). Pure bit math."""
@@ -1864,11 +1243,3 @@ def h3_center_child(h: int, child_res: int) -> int:
         out &= ~(0x7 << ((MAX_RES - r) * 3))
     return out
 
-
-def h3_to_string(h: int) -> str:
-    return format(h, "x")
-
-
-def string_to_h3(s: str) -> int:
-    """Hex string -> index (reference surface: h3geo stringToH3)."""
-    return int(s, 16)

@@ -784,27 +784,18 @@ def _tile_pdf(res: pd.DataFrame) -> pd.DataFrame:
 
 
 def geocode_and_tile_kernel(
-    pages: DataFrame, index: GazetteerIndex, check_results: bool = True,
-    widen: bool = True,
+    pages: DataFrame, index: GazetteerIndex, check_results: bool = True
 ) -> DataFrame:
     """pages -> extract -> cascade -> S2/H3 tiles, entirely inside ONE
     mapInPandas stage (plans/flagship.geocode_and_tile's output schema,
     value-for-value). Recrawl dedup is the caller's job (streaming state
     op upstream, or spatial.latest_snapshot for batch inputs).
 
-    Scale shape: zero shuffles, zero driver actions; parallelism = input
-    partitions (small inputs are widened to the cluster's core count —
-    the repartition moves at most one micro-batch of pages).
-
-    ``widen=False`` skips the widening (it needs an RDD partition-count
-    peek, illegal on a STREAMING DataFrame) — streaming callers already
-    arrive shuffled to the session's shuffle width by the upstream dedup
-    state op, which is the right micro-batch granularity."""
+    Scale shape: zero shuffles, zero driver actions, no Spark job while
+    the plan is built; parallelism = input partitions. A caller that
+    needs more width repartitions its pages first, as
+    plans/flagship.geocode_and_tile does."""
     bc = kernel_broadcast(index)
-    if widen:
-        par = pages.sparkSession.sparkContext.defaultParallelism
-        if pages.rdd.getNumPartitions() < par:
-            pages = pages.repartition(par)
 
     def fn(it):
         pay = bc.value

@@ -202,9 +202,7 @@ def geocode_and_tile(
             pages.groupBy("url").count().filter("count > 1").isEmpty()
         ):
             raise ValueError("duplicate addr_key values in input")
-        return geocode_and_tile_kernel(
-            pages, index, check_results=check_results, widen=False
-        )
+        return geocode_and_tile_kernel(pages, index, check_results=check_results)
 
     addrs = pages_to_addresses(pages, dedup_crawls=dedup_crawls)
     res, _ = cascade(

@@ -95,13 +95,14 @@ def geocode_pages_stream(
     dedup_recrawls: bool = True,
     max_files_per_trigger: int = 1,
 ):
-    """File-source pages stream -> stateful first-seen recrawl dedup ->
-    batch cascade per micro-batch -> parquet sink. Returns the started
-    StreamingQuery; caller awaits termination.
+    """File-source pages stream -> first-seen recrawl dedup -> geocode
+    per micro-batch -> parquet sink. Returns the started StreamingQuery;
+    caller awaits termination.
 
-    ``dedup_recrawls`` composes streaming/stateful.first_seen_stream
-    UPSTREAM of the cascade: a url re-delivered in ANY later micro-batch
-    (recrawl, retry, mirror) is dropped by per-key state before paying
+    ``dedup_recrawls`` puts Spark's native streaming ``dropDuplicates``
+    (``dropDuplicatesWithinWatermark`` on a live tail) UPSTREAM of the
+    geocoder: a url re-delivered in ANY later micro-batch (recrawl,
+    retry, mirror) is dropped by per-key state before paying
     extraction + geocoding. Stream semantics are FIRST-arrival-wins (a
     stream cannot know a newer crawl is coming); the batch lifecycle's
     as-of dedup is latest-wins — identical recrawl content geocodes
@@ -132,17 +133,14 @@ def geocode_pages_stream(
         # First-arrival-wins url dedup with NATIVE streaming state: the
         # engine keeps only the key columns in the state store and drops
         # repeats JVM-side — measured several times cheaper per micro-batch
-        # than the applyInPandasWithState operator (one Python call per
-        # distinct url per epoch). first_seen_stream (streaming/stateful.py)
-        # remains the custom-stateful-operator surface for callers needing
-        # processing-time TTL or richer per-key state.
+        # than an applyInPandasWithState operator (one Python call per
+        # distinct url per epoch).
         if available_now:
             # catch-up: whole-backfill dedup, state lives for the run
             stream = stream.dropDuplicates(["url"])
         else:
             # continuous: bound state by EVENT time — re-arrivals more than
-            # 24h of watermark progress apart are treated as new, the
-            # native analog of the stateful operator's 24h TTL
+            # 24h of watermark progress apart are treated as new
             stream = stream.withWatermark(
                 "warc_ts", "24 hours"
             ).dropDuplicatesWithinWatermark(["url"])
@@ -156,10 +154,10 @@ def geocode_pages_stream(
         # commit log (readers going through spark.read see only committed
         # files, so a crash between data write and commit is invisible).
         # Measured: 8x 5k-page epochs 12.2s (foreachBatch kernel) -> 7.1s
-        # warm / 8.8s cold at local[32], shuffle width 8. The kernel is
-        # called directly (not through geocode_and_tile) with widen=False:
-        # a partition-count peek is illegal on a streaming DataFrame.
-        tiled = geocode_and_tile_kernel(stream, index, widen=False)
+        # warm / 8.8s cold at local[32], shuffle width 8. The kernel runs
+        # at the stream's own width: the dedup state op's shuffle width
+        # when recrawls are deduped.
+        tiled = geocode_and_tile_kernel(stream, index)
         writer = (
             tiled.writeStream.format("parquet")
             .option("path", out_dir)

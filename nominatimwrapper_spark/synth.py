@@ -63,12 +63,6 @@ COUNTRY = "Belgique"
 BASE_TS = dt.datetime(2025, 3, 1, tzinfo=dt.timezone.utc)
 
 
-def _strip_accents_upper(s: str) -> str:
-    from .functions.textnorm import norm_street_part
-
-    return norm_street_part(s)
-
-
 def gen_gazetteer(n_streets: int = 240, houses_per_street: int = 8, seed: int = 42) -> pd.DataFrame:
     """OSM-style gazetteer. place_id is dense; houses point at their street
     via parent_place_id (parent-rescue join, reference

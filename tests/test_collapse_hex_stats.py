@@ -1,5 +1,6 @@
 # -*- coding: utf-8 -*-
-"""Collapse utilities (differential vs reference), hex tiling, step stats."""
+"""Collapse utilities (golden values, differential vs reference), hex
+tiling, step stats."""
 
 from __future__ import annotations
 
@@ -22,34 +23,53 @@ from nominatimwrapper_spark.functions.geo import (
 )
 
 
-def test_collapse_fillna_differential(spark, refmod):
-    pdf = pd.DataFrame(
-        dict(
-            a=[None, "x", None, None],
-            b=["b1", None, None, "b4"],
-            c=["c1", "c2", None, None],
-        )
-    )
-    ref = refmod.utils.collapse(pdf, ["a", "b", "c"], "fillna").where(pd.notnull, None).tolist()
-    got = (
+FILLNA_IN = dict(
+    a=[None, "x", None, None],
+    b=["b1", None, None, "b4"],
+    c=["c1", "c2", None, None],
+)
+SET_IN = dict(a=["x", "x", None], b=["y", "x", None], c=["x", "z", None])
+
+
+def _collapse_fillna(spark, pdf):
+    return (
         spark.createDataFrame(pdf)
         .select(collapse_fillna_col(F.col("a"), F.col("b"), F.col("c")).alias("o"))
         .toPandas()
         .o.where(pd.notnull, None)
         .tolist()
     )
-    assert got == ref
 
 
-def test_collapse_set_values(spark, refmod):
-    pdf = pd.DataFrame(dict(a=["x", "x", None], b=["y", "x", None], c=["x", "z", None]))
-    ref = refmod.utils.collapse(pdf, ["a", "b", "c"], "set").tolist()
-    got = (
+def _collapse_set(spark, pdf):
+    return (
         spark.createDataFrame(pdf)
         .select(collapse_set_col([F.col("a"), F.col("b"), F.col("c")]).alias("o"))
         .toPandas()
         .o.tolist()
     )
+
+
+def test_collapse_golden(spark, engine_golden):
+    for name, inputs, fn in (
+        ("fillna", FILLNA_IN, _collapse_fillna),
+        ("set", SET_IN, _collapse_set),
+    ):
+        g = engine_golden["collapse"][name]
+        assert g["inputs"] == inputs
+        assert fn(spark, pd.DataFrame(inputs)) == g["outputs"], name
+
+
+def test_collapse_fillna_differential(spark, refmod):
+    pdf = pd.DataFrame(FILLNA_IN)
+    ref = refmod.utils.collapse(pdf, ["a", "b", "c"], "fillna").where(pd.notnull, None).tolist()
+    assert _collapse_fillna(spark, pdf) == ref
+
+
+def test_collapse_set_values(spark, refmod):
+    pdf = pd.DataFrame(SET_IN)
+    ref = refmod.utils.collapse(pdf, ["a", "b", "c"], "set").tolist()
+    got = _collapse_set(spark, pdf)
     # the reference joins a Python set (order unstable) -> compare value SETS
     for g, r in zip(got, ref):
         assert set(g.split(" - ")) - {""} == set(r.split(" - ")) - {""}

@@ -158,6 +158,32 @@ def test_extra_house_number_columns(cascade_out):
         assert got == [str(row.houseNumber), ""], (row.houseNumber, got)
 
 
+EXTRA_HOUSE_NUMBER_CASES = [
+    "Rue Haute 12, 1000 Bruxelles",
+    "Avenue Louise 20 bte 4, 1050 Ixelles",
+    "Chaussee de Gand 3b, 1080 Molenbeek",
+    ", 1000 Bruxelles",
+    "",
+]
+
+
+def test_extra_house_number_golden(engine_golden):
+    """The engine's libpostal-style token stream and [house, box] join on
+    the differential test's inputs equal golden values frozen from the
+    engine (fixtures/engine_golden.json)."""
+    from nominatimwrapper_spark.operators.geocode import (
+        join_lpost_tokens,
+        lpost_address_tokens,
+        lpost_house_number,
+    )
+
+    g = engine_golden["lpost_house_number"]
+    assert g["inputs"] == EXTRA_HOUSE_NUMBER_CASES
+    assert [[list(t) for t in lpost_address_tokens(a)] for a in g["inputs"]] == g["tokens"]
+    assert [lpost_house_number(a) for a in g["inputs"]] == g["house_number"]
+    assert join_lpost_tokens([tuple(t) for t in g["multi_tokens"]]) == g["multi_joined"]
+
+
 def test_extra_house_number_differential(refmod, monkeypatch):
     """The join/extract contract of get_lpost_house_number
     (reference utils.py:782-808) — multiple house_number tokens joined with
@@ -169,14 +195,7 @@ def test_extra_house_number_differential(refmod, monkeypatch):
         lpost_house_number,
     )
 
-    cases = [
-        "Rue Haute 12, 1000 Bruxelles",
-        "Avenue Louise 20 bte 4, 1050 Ixelles",
-        "Chaussee de Gand 3b, 1080 Molenbeek",
-        ", 1000 Bruxelles",
-        "",
-    ]
-    for addr in cases:
+    for addr in EXTRA_HOUSE_NUMBER_CASES:
         toks = lpost_address_tokens(addr)
         monkeypatch.setattr(refmod.utils, "parse_address", lambda a, t=toks: [(v, l) for v, l in t])
         ref = refmod.utils.get_lpost_house_number(addr)

@@ -405,16 +405,38 @@ def test_kernel_broadcast_built_once_under_concurrent_first_use(spark, index):
 
 
 def test_kernel_single_job_no_shuffle(spark):
-    """The kernel plan is ONE narrow mapInPandas stage: no Exchange beyond
-    the (optional) input-widening round-robin, no joins, no windows."""
+    """The kernel plan is ONE narrow mapInPandas stage: no Exchange, no
+    joins, no windows."""
     from nominatimwrapper_spark.plans.flagship import gazetteer_index, pages_from_documents
 
     idx = gazetteer_index(spark)
     pages = pages_from_documents(spark, SF_DIR).localCheckpoint(eager=True)
     plan = geocode_and_tile_kernel(pages, idx)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "Window", "HashAggregate"):
+    for node in ("Exchange", "SortMergeJoin", "BroadcastHashJoin", "Window", "HashAggregate"):
         assert node not in plan, f"unexpected {node} in kernel plan:\n{plan}"
+
+
+def test_kernel_plan_builds_without_jobs(spark):
+    """Building the kernel over pages whose plan still holds an exchange
+    (pages_from_documents repartitions) starts no Spark job once the
+    index's payload broadcast exists: the kernel never peeks at its
+    input's partition count, which would run the exchange's stages."""
+    from nominatimwrapper_spark.plans.flagship import gazetteer_index, pages_from_documents
+
+    idx = gazetteer_index(spark)
+    kernel_broadcast(idx)  # the payload build runs its own jobs, once per index
+    pages = pages_from_documents(spark, SF_DIR)  # collects the house list
+    sc = spark.sparkContext
+    group = "kernel-plan-build"
+    sc.setJobGroup(group, "geocode_and_tile_kernel plan build")
+    try:
+        out = geocode_and_tile_kernel(pages, idx)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "MapInPandas" in plan
 
 
 def test_kernel_refuses_oversized_gazetteer(spark, world):

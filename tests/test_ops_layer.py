@@ -8,6 +8,7 @@ import os
 
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nominatimwrapper_spark.operators.dedup import (
@@ -256,6 +257,14 @@ def test_geocode_job_partitioned_resume(spark, tmp_path):
     assert m3[victim]["rows_out"] == m1[victim]["rows_out"]
 
 
+def first_seen_batch(df: DataFrame, key: str = "url", order: str = "warc_ts") -> DataFrame:
+    """Batch twin: earliest row per key (ties -> arbitrary but stable via
+    the order column only, matching the stream's arrival-order semantics
+    when the input files are ordered)."""
+    w = Window.partitionBy(key).orderBy(F.col(order).asc())
+    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+
 def test_streaming_flagship_with_recrawl_dedup(spark, tmp_path):
     """The COMPOSED streaming flagship: stateful first-seen dedup wired
     upstream of the per-micro-batch cascade. Urls recrawled across
@@ -273,7 +282,6 @@ def test_streaming_flagship_with_recrawl_dedup(spark, tmp_path):
         geocode_micro_batch,
         geocode_pages_stream,
     )
-    from nominatimwrapper_spark.streaming.stateful import first_seen_batch
 
     sf001 = "/root/testdata/sf0.001"
     pages = pages_from_documents(spark, sf001).localCheckpoint(eager=True)
@@ -383,69 +391,6 @@ def test_streaming_live_tail_watermarked_dedup(spark, tmp_path):
     out = spark.read.parquet(out_dir).toPandas()
     assert len(out) == n_addrs
     assert out["addr_key"].is_unique
-
-
-def test_stateful_first_seen_dedup(spark, tmp_path):
-    """Custom stateful operator: first-seen url dedup across micro-batches
-    (applyInPandasWithState). Chunk 1 = 40 urls at T0; chunk 2 = the same
-    urls recrawled at T1; chunk 3 = 10 new urls + 10 recrawls. The stream
-    must emit exactly one row per url — the first arrival — matching the
-    batch twin (earliest warc_ts)."""
-    import datetime as dt
-
-    from nominatimwrapper_spark.streaming.stateful import (
-        first_seen_batch,
-        run_first_seen_over_dir,
-    )
-
-    t0 = dt.datetime(2025, 3, 1)
-    t1 = dt.datetime(2025, 4, 5)
-    c1 = pd.DataFrame(dict(url=[f"u{i}" for i in range(40)], warc_ts=t0, body=[f"v0-{i}" for i in range(40)]))
-    c2 = pd.DataFrame(dict(url=[f"u{i}" for i in range(40)], warc_ts=t1, body=[f"v1-{i}" for i in range(40)]))
-    c3 = pd.DataFrame(dict(url=[f"u{i}" for i in range(40, 50)] + [f"u{i}" for i in range(10)],
-                           warc_ts=t1, body=[f"v2-{i}" for i in range(20)]))
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    schema = spark.createDataFrame(c1).schema
-    # one file per chunk, written in arrival order
-    for n, c in enumerate([c1, c2, c3]):
-        spark.createDataFrame(c, schema).coalesce(1).write.parquet(str(in_dir / f"chunk{n}"))
-        # separate subdirs aren't a valid single stream source; flatten below
-    import glob
-    import shutil
-
-    for n in range(3):
-        src = glob.glob(str(in_dir / f"chunk{n}" / "part-*.parquet"))[0]
-        shutil.move(src, str(in_dir / f"{n:03d}.parquet"))
-        shutil.rmtree(str(in_dir / f"chunk{n}"))
-
-    all_rows = spark.createDataFrame(pd.concat([c1, c2, c3]), schema)
-    exp = first_seen_batch(all_rows, key="url", order="warc_ts").toPandas()
-
-    q = run_first_seen_over_dir(
-        spark, str(in_dir), schema, str(tmp_path / "ck"), query_name="t_first_seen"
-    )
-    # NB processAllAvailable() never returns on a query with state timeouts
-    # (perpetual "cleaning up state" batches) — poll the sink instead
-    import time
-
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if q.exception():
-                raise q.exception()
-            if spark.sql("select count(*) c from t_first_seen").first().c >= len(exp):
-                break
-            time.sleep(0.5)
-        got = spark.sql("select * from t_first_seen").toPandas()
-    finally:
-        q.stop()
-
-    assert got.url.value_counts().max() == 1
-    key = ["url", "warc_ts", "body"]
-    g = got[key].sort_values("url").reset_index(drop=True)
-    e = exp[key].sort_values("url").reset_index(drop=True)
-    pd.testing.assert_frame_equal(g, e)
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,9 @@
 # -*- coding: utf-8 -*-
-"""Differential + property tests for the string/similarity kernel.
+"""Golden, differential and property tests for the string/similarity kernel.
 
-Every scalar is checked against the reference implementation imported from
-/root/reference (check_result_utils.py), run on the same inputs.
+Every scalar is checked against golden values frozen from the engine
+(fixtures/engine_golden.json) and, where the reference implementation's
+check_result_utils.py is importable, against it on the same inputs.
 """
 
 from __future__ import annotations
@@ -46,6 +47,23 @@ POSTCODES = ["1060", "1000", "1050", "B-1060", "L1060", "1061", "1160", "9000", 
 
 CITIES = ["Bruxelles", "Brussel", "BRUXELLES", "Liège", "Liege", "Gent", "", None, "Saint-Gilles"]
 
+ACCENTED = ["Liège", "Chaussée", "Élysée", "ça", "ümlaut", "Æon", "ﬁ", "abc"]
+
+FINGERPRINTS = ["RUE DU BAS DU VILLAGE", "AVENUE LOUISE", "A  B   A", "", "X"]
+
+INCLUSION_PAIRS = [
+    ("AVENUE C BERTEN", "AVENUE CLOVIS BERTEN"),
+    ("AVENUE CLOVIS BERTEN", "AVENUE C BERTEN"),
+    ("AVENUE LOUISE", "PLACE LOUISE"),
+    ("ABC", "ABC"),
+    ("", "ABC"),
+    ("A", "B"),
+]
+
+
+def _pairs(vals):
+    return [(a, b) for a in vals for b in vals]
+
 
 def _ref_series(fn, pairs):
     s1 = pd.Series([a for a, _ in pairs])
@@ -53,15 +71,44 @@ def _ref_series(fn, pairs):
     return fn(s1, s2).tolist()
 
 
+_SCALARS = {
+    "remove_accents": (tn.remove_accents, ACCENTED),
+    "fingerprint": (tn.fingerprint, FINGERPRINTS),
+    "inclusion_test": (lambda p: tn.inclusion_test(*p), INCLUSION_PAIRS),
+}
+
+_COMPARES = {
+    "house_number_compare": (tn.house_number_compare_one, HOUSE_NUMBERS),
+    "postcode_compare": (tn.postcode_compare_one, POSTCODES),
+    "city_compare": (tn.city_compare_one, CITIES),
+    "street_compare": (tn.street_compare_one, STREETS),
+}
+
+
+@pytest.mark.parametrize("name", list(_SCALARS))
+def test_scalar_golden(engine_golden, name):
+    fn, vals = _SCALARS[name]
+    g = engine_golden["textnorm"][name]
+    assert g["inputs"] == [list(v) if isinstance(v, tuple) else v for v in vals]
+    assert [fn(v) for v in vals] == g["outputs"]
+
+
+@pytest.mark.parametrize("name", list(_COMPARES))
+def test_compare_golden(engine_golden, name):
+    fn, vals = _COMPARES[name]
+    g = engine_golden["textnorm"][name]
+    assert g["inputs"] == vals
+    assert [fn(a, b) for a, b in _pairs(vals)] == g["outputs"]
+
+
 def test_remove_accents_differential(refmod):
-    vals = ["Liège", "Chaussée", "Élysée", "ça", "ümlaut", "Æon", "ﬁ", "abc"]
-    for v in vals:
+    for v in ACCENTED:
         assert tn.remove_accents(v) == refmod.check_result_utils.remove_accents(v)
     assert tn.remove_accents(None) is None
 
 
 def test_house_number_compare_differential(refmod):
-    pairs = [(a, b) for a in HOUSE_NUMBERS for b in HOUSE_NUMBERS]
+    pairs = _pairs(HOUSE_NUMBERS)
     ref = _ref_series(refmod.check_result_utils.house_number_compare, pairs)
     got = [tn.house_number_compare_one(a, b) for a, b in pairs]
     assert got == ref
@@ -83,7 +130,7 @@ def test_house_number_truth_table():
 
 
 def test_postcode_compare_differential(refmod):
-    pairs = [(a, b) for a in POSTCODES for b in POSTCODES]
+    pairs = _pairs(POSTCODES)
     ref = _ref_series(refmod.check_result_utils.postcode_compare, pairs)
     got = [tn.postcode_compare_one(a, b) for a, b in pairs]
     assert got == ref
@@ -99,37 +146,28 @@ def test_postcode_truth_table():
 
 
 def test_city_compare_differential(refmod):
-    pairs = [(a, b) for a in CITIES for b in CITIES]
+    pairs = _pairs(CITIES)
     ref = _ref_series(refmod.check_result_utils.city_compare, pairs)
     got = [tn.city_compare_one(a, b) for a, b in pairs]
     assert got == pytest.approx(ref)
 
 
 def test_street_compare_differential(refmod):
-    pairs = [(a, b) for a in STREETS for b in STREETS]
+    pairs = _pairs(STREETS)
     ref = _ref_series(refmod.check_result_utils.street_compare, pairs)
     got = [tn.street_compare_one(a, b) for a, b in pairs]
     assert got == pytest.approx(ref)
 
 
 def test_fingerprint_differential(refmod):
-    vals = ["RUE DU BAS DU VILLAGE", "AVENUE LOUISE", "A  B   A", "", "X"]
-    ref = refmod.check_result_utils.fingerprint(pd.Series(vals)).tolist()
-    got = [tn.fingerprint(v) for v in vals]
+    ref = refmod.check_result_utils.fingerprint(pd.Series(FINGERPRINTS)).tolist()
+    got = [tn.fingerprint(v) for v in FINGERPRINTS]
     assert got == ref
     assert tn.fingerprint("RUE DU BAS DU VILLAGE") == "BAS DU RUE VILLAGE"
 
 
 def test_inclusion_differential(refmod):
-    pairs = [
-        ("AVENUE C BERTEN", "AVENUE CLOVIS BERTEN"),
-        ("AVENUE CLOVIS BERTEN", "AVENUE C BERTEN"),
-        ("AVENUE LOUISE", "PLACE LOUISE"),
-        ("ABC", "ABC"),
-        ("", "ABC"),
-        ("A", "B"),
-    ]
-    for a, b in pairs:
+    for a, b in INCLUSION_PAIRS:
         assert tn.inclusion_test(a, b) == refmod.check_result_utils.inclusion_test(a, b)
 
 
