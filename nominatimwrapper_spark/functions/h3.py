@@ -890,10 +890,9 @@ def grid_disk(cells, k: int = 1) -> list[set[int]]:
 # Per res: [R_max_km, D_min[1], ..., D_min[16]]. D_min[g] is the minimum
 # center-to-center distance at grid distance exactly g; R_max the maximum
 # point-to-cell-center offset (boundary circumradius and direct point
-# sampling, maxed). Readers: point_in_polygon_join's automatic H3
-# resolution (operators/spatial.py) and polygon_cover_cells' edge-sample
-# step; both read D_min[1], the minimum cell width. (kNN needs no
-# distance bound: knn_h3 searches whole grid_disk neighborhoods.)
+# sampling, maxed). Reader: polygon_cover_cells' edge-sample step, through
+# D_min[1], the minimum cell width. (kNN needs no distance bound: knn_h3
+# searches whole grid_disk neighborhoods.)
 #
 # PROVENANCE (round 5, gen_h3_reach.py --exact):
 #  - res 0-2: EXHAUSTIVE — every cell of the res swept as origin, all 16

@@ -122,17 +122,15 @@ def city_key_udf(s: pd.Series) -> pd.Series:
 @dataclass
 class GazetteerIndex:
     """Lookup-ready gazetteer. ``lookup`` has one row per (name-variant-part,
-    place); ``places`` one row per place (for parent rescue)."""
+    place); ``parents`` is the parent rescue pool, one row per street
+    (highway) place with its alt-name values: (p_pid, p_alts)."""
 
     lookup: DataFrame
-    places: DataFrame
+    parents: DataFrame
     broadcast_ok: bool = True
     # the kernel's broadcast payload (geocode_kernel.kernel_broadcast),
     # built on first use; dataclasses.replace starts the copy without it
     kernel_bc: object = field(default=None, init=False, repr=False, compare=False)
-
-    def hinted(self, df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if self.broadcast_ok else df
 
 
 def build_gazetteer_index(
@@ -198,10 +196,8 @@ def build_gazetteer_index(
             .withColumn("_o_other", F.lit(""))
         )
 
-    places = base.select(
-        "place_id", "parent_place_id", "street_name", "alt_map", "house_number",
-        "post_code", "city", "country", "lat", "lon", "place_rank", "category",
-        "importance", "namedetails",
+    parents = base.filter(F.col("category") == "highway").select(
+        F.col("place_id").alias("p_pid"), F.map_values("alt_map").alias("p_alts")
     )
 
     # house rows inherit their parent street's name variants (incl. old
@@ -259,7 +255,7 @@ def build_gazetteer_index(
     n = lookup.count()
     est_bytes = n * _avg_row_bytes(lookup)
     return GazetteerIndex(
-        lookup=lookup, places=places.cache(), broadcast_ok=est_bytes <= broadcast_max_bytes
+        lookup=lookup, parents=parents.cache(), broadcast_ok=est_bytes <= broadcast_max_bytes
     )
 
 
@@ -549,11 +545,7 @@ def _locality_groups(
     lk = index.lookup.select(
         "*", F.inline(F.array(*_locality_keys(F.col("post_code"), F.col("key_city"))))
     ).join(hint(reach), ["kind", "key"]).drop("kind", "key")
-    parents = index.hinted(
-        index.places.filter(F.col("category") == "highway").select(
-            F.col("place_id").alias("p_pid"), F.map_values("alt_map").alias("p_alts")
-        )
-    )
+    parents = F.broadcast(index.parents) if index.broadcast_ok else index.parents
     return q, lk.join(parents, lk.parent_place_id == parents.p_pid, "left").drop("p_pid")
 
 
@@ -569,11 +561,8 @@ def _group_pdf(
     from .geocode_kernel import _LOOKUP_COLS, KernelPayload, cascade_kernel
 
     g = g.drop_duplicates(["key_street", "place_id"])
-    pay = KernelPayload(g[_LOOKUP_COLS], pd.DataFrame(columns=["place_id", "category", "alt_map"]))
     par = g.loc[g.p_alts.notna(), ["parent_place_id", "p_alts"]].drop_duplicates("parent_place_id")
-    pay.parents = pd.DataFrame(
-        {"p_pid": par.parent_place_id.to_numpy(), "p_alts": [list(a) for a in par.p_alts]}
-    )
+    pay = KernelPayload(g[_LOOKUP_COLS], par.rename(columns={"parent_place_id": "p_pid"}))
     addr = q.rename(columns={"_tk": "addr_key"})[ADDR_COLS + ["_n_keys"]]
     if not (with_rejected or with_stats):
         return cascade_kernel(addr, pay, check_results)

@@ -143,7 +143,7 @@ _LOOKUP_COLS = [
 class KernelPayload:
     """Pandas image of a GazetteerIndex, pre-split by lookup level."""
 
-    def __init__(self, lookup: pd.DataFrame, places: pd.DataFrame):
+    def __init__(self, lookup: pd.DataFrame, parents: pd.DataFrame):
         self.houses = lookup[lookup.place_rank == 30].reset_index(drop=True)
         self.streets = lookup[lookup.place_rank == 26].reset_index(drop=True)
         self.cities = lookup[lookup.place_rank < 26].reset_index(drop=True)
@@ -163,17 +163,11 @@ class KernelPayload:
             ]
             .reset_index(drop=True)
         )
-        # parent rescue pool: street-category places with their alt-name values
-        pp = places[places.category == "highway"]
-        self.parents = pd.DataFrame(
-            {
-                "p_pid": pp["place_id"].to_numpy(),
-                "p_alts": [
-                    list(m.values()) if isinstance(m, dict) else []
-                    for m in pp["alt_map"].tolist()
-                ],
-            }
-        )
+        # parent rescue pool (GazetteerIndex.parents): p_pid, p_alts
+        self.parents = pd.DataFrame({
+            "p_pid": parents.p_pid.to_numpy(),
+            "p_alts": [[] if a is None else list(a) for a in parents.p_alts],
+        })
 
 
 def build_kernel_payload(index: GazetteerIndex) -> KernelPayload:
@@ -181,10 +175,7 @@ def build_kernel_payload(index: GazetteerIndex) -> KernelPayload:
         raise ValueError(
             "gazetteer exceeds the broadcast budget; use geocode.cascade"
         )
-    return KernelPayload(
-        index.lookup.select(_LOOKUP_COLS).toPandas(),
-        index.places.select("place_id", "category", "alt_map").toPandas(),
-    )
+    return KernelPayload(index.lookup.select(_LOOKUP_COLS).toPandas(), index.parents.toPandas())
 
 
 _BC_LOCK = threading.Lock()

@@ -18,9 +18,10 @@ Scale design notes
   targets once on the cell key, and one window keeps the top k. The
   answer is the k nearest targets within ``max_rings``; the cost is
   O(queries x targets within max_rings), whatever k is.
-- Rollups: straight groupBy(cell) + optional two-phase SALTED variant for
-  skewed hot cells (one city = 25% of traffic in the synth world): partial
-  agg on (cell, salt) then final merge — the classic skew-safe pattern.
+- Rollups: ``multi_zoom_rollup`` tags each point with its finest cell
+  once, emits one (zoom, cell) row per level and counts them in ONE
+  groupBy. A hot cell needs no salting: the plan's partial aggregation
+  sends at most one row per (cell, zoom) and map task to the shuffle.
 """
 
 from __future__ import annotations
@@ -111,67 +112,27 @@ def point_in_polygon_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     cells_per_degree: int = 32,
-    how: str = "inner",
     cover: str = "grid",
     h3_res: int = 7,
 ) -> DataFrame:
-    """Assign each point to the polygon(s) containing it.
+    """Assign each point to the polygon(s) containing it (inner join: a
+    point in no polygon is dropped, a point in several appears once per
+    polygon).
 
     points: any DataFrame with lat/lon columns.
     polygons: (poly_id, name, ring_xy, ring_offsets, bbox_*) per FIXTURES.md §4.
     Returns points columns + (poly_id, poly_name).
 
     ``cover`` picks the candidate tiling: ``'grid'`` (planar integer
-    lat/lon cells from the bbox) or ``'h3'`` — the H3-native cover via
-    ``polygon_cover_cells`` (center polyfill + edge-sample disk-1, a
-    provable intersect superset at ``h3_res``), so H3-indexed polygon
-    layers join points without a second tiling. Either way the exact
-    even-odd ray cast decides; the cover only bounds who pays it.
+    lat/lon cells from the bbox, ``cells_per_degree``) or ``'h3'`` — the
+    H3-native cover via ``polygon_cover_cells`` (center polyfill +
+    edge-sample disk-1, a provable intersect superset at ``h3_res``), so
+    H3-indexed polygon layers join points without a second tiling.
+    Either way the exact even-odd ray cast decides; the cover only bounds
+    who pays it.
     """
-    # left mode joins results back onto the input; equality on double
-    # lat/lon is fragile and duplicate input rows would multiply, so key
-    # the join on a synthesized unique row id instead (inner mode never
-    # joins back — no id needed there). The id-bearing frame MUST be
-    # pinned before the plan branches: monotonically_increasing_id is
-    # only stable if partitioning and intra-partition order reproduce,
-    # which shuffled/AQE-coalesced/speculatively re-executed upstreams
-    # don't guarantee across the two evaluations (the hit subtree and
-    # the left side) — an unpinned id silently drops or misattributes
-    # matches. localCheckpoint materializes the ids once; left mode pays
-    # that materialization, inner mode stays pipelined.
-    if how != "inner":
-        points = points.withColumn(
-            "_pt_id", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
-
     if cover == "h3":
         from ..functions.h3 import h3_cell_col
-
-        if h3_res is None:
-            # auto: finest res whose min cell spacing >= ~1/24 of the
-            # mean polygon extent — covers land in O(100s) of cells per
-            # polygon instead of exploding at a too-fine static res (or
-            # over-joining points at a too-coarse one). One tiny agg on
-            # the SMALL (polygon) side.
-            from ..functions.h3 import _EMB_REACH
-
-            row = polygons.agg(
-                F.avg(F.col("bbox_maxx") - F.col("bbox_minx")).alias("dx"),
-                F.avg(F.col("bbox_maxy") - F.col("bbox_miny")).alias("dy"),
-                F.avg((F.col("bbox_miny") + F.col("bbox_maxy")) / 2).alias("midlat"),
-            ).first()
-            ext_km = max(
-                float(row["dy"] or 0.0) * 111.19492664455873,
-                float(row["dx"] or 0.0)
-                * 111.19492664455873
-                * max(math.cos(math.radians(float(row["midlat"] or 0.0))), 0.05),
-                1e-6,
-            )
-            h3_res = 0
-            for cand in range(15, -1, -1):
-                if _EMB_REACH[cand][1] >= ext_km / 24.0:
-                    h3_res = cand
-                    break
 
         cover_cells = _h3_cover_udf(h3_res)(F.col("ring_xy"), F.col("ring_offsets"))
         pt_cell = h3_cell_col(F.col(lat_col), F.col(lon_col), h3_res)
@@ -196,16 +157,9 @@ def point_in_polygon_join(
         & (F.col(lat_col) >= F.col("bbox_miny"))
         & (F.col(lat_col) <= F.col("bbox_maxy"))
     )
-    hit = joined.filter(
+    return joined.filter(
         _ray_cast_udf(F.col(lon_col), F.col(lat_col), F.col("ring_xy"), F.col("ring_offsets"))
     ).drop("ring_xy", "ring_offsets", "bbox_minx", "bbox_miny", "bbox_maxx", "bbox_maxy", "cell")
-
-    if how == "inner":
-        return hit
-    # left: keep unmatched points with null poly, joined on the unique id
-    return points.join(
-        hit.select("_pt_id", "poly_id", "poly_name"), on="_pt_id", how="left"
-    ).drop("_pt_id")
 
 
 # ---------------------------------------------------------------------------
@@ -246,7 +200,6 @@ def knn_cells(
     cells_per_degree: int = 32,
     max_rings: int = 8,
     broadcast_max_bytes: int = 800 * 1024 * 1024,
-    force_no_broadcast: bool = False,
 ) -> DataFrame:
     """Scale-path kNN over grid cells (SURVEY.md J10/W4).
 
@@ -265,7 +218,8 @@ def knn_cells(
     The target projection broadcasts only under the byte gate
     (``broadcast_max_bytes``); above it the join degrades to a shuffle
     hash join on the cell key instead of OOMing on a planet-scale
-    target corpus.
+    target corpus (``broadcast_max_bytes=0`` forces that regime for any
+    non-empty target set).
     """
     cell = grid_cell_col(F.col("lat"), F.col("lon"), cells_per_degree)
     offs = F.sequence(F.lit(-max_rings), F.lit(max_rings))
@@ -276,9 +230,7 @@ def knn_cells(
         .withColumn("_cell", F.col("_qcell") + F.col("_dy") * (360 * cells_per_degree) + F.col("_dx"))
         .drop("_qcell", "_dy", "_dx")
     )
-    return _knn_in_reach(
-        block, targets, cell, k, query_id, target_id, broadcast_max_bytes, force_no_broadcast
-    )
+    return _knn_in_reach(block, targets, cell, k, query_id, target_id, broadcast_max_bytes)
 
 
 def knn_h3(
@@ -291,8 +243,6 @@ def knn_h3(
     max_rings: int = 8,
     max_query_cells: int = 50_000,
     broadcast_max_bytes: int = 800 * 1024 * 1024,
-    force_no_broadcast: bool = False,
-    on_overflow: str = "coarsen",
 ) -> DataFrame:
     """kNN on the real Uber-H3 tiling (J10/W4), in the one pass it shares
     with ``knn_cells``.
@@ -309,11 +259,8 @@ def knn_h3(
       for the distinct query cells and broadcast as a (query cell, cell)
       frame; the query side is the small side by contract;
     - the target side has ``knn_cells``' byte gate (``broadcast_max_bytes``);
-    - ``max_query_cells`` bounds the driver-side disks. Above it,
-      ``on_overflow='coarsen'`` re-runs at the finest resolution below
-      the input whose distinct-cell count fits (the disks then reach
-      farther, the distance math is identical); ``'raise'`` raises
-      instead.
+    - ``max_query_cells`` bounds the driver-side disks: above it the
+      call raises ValueError (pick a coarser ``res``, or ``knn_cells``).
     """
     from ..functions.h3 import grid_disk, h3_cell_col
 
@@ -324,23 +271,9 @@ def knn_h3(
     q = queries.withColumn("_qcell", cell)
     qcells = [r[0] for r in q.select("_qcell").distinct().limit(max_query_cells + 1).collect()]
     if len(qcells) > max_query_cells:
-        if on_overflow != "coarsen":
-            raise ValueError(
-                f"knn_h3: > {max_query_cells} distinct query cells; use a "
-                "coarser res, knn_cells, or on_overflow='coarsen'"
-            )
-        for coarser in range(res - 1, -1, -1):
-            qc = queries.withColumn(
-                "_qcell", h3_cell_col(F.col("lat"), F.col("lon"), coarser)
-            )
-            n = qc.select("_qcell").distinct().limit(max_query_cells + 1).count()
-            if n <= max_query_cells:
-                return knn_h3(
-                    queries, targets, k, query_id, target_id, coarser,
-                    max_rings, max_query_cells, broadcast_max_bytes,
-                    force_no_broadcast, on_overflow="raise",
-                )
-        raise ValueError("knn_h3: query cells exceed the cap even at res 0")
+        raise ValueError(
+            f"knn_h3: > {max_query_cells} distinct query cells; use a coarser res or knn_cells"
+        )
 
     disks = grid_disk(np.array(qcells, dtype=np.uint64), max_rings)
     disk_map = queries.sparkSession.createDataFrame(
@@ -351,14 +284,12 @@ def knn_h3(
         "_qcell long, _cell long",
     )
     disk_rows = q.join(F.broadcast(disk_map), on="_qcell", how="inner").drop("_qcell")
-    return _knn_in_reach(
-        disk_rows, targets, cell, k, query_id, target_id, broadcast_max_bytes, force_no_broadcast
-    )
+    return _knn_in_reach(disk_rows, targets, cell, k, query_id, target_id, broadcast_max_bytes)
 
 
 def _knn_in_reach(
     q: DataFrame, targets: DataFrame, tcell: Column, k: int, query_id: str, target_id: str,
-    broadcast_max_bytes: int, force_no_broadcast: bool,
+    broadcast_max_bytes: int,
 ) -> DataFrame:
     """The one pass of ``knn_cells`` and ``knn_h3``: ``q`` holds a row per
     (query, in-reach cell ``_cell``); it joins the targets whose cell
@@ -377,7 +308,7 @@ def _knn_in_reach(
         # the cascade's byte gate (geocode.build_gazetteer_index): above
         # the budget a planet-scale POI corpus degrades to a shuffle join
         # on the cell key instead of OOMing the executors
-        no_bc = force_no_broadcast or t.count() * _avg_row_bytes(t) > broadcast_max_bytes
+        no_bc = t.count() * _avg_row_bytes(t) > broadcast_max_bytes
         # materialized so the cached projection can be dropped on return —
         # repeated kNN calls would otherwise accrete executor storage for
         # the app lifetime
@@ -415,66 +346,30 @@ def _knn_target_join(shell_df: DataFrame, t: DataFrame, no_bc: bool) -> DataFram
     ).drop("_cell", "_tcell", "_tlat", "_tlon")
 
 
-
 # ---------------------------------------------------------------------------
 # tile rollups (A9)
 # ---------------------------------------------------------------------------
 
 
-def tile_rollup(
-    points: DataFrame,
-    cell_col: str = "cell",
-    count_distinct_col: str | None = None,
-    avg_cols: tuple[str, ...] = (),
-    salt_partitions: int | None = None,
-    salt_key: str | None = None,
-) -> DataFrame:
-    """counts (+ distinct + means) per tile cell.
-
-    ``salt_partitions``: two-phase aggregation for skewed hot cells —
-    partial agg on (cell, salt) then merge. count_distinct falls back to
-    the plain path (distinct cannot be salted without a set union; use
-    approx_count_distinct at 100 TB scale instead)."""
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if count_distinct_col:
-        aggs.append(F.countDistinct(count_distinct_col).alias(f"n_{count_distinct_col}"))
-    for c in avg_cols:
-        aggs.append(F.avg(c).alias(f"avg_{c}"))
-
-    if not salt_partitions or count_distinct_col:
-        return points.groupBy(cell_col).agg(*aggs)
-
-    key = F.col(salt_key) if salt_key else F.spark_partition_id()
-    salted = points.withColumn("_salt", F.pmod(F.hash(key), F.lit(salt_partitions)))
-    partial_aggs = [F.count(F.lit(1)).alias("_n")] + [
-        F.sum(c).alias(f"_s_{c}") for c in avg_cols
-    ]
-    partial = salted.groupBy(cell_col, "_salt").agg(*partial_aggs)
-    final_aggs = [F.sum("_n").alias("n")] + [
-        (F.sum(f"_s_{c}") / F.sum("_n")).alias(f"avg_{c}") for c in avg_cols
-    ]
-    return partial.groupBy(cell_col).agg(*final_aggs)
-
-
 def multi_zoom_rollup(
     points: DataFrame, cell_expr: Column, parent_expr_fn, levels: list[int]
 ) -> DataFrame:
-    """Hierarchical rollup: compute the finest cells once, then roll up to
-    coarser zooms with pure integer parent math (no re-scan of the input)."""
-    finest = points.withColumn("cell", cell_expr)
-    base = finest.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-    outs = [base.withColumn("zoom", F.lit(levels[0]))]
-    for lv in levels[1:]:
-        outs.append(
-            base.withColumn("cell", parent_expr_fn(F.col("cell"), lv))
-            .groupBy("cell")
-            .agg(F.sum("n").alias("n"))
-            .withColumn("zoom", F.lit(lv))
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    """Hierarchical rollup: (cell, n, zoom), one row per occupied cell of
+    every level. Each point is tagged with its finest cell (``cell_expr``,
+    zoom ``levels[0]``) once; ``parent_expr_fn(cell, lv)`` maps it to its
+    level-``lv`` parent for every coarser level with pure integer parent
+    math, and one groupBy counts every (cell, zoom) pair."""
+    finest = points.select(cell_expr.alias("cell"))
+    tags = [F.struct(F.col("cell").alias("cell"), F.lit(levels[0]).alias("zoom"))] + [
+        F.struct(parent_expr_fn(F.col("cell"), lv).alias("cell"), F.lit(lv).alias("zoom"))
+        for lv in levels[1:]
+    ]
+    return (
+        finest.select(F.inline(F.array(*tags)))
+        .groupBy("cell", "zoom")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select("cell", "n", "zoom")
+    )
 
 
 # ---------------------------------------------------------------------------

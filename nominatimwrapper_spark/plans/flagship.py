@@ -21,13 +21,15 @@ the distributed shuffle-join cascade (operators/geocode.py) above it.
 from __future__ import annotations
 
 import atexit
+import functools
 import shutil
 import tempfile
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..functions import geo, s2
 from ..functions.text import detect_lang_udf, extract_text_udf
@@ -39,44 +41,53 @@ from ..operators.dedup import (
 from ..operators.geocode import GazetteerIndex, build_gazetteer_index, cascade
 from ..operators.geocode_kernel import geocode_and_tile_kernel
 from ..operators.pages import pages_to_addresses
-from ..operators.spatial import latest_snapshot, tile_rollup
-
-_WORLD_CACHE: dict[tuple, str] = {}
+from ..operators.spatial import latest_snapshot
 
 # NB: scaling measurements on this shared sandbox host require the in-run
 # load sampling in scripts/scaling.py — see BENCH.md methodology.
 
 
-def world_dir(n_streets: int = 120, houses_per_street: int = 6) -> str:
-    """Synth world parquet dir, generated once per process."""
-    key = (n_streets, houses_per_street)
-    if key not in _WORLD_CACHE:
-        from ..synth import gen_world, write_world
+@functools.cache
+def world_dir() -> str:
+    """The synth world's parquet dir (120 streets x 6 houses), generated
+    once per process and removed at exit."""
+    from ..synth import gen_world, write_world
 
-        d = tempfile.mkdtemp(prefix="nwspark_world_")
-        write_world(
-            d, gen_world(n_streets=n_streets, houses_per_street=houses_per_street,
-                         n_pages=10, n_per_class=2)
-        )
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _WORLD_CACHE[key] = d
-    return _WORLD_CACHE[key]
+    d = tempfile.mkdtemp(prefix="nwspark_world_")
+    write_world(d, gen_world(n_streets=120, houses_per_street=6, n_pages=10, n_per_class=2))
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
+
+_HOUSE_COLS = ["name_fr", "house_number", "post_code", "city"]
+
+
+@functools.cache
+def _world_houses() -> pd.DataFrame:
+    """The world's houses in place_id order with their page fields, read
+    with pandas (the world is a local dir this process wrote), numbered
+    0..n-1 in ``_hidx``."""
+    g = pd.read_parquet(
+        f"{world_dir()}/gazetteer.parquet",
+        columns=["place_id", "place_rank", *_HOUSE_COLS],
+    )
+    h = g[g.place_rank == 30].sort_values("place_id")[_HOUSE_COLS].reset_index(drop=True)
+    return h.assign(_hidx=np.arange(len(h), dtype=np.int32))
+
+
+_DOCS_SCHEMA = "doc_id long, text string, lang string"
 
 _INDEX_CACHE: dict[tuple, GazetteerIndex] = {}
 
 
-def gazetteer_index(
-    spark: SparkSession, force_no_broadcast: bool = False, **kw
-) -> GazetteerIndex:
+def gazetteer_index(spark: SparkSession, force_no_broadcast: bool = False) -> GazetteerIndex:
     """``force_no_broadcast`` builds the index with a zero broadcast budget
     — the shuffle-join cascade regime a several-GB planet-scale gazetteer
     hits (bench leg; correctness is identical, tested in
     test_non_broadcast_path_same_results)."""
-    d = world_dir(**kw)
-    key = (id(spark), d, force_no_broadcast)
+    key = (id(spark), force_no_broadcast)
     if key not in _INDEX_CACHE:
-        gaz = spark.read.parquet(f"{d}/gazetteer.parquet")
+        gaz = spark.read.parquet(f"{world_dir()}/gazetteer.parquet")
         _INDEX_CACHE[key] = build_gazetteer_index(
             gaz, broadcast_max_bytes=0 if force_no_broadcast else 800 * 1024 * 1024
         )
@@ -84,7 +95,7 @@ def gazetteer_index(
 
 
 def pages_from_documents(
-    spark: SparkSession, sf_dir: str, replicate: int = 1, skew_hot: float = 0.0, **kw
+    spark: SparkSession, sf_dir: str, replicate: int = 1, skew_hot: float = 0.0
 ) -> DataFrame:
     """Build a pages(url, warc_ts, html, text, lang) table from the driver's
     documents table, injecting one deterministic gazetteer address per doc.
@@ -94,7 +105,8 @@ def pages_from_documents(
     per-stage overhead, dominates). ``skew_hot`` routes that fraction of
     documents to ONE house (the hot-city crawl regime, SURVEY §7 hard-part
     5) — deterministic via doc_id buckets."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # the declared schema of the columns used: inferring it is a Spark job
+    docs = spark.read.schema(_DOCS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
     # the documents file is a single small parquet -> ONE input partition;
     # spread it across the session's shuffle-partition count BEFORE the
     # explode and the heavy UDFs, else the fan-out + html build + extraction
@@ -107,18 +119,13 @@ def pages_from_documents(
         ).withColumn(
             "doc_id", F.col("doc_id") * replicate + F.col("_rep")
         ).drop("_rep")
-    gaz = spark.read.parquet(f"{world_dir(**kw)}/gazetteer.parquet")
-    # the synthetic world has a few hundred houses (664 at the default size):
-    # collect them once, number them in place_id order on the driver and
-    # broadcast them back as a local frame
-    houses = gaz.filter(F.col("place_rank") == 30).select(
-        "place_id", "name_fr", "house_number", "post_code", "city"
-    )
-    hdf = houses.toPandas().sort_values("place_id").drop(columns="place_id")
+    # the synthetic world has a few hundred houses (664): a local frame,
+    # read once per process, numbered in place_id order and broadcast
+    hdf = _world_houses()
     n_houses = len(hdf)
-    hdf["_hidx"] = np.arange(n_houses, dtype=np.int32)
     houses = spark.createDataFrame(
-        hdf, StructType(houses.schema.fields[1:] + [StructField("_hidx", IntegerType(), False)])
+        hdf, StructType([StructField(c, StringType()) for c in _HOUSE_COLS]
+                        + [StructField("_hidx", IntegerType(), False)])
     )
 
     hidx = (F.col("doc_id") % n_houses).cast("int")
@@ -205,9 +212,10 @@ def geocode_and_tile(
         return geocode_and_tile_kernel(pages, index, check_results=check_results)
 
     addrs = pages_to_addresses(pages, dedup_crawls=dedup_crawls)
+    # dedup_crawls already made every addr_key unique: the guard cannot fire
     res, _ = cascade(
         addrs, index, check_results=check_results, with_rejected=False,
-        validate_unique=validate_unique, with_extra_house_number=False,
+        validate_unique=validate_unique and not dedup_crawls, with_extra_house_number=False,
     )
     # ONE Arrow crossing for both tilings (fused struct UDF) — two
     # separate pandas UDFs would serialize the same lat/lon twice
@@ -287,7 +295,7 @@ def q_s2_rollup(spark, sf_dir):
     pts = _cust_points(spark, sf_dir).withColumn(
         "cell13", s2.s2_cell_udf(13)(F.col("lat"), F.col("lon"))
     )
-    base = tile_rollup(pts, "cell13")
+    base = pts.groupBy("cell13").agg(F.count(F.lit(1)).alias("n"))
     return base.withColumn("cell7", s2.s2_parent_col(F.col("cell13"), 7)).select(
         "cell13", "cell7", "n"
     )

@@ -16,10 +16,9 @@ seam) plus random controls:
   radius via cell_to_boundary over the swept cells, (b) direct sampled
   point-to-center offsets (uniform + pentagon-dense points).
 
-Readers of the table: point_in_polygon_join's automatic H3 resolution
-(operators/spatial.py) and polygon_cover_cells' edge-sample step
-(functions/h3.py), both through D_min[1], the minimum cell width. kNN
-reads none of it: knn_h3 searches whole grid_disk neighborhoods.
+Reader of the table: polygon_cover_cells' edge-sample step
+(functions/h3.py), through D_min[1], the minimum cell width. kNN reads
+none of it: knn_h3 searches whole grid_disk neighborhoods.
 
 Output: a Python literal for the _EMB_REACH table in functions/h3.py
 (per res: [R_max, D_min[1], ..., D_min[MAX_RING]] in km; margins are

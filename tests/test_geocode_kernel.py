@@ -426,7 +426,7 @@ def test_kernel_plan_builds_without_jobs(spark):
 
     idx = gazetteer_index(spark)
     kernel_broadcast(idx)  # the payload build runs its own jobs, once per index
-    pages = pages_from_documents(spark, SF_DIR)  # collects the house list
+    pages = pages_from_documents(spark, SF_DIR)  # starts no job either
     sc = spark.sparkContext
     group = "kernel-plan-build"
     sc.setJobGroup(group, "geocode_and_tile_kernel plan build")
@@ -437,6 +437,52 @@ def test_kernel_plan_builds_without_jobs(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert "MapInPandas" in plan
+
+
+def _with_job_count(spark, group: str, fn):
+    """``fn()``'s result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_pages_build_starts_no_jobs(spark):
+    """Building the flagship pages runs no Spark job: the house list is a
+    local frame and the documents schema is declared, so nothing is
+    collected or inferred before the caller's action (3 jobs per call
+    when the house list was collected with toPandas)."""
+    from nominatimwrapper_spark.plans.flagship import pages_from_documents
+
+    for i in range(2):
+        _, n = _with_job_count(spark, f"pages-build-{i}", lambda: pages_from_documents(spark, SF_DIR))
+        assert n == 0, (i, n)
+
+
+def test_cascade_route_skips_guard_after_recrawl_dedup(spark):
+    """Above the broadcast gate, geocode_and_tile's default call
+    (dedup_crawls=True) starts no more jobs than with validate_unique=False:
+    the recrawl dedup already makes every addr_key unique, so the
+    duplicate guard's jobs are not paid (2 more jobs when they were)."""
+    from nominatimwrapper_spark.plans.flagship import (
+        gazetteer_index,
+        geocode_and_tile,
+        pages_from_documents,
+    )
+
+    idx = dataclasses.replace(gazetteer_index(spark), broadcast_ok=False)
+    pages = pages_from_documents(spark, SF_DIR).localCheckpoint(eager=True)
+    # a first call warms the session up; its job count can run one higher
+    geocode_and_tile(pages, idx, validate_unique=False).toPandas()
+    _, without = _with_job_count(
+        spark, "guard-off", lambda: geocode_and_tile(pages, idx, validate_unique=False).toPandas()
+    )
+    out, n = _with_job_count(spark, "guard-default", lambda: geocode_and_tile(pages, idx).toPandas())
+    assert n <= without, (n, without)
+    assert len(out) == 500 and out.addr_key.is_unique
 
 
 def test_kernel_refuses_oversized_gazetteer(spark, world):

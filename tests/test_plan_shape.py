@@ -145,19 +145,6 @@ def test_cascade_result_has_no_restore_join(spark, tmp_path_factory):
     assert (out["caller_col"] == "payload-" + out["addr_key"]).all()
 
 
-def test_salted_rollup_two_phase(spark):
-    from nominatimwrapper_spark.operators.spatial import tile_rollup
-
-    pts = spark.read.parquet(f"{SF}/customer.parquet").select(
-        F.col("c_custkey").alias("id"),
-        (F.col("c_custkey") % 50).alias("cell"),
-        F.col("c_acctbal").alias("v"),
-    )
-    plan = _formatted(tile_rollup(pts, "cell", avg_cols=("v",), salt_partitions=8, salt_key="id"))
-    # two-phase: two separate HashAggregate pairs (partial+final per phase)
-    assert plan.count("HashAggregate") >= 4
-
-
 def test_knn_target_join_respects_byte_gate(spark):
     """Round-3 verdict #2: kNN must not force-broadcast the target
     table. Below the byte gate the per-ring join is a BroadcastHashJoin;

@@ -19,7 +19,6 @@ from nominatimwrapper_spark.operators.spatial import (
     knn_cells,
     latest_snapshot,
     point_in_polygon_join,
-    tile_rollup,
 )
 from nominatimwrapper_spark.synth import gen_world, write_world
 
@@ -122,17 +121,6 @@ def test_pip_edge_cases(spark):
     )
     got = point_in_polygon_join(pts, polys).toPandas()
     assert set(got.pid) == {1, 5}  # 2 and 4 are in the hole, 3 outside
-
-    # left mode keys the join-back on a synthesized row id, NOT on the
-    # float lat/lon columns — duplicate input rows must keep their
-    # multiplicity (one output row each) and misses get null poly
-    dup_pts = pts.unionByName(pts.filter(F.col("pid") == 1))  # pid 1 twice
-    left = point_in_polygon_join(dup_pts, polys, how="left").toPandas()
-    assert len(left) == 6  # 5 inputs + 1 duplicate, no row multiplied/lost
-    assert "_pt_id" not in left.columns
-    assert (left[left.pid == 1].poly_id == 1).all() and len(left[left.pid == 1]) == 2
-    assert left[left.pid == 3].poly_id.isna().all()
-    assert left[left.pid == 5].poly_id.notna().all()  # float-edge point kept
 
 
 def test_knn_cells_matches_bruteforce(spark, world):
@@ -243,16 +231,30 @@ def test_knn_job_count(spark, world):
     assert jobs["knn_cells"] <= 9 + 2 and jobs["knn_h3"] <= 12 + 2, jobs
 
 
-def test_tile_rollup_plain_vs_salted(spark, world):
-    gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
-    pts = gaz.withColumn("cell", grid_cell_col(F.col("lat"), F.col("lon")))
-    plain = tile_rollup(pts, "cell", avg_cols=("lat",)).toPandas()
-    salted = tile_rollup(pts, "cell", avg_cols=("lat",), salt_partitions=8, salt_key="place_id").toPandas()
-    p = plain.sort_values("cell").reset_index(drop=True)
-    s = salted.sort_values("cell").reset_index(drop=True)
-    assert (p.cell == s.cell).all()
-    assert (p.n == s.n).all()
-    np.testing.assert_allclose(p.avg_lat, s.avg_lat, rtol=1e-12)
+def test_multi_zoom_rollup_job_count(spark):
+    """A five-zoom H3 rollup of the 796 default-world gazetteer points,
+    its caller's ``toPandas`` included, runs in one aggregation: at most 1
+    Spark job more than the 2 measured (an aggregation per zoom and a
+    union of them ran 6)."""
+    from nominatimwrapper_spark.functions.h3 import h3_cell_col, h3_parent_col
+    from nominatimwrapper_spark.operators.spatial import multi_zoom_rollup
+    from nominatimwrapper_spark.plans.flagship import world_dir
+
+    pts = spark.read.parquet(f"{world_dir()}/gazetteer.parquet").select("lat", "lon")
+    levels = [9, 8, 7, 6, 5]
+    sc = spark.sparkContext
+    group = "multi-zoom-rollup-jobs"
+    sc.setJobGroup(group, "count multi_zoom_rollup jobs")
+    try:
+        out = multi_zoom_rollup(
+            pts, h3_cell_col(F.col("lat"), F.col("lon"), levels[0]), h3_parent_col, levels
+        ).toPandas()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs <= 2 + 1, jobs
+    assert list(out.columns) == ["cell", "n", "zoom"]
+    assert (out.groupby("zoom").n.sum() == 796).all() and set(out.zoom) == set(levels)
 
 
 def _pentagon_cloud(n=120, seed=3):
@@ -309,14 +311,14 @@ def test_knn_h3_shuffle_regime_matches_bruteforce(spark, world):
     queries = spark.createDataFrame(qpdf)
 
     bf = knn_bruteforce(queries, targets, k=3).select("query_id", "neighbor_id", "knn_rank").toPandas()
-    nb = knn_h3(queries, targets, k=3, res=7, force_no_broadcast=True).select(
+    nb = knn_h3(queries, targets, k=3, res=7, broadcast_max_bytes=0).select(
         "query_id", "neighbor_id", "knn_rank"
     ).toPandas()
     pd.testing.assert_frame_equal(
         bf.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
         nb.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
     )
-    cc = knn_cells(queries, targets, k=3, force_no_broadcast=True).select(
+    cc = knn_cells(queries, targets, k=3, broadcast_max_bytes=0).select(
         "query_id", "neighbor_id", "knn_rank"
     ).toPandas()
     pd.testing.assert_frame_equal(
@@ -341,9 +343,9 @@ def test_knn_empty_queries(spark, world):
     assert {"query_id", "neighbor_id", "dist_km", "knn_rank"} <= set(out2.columns)
 
 
-def test_knn_h3_coarsens_above_query_cell_cap(spark, world):
-    """Above max_query_cells the operator re-runs at the finest fitting
-    coarser resolution instead of raising — values still exact."""
+def test_knn_h3_raises_above_query_cell_cap(spark, world):
+    """Above max_query_cells (the bound on the driver-side disks) the
+    operator raises instead of building them."""
     from nominatimwrapper_spark.operators.spatial import knn_h3
 
     gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
@@ -353,17 +355,9 @@ def test_knn_h3_coarsens_above_query_cell_cap(spark, world):
     ].rename(columns={"place_id": "query_id"})
     queries = spark.createDataFrame(qpdf)
 
-    bf = knn_bruteforce(queries, targets, k=3).select("query_id", "neighbor_id", "knn_rank").toPandas()
-    # cap below the distinct res-7 cell count -> forced coarsen
-    got = knn_h3(queries, targets, k=3, res=7, max_query_cells=5).select(
-        "query_id", "neighbor_id", "knn_rank"
-    ).toPandas()
-    pd.testing.assert_frame_equal(
-        bf.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
-        got.sort_values(["query_id", "knn_rank"]).reset_index(drop=True),
-    )
+    # cap below the distinct res-7 cell count
     with pytest.raises(ValueError, match="query cells"):
-        knn_h3(queries, targets, k=3, res=7, max_query_cells=5, on_overflow="raise")
+        knn_h3(queries, targets, k=3, res=7, max_query_cells=5)
 
 
 def test_pip_h3_cover_truth_table(spark):
@@ -393,38 +387,6 @@ def test_pip_h3_cover_truth_table(spark):
     )
     got = point_in_polygon_join(pts, polys, cover="h3", h3_res=4).toPandas()
     assert set(got.pid) == {1, 5, 6}
-    left = point_in_polygon_join(pts, polys, how="left", cover="h3", h3_res=4).toPandas()
-    assert len(left) == 6
-    assert left[left.pid == 3].poly_id.isna().all()
-
-
-def test_pip_h3_cover_auto_res(spark):
-    """cover='h3' with h3_res=None picks a resolution from the polygon
-    extent and still matches the truth table."""
-    polys = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                dict(
-                    poly_id=1, name="holey", post_code="",
-                    ring_xy=[0.0, 0.0, 10.0, 0.0, 10.0, 10.0, 0.0, 10.0,
-                             4.0, 4.0, 6.0, 4.0, 6.0, 6.0, 4.0, 6.0],
-                    ring_offsets=[0, 8, 16],
-                    bbox_minx=0.0, bbox_miny=0.0, bbox_maxx=10.0, bbox_maxy=10.0,
-                )
-            ]
-        )
-    )
-    pts = spark.createDataFrame(
-        pd.DataFrame(
-            dict(
-                pid=[1, 2, 3, 4, 5],
-                lon=[2.0, 5.0, 11.0, 4.5, 9.999999],
-                lat=[2.0, 5.0, 5.0, 5.9999, 9.999999],
-            )
-        )
-    )
-    got = point_in_polygon_join(pts, polys, cover="h3", h3_res=None).toPandas()
-    assert set(got.pid) == {1, 5}
 
 
 def test_knn_h3_k_exceeds_targets_sphere_exhausted(spark):
@@ -502,9 +464,9 @@ def _in_reach(tiling, qlat, qlon, tpdf):
     return tpdf[keep]
 
 
-@pytest.mark.parametrize("force_no_broadcast", [False, True])
+@pytest.mark.parametrize("shuffle", [False, True])
 @pytest.mark.parametrize("tiling", ["cells", "h3"])
-def test_knn_max_rings_cutoff_returns_in_reach_only(spark, tiling, force_no_broadcast):
+def test_knn_max_rings_cutoff_returns_in_reach_only(spark, tiling, shuffle):
     """max_rings=1 with the k nearest targets beyond ring 1: the in-reach
     join returns whatever the disk of radius 1 holds, ranked from 1 —
     the in-reach targets only, in brute-force order."""
@@ -519,15 +481,15 @@ def test_knn_max_rings_cutoff_returns_in_reach_only(spark, tiling, force_no_broa
     )
     got = _knn_run(
         tiling, queries, spark.createDataFrame(tpdf), k=4, max_rings=1,
-        force_no_broadcast=force_no_broadcast,
+        **({"broadcast_max_bytes": 0} if shuffle else {}),
     )
     assert list(got.knn_rank) == list(range(1, len(near) + 1))
     pd.testing.assert_frame_equal(want, got)
 
 
-@pytest.mark.parametrize("force_no_broadcast", [False, True])
+@pytest.mark.parametrize("shuffle", [False, True])
 @pytest.mark.parametrize("tiling", ["cells", "h3"])
-def test_knn_k_exceeds_targets_returns_every_target(spark, tiling, force_no_broadcast):
+def test_knn_k_exceeds_targets_returns_every_target(spark, tiling, shuffle):
     """k larger than the whole target table, every target within
     max_rings: no query's disk holds k candidates, so each gets every
     target exactly once, in brute-force order."""
@@ -546,7 +508,7 @@ def test_knn_k_exceeds_targets_returns_every_target(spark, tiling, force_no_broa
     assert len(want) == len(qpdf) * len(tpdf)
     got = _knn_run(
         tiling, queries, targets, k=10, max_rings=4,
-        force_no_broadcast=force_no_broadcast,
+        **({"broadcast_max_bytes": 0} if shuffle else {}),
     )
     pd.testing.assert_frame_equal(want, got)
 
