@@ -107,6 +107,12 @@ def _gazetteer_index_cached(spark: SparkSession, gazetteer_path: str):
     return _INDEX_CACHE[key]
 
 
+# partition jobs run side by side (guide §2.6): enough to back-fill each
+# job's tail, not enough to thrash; measured on the 8-partition bench
+# layout: 4-part leg 13.7s at 1 -> 10.0s at 3, resume leg 11.8s -> 8.8s
+_JOB_CONCURRENCY = 3
+
+
 def run_job(
     spark: SparkSession,
     pages_path: str,
@@ -114,17 +120,11 @@ def run_job(
     out_dir: str,
     date_from: str | None = None,
     date_to: str | None = None,
-    max_concurrent: int | None = None,
 ) -> dict:
     """Run (or resume) the job; returns {partition: manifest}.
 
-    ``max_concurrent`` partition jobs run side by side from a driver
-    thread pool (default from $NWSPARK_JOB_CONCURRENCY, else 3 — guide
-    §2.6: enough to back-fill each job's tail, not enough to thrash;
-    measured on the 8-partition bench layout: 4-part leg 13.7s at 1 ->
-    10.0s at 3, resume leg 11.8s -> 8.8s)."""
-    if max_concurrent is None:
-        max_concurrent = int(os.environ.get("NWSPARK_JOB_CONCURRENCY", "3"))
+    ``_JOB_CONCURRENCY`` partition jobs run side by side from a driver
+    thread pool."""
     index = _gazetteer_index_cached(spark, gazetteer_path)
     parts = [
         p for p in list_crawl_dates(pages_path)
@@ -146,7 +146,7 @@ def run_job(
                 for r in df.groupBy("method").agg(F.count("*").alias("n")).collect()
             }
         },
-        max_concurrent=max_concurrent,
+        max_concurrent=_JOB_CONCURRENCY,
     )
 
 

@@ -8,12 +8,12 @@ Reference lifecycle being reproduced (values, not architecture):
                                                      -> geocode_kernel.cascade_kernel()
     transform_and_process        utils.py:589-688     -> geocode_kernel.cascade_kernel()
     apply_transformers           utils.py:692-776     -> geocode_kernel._transform_stage()
+    libpostal_transformer        transformers.py:261-320 -> geocode_kernel._libpostal_one()
+    photon_transformer           transformers.py:182-247 -> geocode_kernel._photon_one()
     process_osm (REST + parse)   utils.py:300-441     -> geocode_kernel._process_pdf()
     osm_keep_relevant_results    check_result_utils.py:648-699 -> geocode_kernel._check_pdf()
     match_parent                 check_result_utils.py:560-644 -> geocode_kernel._parent_rescue_pdf()
     retry_with_low_place_rank    utils.py:225-299     -> geocode_kernel._retry_low_rank_pdf()
-    libpostal_transformer        transformers.py:261-320 -> geocode_kernel._apply_libpostal()
-    photon_transformer           transformers.py:182-247 -> geocode_kernel._apply_photon()
 
 The ladder itself (transformers, lookup, check, retry) has one pandas
 implementation, geocode_kernel.cascade_kernel. This module builds the
@@ -251,7 +251,9 @@ def build_gazetteer_index(
         .dropDuplicates(["key_street", "place_id"])
     )
 
-    lookup = lookup.cache()
+    # AQE never narrows a cached plan, so without the coalesce every scan
+    # of the lookup runs spark.sql.shuffle.partitions tasks
+    lookup = lookup.coalesce(gaz.sparkSession.sparkContext.defaultParallelism).cache()
     n = lookup.count()
     est_bytes = n * _avg_row_bytes(lookup)
     return GazetteerIndex(
@@ -550,7 +552,7 @@ def _locality_groups(
 
 
 def _group_pdf(
-    q: pd.DataFrame, g: pd.DataFrame, check_results: bool, with_rejected: bool, with_stats: bool
+    q: pd.DataFrame, g: pd.DataFrame, with_rejected: bool, with_stats: bool
 ) -> pd.DataFrame:
     """One locality group: geocode_kernel.cascade_kernel over the group's
     tuples ``q`` (keyed by ``_tk`` in place of addr_key) with a
@@ -565,8 +567,8 @@ def _group_pdf(
     pay = KernelPayload(g[_LOOKUP_COLS], par.rename(columns={"parent_place_id": "p_pid"}))
     addr = q.rename(columns={"_tk": "addr_key"})[ADDR_COLS + ["_n_keys"]]
     if not (with_rejected or with_stats):
-        return cascade_kernel(addr, pay, check_results)
-    keep, reject, stats = cascade_kernel(addr, pay, check_results, with_rejected=True)
+        return cascade_kernel(addr, pay)
+    keep, reject, stats = cascade_kernel(addr, pay, with_rejected=True)
     parts = [keep, reject] if with_rejected else [keep]
     if with_stats:
         parts.append(pd.DataFrame({
@@ -577,7 +579,7 @@ def _group_pdf(
 
 
 def _ladder_stage(
-    tuples: DataFrame, index: GazetteerIndex, n_uq: int, check_results: bool = True,
+    tuples: DataFrame, index: GazetteerIndex, n_uq: int,
     with_rejected: bool = False, with_stats: bool = False,
 ) -> DataFrame:
     """The whole ladder of the unique tuples as ONE cogrouped pandas stage,
@@ -596,7 +598,7 @@ def _ladder_stage(
     def stage(q: pd.DataFrame, g: pd.DataFrame) -> pd.DataFrame:
         if not len(q):
             return pd.DataFrame(columns=names)
-        return _group_pdf(q, g, check_results, with_rejected, with_stats).reindex(columns=names)
+        return _group_pdf(q, g, with_rejected, with_stats).reindex(columns=names)
 
     return q.groupBy("_b").cogroup(lk.groupBy("_b")).applyInPandas(stage, schema)
 
@@ -604,7 +606,6 @@ def _ladder_stage(
 def cascade(
     addresses: DataFrame,
     index: GazetteerIndex,
-    check_results: bool = True,
     with_rejected: bool = True,
     with_stats: bool = False,
     validate_unique: bool = True,
@@ -627,16 +628,15 @@ def cascade(
     (the reference's merge(to_process_addresses), utils.py:1271).
 
     Returns (results, rejects); ``rejects`` holds every stage's rejected
-    candidates with their distance to the key's match, empty without
-    ``with_rejected``. ``with_stats`` adds the reference's step_stats
-    (utils.py:678-686), one dict per stage whose todo is above 0: todo,
-    match and match_26, and with rejects reject_rec, reject_addr and
-    reject_mism, all counted in input rows; ``wall_s`` is the seconds the
-    groups spent in that stage, summed over groups (the reference's
-    timestats, base.py:275-301). They come from the stage's own rows, at
-    one job.
+    candidates with their distance to the key's match; without
+    ``with_rejected`` it is empty, with the same column types.
+    ``with_stats`` adds the reference's step_stats (utils.py:678-686), one
+    dict per stage whose todo is above 0: todo, match and match_26, and
+    with rejects reject_rec, reject_addr and reject_mism, all counted in
+    input rows; ``wall_s`` is the seconds the groups spent in that stage,
+    summed over groups (the reference's timestats, base.py:275-301). They
+    come from the stage's own rows, at one job.
     """
-    spark = addresses.sparkSession
     addresses = addresses.withColumn("_tk", _tuple_key()).localCheckpoint(eager=True)
 
     if validate_unique:  # skippable when keys are unique by construction
@@ -648,9 +648,7 @@ def cascade(
     tuples = _unique_tuples(addresses).observe(obs, F.count(F.lit(1)).alias("n"))
     tuples = tuples.localCheckpoint(eager=True)
     n_uq = obs.get["n"]
-    out = _ladder_stage(
-        tuples, index, n_uq, check_results, with_rejected, with_stats
-    ).localCheckpoint(eager=True)
+    out = _ladder_stage(tuples, index, n_uq, with_rejected, with_stats).localCheckpoint(eager=True)
 
     # the ladder's rows are a checkpoint scan with no size statistics, so
     # auto-broadcast never fires at plan time: broadcast them under the
@@ -665,11 +663,9 @@ def cascade(
         # (utils.py:1273-1274), so it parses the ORIGINAL input fields
         results = add_extra_house_number(results)
 
-    if with_rejected:
-        reject_u = rows.filter(F.col("reject_reason").isNotNull()).select("_tk", *REJECT_COLS[1:])
-        rejects = addresses.select("_tk", "addr_key").join(fan(reject_u), "_tk").select(REJECT_COLS)
-    else:
-        rejects = spark.createDataFrame([], schema=_reject_schema())
+    # empty without with_rejected: the stage then emits no reject rows
+    reject_u = rows.filter(F.col("reject_reason").isNotNull()).select("_tk", *REJECT_COLS[1:])
+    rejects = addresses.select("_tk", "addr_key").join(fan(reject_u), "_tk").select(REJECT_COLS)
     if not with_stats:
         return results, rejects
 
@@ -687,9 +683,3 @@ def cascade(
         stat.update({k: int(v) for k, v in s.items() if with_rejected or not k.startswith("reject")})
         step_stats.append(stat)
     return results, rejects, step_stats
-
-
-def _reject_schema():
-    fields = [StructField(c, StringType()) for c in REJECT_COLS[:-1]]
-    fields.append(StructField("distance_to_match", DoubleType()))
-    return StructType(fields)

@@ -6,9 +6,11 @@ utils.py:1195-1279) over one pandas frame of addresses: every stage of
 the transformer ladder (regex, libpostal, photon, nonum, nostreet), the
 six-level candidate lookup, the check (scoring, elimination, best per
 query with its tail, parent alt-name rescue) and the low-rank
-house-number retry. Nothing in the ladder looks across addresses, so it
-can run over any set of addresses with any payload that holds every
-gazetteer row they can reach. It has two callers:
+house-number retry, all in the reference's checked mode (its
+first-result-wins mode, SURVEY §3.2 step 5, is not reproduced). Nothing
+in the ladder looks across addresses, so it can run over any set of
+addresses with any payload that holds every gazetteer row they can
+reach. It has two callers:
 
 - the partition-local route, ``geocode_and_tile_kernel``, under the
   gazetteer broadcast gate: the whole gazetteer rides along as a
@@ -205,72 +207,46 @@ def _apply_regex(cur: pd.DataFrame, ruleset: str) -> pd.DataFrame:
     return cur
 
 
-def _apply_libpostal(cur: pd.DataFrame, check_results: bool) -> pd.DataFrame:
-    """Parse composed address; substitute parsed fields; under check mode
-    drop rows failing the elimination rule vs their own input (the
-    reference's post-libpostal sanity check)."""
+def _substitute(cur: pd.DataFrame, one) -> pd.DataFrame:
+    """Each row's five fields replaced by ``one`` of them, called once
+    per distinct tuple; the rows for which ``one`` gives None drop out."""
     memo: dict[tuple, tuple | None] = {}
-    rows = []
-    keep_mask = []
+    new = []
     for t in cur[_FIELDS].itertuples(index=False, name=None):
         if t not in memo:
-            full = _compose(*t)
-            p = parse_address_rule_based(full)
-            lp = tuple(_nz(p[k]) for k in ("road", "house_number", "postcode", "city", "country"))
-            if check_results:
-                s_sim = street_compare_one(_nz(t[0]), lp[0])
-                h_sim = house_number_compare_one(_nz(t[1]), lp[1])
-                pc_sim = postcode_compare_one(_nz(t[2]), lp[2])
-                c_sim = city_compare_one(_nz(t[3]), lp[3])
-                memo[t] = None if _elim(pc_sim, c_sim, s_sim) else lp
-            else:
-                memo[t] = lp
-        v = memo[t]
-        keep_mask.append(v is not None)
-        rows.append(v if v is not None else ("",) * 5)
-    out = cur.loc[keep_mask].reset_index(drop=True)
-    kept_rows = [r for r, k in zip(rows, keep_mask) if k]
+            memo[t] = one(t)
+        new.append(memo[t])
+    out = cur.loc[[v is not None for v in new]].reset_index(drop=True)
+    kept = [v for v in new if v is not None]
     for i, f in enumerate(_FIELDS):
-        out[f] = [r[i] for r in kept_rows]
+        out[f] = [v[i] for v in kept]
     return out
 
 
-def _photon_best_pdf(cand: pd.DataFrame, key: str, check_results: bool) -> pd.DataFrame:
-    """photon_keep_relevant_results (transformers.py:40-77) per query
-    ``key``: the candidate streets (ph_* columns)
-    in Photon's order (importance desc, place_id), compared with the
-    query's street, postcode and city, eliminated under check mode, and
-    the best street score wins with Photon's order as the tie-break (the
-    fake house number scores 0 for all, ref transformers.py:63). Returns
-    one row per key that keeps a candidate, with the candidate's fields in
-    place of the query's; the house number is kept (ref :235)."""
-    cand = cand.drop_duplicates([key, "place_id"]).sort_values(
-        [key, "importance", "place_id"], ascending=[True, False, True], kind="mergesort"
-    )
-    cand = cand.assign(
-        sim_street=[street_compare_one(_nz(a), _nz(b)) for a, b in zip(cand.ph_street, cand.street)],
-    )
-    if check_results:
-        keep = [
-            not _elim(postcode_compare_one(_nz(pa), _nz(pb)), city_compare_one(_nz(ca), _nz(cb)), s)
-            for pa, pb, ca, cb, s in zip(
-                cand.ph_postcode, cand.postcode, cand.ph_city, cand.city, cand.sim_street
-            )
-        ]
-        cand = cand.loc[keep]
-    best = cand.sort_values(
-        [key, "sim_street"], ascending=[True, False], kind="mergesort"
-    ).drop_duplicates(key)
-    return best.assign(
-        street=best.ph_street, postcode=best.ph_postcode, city=best.ph_city,
-        country=best.ph_country,
-    )
+def _libpostal_one(t: tuple):
+    """libpostal_transformer (transformers.py:261-320) for one tuple: the
+    parse of its composed address, or None when the parse fails the
+    elimination rule against the tuple itself (the reference's
+    post-libpostal sanity check)."""
+    p = parse_address_rule_based(_compose(*t))
+    lp = tuple(_nz(p[k]) for k in ("road", "house_number", "postcode", "city", "country"))
+    if _elim(
+        postcode_compare_one(_nz(t[2]), lp[2]),
+        city_compare_one(_nz(t[3]), lp[3]),
+        street_compare_one(_nz(t[0]), lp[0]),
+    ):
+        return None
+    return lp
 
 
-def _photon_one(t: tuple, pay: KernelPayload, check_results: bool):
-    """Fuzzy street correction for one (street..country) tuple: the
-    payload's street places of the same postcode or city, re-ranked by
-    _photon_best_pdf; None when no candidate survives."""
+def _photon_one(t: tuple, pay: KernelPayload):
+    """photon_transformer (transformers.py:182-247) for one tuple: the
+    payload's street places of the same postcode or city in Photon's
+    order (importance desc, place_id); of those passing the elimination
+    rule the best street score wins, the first in that order on ties
+    (photon_keep_relevant_results, :40-77; the fake house number scores
+    0 for all, :63). Returns the tuple with the winner's fields, keeping
+    its house number (ref :235), or None."""
     street, housenbr, postcode, city, country = t
     q_pc = _nz(postcode)
     q_ck = city_key(city)
@@ -281,62 +257,43 @@ def _photon_one(t: tuple, pay: KernelPayload, check_results: bool):
         parts.append(pay.photon[pay.photon.key_city == q_ck])
     if not parts:
         return None
-    cand = pd.concat(parts, ignore_index=True).assign(
-        _q=0, street=street, postcode=postcode, city=city
+    cand = pd.concat(parts).drop_duplicates("place_id").sort_values(
+        ["importance", "place_id"], ascending=[False, True], kind="mergesort"
     )
-    best = _photon_best_pdf(cand, "_q", check_results)
-    if not len(best):
-        return None
-    b = best.iloc[0]
-    return (b.street, housenbr, b.postcode, b.city, b.country)
+    best, best_sim = None, -1.0
+    for ph_street, ph_pc, ph_city, ph_country in zip(
+        cand.ph_street, cand.ph_postcode, cand.ph_city, cand.ph_country
+    ):
+        sim = street_compare_one(_nz(ph_street), _nz(street))
+        if sim > best_sim and not _elim(
+            postcode_compare_one(_nz(ph_pc), _nz(postcode)),
+            city_compare_one(_nz(ph_city), _nz(city)),
+            sim,
+        ):
+            best, best_sim = (ph_street, housenbr, ph_pc, ph_city, ph_country), sim
+    return best
 
 
-def _apply_photon(cur: pd.DataFrame, pay: KernelPayload, check_results: bool) -> pd.DataFrame:
-    memo: dict[tuple, tuple | None] = {}
-    rows, keep_mask = [], []
-    for t in cur[_FIELDS].itertuples(index=False, name=None):
-        if t not in memo:
-            memo[t] = _photon_one(t, pay, check_results)
-        v = memo[t]
-        keep_mask.append(v is not None)
-        rows.append(v if v is not None else ("",) * 5)
-    out = cur.loc[keep_mask].reset_index(drop=True)
-    kept_rows = [r for r, k in zip(rows, keep_mask) if k]
-    for i, f in enumerate(_FIELDS):
-        out[f] = [r[i] for r in kept_rows]
-    return out
-
-
-def _transform_stage(
-    todo: pd.DataFrame, transformers: list[str], pay: KernelPayload, check_results: bool
-) -> pd.DataFrame:
-    """apply_transformers (utils.py:692-776): sequential transformer
-    application + the changed-rows filter (rows unchanged by the sequence
-    drop out of the stage; orig passes everything)."""
+def _transform_stage(todo: pd.DataFrame, transformers: list[str], pay: KernelPayload) -> pd.DataFrame:
+    """apply_transformers (utils.py:692-776) for one entry of
+    DEFAULT_TRANSFORMERS_SEQUENCE: sequential transformer application +
+    the changed-rows filter (rows unchanged by the sequence drop out of
+    the stage; orig passes everything)."""
     if transformers == ["orig"]:
         return todo.copy()
     cur = todo.copy()
     for t in transformers:
-        if t == "orig":
-            continue
-        m = re.match(r"regex\[([a-z]+)\]", t)
-        if m:
-            cur = _apply_regex(cur, m.group(1))
-        elif t == "nonum":
+        if t == "nonum":
             cur["housenbr"] = ""
         elif t == "nostreet":
             cur["housenbr"] = ""
             cur["street"] = ""
-        elif t == "nozip":
-            cur["postcode"] = ""
-        elif t == "nocountry":
-            cur["country"] = ""
         elif t == "libpostal":
-            cur = _apply_libpostal(cur, check_results)
+            cur = _substitute(cur, _libpostal_one)
         elif t == "photon":
-            cur = _apply_photon(cur, pay, check_results)
-        else:
-            raise ValueError(f"unknown transformer {t!r}")
+            cur = _substitute(cur, lambda v: _photon_one(v, pay))
+        else:  # regex[<ruleset>]
+            cur = _apply_regex(cur, t[len("regex["):-1])
         if not len(cur):
             return cur
     orig = todo.set_index("addr_key")
@@ -516,33 +473,19 @@ def _parent_rescue_pdf(
 
 
 def _check_pdf(
-    cand: pd.DataFrame, check_results: bool, parents: pd.DataFrame | None = None
+    cand: pd.DataFrame, parents: pd.DataFrame | None = None
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """The check of one lookup at the unique-query level: score,
     eliminate, best per query with its tail, then the parent alt-name
-    rescue when ``parents`` is given. Without ``check_results`` the first
-    candidate in Nominatim's order wins and the rest are its tail. Every
-    row carries the five sim columns; the reject rows also carry
-    ``reject_reason``."""
-    if check_results:
-        keep, reject = _pick_best_pdf(_score_pdf(cand))
-        if parents is not None:
-            keep, reject = _parent_rescue_pdf(keep, reject, parents)
-        return keep, reject
-    ranked = cand.sort_values(["transformed_address", "osm_order"], kind="mergesort").assign(
-        sim_street=np.nan, sim_street_which=None, sim_house_number=np.nan,
-        sim_post_code=np.nan, sim_city=np.nan,
-    )
-    first = ~ranked.transformed_address.duplicated().to_numpy()
-    return (
-        ranked.loc[first].reset_index(drop=True),
-        ranked.loc[~first].assign(reject_reason="tail").reset_index(drop=True),
-    )
+    rescue when ``parents`` is given. Every row carries the five sim
+    columns; the reject rows also carry ``reject_reason``."""
+    keep, reject = _pick_best_pdf(_score_pdf(cand))
+    if parents is not None:
+        keep, reject = _parent_rescue_pdf(keep, reject, parents)
+    return keep, reject
 
 
-def _process_pdf(
-    uq: pd.DataFrame, pay: KernelPayload, check_results: bool
-) -> tuple[pd.DataFrame, pd.DataFrame]:
+def _process_pdf(uq: pd.DataFrame, pay: KernelPayload) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Lookup, check with parent rescue, and the low-rank retry of the
     unique queries — process_osm (utils.py:300-441) with
     retry_with_low_place_rank (:225-299). Returns (keep, reject): keep
@@ -552,13 +495,11 @@ def _process_pdf(
     cand = _candidates_pdf(uq, pay)
     if not len(cand):
         return cand, cand
-    keep, reject = _check_pdf(cand, check_results, pay.parents)
-    return _retry_low_rank_pdf(keep, uq, pay, check_results), reject
+    keep, reject = _check_pdf(cand, pay.parents)
+    return _retry_low_rank_pdf(keep, uq, pay), reject
 
 
-def _retry_low_rank_pdf(
-    keep: pd.DataFrame, uq: pd.DataFrame, pay: KernelPayload, check_results: bool
-) -> pd.DataFrame:
+def _retry_low_rank_pdf(keep: pd.DataFrame, uq: pd.DataFrame, pay: KernelPayload) -> pd.DataFrame:
     """The non-numeric house numbers of below-house matches retried with
     their cleansed (digit-prefix) house number, without parent rescue. A
     house found replaces the query's keep row: keyed by the original
@@ -582,7 +523,7 @@ def _retry_low_rank_pdf(
     cand = _candidates_pdf(_unique_queries_pdf(r), pay)
     if not len(cand):
         return keep
-    got, _ = _check_pdf(cand, check_results)
+    got, _ = _check_pdf(cand)
     got = (
         r[["_orig_ta", "transformed_address"]]
         .merge(got[got.place_rank == 30], on="transformed_address")
@@ -597,7 +538,7 @@ def _localities_pdf(t: pd.DataFrame) -> pd.DataFrame:
     """The (postcode, city key) localities an address tuple queries with
     before photon: its own fields' (``pc``, ``ck``) and those of its
     libpostal parse (``lp_pc``, ``lp_ck``). The parse is taken without
-    _apply_libpostal's check, so it is a superset of what the ladder
+    _libpostal_one's sanity check, so it is a superset of what the ladder
     keeps. Regex, nonum and nostreet never change a locality."""
     lp = [parse_address_rule_based(v) for v in _compose_each(t)]
     return pd.DataFrame({
@@ -641,14 +582,14 @@ _NO_ROWS = pd.DataFrame(columns=["addr_key", "match_on_cleansed_house_number", "
 def cascade_kernel(
     addr: pd.DataFrame,
     pay: KernelPayload,
-    check_results: bool = True,
     with_rejected: bool = False,
 ):
     """process_addresses (utils.py:1195-1279) over one pandas frame: each
     stage of DEFAULT_TRANSFORMERS_SEQUENCE transforms the addresses not
-    matched yet (transform_and_process, utils.py:589-688), looks up,
-    checks and retries their unique composed addresses (_process_pdf) and
-    tags each match with the stage's ``method``.
+    matched yet (transform_and_process, utils.py:589-688; _transform_stage
+    with the libpostal and photon checks), looks up, checks and retries
+    their unique composed addresses (_process_pdf) and tags each match
+    with the stage's ``method``.
 
     ``addr``: ADDR_COLS plus any carry columns (url, warc_ts, ...).
     Returns the keep frame: RESULT_COLS + the original five address
@@ -676,11 +617,11 @@ def cascade_kernel(
         t0 = time.perf_counter()
         method = "+".join(transformers)
         n_todo = w(todo.addr_key)
-        cur = _transform_stage(todo, transformers, pay, check_results)
+        cur = _transform_stage(todo, transformers, pay)
         fan = rej = _NO_ROWS
         if len(cur):
             cur = cur.assign(transformed_address=_compose_each(cur))
-            keep_u, reject_u = _process_pdf(_unique_queries_pdf(cur), pay, check_results)
+            keep_u, reject_u = _process_pdf(_unique_queries_pdf(cur), pay)
             sent = cur[["addr_key", "transformed_address"]]
             if len(keep_u):
                 fan = sent.merge(
@@ -774,9 +715,7 @@ def _tile_pdf(res: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def geocode_and_tile_kernel(
-    pages: DataFrame, index: GazetteerIndex, check_results: bool = True
-) -> DataFrame:
+def geocode_and_tile_kernel(pages: DataFrame, index: GazetteerIndex) -> DataFrame:
     """pages -> extract -> cascade -> S2/H3 tiles, entirely inside ONE
     mapInPandas stage (plans/flagship.geocode_and_tile's output schema,
     value-for-value). Recrawl dedup is the caller's job (streaming state
@@ -796,7 +735,7 @@ def geocode_and_tile_kernel(
             addr = extract_addresses_pdf(pdf)
             if not len(addr):
                 continue
-            res = cascade_kernel(addr, pay, check_results=check_results)
+            res = cascade_kernel(addr, pay)
             if len(res):
                 yield _tile_pdf(res)
 

@@ -170,7 +170,6 @@ def geocode_and_tile(
     index,
     dedup_crawls: bool = True,
     validate_unique: bool = True,
-    check_results: bool = True,
 ) -> DataFrame:
     """pages -> extract -> geocode -> S2 level-13 / H3 res-9 cells: the ONE
     shared batch core behind flagship(), jobs/geocode_job.geocode_partition
@@ -209,12 +208,12 @@ def geocode_and_tile(
             pages.groupBy("url").count().filter("count > 1").isEmpty()
         ):
             raise ValueError("duplicate addr_key values in input")
-        return geocode_and_tile_kernel(pages, index, check_results=check_results)
+        return geocode_and_tile_kernel(pages, index)
 
     addrs = pages_to_addresses(pages, dedup_crawls=dedup_crawls)
     # dedup_crawls already made every addr_key unique: the guard cannot fire
     res, _ = cascade(
-        addrs, index, check_results=check_results, with_rejected=False,
+        addrs, index, with_rejected=False,
         validate_unique=validate_unique and not dedup_crawls, with_extra_house_number=False,
     )
     # ONE Arrow crossing for both tilings (fused struct UDF) — two
@@ -240,7 +239,6 @@ def geocode_and_tile(
 def flagship(
     spark: SparkSession,
     sf_dir: str,
-    check_results: bool = True,
     replicate: int = 1,
     force_no_broadcast: bool = False,
     skew_hot: float = 0.0,
@@ -264,7 +262,7 @@ def flagship(
     # skip the guard job.
     return geocode_and_tile(
         pages, gazetteer_index(spark, force_no_broadcast=force_no_broadcast),
-        dedup_crawls=False, validate_unique=False, check_results=check_results,
+        dedup_crawls=False, validate_unique=False,
     )
 
 

@@ -242,7 +242,7 @@ def test_cascade_step_stats(spark, tmp_path_factory):
         "referenceKey as addr_key", "streetName as street", "houseNumber as housenbr",
         "postCode as postcode", "postName as city", "countryName as country"
     )
-    res, rej, stats = cascade(addr, index, check_results=True, with_stats=True)
+    res, rej, stats = cascade(addr, index, with_stats=True)
     assert stats and stats[0]["method"] == "orig"
     total_in = addr.count()
     assert stats[0]["todo"] == total_in

@@ -47,7 +47,7 @@ def cascade_out(spark, world, index):
             )
         )[["addr_key", "street", "housenbr", "postcode", "city", "country"]]
     )
-    results, rejects = cascade(addr, index, check_results=True)
+    results, rejects = cascade(addr, index)
     return results.toPandas(), rejects.toPandas(), a
 
 
@@ -224,7 +224,7 @@ def test_non_broadcast_path_same_results(spark, world, index, cascade_out):
             )
         )[["addr_key", "street", "housenbr", "postcode", "city", "country"]]
     )
-    res_s, _ = cascade(addr, shuffled_index, check_results=True)
+    res_s, _ = cascade(addr, shuffled_index)
     res_s = res_s.toPandas()
     key_cols = ["addr_key", "method", "place_id", "place_rank"]
     b = res_b[key_cols].sort_values("addr_key").reset_index(drop=True)
@@ -312,7 +312,7 @@ def test_skewed_hot_address_fanback(spark, world, index):
         )
     )
     addr = spark.createDataFrame(rows)
-    res, _ = cascade(addr, index, check_results=True, with_rejected=False)
+    res, _ = cascade(addr, index, with_rejected=False)
     got = res.select("addr_key", "place_id").toPandas()
     assert got["addr_key"].is_unique and len(got) == n_hot + n_cold
     hot = got[got.addr_key.str.startswith("hot")]
@@ -516,6 +516,34 @@ def test_step_stats_count_rejects(spark, reject_world, broadcast_max_bytes):
     _, _, stats = cascade(addr, index, with_stats=True, with_rejected=False)
     assert [(s["todo"], s["match"]) for s in stats] == list(zip(todo, match))
     assert all(set(s) == {"method", "wall_s", "todo", "match", "match_26"} for s in stats)
+
+
+def test_rejects_have_the_same_types_without_with_rejected(spark, reject_world):
+    """cascade(with_rejected=False) returns an empty rejects frame with
+    the column names and types that with_rejected=True gives."""
+    gaz, addr = reject_world
+    index = build_gazetteer_index(gaz)
+    _, with_rej = cascade(addr, index)
+    _, without = cascade(addr, index, with_rejected=False)
+    assert without.dtypes == with_rej.dtypes
+    assert without.count() == 0 < with_rej.count()
+
+
+def test_lookup_has_at_most_default_parallelism_partitions(spark, world):
+    """The cached lookup is coalesced to defaultParallelism: an index built
+    at 16 shuffle partitions keeps no more lookup partitions than that,
+    so its scans do not run one task per shuffle partition."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        index = build_gazetteer_index(spark.read.parquet(f"{world['_dir']}/gazetteer.parquet"))
+    finally:
+        spark.conf.set(key, old)
+    n = index.lookup.rdd.getNumPartitions()
+    assert 1 <= n <= spark.sparkContext.defaultParallelism
+    index.lookup.unpersist()
+    index.parents.unpersist()
 
 
 def test_duplicate_key_guard(spark, index):

@@ -66,10 +66,10 @@ def test_cascade_kernel_matches_distributed_on_all_fixture_classes(
     """Every fixture class (orig/regex/libpostal/photon/nonum/nostreet/
     retry26/alt-rescue) resolves to the SAME method, place, coordinates,
     similarity scores and reported composed address on both engines."""
-    exp, _ = cascade(spark.createDataFrame(fixture_addrs), index, check_results=True)
+    exp, _ = cascade(spark.createDataFrame(fixture_addrs), index)
     exp = exp.toPandas()
     got = cascade_kernel(
-        fixture_addrs.copy(), build_kernel_payload(index), check_results=True
+        fixture_addrs.copy(), build_kernel_payload(index)
     )
     assert len(exp) == len(got)
     e = exp[CMP_COLS].sort_values("addr_key").reset_index(drop=True)
@@ -537,3 +537,53 @@ def test_unique_queries_fast_path_matches_per_group_min():
     assert (multi.street, multi.housenbr, multi.postcode) == ("rue x", "", "1000")
     assert got.iloc[0].housenbr is None and got.iloc[1].postcode is None
     assert got.loc[1, "q_pc"] == "" and got.loc[2, "q_pc"] == "1000"
+
+
+def test_photon_pick_ties_and_elimination():
+    """The photon pick over candidate streets whose street scores are
+    equal: the higher importance wins; at equal importance the lower
+    place_id wins, whatever the payload's row order; a candidate that
+    fails the postcode/city elimination is never picked, and a tuple
+    with no survivor drops out of the stage."""
+    from nominatimwrapper_spark.functions.textnorm import city_key
+    from nominatimwrapper_spark.operators.geocode_kernel import (
+        _LOOKUP_COLS,
+        KernelPayload,
+        _transform_stage,
+    )
+
+    street = "Rue de la Station"
+    # (place_id, importance, match postcode, match city, output postcode,
+    # output city, marker in out_country_name)
+    streets = [
+        (10, 0.2, "1000", "Namur", "1000", "Namur", "low"),
+        (11, 0.9, "1000", "Namur", "1000", "Namur", "high"),
+        (21, 0.5, "2000", "Liege", "2000", "Liege", "second"),
+        (20, 0.5, "2000", "Liege", "2000", "Liege", "first"),
+        (31, 0.9, "3000", "Mons", "9999", "Zzzzz", "eliminated"),
+        (30, 0.1, "3000", "Mons", "3000", "Mons", "kept"),
+        (40, 0.9, "4000", "Arlon", "9999", "Zzzzz", "eliminated"),
+    ]
+    lookup = pd.DataFrame([
+        dict(
+            key_street="RUEDELASTATION", key_city=city_key(city), post_code=pc,
+            house_number=None, place_id=pid, parent_place_id=None, place_rank=26,
+            category="highway", importance=imp, lat=50.0, lon=4.0,
+            out_street_name=street, out_post_name=out_city, out_house_number=None,
+            out_post_code=out_pc, out_country_name=marker, out_other="", namedetails="",
+        )
+        for pid, imp, pc, city, out_pc, out_city, marker in streets
+    ])[_LOOKUP_COLS]
+    pay = KernelPayload(lookup, pd.DataFrame({"p_pid": [], "p_alts": []}))
+    todo = pd.DataFrame({
+        "addr_key": ["importance", "place_id", "elim", "none"],
+        "street": [street] * 4,
+        "housenbr": ["5"] * 4,
+        "postcode": ["1000", "2000", "3000", "4000"],
+        "city": ["Namur", "Liege", "Mons", "Arlon"],
+        "country": ["Belgique"] * 4,
+    })
+    got = _transform_stage(todo, ["photon"], pay).set_index("addr_key")
+    assert sorted(got.index) == ["elim", "importance", "place_id"]
+    assert got.country.to_dict() == {"importance": "high", "place_id": "first", "elim": "kept"}
+    assert got.loc["elim", ["postcode", "city", "housenbr"]].tolist() == ["3000", "Mons", "5"]

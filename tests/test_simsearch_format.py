@@ -129,7 +129,7 @@ def test_format_modes(spark, tmp_path_factory):
         "referenceKey as addr_key", "streetName as street", "houseNumber as housenbr",
         "postCode as postcode", "postName as city", "countryName as country"
     ).limit(6)
-    res, _ = cascade(addr, index, check_results=True, with_rejected=False)
+    res, _ = cascade(addr, index, with_rejected=False)
 
     for mode in ("coordinates", "short", "long"):
         out = format_results(res, mode).toPandas()
