@@ -64,6 +64,14 @@ def _dir_files_digest(h, d: str) -> None:
             h.update(str(os.path.getsize(fp)).encode())
 
 
+def _gazetteer_digest(h, gazetteer_path: str) -> None:
+    """The gazetteer's (name, size) digest: a dir's files, a file's size."""
+    if os.path.isdir(gazetteer_path):
+        _dir_files_digest(h, gazetteer_path)
+    elif os.path.exists(gazetteer_path):
+        h.update(str(os.path.getsize(gazetteer_path)).encode())
+
+
 def partition_fingerprint(pages_path: str, part: str, gazetteer_path: str) -> str:
     """Cheap input fingerprint: hash of (name, size) of every data file in
     the partition dir AND of the gazetteer — the gazetteer is an input to
@@ -71,10 +79,7 @@ def partition_fingerprint(pages_path: str, part: str, gazetteer_path: str) -> st
     partition's checkpoint instead of silently serving stale geocodes."""
     h = hashlib.sha256()
     _dir_files_digest(h, os.path.join(pages_path, f"crawl_date={part}"))
-    if os.path.isdir(gazetteer_path):
-        _dir_files_digest(h, gazetteer_path)
-    elif os.path.exists(gazetteer_path):
-        h.update(str(os.path.getsize(gazetteer_path)).encode())
+    _gazetteer_digest(h, gazetteer_path)
     return h.hexdigest()[:16]
 
 
@@ -97,10 +102,7 @@ _INDEX_CACHE: dict[tuple, object] = {}
 
 def _gazetteer_index_cached(spark: SparkSession, gazetteer_path: str):
     h = hashlib.sha256()
-    if os.path.isdir(gazetteer_path):
-        _dir_files_digest(h, gazetteer_path)
-    elif os.path.exists(gazetteer_path):
-        h.update(str(os.path.getsize(gazetteer_path)).encode())
+    _gazetteer_digest(h, gazetteer_path)
     key = (id(spark), os.path.abspath(gazetteer_path), h.hexdigest()[:16])
     if key not in _INDEX_CACHE:
         _INDEX_CACHE[key] = build_gazetteer_index(spark.read.parquet(gazetteer_path))

@@ -339,7 +339,12 @@ def minhash_verified_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     jaccard_threshold: float = 0.8,
-    **lsh_kw,
+    *,
+    shingle_n: int = 3,
+    num_hashes: int = 32,
+    bands: int = 8,
+    max_bucket_size: int = 500,
+    broadcast_max_bytes: int = 800 * 1024 * 1024,
 ) -> DataFrame:
     """LSH candidates -> exact Jaccard verify within buckets. Returns the
     verified near-dup EDGE LIST (id_a, id_b, jaccard), id_a < id_b.
@@ -366,13 +371,6 @@ def minhash_verified_pairs(
     is called; the candidates and the verify run at the caller's action.
     |A∪B| is computed as |A|+|B|−|A∩B| (each doc's hashes are distinct
     up to the same 2^-64 collision caveat)."""
-    shingle_n = lsh_kw.pop("shingle_n", 3)
-    num_hashes = lsh_kw.pop("num_hashes", 32)
-    bands = lsh_kw.pop("bands", 8)
-    max_bucket_size = lsh_kw.pop("max_bucket_size", 500)
-    broadcast_max_bytes = lsh_kw.pop("broadcast_max_bytes", 800 * 1024 * 1024)
-    if lsh_kw:
-        raise TypeError(f"unknown lsh kwargs: {sorted(lsh_kw)}")
     hs, n, w = _shingle_table(docs, id_col, text_col, shingle_n)
     cand = _pairs_from_banded(
         cap_lsh_buckets(
@@ -406,7 +404,12 @@ def minhash_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     jaccard_threshold: float = 0.8,
-    **lsh_kw,
+    *,
+    shingle_n: int = 3,
+    num_hashes: int = 32,
+    bands: int = 8,
+    max_bucket_size: int = 500,
+    broadcast_max_bytes: int = 800 * 1024 * 1024,
 ) -> DataFrame:
     """Full near-dup dedup: LSH candidates -> exact Jaccard verify within
     buckets -> CONNECTED-COMPONENT keep-lowest-id rule. The verified pair
@@ -417,7 +420,9 @@ def minhash_dedup(
     from .components import connected_components
 
     verified = minhash_verified_pairs(
-        docs, id_col, text_col, jaccard_threshold, **lsh_kw
+        docs, id_col, text_col, jaccard_threshold, shingle_n=shingle_n,
+        num_hashes=num_hashes, bands=bands, max_bucket_size=max_bucket_size,
+        broadcast_max_bytes=broadcast_max_bytes,
     )
     comp = connected_components(verified, src="id_a", dst="id_b")
     drop = comp.filter(F.col("node") != F.col("component")).select(

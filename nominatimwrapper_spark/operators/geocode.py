@@ -25,9 +25,10 @@ before the whole ladder) and runs the ladder as ONE cogrouped pandas
 stage: the tuples are hashed into groups by locality (postcode, city
 key), and each group meets every gazetteer row its tuples can reach at
 any stage. The ladder is independent per address, so a group needs
-nothing outside it. The page/address corpus shuffles only for the
-duplicate-key guard, the dedup and, above the fan-back gate, the
-fan-back join; a skewed hot address is one tuple.
+nothing outside it. The page corpus shuffles once, on url, in
+plans/flagship.geocode_and_tile; the address rows only for the dedup,
+the duplicate-key guard and, above the fan-back gate, the fan-back
+join; a skewed hot address is one tuple.
 """
 
 from __future__ import annotations

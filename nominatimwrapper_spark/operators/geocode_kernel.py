@@ -25,10 +25,10 @@ reach. It has two callers:
   that group can reach.
 
 The engine is chosen in ONE place, plans/flagship.geocode_and_tile: the
-route under the gate, ``cascade`` above it. The checkpoint job and the
-stream's foreachBatch path go through that function; only the direct
-streaming plan (streaming/geocode_stream.geocode_pages_stream) calls the
-route itself. Both engines give the same rows
+route under the gate, ``cascade`` above it, both tiled by ``_tile_pdf``.
+The checkpoint job and the stream's foreachBatch path go through it; the
+direct streaming plan, plans/flagship.q_geocode_kernel and bench.py's
+kernel leg call the route itself. Both engines give the same rows
 (tests/test_geocode_kernel.py, over every fixture class); the only
 divergence is the documented-arbitrary representative pick when two
 different field splits compose to the same address in different
@@ -740,3 +740,10 @@ def geocode_and_tile_kernel(pages: DataFrame, index: GazetteerIndex) -> DataFram
                 yield _tile_pdf(res)
 
     return pages.mapInPandas(fn, schema=TILE_SCHEMA)
+
+
+def tile_results(res: DataFrame) -> DataFrame:
+    """Geocoded rows -> TILE_SCHEMA in one mapInPandas, by the kernel's
+    own tiler (the cascade route's tiling)."""
+    res = res.select("addr_key", "url", "method", "place_id", "place_rank", "lat", "lon")
+    return res.mapInPandas(lambda it: map(_tile_pdf, it), schema=TILE_SCHEMA)

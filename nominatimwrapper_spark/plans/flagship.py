@@ -12,10 +12,10 @@ Page construction and text extraction are distributed Column ops/pandas
 UDFs — the only driver-side piece is the (small, broadcastable) synthetic
 gazetteer.
 
-geocode_and_tile is the batch core every entry point shares, and the one
-place the geocode engine is chosen by the gazetteer broadcast gate: the
-one-stage partition-local kernel (operators/geocode_kernel.py) under it,
-the distributed shuffle-join cascade (operators/geocode.py) above it.
+geocode_and_tile is the batch core every entry point shares: one page
+front, one engine chosen by the gazetteer broadcast gate (the partition-local
+kernel, operators/geocode_kernel.py, under it; the shuffle-join cascade,
+operators/geocode.py, above it) and one tiler, geocode_kernel's.
 """
 
 from __future__ import annotations
@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from ..functions import geo, s2
+from ..functions import s2
 from ..functions.text import detect_lang_udf, extract_text_udf
 from ..operators.dedup import (
     minhash_lsh_candidates,
@@ -39,7 +39,7 @@ from ..operators.dedup import (
     simhash_udf,
 )
 from ..operators.geocode import GazetteerIndex, build_gazetteer_index, cascade
-from ..operators.geocode_kernel import geocode_and_tile_kernel
+from ..operators.geocode_kernel import geocode_and_tile_kernel, tile_results
 from ..operators.pages import pages_to_addresses
 from ..operators.spatial import latest_snapshot
 
@@ -173,67 +173,35 @@ def geocode_and_tile(
 ) -> DataFrame:
     """pages -> extract -> geocode -> S2 level-13 / H3 res-9 cells: the ONE
     shared batch core behind flagship(), jobs/geocode_job.geocode_partition
-    and streaming/geocode_stream.geocode_micro_batch, and the one place the
-    geocode engine is chosen:
+    and streaming/geocode_stream.geocode_micro_batch.
 
-    - ``index.broadcast_ok``: the partition-local kernel
-      (operators/geocode_kernel.py), one mapInPandas stage after a single
-      hash exchange on ``url`` of the three columns it reads (url,
-      warc_ts, html). The recrawl window and the duplicate guard reuse
-      that partitioning, and building the plan runs no Spark job once the
-      index's payload broadcast exists. AQE sizes the exchange, so the
-      kernel runs in as many Python tasks as the shuffled bytes need
-      (each task pays a fixed start-up cost in the Python worker). A task
-      gets about minPartitionSize (1 MB) of shuffled pages or more, so
-      the kernel runs at full width only above defaultParallelism x 1 MB.
-    - above the broadcast gate: operators/geocode.cascade, the same
-      ladder run once per locality group in one cogrouped pandas stage,
-      with shuffle joins.
-
-    Both give the same schema, values and dtypes. ``addr_key`` is
-    ``url#pos``, so it can only repeat where a url repeats.
-    ``dedup_crawls`` keeps each url's latest crawl, which makes it unique.
-    Without it, ``validate_unique`` raises ValueError("duplicate addr_key
-    values in input") before any geocoding. Under the gate the guard
-    checks urls, so a duplicated url whose pages carry no address raises
-    too."""
+    Both regimes share the page front: one hash exchange on ``url`` of the
+    three columns extraction reads, sized by AQE (about 1 MB of pages or
+    more per Python task; no partition count, so no peek at plan build).
+    ``dedup_crawls`` keeps each url's latest crawl on it. Without it,
+    ``validate_unique`` raises ValueError("duplicate addr_key values in
+    input") for any url crawled twice, before any geocoding (``addr_key``
+    is ``url#pos``). The engine is the only fork: under the broadcast gate
+    the partition-local kernel (operators/geocode_kernel.py) extracts,
+    geocodes and tiles in one mapInPandas stage, and building its plan
+    runs no Spark job once the index's payload broadcast exists; above it
+    operators/geocode.cascade runs the same ladder per locality group with
+    shuffle joins, and geocode_kernel.tile_results tiles its rows with the
+    kernel's tiler. Both give the same schema, values and dtypes."""
+    pages = pages.select("url", "warc_ts", "html").repartition("url")
+    if dedup_crawls:
+        pages = latest_snapshot(pages, "url", "warc_ts")
+    elif validate_unique and not (
+        pages.groupBy("url").count().filter("count > 1").isEmpty()
+    ):
+        raise ValueError("duplicate addr_key values in input")
     if index.broadcast_ok:
-        # no partition count: AQE coalesces the exchange to the shuffled
-        # bytes, about 1 MB or more per Python task (some 1,000 pages of
-        # the synthetic crawl), and the plan needs no partition-count peek
-        pages = pages.select("url", "warc_ts", "html").repartition("url")
-        if dedup_crawls:
-            pages = latest_snapshot(pages, "url", "warc_ts")
-        elif validate_unique and not (
-            pages.groupBy("url").count().filter("count > 1").isEmpty()
-        ):
-            raise ValueError("duplicate addr_key values in input")
         return geocode_and_tile_kernel(pages, index)
-
-    addrs = pages_to_addresses(pages, dedup_crawls=dedup_crawls)
-    # dedup_crawls already made every addr_key unique: the guard cannot fire
     res, _ = cascade(
-        addrs, index, with_rejected=False,
-        validate_unique=validate_unique and not dedup_crawls, with_extra_house_number=False,
+        pages_to_addresses(pages, dedup_crawls=False), index, with_rejected=False,
+        validate_unique=False, with_extra_house_number=False,
     )
-    # ONE Arrow crossing for both tilings (fused struct UDF) — two
-    # separate pandas UDFs would serialize the same lat/lon twice
-    cells = geo.s2_h3_cells_udf(13, 9)(F.col("lat"), F.col("lon"))
-    return res.withColumn(
-        "_cells", cells
-    ).withColumn(
-        "cell13", F.col("_cells.s2")
-    ).withColumn(
-        "h3_9", F.col("_cells.h3")
-    ).select(
-        "addr_key", "url", "method",
-        F.col("place_id").cast("long").alias("place_id"),
-        F.col("place_rank").cast("long").alias("place_rank"),
-        "cell13",
-        "h3_9",
-        F.round(F.col("lat") * 1_000_000).cast("long").alias("lat_1e6"),
-        F.round(F.col("lon") * 1_000_000).cast("long").alias("lon_1e6"),
-    )
+    return tile_results(res)
 
 
 def flagship(

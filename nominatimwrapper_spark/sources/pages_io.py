@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the flagship pages as write_pages_partitioned lays them out, in that order
+_LAYOUT_SCHEMA = "url string, warc_ts timestamp, html binary, lang string, text string, crawl_date date"
+
 
 def write_pages_partitioned(pages: DataFrame, path: str, mode: str = "overwrite") -> None:
     """pages(url, warc_ts, html, text, lang) -> parquet partitioned by
@@ -37,8 +40,9 @@ def read_pages(
     date_to: str | None = None,
 ) -> DataFrame:
     """Read the partitioned pages table; date bounds become partition
-    filters (pruned at planning time, never scanned)."""
-    df = spark.read.parquet(path)
+    filters (pruned at planning time, never scanned). The declared schema
+    spares the footer-inference job every read would run."""
+    df = spark.read.schema(_LAYOUT_SCHEMA).parquet(path)
     if date_from:
         df = df.filter(F.col("crawl_date") >= F.lit(date_from))
     if date_to:

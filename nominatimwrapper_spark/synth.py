@@ -66,7 +66,12 @@ BASE_TS = dt.datetime(2025, 3, 1, tzinfo=dt.timezone.utc)
 def gen_gazetteer(n_streets: int = 240, houses_per_street: int = 8, seed: int = 42) -> pd.DataFrame:
     """OSM-style gazetteer. place_id is dense; houses point at their street
     via parent_place_id (parent-rescue join, reference
-    check_result_utils.py:560-644)."""
+    check_result_utils.py:560-644). A street's (postcode, base name) is
+    unique, so at most (cities drawn) x len(NAME_VOCAB) streets exist:
+    asking for more raises ValueError instead of drawing forever."""
+    most = len({c[2] for c in CITIES if c[5] > 0}) * len(set(NAME_VOCAB))
+    if n_streets > most:
+        raise ValueError(f"n_streets={n_streets} exceeds the {most} distinct (postcode, name) streets")
     rng = np.random.default_rng(seed)
     weights = np.array([c[5] for c in CITIES])
     weights = weights / weights.sum()

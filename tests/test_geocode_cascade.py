@@ -625,3 +625,25 @@ def test_retry_fields_are_picked_per_group(spark, reject_world, monkeypatch, bro
     assert got.transformed_address.nunique() == 1
     assert got.loc["loc-a", "sim_city"] == 1.0
     assert got.loc["loc-b", "sim_city"] == city_compare_one(house.city, f"{house.city}, Belgique")
+
+
+def test_gen_world_refuses_more_streets_than_distinct_names():
+    """gen_gazetteer draws streets unique per (postcode, base name), 12 x 58
+    = 696 of them: 696 builds, 697 raises ValueError at once instead of
+    drawing forever (run in a thread so a hang fails the test)."""
+    import threading
+
+    assert (gen_world(n_streets=696, houses_per_street=1, n_pages=1, n_per_class=1)
+            ["gazetteer"].place_rank.eq(26).sum() == 696)
+    raised = []
+
+    def run():
+        try:
+            gen_world(n_streets=697, houses_per_street=1, n_pages=1, n_per_class=1)
+        except ValueError as e:
+            raised.append(str(e))
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(30)
+    assert not t.is_alive() and raised and "697" in raised[0], raised

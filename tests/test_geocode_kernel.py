@@ -281,6 +281,28 @@ def test_duplicate_url_guard_on_both_regimes(spark, flagship_pages):
     assert not got.loc[got.url == dup_url, "place_id"].isin(first.place_id).any()
 
 
+def test_duplicate_addressless_url_raises_on_both_regimes(spark, flagship_pages):
+    """The guard checks urls in both regimes: a url crawled twice whose
+    pages carry no address yields no addr_key at all, yet raises above
+    the gate as it does under it."""
+    from nominatimwrapper_spark.plans.flagship import gazetteer_index, geocode_and_tile
+
+    idx = gazetteer_index(spark)
+    base = flagship_pages.iloc[:30]
+    html = b"<html><body><p>Pas d'adresse ici.</p></body></html>"
+    bare = pd.DataFrame({
+        "url": ["doc://no-address"] * 2,
+        "warc_ts": base["warc_ts"].iloc[0] + pd.to_timedelta([0, 1], unit="D"),
+        "html": [html, html],
+        "lang": ["fr", "fr"],
+        "text": ["Pas d'adresse ici.", "Pas d'adresse ici."],
+    })
+    pages = spark.createDataFrame(pd.concat([base, bare[base.columns]], ignore_index=True))
+    for ix in (idx, dataclasses.replace(idx, broadcast_ok=False)):
+        with pytest.raises(ValueError, match="duplicate addr_key"):
+            geocode_and_tile(pages, ix, dedup_crawls=False, validate_unique=True)
+
+
 def test_route_plan_is_one_exchange_and_builds_without_jobs(spark, flagship_pages):
     """Under the gate geocode_and_tile shuffles the html once (hash on url;
     the recrawl window reuses it) into the MapInPandas kernel, with no

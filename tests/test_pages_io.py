@@ -6,6 +6,7 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -56,3 +57,29 @@ def test_partition_pruning_in_plan(spark, pages_dir):
     # and the html/text columns are pruned from the scan entirely
     rs = next(l for l in plan.splitlines() if "ReadSchema" in l)
     assert "html" not in rs and "text" not in rs
+
+
+def test_read_pages_plan_starts_no_job(spark, tmp_path):
+    """Building a reader's plan runs no Spark job: the schema is declared,
+    not inferred from a footer (1 job per read when it was). On the
+    flagship pages layout the schema and rows are the inferred reader's."""
+    from nominatimwrapper_spark.plans.flagship import pages_from_documents
+
+    path = str(tmp_path / "pages")
+    write_pages_partitioned(pages_from_documents(spark, "/root/testdata/sf0.001"), path)
+    sc = spark.sparkContext
+    group = "read-pages-plan"
+    sc.setJobGroup(group, group)
+    try:
+        df = read_pages(spark, path, date_from="2025-03-01")
+        df._jdf.queryExecution().executedPlan()
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 0
+    inferred = spark.read.parquet(path)
+    assert df.schema == inferred.schema
+    got = df.toPandas().sort_values("url").reset_index(drop=True)
+    exp = inferred.toPandas().sort_values("url").reset_index(drop=True)
+    assert len(got) == 500
+    pd.testing.assert_frame_equal(got, exp)
