@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# the flagship pages as write_pages_partitioned lays them out, in that order
-_LAYOUT_SCHEMA = "url string, warc_ts timestamp, html binary, lang string, text string, crawl_date date"
+# the page columns, in the order write_pages_partitioned writes the
+# flagship pages; the layout adds crawl_date, the pages stream reads these
+PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, lang string, text string"
 
 
 def write_pages_partitioned(pages: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -42,7 +43,7 @@ def read_pages(
     """Read the partitioned pages table; date bounds become partition
     filters (pruned at planning time, never scanned). The declared schema
     spares the footer-inference job every read would run."""
-    df = spark.read.schema(_LAYOUT_SCHEMA).parquet(path)
+    df = spark.read.schema(f"{PAGES_SCHEMA}, crawl_date date").parquet(path)
     if date_from:
         df = df.filter(F.col("crawl_date") >= F.lit(date_from))
     if date_to:

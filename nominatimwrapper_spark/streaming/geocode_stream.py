@@ -41,33 +41,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..operators.geocode import GazetteerIndex
 from ..operators.geocode_kernel import geocode_and_tile_kernel
 from ..plans.flagship import geocode_and_tile
+from ..sources.pages_io import PAGES_SCHEMA
 
 # micro-batches at or under this many rows run their cascade with a narrow
 # shuffle width — the per-epoch cost at live-tailing batch sizes is task
 # setup, not data (see _one_batch)
 _SMALL_BATCH_ROWS = 100_000
 _SMALL_BATCH_SHUFFLE = 4
-
-PAGES_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("warc_ts", TimestampType()),
-        StructField("html", BinaryType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-    ]
-)
 
 
 def geocode_micro_batch(pages: DataFrame, index: GazetteerIndex) -> DataFrame:

@@ -256,8 +256,9 @@ def test_null_coordinate_place_tiles_to_nulls_on_both_engines(spark, world, tmp_
 
 def test_duplicate_url_guard_on_both_regimes(spark, flagship_pages):
     """One url crawled twice: without recrawl dedup the guard raises on
-    both engines before any geocoding; with it only the latest crawl's
-    addresses come back."""
+    both engines before any geocoding, also when the url's pages carry no
+    address (so no addr_key); with it only the latest crawl's addresses
+    come back."""
     from nominatimwrapper_spark.plans.flagship import gazetteer_index, geocode_and_tile
 
     idx = gazetteer_index(spark)
@@ -267,9 +268,16 @@ def test_duplicate_url_guard_on_both_regimes(spark, flagship_pages):
         warc_ts=base["warc_ts"].iloc[0] + pd.Timedelta(days=1),
     )
     pages = spark.createDataFrame(pd.concat([base, recrawl], ignore_index=True))
-    for ix in (idx, dataclasses.replace(idx, broadcast_ok=False)):
-        with pytest.raises(ValueError, match="duplicate addr_key"):
-            geocode_and_tile(pages, ix, dedup_crawls=False, validate_unique=True)
+    bare = base.iloc[[0, 0]].assign(
+        url="doc://no-address", html=b"<html><body><p>Pas d'adresse ici.</p></body></html>",
+        text="Pas d'adresse ici.",
+        warc_ts=base["warc_ts"].iloc[0] + pd.to_timedelta([0, 1], unit="D"),
+    )
+    addressless = spark.createDataFrame(pd.concat([base, bare], ignore_index=True))
+    for dup in (pages, addressless):
+        for ix in (idx, dataclasses.replace(idx, broadcast_ok=False)):
+            with pytest.raises(ValueError, match="duplicate addr_key"):
+                geocode_and_tile(dup, ix, dedup_crawls=False, validate_unique=True)
 
     got = _sorted(geocode_and_tile(pages, idx, dedup_crawls=True))
     latest = pd.concat([base.iloc[1:], recrawl], ignore_index=True)
@@ -279,28 +287,6 @@ def test_duplicate_url_guard_on_both_regimes(spark, flagship_pages):
     dup_url = base["url"].iloc[0]
     assert len(first) > 0 and (got.url == dup_url).any()
     assert not got.loc[got.url == dup_url, "place_id"].isin(first.place_id).any()
-
-
-def test_duplicate_addressless_url_raises_on_both_regimes(spark, flagship_pages):
-    """The guard checks urls in both regimes: a url crawled twice whose
-    pages carry no address yields no addr_key at all, yet raises above
-    the gate as it does under it."""
-    from nominatimwrapper_spark.plans.flagship import gazetteer_index, geocode_and_tile
-
-    idx = gazetteer_index(spark)
-    base = flagship_pages.iloc[:30]
-    html = b"<html><body><p>Pas d'adresse ici.</p></body></html>"
-    bare = pd.DataFrame({
-        "url": ["doc://no-address"] * 2,
-        "warc_ts": base["warc_ts"].iloc[0] + pd.to_timedelta([0, 1], unit="D"),
-        "html": [html, html],
-        "lang": ["fr", "fr"],
-        "text": ["Pas d'adresse ici.", "Pas d'adresse ici."],
-    })
-    pages = spark.createDataFrame(pd.concat([base, bare[base.columns]], ignore_index=True))
-    for ix in (idx, dataclasses.replace(idx, broadcast_ok=False)):
-        with pytest.raises(ValueError, match="duplicate addr_key"):
-            geocode_and_tile(pages, ix, dedup_crawls=False, validate_unique=True)
 
 
 def test_route_plan_is_one_exchange_and_builds_without_jobs(spark, flagship_pages):
