@@ -43,7 +43,7 @@ if __package__ in (None, ""):  # file run directly (spark-submit / python file.p
 from nominatimwrapper_spark.operators.geocode import build_gazetteer_index
 from nominatimwrapper_spark.plans.flagship import geocode_and_tile
 from nominatimwrapper_spark.sources.checkpoint import PartitionedCheckpointer
-from nominatimwrapper_spark.sources.pages_io import read_pages
+from nominatimwrapper_spark.sources.pages_io import PAGES_SCHEMA
 
 
 def list_crawl_dates(pages_path: str) -> list[str]:
@@ -84,12 +84,13 @@ def partition_fingerprint(pages_path: str, part: str, gazetteer_path: str) -> st
 
 
 def geocode_partition(spark: SparkSession, pages_path: str, part: str, index):
-    """One partition end-to-end: read (partition-pruned) -> recrawl dedup
+    """One partition end-to-end: read (its crawl_date directory only; a
+    table root above 32 dates is listed by a Spark job) -> recrawl dedup
     -> extract -> geocode -> S2 level-13 cells. Real crawl input: recrawl
     dedup and the duplicate guard stay ON. plans/flagship.geocode_and_tile
     picks the engine by the gazetteer broadcast gate."""
-    pages = read_pages(spark, pages_path, date_from=part, date_to=part)
-    return geocode_and_tile(pages, index)
+    reader = spark.read.schema(f"{PAGES_SCHEMA}, crawl_date date").option("basePath", pages_path)
+    return geocode_and_tile(reader.parquet(os.path.join(pages_path, f"crawl_date={part}")), index)
 
 
 # derived gazetteer index per (session, gazetteer content fingerprint) —

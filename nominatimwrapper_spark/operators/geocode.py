@@ -105,9 +105,12 @@ def _map_unique(s: pd.Series, fn) -> pd.Series:
     return s.map({v: fn(v) for v in s.unique()})
 
 
-@pandas_udf(StringType())
-def street_key_udf(s: pd.Series) -> pd.Series:
-    return _map_unique(s, street_fingerprint_key)
+@pandas_udf(ArrayType(StringType()))
+def _street_keys_udf(parts: pd.Series) -> pd.Series:
+    """Each place's distinct street keys, one per name part; each
+    distinct part of the batch is keyed once."""
+    keys = {p: street_fingerprint_key(p) for p in parts.explode().dropna().unique()}
+    return parts.map(lambda ps: None if ps is None else list(dict.fromkeys(keys[p] for p in ps)))
 
 
 @pandas_udf(StringType())
@@ -129,6 +132,7 @@ class GazetteerIndex:
     lookup: DataFrame
     parents: DataFrame
     broadcast_ok: bool = True
+    lookup_bytes: int = 0  # the estimated size the broadcast gate measured
     # the kernel's broadcast payload (geocode_kernel.kernel_broadcast),
     # built on first use; dataclasses.replace starts the copy without it
     kernel_bc: object = field(default=None, init=False, repr=False, compare=False)
@@ -145,11 +149,12 @@ def build_gazetteer_index(
     table) becomes a lookup row keyed by letters-only fingerprint, so any
     language/spelling variant of a query street keys into the same places.
 
-    Broadcast is gated on ESTIMATED BYTES (sampled avg row width x row
-    count), not row count — 20M wide rows is several GB and OOMs executors
-    if broadcast. Under ``broadcast_max_bytes`` the one-stage kernel runs
-    with the index as a broadcast payload, and cascade's parent alt-name
-    join broadcasts its gazetteer side; above it that join shuffles.
+    Broadcast is gated on ESTIMATED BYTES (``lookup_bytes``: every row's
+    JSON width + 16, summed by the job that caches the lookup), not row
+    count — 20M wide rows is several GB and OOMs executors if broadcast.
+    Under ``broadcast_max_bytes`` the one-stage kernel runs with the index
+    as a broadcast payload, and cascade's parent alt-name join broadcasts
+    its gazetteer side; above it that join shuffles.
     cascade's ladder stage (_locality_groups) shuffles the lookup rows
     its tuples can reach to their locality groups in both regimes.
     """
@@ -212,30 +217,30 @@ def build_gazetteer_index(
         parent_names, base.parent_place_id == parent_names._pp_id, "left"
     ).drop("_pp_id")
 
-    variants = with_parent.withColumn(
-        "variant_part",
-        F.explode(
-            F.array_distinct(
-                F.flatten(
-                    F.transform(
-                        F.array_union(
-                            F.array_union(
-                                F.array(F.coalesce(F.col("street_name"), F.lit(""))),
-                                F.coalesce(F.map_values("alt_map"), empty_arr),
-                            ),
-                            F.when(F.col("place_rank") == 30, F.coalesce(F.col("_p_variants"), empty_arr))
-                            .otherwise(empty_arr),
-                        ),
-                        lambda v: F.split(v, " - "),
-                    )
-                )
+    parts = F.array_distinct(
+        F.flatten(
+            F.transform(
+                F.array_union(
+                    F.array_union(
+                        F.array(F.coalesce(F.col("street_name"), F.lit(""))),
+                        F.coalesce(F.map_values("alt_map"), empty_arr),
+                    ),
+                    F.when(F.col("place_rank") == 30, F.coalesce(F.col("_p_variants"), empty_arr))
+                    .otherwise(empty_arr),
+                ),
+                lambda v: F.split(v, " - "),
             )
-        ),
-    ).drop("_p_variants")
-
+        )
+    )
+    # both key UDFs in one Python node (a plain explode would make Spark
+    # infer size(_keys) > 0 below it and run the UDF in a second node);
+    # place_id is unique, so a place's distinct keys need no dedup shuffle
     lookup = (
-        variants.withColumn("key_street", street_key_udf(F.col("variant_part")))
-        .withColumn("key_city", city_key_udf(F.col("city")))
+        with_parent.withColumns(
+            {"_keys": _street_keys_udf(parts), "key_city": city_key_udf(F.col("city"))}
+        )
+        .withColumn("key_street", F.explode_outer("_keys"))
+        .dropna(subset="key_street")  # null parts (a null alt name): no rows
         # empty-name parts only meaningful for city-level rows
         .filter((F.col("key_street") != "") | (F.col("place_rank") < 26))
         .select(
@@ -249,17 +254,14 @@ def build_gazetteer_index(
             F.col("_o_other").alias("out_other"),
             "namedetails",
         )
-        .dropDuplicates(["key_street", "place_id"])
     )
 
     # AQE never narrows a cached plan, so without the coalesce every scan
-    # of the lookup runs spark.sql.shuffle.partitions tasks
+    # of the lookup runs a task per gazetteer split (or shuffle partition)
     lookup = lookup.coalesce(gaz.sparkSession.sparkContext.defaultParallelism).cache()
-    n = lookup.count()
-    est_bytes = n * _avg_row_bytes(lookup)
-    return GazetteerIndex(
-        lookup=lookup, parents=parents.cache(), broadcast_ok=est_bytes <= broadcast_max_bytes
-    )
+    # every row's _avg_row_bytes width, summed by the job that fills the cache
+    est = lookup.selectExpr("coalesce(sum(length(to_json(struct(*))) + 16), 0)").first()[0]
+    return GazetteerIndex(lookup, parents.cache(), est <= broadcast_max_bytes, est)
 
 
 def _avg_row_bytes(df: DataFrame, sample_rows: int = 2000) -> int:
@@ -269,21 +271,11 @@ def _avg_row_bytes(df: DataFrame, sample_rows: int = 2000) -> int:
     # TABLESAMPLE over the whole table, not limit() — limit reads only the
     # first partition(s), which biases the estimate when row width correlates
     # with write order (e.g. gazetteer sorted by place_rank)
-    row = (
-        df.sample(fraction=0.01, seed=7)
-        .limit(sample_rows)
-        .select(F.length(F.to_json(F.struct(*df.columns))).alias("_w"))
-        .agg(F.avg("_w").alias("w"))
-        .first()
-    )
-    if row["w"] is None:  # tiny table: the 1% sample can be empty
-        row = (
-            df.limit(sample_rows)
-            .select(F.length(F.to_json(F.struct(*df.columns))).alias("_w"))
-            .agg(F.avg("_w").alias("w"))
-            .first()
-        )
-    return int(row["w"] or 0) + 16  # + per-row object overhead
+    width = F.avg(F.length(F.to_json(F.struct(*df.columns))))
+    w = df.sample(fraction=0.01, seed=7).limit(sample_rows).agg(width).first()[0]
+    if w is None:  # tiny table: the 1% sample can be empty
+        w = df.limit(sample_rows).agg(width).first()[0]
+    return int(w or 0) + 16  # + per-row object overhead
 
 
 # ---------------------------------------------------------------------------

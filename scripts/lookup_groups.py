@@ -78,7 +78,7 @@ def group_sizes(addr, index) -> dict:
     secs = []
     for b, qg in qp.groupby("_b"):
         t0 = time.perf_counter()
-        _group_pdf(qg, gp[gp._b == b], True, True, False)
+        _group_pdf(qg, gp[gp._b == b], True, True)
         secs.append(round(time.perf_counter() - t0, 3))
     return {
         "unique_tuples": n_uq,

@@ -5,6 +5,7 @@ engineered transformer stage with the expected place_id / place_rank
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 
 import pandas as pd
@@ -325,6 +326,74 @@ def test_broadcast_gate_is_byte_based(spark, world):
     assert small.broadcast_ok
     tiny_cap = build_gazetteer_index(gaz, broadcast_max_bytes=1024)
     assert not tiny_cap.broadcast_ok
+
+
+def _lookup_oracle(gaz: DataFrame) -> pd.DataFrame:
+    """The lookup's (key_street, place_id) rows as the index built them
+    when it keyed name parts one by one: every distinct part of a place's
+    street name, alt names and (for a house) its parent's alt names
+    exploded to its own row, keyed, filtered to non-empty keys (any key
+    for a place ranked below 26) and deduplicated on (key_street,
+    place_id)."""
+    from nominatimwrapper_spark.functions.textnorm import street_fingerprint_key
+
+    alt = F.col("alt_names")
+    if not dict(gaz.dtypes)["alt_names"].startswith("map"):
+        alt = F.map_from_entries(alt)
+    g = gaz.select(
+        "place_id", "parent_place_id", "place_rank", "street_name",
+        F.map_values(alt).alias("alts"),
+    ).toPandas()
+    parent_alts = dict(zip(g.place_id, g.alts))
+    rows = []
+    for r in g.itertuples():
+        names = [r.street_name or "", *r.alts]
+        if r.place_rank == 30:
+            names += list(parent_alts.get(r.parent_place_id, []))
+        for part in dict.fromkeys(p for n in names for p in n.split(" - ")):
+            rows.append((street_fingerprint_key(part), r.place_id, r.place_rank))
+    exp = pd.DataFrame(rows, columns=["key_street", "place_id", "place_rank"])
+    exp = exp[(exp.key_street != "") | (exp.place_rank < 26)]
+    return exp.drop_duplicates(["key_street", "place_id"])[["key_street", "place_id"]]
+
+
+@pytest.mark.parametrize("alt_names", ["entries", "map_no_address"])
+def test_index_build_is_one_narrow_pass(spark, world, alt_names):
+    """The index build keys every place in one Python node and deduplicates
+    no rows by shuffle: at most 4 Spark jobs in a warm session (7 when
+    each name part was keyed on its own row and deduplicated), one
+    ArrowEvalPython node, no shuffle Exchange (the parent names join
+    broadcasts), and the lookup rows of the per-part build (its oracle)
+    each carrying its place's columns. Checked on the fixture gazetteer
+    (alt_names and address as key/value entries) and on the same places
+    with map-typed alt_names and no address column."""
+    gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
+    if alt_names == "map_no_address":
+        gaz = gaz.withColumn("alt_names", F.map_from_entries("alt_names")).drop("address")
+    built = []
+    n_jobs = _jobs_of(
+        spark, f"index-build-{alt_names}", lambda: built.append(build_gazetteer_index(gaz))
+    )
+    assert n_jobs <= 4, n_jobs
+    index = built[0]
+    # the cached plan as it ran (the part before AQE's initial plan)
+    plan = index.lookup._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
+    assert final.count("BroadcastExchange") == 1, final
+    assert not re.search(r"(?<!Broadcast)Exchange|ShuffleQueryStage", final), final
+
+    got = index.lookup.toPandas()
+    place_cols = got.drop(columns="key_street").drop_duplicates("place_id")
+    exp = _lookup_oracle(gaz).merge(place_cols, on="place_id", how="left")
+
+    def rows(df: pd.DataFrame) -> pd.DataFrame:
+        return df[got.columns].sort_values(["key_street", "place_id"]).reset_index(drop=True)
+
+    assert len(exp) > 0
+    pd.testing.assert_frame_equal(rows(got), rows(exp), check_dtype=False)
+    # every row of a place carries the same place columns
+    assert len(got.drop(columns="key_street").astype(str).drop_duplicates()) == len(place_cols)
 
 
 GOLDEN_DIR = Path(__file__).parent / "fixtures" / "cascade_golden"

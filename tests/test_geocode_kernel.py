@@ -157,13 +157,12 @@ def test_locality_groups_hold_every_row_the_ladder_reaches(
 
 def test_gazetteer_broadcast_gate_boundary(spark, world, index):
     """The gazetteer broadcast gate on each side of its threshold: at the
-    measured lookup bytes (row count x _avg_row_bytes) the index is
+    lookup bytes the gate measured (``lookup_bytes``) the index is
     broadcast and geocode_and_tile runs the partition-local kernel, one
     byte below it runs cascade(); both give the same rows."""
-    from nominatimwrapper_spark.operators.geocode import _avg_row_bytes
     from nominatimwrapper_spark.plans.flagship import geocode_and_tile
 
-    measured = index.lookup.count() * _avg_row_bytes(index.lookup)
+    measured = index.lookup_bytes
     gaz = spark.read.parquet(f"{world['_dir']}/gazetteer.parquet")
     at = build_gazetteer_index(gaz, broadcast_max_bytes=measured)
     below = build_gazetteer_index(gaz, broadcast_max_bytes=measured - 1)

@@ -83,3 +83,37 @@ def test_read_pages_plan_starts_no_job(spark, tmp_path):
     exp = inferred.toPandas().sort_values("url").reset_index(drop=True)
     assert len(got) == 500
     pd.testing.assert_frame_equal(got, exp)
+
+
+def test_geocode_partition_reads_only_its_date(spark, pages_dir, tmp_path):
+    """geocode_partition opens its own crawl_date directory: on a layout
+    with more than 32 dates (which Spark lists with a job when a reader
+    opens the table root) building one partition's plan starts no Spark
+    job, and its rows are those of the root reader pruned to that date."""
+    from nominatimwrapper_spark.jobs.geocode_job import geocode_partition, list_crawl_dates
+    from nominatimwrapper_spark.operators.geocode import build_gazetteer_index
+    from nominatimwrapper_spark.plans.flagship import geocode_and_tile
+
+    path, w = pages_dir
+    assert len(list_crawl_dates(path)) > 32
+    part = str(w["pages"].warc_ts.dt.date.value_counts().idxmax())
+    write_world(str(tmp_path), {"gazetteer": w["gazetteer"]})
+    index = build_gazetteer_index(spark.read.parquet(f"{tmp_path}/gazetteer.parquet"))
+    geocode_partition(spark, path, part, index)  # builds the kernel's broadcast payload
+    sc = spark.sparkContext
+    group = "geocode-partition-plan"
+    sc.setJobGroup(group, group)
+    try:
+        df = geocode_partition(spark, path, part, index)
+        df._jdf.queryExecution().executedPlan()
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 0
+
+    def rows(d) -> pd.DataFrame:
+        return d.toPandas().sort_values("addr_key").reset_index(drop=True)
+
+    exp = rows(geocode_and_tile(read_pages(spark, path, date_from=part, date_to=part), index))
+    assert len(exp) > 0
+    pd.testing.assert_frame_equal(rows(df), exp)
